@@ -681,8 +681,8 @@ def write_baseline_md(result: dict) -> None:
         "recompute them rather than reporting a cache-hit as warm; round-3 "
         "warm numbers for those queries included the cache hit).",
         "",
-        "One-shot attribution (round 5, scripts/profile_minhash_oneshot.py, "
-        "JVM-metric instrumented in bench session order): of the "
+        "One-shot attribution (round 5, a JVM-metric instrumented profile "
+        "in bench session order): of the "
         "dedup_minhash_lsh one-shot-minus-warm gap (~1.9-2.3 s depending on "
         "epoch), Janino generated-class compilation is 0.2-0.3 s (35 "
         "classes); the remainder is ~1,400-1,700 first-touch JVM class "

@@ -23,11 +23,13 @@ Design notes for 100 TB scale:
 
 from __future__ import annotations
 
+import json
 import re
 from typing import Iterator, Optional
 
 import numpy as np
 import pandas as pd
+from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -58,6 +60,7 @@ TRIPLE_SCHEMA = (
     "url string, subj string, pred string, obj string, dtype string, obj_n3 string"
 )
 TRIPLE_COLS = ["url", "subj", "pred", "obj", "dtype", "obj_n3"]
+LINEAGE_PRED = "__lineage__"
 
 _PREPARERS = {
     KIND_GCN: prepare_gcn,
@@ -277,9 +280,8 @@ def extract_kind_batch(
     rowids = prep.index.to_numpy()  # per-input-row identity for the filter
 
     # columnar accumulation: (row positions, pred array, flat values) chunks,
-    # rendered in ONE vectorized pass at the end — emission order (extractor,
-    # then pred, then row, then list element) matches the previous per-fact
-    # loop exactly, which local_dedup's keep="first" relies on.
+    # rendered in ONE vectorized pass at the end; emission order is extractor,
+    # then pred, then row, then list element.
     chunk_pos: list = []
     chunk_pred: list = []
     chunk_val: list = []
@@ -376,18 +378,14 @@ def apply_valuable_filter(triples: pd.DataFrame) -> pd.DataFrame:
 def extract_batch(
     docs: pd.DataFrame,
     sides: Sides,
-    local_dedup: bool = False,
     batteries: Optional[dict] = None,
     preparers: Optional[dict] = None,
+    metrics: Optional[dict] = None,
 ) -> pd.DataFrame:
     """documents batch (url, text, kind) -> valuable triples batch.
 
-    ``local_dedup=True`` drops duplicate (subj, pred, obj) rows inside the
-    batch before they reach the shuffle — all intra-document duplicates (the
-    common case: two extractors emitting the same fact) die map-side, so the
-    global dedup exchange only carries cross-document collisions.  Keep it
-    OFF when pre-dedup multiplicities matter (the dict view's scalar-vs-list
-    rule needs raw counts).
+    ``metrics``, when given, accumulates the lineage counters
+    ``docs_by_kind`` and ``identity_failures`` in place.
     """
     parts = []
     kinds = [KIND_GCN, KIND_ATEL, KIND_ARXIV]
@@ -399,14 +397,15 @@ def extract_batch(
             continue
         extractors = batteries.get(kind) if batteries else None
         preparer = preparers.get(kind) if preparers else None
-        triples, _ = extract_kind_batch(kind, sub, sides, extractors, preparer)
+        triples, n_bad = extract_kind_batch(kind, sub, sides, extractors, preparer)
+        if metrics is not None:
+            by_kind = metrics["docs_by_kind"]
+            by_kind[kind] = by_kind.get(kind, 0) + len(sub)
+            metrics["identity_failures"] += n_bad
         parts.append(apply_valuable_filter(triples))
     if not parts:
         return pd.DataFrame(columns=TRIPLE_COLS)
-    out = pd.concat(parts, ignore_index=True)[TRIPLE_COLS]
-    if local_dedup:
-        out = out.drop_duplicates(subset=["subj", "pred", "obj_n3"], keep="first")
-    return out
+    return pd.concat(parts, ignore_index=True)[TRIPLE_COLS]
 
 
 def make_sides(
@@ -450,7 +449,7 @@ def extract_triples(
     docs: DataFrame,
     sides: Optional[Sides] = None,
     dedup: bool = True,
-    map_side_dedup: bool = False,
+    run_id: Optional[str] = None,
 ) -> DataFrame:
     """documents DataFrame -> triples DataFrame (the KG-construction core).
 
@@ -458,30 +457,42 @@ def extract_triples(
     (facts/core.py:197-219) via ``dropDuplicates`` — the only shuffle in the
     extraction phase; AQE handles skew/coalescing.
 
-    ``map_side_dedup=True`` additionally drops intra-batch duplicates before
-    the shuffle (~14% fewer rows on the fixture mix).  It costs ~15% batch
-    CPU (pandas drop_duplicates over strings), so enable it only when the
-    shuffle crosses a real network — on a cluster it trades cheap map CPU
-    for shuffle bytes; in local mode it's a net loss.
+    ``run_id`` appends one lineage row per task (pred ``LINEAGE_PRED``,
+    subj ``run_id``) whose ``obj`` is the JSON of the task's metrics
+
+        {partition_id, docs_in, docs_by_kind, identity_failures,
+         docs_valuable, triples_out}
+
+    counted in the same single pass as the data.  The row's ``obj_n3`` is
+    ``partition:<pid>``, so it is unique per task and survives the dedup.
     """
     sides = sides or make_sides()
     bc = spark.sparkContext.broadcast(sides)
-    local_dedup = dedup and map_side_dedup
     batteries = snapshot_batteries()  # carries driver-registered plugins
     preparers = snapshot_preparers()  # incl. problematic-identity fallbacks
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         local_sides = bc.value
+        m = {
+            "docs_in": 0,
+            "docs_by_kind": {},
+            "identity_failures": 0,
+            "docs_valuable": 0,
+            "triples_out": 0,
+        }
         for pdf in batches:
-            out = extract_batch(
-                pdf,
-                local_sides,
-                local_dedup=local_dedup,
-                batteries=batteries,
-                preparers=preparers,
-            )
+            out = extract_batch(pdf, local_sides, batteries, preparers, m)
+            m["docs_in"] += len(pdf)
+            m["docs_valuable"] += out["subj"].nunique()
+            m["triples_out"] += len(out)
             if len(out):
                 yield out
+        if run_id is not None:
+            ctx = TaskContext.get()
+            m["partition_id"] = pid = ctx.partitionId() if ctx is not None else -1
+            key = f"partition:{pid}"
+            row = (key, run_id, LINEAGE_PRED, json.dumps(m, sort_keys=True), "json", key)
+            yield pd.DataFrame([row], columns=TRIPLE_COLS)
 
     triples = relevant_docs(docs).mapInPandas(run, schema=TRIPLE_SCHEMA)
     if dedup:

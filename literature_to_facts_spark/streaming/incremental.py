@@ -20,14 +20,12 @@ import os
 import time
 from typing import Optional
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from literature_to_facts_spark.extractors.base import Sides
-from literature_to_facts_spark.engine.lineage import (
-    extract_triples_with_lineage,
-    split_lineage,
-)
+from literature_to_facts_spark.engine.pipeline import LINEAGE_PRED, extract_triples
 
 LEDGER_SCHEMA = (
     "bucket int, run_id string, committed_at double, n_triples long, "
@@ -39,6 +37,27 @@ def bucket_of(url_col, n_buckets: int):
     return F.pmod(F.xxhash64(url_col), F.lit(n_buckets)).cast("int")
 
 
+def split_lineage(combined: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Split ``extract_triples(..., run_id=...)`` output -> (triples,
+    lineage_metrics), where lineage_metrics has one row per task with parsed
+    metric columns."""
+    triples = combined.where(F.col("pred") != LINEAGE_PRED)
+    metrics_schema = (
+        "docs_in long, identity_failures long, docs_valuable long, "
+        "triples_out long, partition_id long"
+    )
+    lineage = (
+        combined.where(F.col("pred") == LINEAGE_PRED)
+        .select(
+            F.col("subj").alias("run_id"),
+            F.from_json(F.col("obj"), metrics_schema).alias("m"),
+            F.col("obj").alias("metrics_json"),
+        )
+        .select("run_id", "m.*", "metrics_json")
+    )
+    return triples, lineage
+
+
 def completed_buckets(spark: SparkSession, output_dir: str, run_id: str) -> set[int]:
     """Buckets already committed FOR THIS RUN.
 
@@ -48,11 +67,18 @@ def completed_buckets(spark: SparkSession, output_dir: str, run_id: str) -> set[
     grown table would skip all buckets forever.  For new-files-only
     incremental ingestion use streaming/stream.py (checkpointed
     AvailableNow), which tracks progress at file granularity.
+
+    Only a missing ledger, or one holding no data files yet (a crash during
+    the first ledger append leaves just ``_temporary``), means "nothing
+    committed"; any other read error — a corrupt ledger file — raises
+    instead of silently reprocessing every bucket.
     """
     ledger_path = os.path.join(output_dir, "ledger")
     try:
         ledger = spark.read.parquet(ledger_path)
-    except Exception:
+    except AnalysisException as e:
+        if e.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            raise
         return set()
     return {
         r["bucket"]
@@ -78,6 +104,12 @@ def run_incremental(
     mid-bucket re-processes just that bucket (idempotent overwrite).  The
     resume scope is ``run_id``: rerunning with the same run_id skips its
     completed buckets; a new run_id reprocesses the (new) snapshot.
+
+    The battery runs once per bucket: the deduplicated extraction output,
+    lineage rows included, is persisted once and the triple count, the
+    triple write and the ledger metrics all read that one frame.  (Splitting
+    it into two branches and re-uniting them would re-run ``mapInPandas``
+    per branch.)
     """
     done = completed_buckets(spark, output_dir, run_id)
     triples_root = os.path.join(output_dir, "triples")
@@ -89,20 +121,19 @@ def run_incremental(
         if b in done:
             continue
         chunk = docs_b.where(F.col("_bucket") == b).drop("_bucket")
-        combined = extract_triples_with_lineage(
+        combined = extract_triples(
             spark, chunk, sides, run_id=f"{run_id}/b{b}"
-        )
+        ).persist()
         triples, lineage = split_lineage(combined)
-        triples = triples.cache()
         n_triples = triples.count()
         triples.write.mode("overwrite").parquet(
             os.path.join(triples_root, f"bucket={b}")
         )
         lrows = lineage.collect()
+        combined.unpersist()
         docs_in = sum(r["docs_in"] or 0 for r in lrows)
         id_fail = sum(r["identity_failures"] or 0 for r in lrows)
         metrics_json = json.dumps([r["metrics_json"] for r in lrows])
-        triples.unpersist()
         ledger_row = spark.createDataFrame(
             [(b, run_id, time.time(), n_triples, docs_in, id_fail, metrics_json)],
             schema=LEDGER_SCHEMA,

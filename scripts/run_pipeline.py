@@ -31,7 +31,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--documents", help="path of the documents table (parquet/iceberg)")
-    ap.add_argument("--output", required=True, help="output root (triples/ + ledger/)")
+    ap.add_argument("--output", required=True,
+                    help="output root (triples/ + ledger/ + compacted graph/)")
     ap.add_argument("--sides", help="dir with balrog/amon/ads parquet side tables")
     ap.add_argument("--buckets", type=int, default=16, help="resume-ledger buckets")
     ap.add_argument("--master", default=None, help="override master (local[N] for smoke)")
@@ -51,11 +52,9 @@ def main() -> None:
     import pandas as pd
 
     from literature_to_facts_spark.config import get_spark
+    from literature_to_facts_spark.engine.graph import compact_graph
     from literature_to_facts_spark.engine.pipeline import make_sides
-    from literature_to_facts_spark.streaming.incremental import (
-        read_all_triples,
-        run_incremental,
-    )
+    from literature_to_facts_spark.streaming.incremental import run_incremental
 
     spark = get_spark(app_name="l2f-kg-pipeline", master=args.master)
 
@@ -92,8 +91,13 @@ def main() -> None:
     summary = run_incremental(
         spark, docs, args.output, sides, n_buckets=args.buckets, run_id=args.run_id
     )
-    n = read_all_triples(spark, args.output).count()
-    summary["total_triples"] = n
+    # buckets dedup only within themselves; compaction applies the global set
+    # semantics, so the count is of distinct triples
+    summary["total_triples"] = compact_graph(
+        spark,
+        os.path.join(args.output, "triples", "bucket=*"),
+        os.path.join(args.output, "graph"),
+    )
     print(json.dumps(summary))
     spark.stop()
 

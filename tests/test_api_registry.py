@@ -133,6 +133,7 @@ def test_spark_submit_plugin_e2e(tmp_path):
     module (`--plugin example_plugin`, the reference's `l2f -m <module>`
     pattern) in ONE job, with the registry snapshot travelling to executors
     inside the cloudpickled mapInPandas closure."""
+    import json
     import os
     import subprocess
     import sys
@@ -189,8 +190,16 @@ def test_spark_submit_plugin_e2e(tmp_path):
         capture_output=True, text=True, cwd=repo, timeout=600,
     )
     assert r.returncode == 0, r.stderr[-3000:]
+    summary = json.loads(r.stdout.strip().splitlines()[-1])
 
     con = duckdb.connect()
+    # the driver ends with compaction: graph/ holds exactly the printed
+    # number of triples, all distinct
+    n_graph, n_distinct = con.execute(
+        "SELECT count(*), count(DISTINCT (subj, pred, obj_n3)) FROM "
+        f"read_parquet('{out_dir}/graph/*/*.parquet', hive_partitioning = true)"
+    ).fetchone()
+    assert n_graph == n_distinct == summary["total_triples"] > 0
     rows = con.execute(
         f"SELECT subj, pred, obj FROM read_parquet('{out_dir}/triples/*/*.parquet') "
         "WHERE pred LIKE '%mentions_neutrino_plugin%'"

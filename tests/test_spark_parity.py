@@ -4,6 +4,8 @@ The BASELINE.json gate is P/R >= 0.95 vs the reference on the fixture
 corpus; the suite asserts the stronger P = R = 1.0.
 """
 
+import os
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -145,12 +147,10 @@ def test_column_pruning_reads_only_url_text(spark, corpus, sides, tmp_path):
 
 
 def test_extraction_metrics_and_lineage(spark, docs_df, sides):
-    from literature_to_facts_spark.engine.lineage import (
-        extract_triples_with_lineage,
-        split_lineage,
-    )
+    from literature_to_facts_spark.engine.pipeline import extract_triples
+    from literature_to_facts_spark.streaming.incremental import split_lineage
 
-    combined = extract_triples_with_lineage(spark, docs_df, sides, run_id="t1")
+    combined = extract_triples(spark, docs_df, sides, run_id="t1")
     triples, lineage = split_lineage(combined)
     lrows = lineage.collect()
     assert len(lrows) >= 1
@@ -162,6 +162,7 @@ def test_extraction_metrics_and_lineage(spark, docs_df, sides):
 
 
 def test_incremental_resume(spark, docs_df, sides, tmp_path):
+    from literature_to_facts_spark.engine.pipeline import relevant_docs
     from literature_to_facts_spark.streaming.incremental import (
         read_all_triples,
         run_incremental,
@@ -171,6 +172,10 @@ def test_incremental_resume(spark, docs_df, sides, tmp_path):
     r1 = run_incremental(spark, docs_df, out, sides, n_buckets=4, run_id="r1")
     assert r1["buckets_processed"] == 4 and r1["buckets_skipped"] == 0
     n1 = read_all_triples(spark, out).count()
+    # every relevant doc is counted once in the ledger: the per-task lineage
+    # rows must survive the bucket's dedup (one row per task, not per bucket)
+    ledger = spark.read.parquet(os.path.join(out, "ledger"))
+    assert ledger.agg(F.sum("docs_in")).first()[0] == relevant_docs(docs_df).count()
     # resume: same run_id -> committed buckets are skipped
     r2 = run_incremental(spark, docs_df, out, sides, n_buckets=4, run_id="r1")
     assert r2["buckets_processed"] == 0 and r2["buckets_skipped"] == 4
@@ -184,6 +189,52 @@ def test_incremental_resume(spark, docs_df, sides, tmp_path):
 
     direct = extract_triples(spark, docs_df, sides).count()
     assert n1 == direct
+
+
+def test_incremental_runs_battery_once(spark, docs_df, sides, tmp_path):
+    """The resumable driver shows each relevant doc to the battery exactly
+    once: a plugin extractor counts the rows it sees in an accumulator."""
+    from literature_to_facts_spark.engine.pipeline import relevant_docs
+    from literature_to_facts_spark.extractors.registry import (
+        register_extractor,
+        unregister_extractor,
+    )
+    from literature_to_facts_spark.streaming.incremental import run_incremental
+
+    seen = spark.sparkContext.accumulator(0)
+
+    def x_count_rows(prep: pd.DataFrame, _sides) -> dict:
+        seen.add(len(prep))
+        return {}
+
+    register_extractor("gcn", "count_rows", x_count_rows)
+    try:
+        run_incremental(
+            spark, docs_df, str(tmp_path / "inc"), sides, n_buckets=4, run_id="once"
+        )
+    finally:
+        assert unregister_extractor("gcn", "count_rows")
+    n_gcn = relevant_docs(docs_df).where(F.col("kind") == "gcn").count()
+    assert n_gcn > 0
+    assert seen.value == n_gcn
+
+
+def test_corrupt_ledger_fails_loudly(spark, docs_df, sides, tmp_path):
+    """A ledger that exists but cannot be read must raise, never be taken
+    for "nothing committed" (which would silently reprocess every bucket);
+    a ledger dir holding no data files yet still means nothing committed."""
+    from literature_to_facts_spark.streaming.incremental import (
+        completed_buckets,
+        run_incremental,
+    )
+
+    out = tmp_path / "inc"
+    (out / "ledger" / "_temporary" / "0").mkdir(parents=True)
+    assert completed_buckets(spark, str(out), "r1") == set()
+    (out / "ledger" / "part-0.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="FILE_FOOTER|not a Parquet file"):
+        run_incremental(spark, docs_df, str(out), sides, n_buckets=2, run_id="r1")
+    assert not (out / "triples").exists()
 
 
 @pytest.mark.parametrize("seed", [7, 1234])
