@@ -6,6 +6,11 @@ re-planning (skew joins, partition coalescing), Arrow for pandas-UDF transfer,
 and a pinned UTC timezone (the reference's ``datetime.timestamp()`` calls are
 local-TZ-dependent — /root/reference/facts/gcn.py:233, facts/atel.py:34 — so
 parity requires TZ=UTC everywhere, driver and executors).
+
+The partition-discovery threshold sits above the predicate vocabulary: a
+graph table has one ``pred=`` directory per predicate (85 on a dense
+corpus), and past Spark's default of 32 directories every graph read would
+launch a distributed listing job before its query runs.
 """
 
 from __future__ import annotations
@@ -58,6 +63,8 @@ def get_spark(
         "spark.sql.session.timeZone": "UTC",
         # scans: keep input splits bounded so a 100 TB table yields sane tasks
         "spark.sql.files.maxPartitionBytes": "134217728",
+        # list a graph's pred= directories on the driver (module docstring)
+        "spark.sql.sources.parallelPartitionDiscovery.threshold": "256",
         # broadcast joins for gazetteer/side tables up to 64 MB
         "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         "spark.ui.enabled": "false",

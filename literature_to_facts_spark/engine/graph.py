@@ -17,9 +17,10 @@ partitioned table:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from literature_to_facts_spark.engine.pipeline import TRIPLE_SCHEMA
 from literature_to_facts_spark.functions.literals import PAPER_NS
 
 N3_PREFIX_HEADER = f"@prefix paper: <{PAPER_NS}#> .\n"
@@ -31,7 +32,9 @@ def write_triples(triples: DataFrame, path: str, mode: str = "overwrite") -> Non
 
 
 def read_triples(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    """Read a triples table with the pinned schema: no schema-inference job,
+    and ``pred`` stays a string even where a partition value looks numeric."""
+    return spark.read.schema(TRIPLE_SCHEMA).parquet(path)
 
 
 def n3_lines(triples: DataFrame) -> DataFrame:
@@ -153,11 +156,14 @@ def compact_graph(spark: SparkSession, bucketed_triples_glob: str, out_path: str
     Cross-bucket duplicates exist when the same fact is re-derived from
     crawl duplicates landing in different buckets; this is the periodic
     compaction a production deployment schedules (Iceberg rewrite_data_files
-    + the dedup in one pass here)."""
-    all_triples = spark.read.parquet(bucketed_triples_glob)
-    deduped = all_triples.dropDuplicates(["subj", "pred", "obj_n3"])
-    write_triples(deduped, out_path)
-    return spark.read.parquet(out_path).count()
+    + the dedup in one pass here).  The count is observed on the write:
+    the table is never read back."""
+    obs = Observation()
+    deduped = read_triples(spark, bucketed_triples_glob).dropDuplicates(
+        ["subj", "pred", "obj_n3"]
+    )
+    write_triples(deduped.observe(obs, F.count(F.lit(1)).alias("n")), out_path)
+    return obs.get["n"]
 
 
 def publish_batches(triples: DataFrame, chunk_size: int = 1000):

@@ -56,10 +56,8 @@ from literature_to_facts_spark.functions.literals import (
     n3_from_lexical,
 )
 
-TRIPLE_SCHEMA = (
-    "url string, subj string, pred string, obj string, dtype string, obj_n3 string"
-)
 TRIPLE_COLS = ["url", "subj", "pred", "obj", "dtype", "obj_n3"]
+TRIPLE_SCHEMA = ", ".join(f"{c} string" for c in TRIPLE_COLS)
 LINEAGE_PRED = "__lineage__"
 
 _PREPARERS = {

@@ -20,11 +20,13 @@ import os
 import time
 from typing import Optional
 
+import pandas as pd
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from literature_to_facts_spark.extractors.base import Sides
+from literature_to_facts_spark.engine.graph import read_triples
 from literature_to_facts_spark.engine.pipeline import LINEAGE_PRED, extract_triples
 
 LEDGER_SCHEMA = (
@@ -37,25 +39,29 @@ def bucket_of(url_col, n_buckets: int):
     return F.pmod(F.xxhash64(url_col), F.lit(n_buckets)).cast("int")
 
 
-def split_lineage(combined: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Split ``extract_triples(..., run_id=...)`` output -> (triples,
-    lineage_metrics), where lineage_metrics has one row per task with parsed
-    metric columns."""
-    triples = combined.where(F.col("pred") != LINEAGE_PRED)
-    metrics_schema = (
-        "docs_in long, identity_failures long, docs_valuable long, "
-        "triples_out long, partition_id long"
-    )
-    lineage = (
-        combined.where(F.col("pred") == LINEAGE_PRED)
-        .select(
-            F.col("subj").alias("run_id"),
-            F.from_json(F.col("obj"), metrics_schema).alias("m"),
-            F.col("obj").alias("metrics_json"),
-        )
-        .select("run_id", "m.*", "metrics_json")
-    )
-    return triples, lineage
+def write_observed(combined: DataFrame, path: str) -> dict:
+    """Write the triples of an ``extract_triples(..., run_id=...)`` frame
+    to ``path`` in one write, observing the triple count and the per-task
+    lineage rows on that write.  Returns
+
+        {n_triples, tasks: [parsed lineage metrics per task], metrics_json}
+
+    where ``metrics_json`` is the JSON list of the raw lineage strings.  The
+    observation sits above the dedup, so it counts exactly the rows written,
+    and a retried task's lineage row is collapsed before it is observed."""
+    obs = Observation()
+    is_lineage = F.col("pred") == LINEAGE_PRED
+    combined.observe(
+        obs,
+        F.count(F.when(~is_lineage, 1)).alias("n"),
+        F.collect_list(F.when(is_lineage, F.col("obj"))).alias("lineage"),
+    ).where(~is_lineage).write.mode("overwrite").parquet(path)
+    m = obs.get
+    return {
+        "n_triples": m["n"],
+        "tasks": [json.loads(x) for x in m["lineage"]],
+        "metrics_json": json.dumps(m["lineage"]),
+    }
 
 
 def completed_buckets(spark: SparkSession, output_dir: str, run_id: str) -> set[int]:
@@ -69,15 +75,16 @@ def completed_buckets(spark: SparkSession, output_dir: str, run_id: str) -> set[
     AvailableNow), which tracks progress at file granularity.
 
     Only a missing ledger, or one holding no data files yet (a crash during
-    the first ledger append leaves just ``_temporary``), means "nothing
-    committed"; any other read error — a corrupt ledger file — raises
-    instead of silently reprocessing every bucket.
+    the first ledger append leaves just ``_temporary``; the pinned schema
+    reads it as empty), means "nothing committed"; any other read error — a
+    corrupt ledger file — raises instead of silently reprocessing every
+    bucket.
     """
     ledger_path = os.path.join(output_dir, "ledger")
     try:
-        ledger = spark.read.parquet(ledger_path)
+        ledger = spark.read.schema(LEDGER_SCHEMA).parquet(ledger_path)
     except AnalysisException as e:
-        if e.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+        if e.getCondition() != "PATH_NOT_FOUND":
             raise
         return set()
     return {
@@ -105,11 +112,9 @@ def run_incremental(
     resume scope is ``run_id``: rerunning with the same run_id skips its
     completed buckets; a new run_id reprocesses the (new) snapshot.
 
-    The battery runs once per bucket: the deduplicated extraction output,
-    lineage rows included, is persisted once and the triple count, the
-    triple write and the ledger metrics all read that one frame.  (Splitting
-    it into two branches and re-uniting them would re-run ``mapInPandas``
-    per branch.)
+    Each bucket is one write job that runs the battery once: the triple
+    count and the lineage metrics for the ledger are observed on that write
+    (``write_observed``), never counted, collected or re-read afterwards.
     """
     done = completed_buckets(spark, output_dir, run_id)
     triples_root = os.path.join(output_dir, "triples")
@@ -121,24 +126,24 @@ def run_incremental(
         if b in done:
             continue
         chunk = docs_b.where(F.col("_bucket") == b).drop("_bucket")
-        combined = extract_triples(
-            spark, chunk, sides, run_id=f"{run_id}/b{b}"
-        ).persist()
-        triples, lineage = split_lineage(combined)
-        n_triples = triples.count()
-        triples.write.mode("overwrite").parquet(
-            os.path.join(triples_root, f"bucket={b}")
+        m = write_observed(
+            extract_triples(spark, chunk, sides, run_id=f"{run_id}/b{b}"),
+            os.path.join(triples_root, f"bucket={b}"),
         )
-        lrows = lineage.collect()
-        combined.unpersist()
-        docs_in = sum(r["docs_in"] or 0 for r in lrows)
-        id_fail = sum(r["identity_failures"] or 0 for r in lrows)
-        metrics_json = json.dumps([r["metrics_json"] for r in lrows])
-        ledger_row = spark.createDataFrame(
-            [(b, run_id, time.time(), n_triples, docs_in, id_fail, metrics_json)],
-            schema=LEDGER_SCHEMA,
-        )
-        ledger_row.write.mode("append").parquet(ledger_path)
+        ledger_row = pd.DataFrame([{
+            "bucket": b,
+            "run_id": run_id,
+            "committed_at": time.time(),
+            "n_triples": m["n_triples"],
+            "docs_in": sum(t["docs_in"] for t in m["tasks"]),
+            "identity_failures": sum(t["identity_failures"] for t in m["tasks"]),
+            "metrics_json": m["metrics_json"],
+        }])
+        # a pandas frame goes through Arrow into a local relation: no
+        # Python-worker tasks, unlike a list of tuples
+        spark.createDataFrame(ledger_row, schema=LEDGER_SCHEMA).write.mode(
+            "append"
+        ).parquet(ledger_path)
         n_done_now += 1
 
     return {
@@ -149,4 +154,4 @@ def run_incremental(
 
 
 def read_all_triples(spark: SparkSession, output_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(output_dir, "triples", "bucket=*"))
+    return read_triples(spark, os.path.join(output_dir, "triples", "bucket=*"))

@@ -29,9 +29,10 @@ def main() -> None:
         counterpart_summary,
         grb_reaction_summary,
     )
+    from literature_to_facts_spark.engine.graph import read_triples
 
     spark = get_spark(app_name="l2f-contemplate", master=args.master)
-    triples = spark.read.parquet(args.triples)
+    triples = read_triples(spark, args.triples)
 
     cp = counterpart_summary(counterpart_matches(triples)).orderBy("event").collect()
     cp_rows = [

@@ -117,6 +117,36 @@ def test_graph_write_partitioned_and_pruned(spark, triples_df, tmp_path):
     assert "PartitionFilters" in plan and "pred" in plan.split("PartitionFilters")[1][:200]
 
 
+def test_read_triples_keeps_numeric_looking_pred_a_string(spark, docs_df, sides, tmp_path):
+    """A plugin predicate named like a number must not become an int column
+    through partition type inference — a table holding only such
+    predicates (here: the plugin's own facts) would otherwise read one."""
+    import pandas as pd
+    from pyspark.sql.types import StringType
+
+    from literature_to_facts_spark.engine.graph import read_triples, write_triples
+    from literature_to_facts_spark.engine.pipeline import extract_triples
+    from literature_to_facts_spark.extractors.registry import (
+        register_extractor,
+        unregister_extractor,
+    )
+
+    def x_year(prep, _sides) -> dict:
+        return {"1999": pd.Series("y", index=prep.index)}
+
+    path = str(tmp_path / "graph")
+    register_extractor("gcn", "year_pred", x_year)
+    try:
+        plugin_facts = extract_triples(spark, docs_df, sides).where(F.col("pred") == "1999")
+        write_triples(plugin_facts, path)
+    finally:
+        assert unregister_extractor("gcn", "year_pred")
+    back = read_triples(spark, path)
+    assert back.schema["pred"].dataType == StringType()
+    preds = back.groupBy("pred").count().collect()
+    assert [r["pred"] for r in preds] == ["1999"] and preds[0]["count"] > 0
+
+
 def test_compact_graph(spark, docs_df, sides, tmp_path):
     from literature_to_facts_spark.engine.graph import compact_graph
     from literature_to_facts_spark.engine.pipeline import extract_triples

@@ -146,19 +146,22 @@ def test_column_pruning_reads_only_url_text(spark, corpus, sides, tmp_path):
     assert "PushedFilters" in plan or "StartsWith" in plan
 
 
-def test_extraction_metrics_and_lineage(spark, docs_df, sides):
-    from literature_to_facts_spark.engine.pipeline import extract_triples
-    from literature_to_facts_spark.streaming.incremental import split_lineage
+def test_extraction_metrics_and_lineage(spark, docs_df, sides, tmp_path):
+    from literature_to_facts_spark.engine.pipeline import LINEAGE_PRED, extract_triples
+    from literature_to_facts_spark.streaming.incremental import write_observed
 
     combined = extract_triples(spark, docs_df, sides, run_id="t1")
-    triples, lineage = split_lineage(combined)
-    lrows = lineage.collect()
-    assert len(lrows) >= 1
-    assert sum(r["docs_in"] for r in lrows) == docs_df.where(
+    path = str(tmp_path / "t1")
+    m = write_observed(combined, path)
+    tasks = m["tasks"]
+    assert len(tasks) >= 1
+    assert sum(t["docs_in"] for t in tasks) == docs_df.where(
         ~F.col("url").startswith("https://example.org/")
     ).count()
-    assert sum(r["triples_out"] for r in lrows) >= triples.count()  # pre-dedup count
-    assert all(r["run_id"] == "t1" for r in lrows)
+    assert spark.read.parquet(path).count() == m["n_triples"]
+    assert sum(t["triples_out"] for t in tasks) >= m["n_triples"]  # pre-dedup count
+    lineage = combined.where(F.col("pred") == LINEAGE_PRED).select("subj").collect()
+    assert {r["subj"] for r in lineage} == {"t1"}
 
 
 def test_incremental_resume(spark, docs_df, sides, tmp_path):
@@ -176,6 +179,10 @@ def test_incremental_resume(spark, docs_df, sides, tmp_path):
     # rows must survive the bucket's dedup (one row per task, not per bucket)
     ledger = spark.read.parquet(os.path.join(out, "ledger"))
     assert ledger.agg(F.sum("docs_in")).first()[0] == relevant_docs(docs_df).count()
+    # the observed count is exactly what each bucket wrote
+    for r in ledger.collect():
+        bucket = os.path.join(out, "triples", f"bucket={r['bucket']}")
+        assert spark.read.parquet(bucket).count() == r["n_triples"] > 0
     # resume: same run_id -> committed buckets are skipped
     r2 = run_incremental(spark, docs_df, out, sides, n_buckets=4, run_id="r1")
     assert r2["buckets_processed"] == 0 and r2["buckets_skipped"] == 4
@@ -235,6 +242,66 @@ def test_corrupt_ledger_fails_loudly(spark, docs_df, sides, tmp_path):
     with pytest.raises(Exception, match="FILE_FOOTER|not a Parquet file"):
         run_incremental(spark, docs_df, str(out), sides, n_buckets=2, run_id="r1")
     assert not (out / "triples").exists()
+
+
+def test_bucket_without_relevant_docs_commits_empty(spark, docs_df, sides, tmp_path):
+    """Filler-only input: every bucket still commits a ledger row, with
+    n_triples == 0 read from an observation that must not block."""
+    from literature_to_facts_spark.streaming.incremental import run_incremental
+
+    filler = docs_df.where(F.col("url").startswith("https://example.org/"))
+    assert filler.count() > 0
+    out = str(tmp_path / "inc")
+    r = run_incremental(spark, filler, out, sides, n_buckets=2, run_id="f")
+    assert r["buckets_processed"] == 2
+    ledger = spark.read.parquet(os.path.join(out, "ledger")).collect()
+    assert sorted(x["bucket"] for x in ledger) == [0, 1]
+    assert all(x["n_triples"] == 0 and x["docs_in"] == 0 for x in ledger)
+    for b in (0, 1):
+        assert spark.read.parquet(os.path.join(out, "triples", f"bucket={b}")).count() == 0
+
+
+def _jobs_launched(spark, group: str, fn) -> int:
+    """Number of Spark jobs ``fn()`` launches, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events arrive async
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_kg_driver_job_budget(spark, docs_df, sides, triples_df, tmp_path):
+    """Each committed table is one write: counts and lineage are observed on
+    it, never re-read; graph reads pin their schema and list on the driver.
+    With AQE a write behind one shuffle is two jobs (map stage + result)."""
+    from literature_to_facts_spark.engine.graph import (
+        compact_graph,
+        read_triples,
+        write_triples,
+    )
+    from literature_to_facts_spark.streaming.incremental import run_incremental
+
+    docs_df.count()  # materialize the cached fixture outside the budget
+    out = str(tmp_path / "inc")
+    n_inc = _jobs_launched(
+        spark, "budget-inc",
+        lambda: run_incremental(spark, docs_df, out, sides, n_buckets=2, run_id="j"),
+    )
+    assert n_inc <= 6  # per bucket: dedup map stage + write, ledger append
+    graph = str(tmp_path / "graph")
+    n_compact = _jobs_launched(
+        spark, "budget-compact",
+        lambda: compact_graph(spark, f"{out}/triples/bucket=*", graph),
+    )
+    assert n_compact <= 2
+
+    wide = str(tmp_path / "wide")
+    write_triples(triples_df, wide)
+    assert len([d for d in os.listdir(wide) if d.startswith("pred=")]) > 32
+    assert _jobs_launched(spark, "budget-read", lambda: read_triples(spark, wide)) == 0
 
 
 @pytest.mark.parametrize("seed", [7, 1234])
