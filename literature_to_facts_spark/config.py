@@ -11,6 +11,36 @@ The partition-discovery threshold sits above the predicate vocabulary: a
 graph table has one ``pred=`` directory per predicate (85 on a dense
 corpus), and past Spark's default of 32 directories every graph read would
 launch a distributed listing job before its query runs.
+
+The driver JVM compiles with C1 only (``DRIVER_JAVA_OPTIONS``).  A pipeline
+run is one short-lived driver, and warming it up cost more than the work:
+per thread, on one cold 4,000-doc dense run in ``local[4]`` (32.6 CPU-s),
+the JIT compiler threads took 16.7 CPU-s, the executor task threads 7.3
+and the Python side, extractor battery included, 4.9.  With C1 only the
+compiler threads take 2.1 and the run 14.2 CPU-s.  The option is Spark's
+``spark.driver.defaultJavaOptions``, which Spark puts in front of
+``spark.driver.extraJavaOptions``, so a caller's extra options compose with
+it and ``extra_conf`` can still override it.  It does not reach:
+
+* executors — on a cluster they live for the whole job and keep C2;
+* a driver JVM started by ``spark-submit`` — it exists before ``get_spark``
+  runs, so documented spark-submit commands pass
+  ``--conf spark.driver.defaultJavaOptions=<DRIVER_JAVA_OPTIONS>`` instead.
+
+Setting it *replaces* a host's own ``spark.driver.defaultJavaOptions`` from
+``spark-defaults.conf`` (where administrators put cluster-wide driver flags:
+Kerberos, log4j, proxies); on such a host pass both, e.g. ``extra_conf=
+{"spark.driver.defaultJavaOptions": f"{own} {DRIVER_JAVA_OPTIONS}"}``.
+
+The cost is steady-state speed: re-running a 40,000-doc dense input in one
+JVM, C1-only runs cost 34-37 CPU-s from the third run on, C2 runs 24-30
+(set-up included, C1 is still ahead in total after five).  Drivers that
+run many operations in one JVM pass ``LONG_LIVED_DRIVER_CONF``, which drops
+the option (a host's own value then applies unchanged): ``scripts/daily.py``
+loop mode, the test suite's session and the ``bench.py`` /
+``scripts/check_oracles.py`` / ``scripts/bench_delta_scale.py`` harnesses
+(C1-only, on 4 cores: check_oracles at sf0.01 185 -> 248 s, the quick bench
+274 -> 392 s, the 20,000-doc delta-scale smoke 550 -> 996 s).
 """
 
 from __future__ import annotations
@@ -19,6 +49,11 @@ import os
 import time
 
 from pyspark.sql import SparkSession
+
+# C1-only JIT for the short-lived driver JVM (module docstring)
+DRIVER_JAVA_OPTIONS = "-XX:TieredStopAtLevel=1"
+# extra_conf for a driver that runs many operations in one JVM: keeps C2
+LONG_LIVED_DRIVER_CONF = {"spark.driver.defaultJavaOptions": None}
 
 
 def pin_utc() -> None:
@@ -38,6 +73,7 @@ def get_spark(
     ``master=None`` defers to spark-submit / env (cluster mode); tests pass
     ``local[32]``.  ``shuffle_partitions`` should be sized to total cores in
     local mode and to ~2-3x total cluster cores on a real cluster.
+    ``extra_conf`` overrides the defaults; a ``None`` value drops one.
     """
     pin_utc()
 
@@ -69,10 +105,12 @@ def get_spark(
         "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         "spark.ui.enabled": "false",
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+        "spark.driver.defaultJavaOptions": DRIVER_JAVA_OPTIONS,
     }
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():
-        builder = builder.config(k, v)
+        if v is not None:
+            builder = builder.config(k, v)
 
     return builder.getOrCreate()

@@ -522,7 +522,7 @@ def _span_key(df):
 
 
 def run(args):
-    from literature_to_facts_spark.config import get_spark
+    from literature_to_facts_spark.config import LONG_LIVED_DRIVER_CONF, get_spark
 
     wd = args.workdir
     if os.path.isdir(wd):
@@ -532,6 +532,7 @@ def run(args):
         app_name="delta-scale-ab",
         master=f"local[{os.cpu_count()}]",
         extra_conf={
+            **LONG_LIVED_DRIVER_CONF,  # interleaved trials in one JVM: keep C2
             "spark.ui.enabled": "true",
             "spark.ui.port": str(_UI_PORT),
             # keep every stage resident so b1 - b0 snapshot diffs never

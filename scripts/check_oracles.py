@@ -46,9 +46,13 @@ def _rowset(cols, rows):
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     import __spark_entry__ as em
-    from literature_to_facts_spark.config import get_spark
+    from literature_to_facts_spark.config import LONG_LIVED_DRIVER_CONF, get_spark
 
-    spark = get_spark(app_name="check-oracles", master=f"local[{os.cpu_count()}]")
+    # every query runs in this one JVM: keep the C2 JIT
+    spark = get_spark(
+        app_name="check-oracles", master=f"local[{os.cpu_count()}]",
+        extra_conf=LONG_LIVED_DRIVER_CONF,
+    )
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

@@ -2,8 +2,9 @@
 """``l2f learn contemplate`` equivalent: analytic joins over the graph table,
 writing the two JSON summaries (facts/learn.py:95-157).
 
-    spark-submit --py-files dist/l2f_spark.zip scripts/contemplate.py \\
-        --triples /path/to/graph --out-dir ./summaries
+    spark-submit --py-files dist/l2f_spark.zip \\
+        --conf spark.driver.defaultJavaOptions=-XX:TieredStopAtLevel=1 \\
+        scripts/contemplate.py --triples /path/to/graph --out-dir ./summaries
 """
 
 from __future__ import annotations

@@ -6,12 +6,20 @@ cluster):
 
     python scripts/make_pyfiles.py                 # -> dist/l2f_spark.zip
     spark-submit --py-files dist/l2f_spark.zip \\
+        --conf "spark.driver.defaultJavaOptions=$CLUSTER_DRIVER_OPTS -XX:TieredStopAtLevel=1" \\
         --conf spark.sql.adaptive.enabled=true \\
         scripts/run_pipeline.py \\
         --documents s3://bucket/documents/ \\
         --output   s3://bucket/graph/ \\
         --sides    s3://bucket/sides/ \\
         --buckets  256
+
+The C1-only JIT option (``config.DRIVER_JAVA_OPTIONS``) goes to the driver
+only: spark-submit starts the driver JVM before ``get_spark`` runs, so it
+must be passed here, and executors, which live for the whole job, keep C2.
+``--conf`` replaces the cluster's own ``spark.driver.defaultJavaOptions``
+from spark-defaults.conf instead of adding to it, so ``$CLUSTER_DRIVER_OPTS``
+stands for that value (empty when the cluster sets none).
 
 Local smoke:
 

@@ -146,6 +146,7 @@ def test_spark_submit_plugin_e2e(tmp_path):
         check=True, cwd=repo, capture_output=True,
     )
 
+    from literature_to_facts_spark.config import DRIVER_JAVA_OPTIONS
     from literature_to_facts_spark.sources.corpus import GOLDEN_GCNS, build_corpus
     from scripts.example_plugin import MEMO_PREFIX
 
@@ -181,6 +182,7 @@ def test_spark_submit_plugin_e2e(tmp_path):
     r = subprocess.run(
         [
             "spark-submit", "--master", "local[4]",
+            "--conf", f"spark.driver.defaultJavaOptions={DRIVER_JAVA_OPTIONS}",
             "--py-files",
             f"{repo}/dist/l2f_spark.zip,{repo}/scripts/example_plugin.py",
             f"{repo}/scripts/run_pipeline.py",

@@ -147,6 +147,38 @@ def test_read_triples_keeps_numeric_looking_pred_a_string(spark, docs_df, sides,
     assert [r["pred"] for r in preds] == ["1999"] and preds[0]["count"] > 0
 
 
+def test_driver_jvm_gets_c1_and_caller_java_options(spark):
+    """The driver's C1-only option reaches the JVM together with a caller's
+    own extraJavaOptions (a fresh JVM: the session fixture's is already up);
+    the fixture's long-lived session, built with ``LONG_LIVED_DRIVER_CONF``,
+    keeps C2."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    probe = (
+        "import json\n"
+        "from literature_to_facts_spark.config import get_spark\n"
+        "s = get_spark(master='local[1]', extra_conf={"
+        "'spark.driver.extraJavaOptions': '-Dl2f.probe=1'})\n"
+        "mx = s.sparkContext._jvm.java.lang.management.ManagementFactory\n"
+        "print(json.dumps(list(mx.getRuntimeMXBean().getInputArguments())))\n"
+        "s.stop()\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "SPARK_GRAFT_DRIVER_MEM": "1g"}
+    r = subprocess.run(
+        [sys.executable, "-c", probe],
+        capture_output=True, text=True, cwd=repo, env=env, timeout=300,
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+    args = json.loads(r.stdout.strip().splitlines()[-1])
+    assert "-XX:TieredStopAtLevel=1" in args and "-Dl2f.probe=1" in args
+    mx = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    assert "-XX:TieredStopAtLevel=1" not in list(mx.getRuntimeMXBean().getInputArguments())
+
+
 def test_compact_graph(spark, docs_df, sides, tmp_path):
     from literature_to_facts_spark.engine.graph import compact_graph
     from literature_to_facts_spark.engine.pipeline import extract_triples
