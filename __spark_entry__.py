@@ -6,9 +6,6 @@ SURVEY.md §2 (+ the training-data-pipeline extras), each Spark query paired
 with an ANSI-SQL oracle that DuckDB runs on the same parquet views.
 
 Engine-portability conventions used throughout (so value hashes match):
-* money aggregates in integer cents via FLOOR(x*100 + 0.5) (per-row double
-  ops are IEEE-deterministic; FLOOR semantics agree across engines, unlike
-  double->int casts or SUM(double) orderings);
 * floats rounded AFTER exact integer/decimal aggregation;
 * arrays rendered as comma-joined sorted strings;
 * timestamps compared as epoch microseconds.
@@ -18,7 +15,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -94,10 +91,6 @@ def entry(spark: SparkSession) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Spark queries
 # ---------------------------------------------------------------------------
-
-_CENTS = "CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)"
-_DISC_PCT = "CAST(FLOOR(l_discount * 100 + 0.5) AS BIGINT)"
-_TAX_PCT = "CAST(FLOOR(l_tax * 100 + 0.5) AS BIGINT)"
 
 
 def q_kg_triples_melt(spark, sf_dir):
@@ -239,190 +232,6 @@ def q_json_extract(spark, sf_dir):
     return _t(spark, sf_dir, "events").select(
         F.col("event_id").cast("bigint").alias("event_id"),
         F.get_json_object("props", "$.k").cast("bigint").alias("k_val"),
-    )
-
-
-def q_sessionize_window(spark, sf_dir):
-    """Window functions: per-user session counting via lag gaps > 5 min."""
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gaps = ev.withColumn("prev_ts", F.lag("ts").over(w)).withColumn(
-        "new_session",
-        (
-            F.col("prev_ts").isNull()
-            | ((_us("ts") - _us("prev_ts")) > 300_000_000)
-        ).cast("int"),
-    )
-    return gaps.groupBy(F.col("user_id").cast("bigint").alias("user_id")).agg(
-        F.sum("new_session").cast("bigint").alias("n_sessions"),
-        F.count(F.lit(1)).cast("bigint").alias("n_events"),
-    )
-
-
-def q_tpch_q1_pricing(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_shipdate") <= F.lit("1998-09-02"))
-    li = li.selectExpr(
-        "l_returnflag",
-        "l_linestatus",
-        "CAST(l_quantity AS BIGINT) AS qty",
-        f"{_CENTS} AS cents",
-        f"{_DISC_PCT} AS dpct",
-        f"{_TAX_PCT} AS tpct",
-    )
-    return (
-        li.groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum("qty").cast("bigint").alias("sum_qty"),
-            F.sum("cents").cast("bigint").alias("sum_base_cents"),
-            F.sum(F.col("cents") * (100 - F.col("dpct"))).cast("bigint").alias("sum_disc_c4"),
-            F.sum(F.col("cents") * (100 - F.col("dpct")) * (100 + F.col("tpct")))
-            .cast("bigint")
-            .alias("sum_charge_c6"),
-            F.count(F.lit(1)).cast("bigint").alias("count_order"),
-        )
-    )
-
-
-def q_tpch_q3_shipping(spark, sf_dir):
-    cust = _t(spark, sf_dir, "customer").where(F.col("c_mktsegment") == "BUILDING")
-    orders = _t(spark, sf_dir, "orders").where(F.col("o_orderdate") < F.lit("1997-01-01"))
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_shipdate") > F.lit("1997-01-01"))
-    li = li.selectExpr("l_orderkey", f"{_CENTS} AS cents", f"{_DISC_PCT} AS dpct")
-    j = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .groupBy(
-            F.col("l_orderkey").cast("bigint").alias("l_orderkey"),
-            F.col("o_orderdate").cast("string").alias("o_orderdate"),
-        )
-        .agg(F.sum(F.col("cents") * (100 - F.col("dpct"))).cast("bigint").alias("revenue_c4"))
-    )
-    return j.orderBy(F.desc("revenue_c4"), F.asc("l_orderkey")).limit(10)
-
-
-def q_tpch_q5_local_supplier(spark, sf_dir):
-    region = _t(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
-    nation = _t(spark, sf_dir, "nation")
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= F.lit("1995-01-01")) & (F.col("o_orderdate") < F.lit("1997-01-01"))
-    )
-    li = _t(spark, sf_dir, "lineitem").selectExpr(
-        "l_orderkey", "l_suppkey", f"{_CENTS} AS cents", f"{_DISC_PCT} AS dpct"
-    )
-    supp = _t(spark, sf_dir, "supplier")
-    j = (
-        cust.join(orders, cust.c_custkey == orders.o_custkey)
-        .join(li, orders.o_orderkey == li.l_orderkey)
-        .join(supp, (li.l_suppkey == supp.s_suppkey) & (cust.c_nationkey == supp.s_nationkey))
-        .join(F.broadcast(nation), supp.s_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-    )
-    return j.groupBy(F.col("n_name").alias("n_name")).agg(
-        F.sum(F.col("cents") * (100 - F.col("dpct"))).cast("bigint").alias("revenue_c4")
-    )
-
-
-def q_top_parts_by_qty(spark, sf_dir):
-    """Sort/limit/top-k with joins (broadcast dim)."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
-    top = (
-        li.groupBy("l_partkey")
-        .agg(F.sum(F.col("l_quantity").cast("bigint")).cast("bigint").alias("total_qty"))
-        .join(F.broadcast(part), F.col("l_partkey") == part.p_partkey)
-        .select(
-            F.col("p_partkey").cast("bigint").alias("p_partkey"),
-            F.col("p_name"),
-            F.col("total_qty"),
-        )
-    )
-    return top.orderBy(F.desc("total_qty"), F.asc("p_partkey")).limit(10)
-
-
-def q_tpch_q6_forecast(spark, sf_dir):
-    """TPC-H Q6 shape: single-table filtered aggregate, integer-cents."""
-    li = _t(spark, sf_dir, "lineitem")
-    f = li.where(
-        (F.col("l_shipdate") >= F.lit("1996-01-01"))
-        & (F.col("l_shipdate") < F.lit("1997-01-01"))
-        & (F.col("l_discount") >= 0.05)
-        & (F.col("l_discount") <= 0.07)
-        & (F.col("l_quantity") < 24)
-    ).selectExpr(f"{_CENTS} AS cents", f"{_DISC_PCT} AS dpct")
-    return f.agg(
-        F.sum(F.col("cents") * F.col("dpct")).cast("bigint").alias("revenue_c4"),
-        F.count(F.lit(1)).cast("bigint").alias("n_items"),
-    )
-
-
-def q_rollup_orders(spark, sf_dir):
-    """Grouping sets: ROLLUP(status, priority) with subtotal rows."""
-    orders = _t(spark, sf_dir, "orders").selectExpr(
-        "o_orderstatus",
-        "o_orderpriority",
-        "CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS cents",
-    )
-    return (
-        orders.rollup("o_orderstatus", "o_orderpriority")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-            F.sum("cents").cast("bigint").alias("total_cents"),
-        )
-    )
-
-
-def q_anti_join_inactive_customers(spark, sf_dir):
-    """Anti join: customers with no orders, counted per market segment."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders").select(F.col("o_custkey"))
-    inactive = cust.join(orders, cust.c_custkey == orders.o_custkey, "left_anti")
-    return inactive.groupBy("c_mktsegment").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_inactive")
-    )
-
-
-def q_topk_orders_per_priority(spark, sf_dir):
-    """Window top-k per group (row_number with deterministic tie-break)."""
-    orders = _t(spark, sf_dir, "orders").selectExpr(
-        "o_orderkey",
-        "o_orderpriority",
-        "CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS cents",
-    )
-    w = Window.partitionBy("o_orderpriority").orderBy(
-        F.desc("cents"), F.asc("o_orderkey")
-    )
-    return (
-        orders.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= 3)
-        .select(
-            "o_orderpriority",
-            F.col("o_orderkey").cast("bigint").alias("o_orderkey"),
-            "cents",
-            F.col("rnk").cast("bigint").alias("rnk"),
-        )
-    )
-
-
-def q_percentiles_by_flag(spark, sf_dir):
-    """Exact percentiles (linear interpolation — Spark percentile() and
-    DuckDB quantile_cont agree bit-exactly on the same doubles)."""
-    li = _t(spark, sf_dir, "lineitem")
-    return li.groupBy("l_returnflag").agg(
-        F.round(F.expr("percentile(l_extendedprice, 0.5)"), 6).alias("p50"),
-        F.round(F.expr("percentile(l_extendedprice, 0.9)"), 6).alias("p90"),
-        F.round(F.expr("percentile(l_quantity, 0.5)"), 6).alias("qty_p50"),
-    )
-
-
-def q_set_ops_union_distinct(spark, sf_dir):
-    """Set operators: union + distinct over key spaces."""
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    a = orders.select(F.col("o_custkey").cast("bigint").alias("key"))
-    b = cust.select(F.col("c_custkey").cast("bigint").alias("key"))
-    return a.union(b).distinct().groupBy((F.col("key") % 10).alias("key_mod")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_keys")
     )
 
 
@@ -745,13 +554,18 @@ def q_emb_ann_ivf(spark, sf_dir):
     queries = emb.where(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
     )
-    out = cosine_topk_ivf(emb, queries, k=5, n_centroids=8, nprobe=3, refine_iters=1)
-    return out.select(
+    reg = []
+    out = cosine_topk_ivf(
+        emb, queries, k=5, n_centroids=8, nprobe=3, refine_iters=1,
+        cache_registry=reg,
+    ).select(
         F.col("q_id").cast("bigint").alias("q_id"),
         F.col("vec_id").cast("bigint").alias("vec_id"),
         F.round("cosine", 4).cast("double").alias("cosine_r4"),
         F.col("rank").cast("bigint").alias("rank"),
     )
+    out._l2f_cache_registry = reg
+    return out
 
 
 def q_emb_ann_ivf_incremental(spark, sf_dir):
@@ -771,18 +585,20 @@ def q_emb_ann_ivf_incremental(spark, sf_dir):
     emb = _spread(_t(spark, sf_dir, "embeddings"))
     hist = emb.where(F.col("vec_id") % 5 != 0)
     batch = emb.where(F.col("vec_id") % 5 == 0)
-    centroids, hist_idx = build_ivf_index(hist, n_centroids=8)
+    reg = []
+    centroids, hist_idx = build_ivf_index(hist, n_centroids=8, cache_registry=reg)
     idx = hist_idx.unionByName(ivf_index_append(batch, centroids))
     queries = emb.where(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
     )
-    out = cosine_topk_ivf_from_index(idx, centroids, queries, k=5, nprobe=3)
-    return out.select(
+    out = cosine_topk_ivf_from_index(idx, centroids, queries, k=5, nprobe=3).select(
         F.col("q_id").cast("bigint").alias("q_id"),
         F.col("vec_id").cast("bigint").alias("vec_id"),
         F.round("cosine", 4).cast("double").alias("cosine_r4"),
         F.col("rank").cast("bigint").alias("rank"),
     )
+    out._l2f_cache_registry = reg
+    return out
 
 
 def q_dedup_clusters_cc(spark, sf_dir):
@@ -830,11 +646,12 @@ def q_dedup_clusters_cc_incremental(spark, sf_dir):
     pairs = minhash_lsh_pairs(docs, threshold=0.5, n_hashes=16, bands=4).persist()
     touching = (F.col("id_a") % 5 == 0) | (F.col("id_b") % 5 == 0)
     state = connected_components(pairs.where(~touching))
-    out = connected_components_incremental(pairs.where(touching), state)
-    return out.select(
+    out = connected_components_incremental(pairs.where(touching), state).select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         F.col("cluster_rep").cast("bigint").alias("cluster_rep"),
     )
+    out._l2f_cache_registry = [pairs]
+    return out
 
 
 def q_dedup_exact_incremental(spark, sf_dir):
@@ -859,13 +676,17 @@ def q_dedup_exact_incremental(spark, sf_dir):
     )
     new = docs.where(F.col("doc_id") % 5 == 0)
     old = docs.where(F.col("doc_id") % 5 != 0)
-    out = exact_duplicate_clusters_incremental(new, build_exact_hash_index(old))
-    return out.select(
+    reg = []
+    out = exact_duplicate_clusters_incremental(
+        new, build_exact_hash_index(old), cache_registry=reg
+    ).select(
         F.col("text_hash"),
         F.col("cluster_size").cast("bigint").alias("cluster_size"),
         F.col("canonical_id").cast("bigint").alias("canonical_id"),
         F.array_join(F.col("members"), ",").alias("members"),
     )
+    out._l2f_cache_registry = reg
+    return out
 
 
 def q_dedup_corpus_purge(spark, sf_dir):
@@ -963,15 +784,18 @@ def q_curation_pipeline(spark, sf_dir):
     from literature_to_facts_spark.datapipe.curation import curate_corpus
 
     docs = _spread(_t(spark, sf_dir, "documents"))
+    reg = []
     out = curate_corpus(
         docs,
         fractions={"en": 0.5, "de": 0.2},
         default_fraction=0.05,
         minhash_params=dict(n_gram=3, n_hashes=16, bands=4, threshold=0.5),
-    )
-    return out.select(
+        cache_registry=reg,
+    ).select(
         F.col("doc_id").cast("bigint").alias("doc_id"), F.col("lang").alias("lang")
     )
+    out._l2f_cache_registry = reg
+    return out
 
 
 def q_curation_pipeline_full(spark, sf_dir):
@@ -989,16 +813,19 @@ def q_curation_pipeline_full(spark, sf_dir):
     docs = _spread(_t(spark, sf_dir, "documents")).select("doc_id", "lang", "text")
     ev = docs.where(F.col("doc_id") % 17 == 0)
     tr = with_token_counts(docs.where(F.col("doc_id") % 17 != 0))
+    reg = []
     out = curate_corpus(
         tr,
         minhash_params=dict(n_gram=3, n_hashes=16, bands=4, threshold=0.5),
         eval_docs=ev,
         decontam_params=dict(n_gram=4, min_overlap=1),
         token_budgets={"en": 3000, "de": 1200},
-    )
-    return out.select(
+        cache_registry=reg,
+    ).select(
         F.col("doc_id").cast("bigint").alias("doc_id"), F.col("lang").alias("lang")
     )
+    out._l2f_cache_registry = reg
+    return out
 
 
 def q_curation_pipeline_cleaned(spark, sf_dir):
@@ -1018,6 +845,7 @@ def q_curation_pipeline_cleaned(spark, sf_dir):
         "concat(replace(text, '. ', concat('.', chr(10))),"
         f" {_PII_SUFFIX_SPARK}) AS text",
     )
+    reg = []
     out = curate_corpus(
         docs,
         fractions={"en": 0.5, "de": 0.2},
@@ -1027,10 +855,12 @@ def q_curation_pipeline_cleaned(spark, sf_dir):
             min_df=_LINE_DEDUP_MIN_DF, min_line_chars=_LINE_DEDUP_MIN_CHARS
         ),
         pii=True,
-    )
-    return out.select(
+        cache_registry=reg,
+    ).select(
         F.col("doc_id").cast("bigint").alias("doc_id"), F.col("lang").alias("lang")
     )
+    out._l2f_cache_registry = reg
+    return out
 
 
 def q_sample_hash_fraction(spark, sf_dir):
@@ -1539,15 +1369,18 @@ def q_text_line_dedup_incremental(spark, sf_dir):
     new = docs.where(F.col("doc_id") % 5 == 0)
     old = docs.where(F.col("doc_id") % 5 != 0)
     idx = build_line_frequency_index(old, min_line_chars=_LINE_DEDUP_MIN_CHARS)
+    reg = []
     out = line_dedup_incremental(
-        new, idx, min_df=_LINE_DEDUP_MIN_DF, min_line_chars=_LINE_DEDUP_MIN_CHARS
-    )
-    return out.select(
+        new, idx, min_df=_LINE_DEDUP_MIN_DF, min_line_chars=_LINE_DEDUP_MIN_CHARS,
+        cache_registry=reg,
+    ).select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         "clean_text",
         "n_lines",
         "n_dropped",
     )
+    out._l2f_cache_registry = reg
+    return out
 
 
 _SPAN_DEDUP_WINDOW = 8
@@ -1578,10 +1411,11 @@ def q_text_span_dedup_incremental(spark, sf_dir):
     new = docs.where(F.col("doc_id") % 5 == 0)
     old = docs.where(F.col("doc_id") % 5 != 0)
     idx = build_window_frequency_index(old, window=_SPAN_DEDUP_WINDOW)
+    reg = []
     out = span_dedup_incremental(
-        new, idx, window=_SPAN_DEDUP_WINDOW, min_df=_SPAN_DEDUP_MIN_DF
-    )
-    return out.select(
+        new, idx, window=_SPAN_DEDUP_WINDOW, min_df=_SPAN_DEDUP_MIN_DF,
+        cache_registry=reg,
+    ).select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         "n_tokens",
         "n_windows",
@@ -1589,6 +1423,8 @@ def q_text_span_dedup_incremental(spark, sf_dir):
         "dup_tokens",
         "dup_frac",
     )
+    out._l2f_cache_registry = reg
+    return out
 
 
 def q_sample_pack_sequences(spark, sf_dir):
@@ -1602,8 +1438,8 @@ def q_sample_pack_sequences(spark, sf_dir):
     from literature_to_facts_spark.datapipe.sampling import pack_sequences
 
     docs = _spread(_t(spark, sf_dir, "documents")).select("doc_id", "text")
-    out = pack_sequences(docs, seq_len=512, n_buckets=8)
-    return out.select(
+    reg = []
+    out = pack_sequences(docs, seq_len=512, n_buckets=8, cache_registry=reg).select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         "n_toks",
         "global_start",
@@ -1611,6 +1447,8 @@ def q_sample_pack_sequences(spark, sf_dir):
         F.col("seq_end").cast("bigint").alias("seq_end"),
         "seq_offset",
     )
+    out._l2f_cache_registry = reg
+    return out
 
 
 def q_source_quality_stats(spark, sf_dir):
@@ -1680,13 +1518,13 @@ def q_text_span_dedup(spark, sf_dir):
 
 
 def q_corpus_snapshot_diff(spark, sf_dir):
-    """Dataset versioning (datapipe/storage.snapshot_diff): added / removed /
+    """Dataset versioning (engine/delta.snapshot_diff): added / removed /
     changed documents between two corpus snapshots, comparing only id + text
     hash (the text itself never flows through the join).  Snapshots are
     synthesized deterministically: old = doc_id % 11 != 0, new = doc_id %
     13 != 0 with every 7th doc's text perturbed.  Full SQL oracle (DuckDB
     FULL OUTER JOIN recomputes the same md5 hashes)."""
-    from literature_to_facts_spark.datapipe.storage import snapshot_diff
+    from literature_to_facts_spark.engine.delta import snapshot_diff
 
     docs = _t(spark, sf_dir, "documents")
     old = docs.where(F.col("doc_id") % 11 != 0).select("doc_id", "text")
@@ -1715,8 +1553,7 @@ def q_kg_triples_delta(spark, sf_dir):
     re-extract).  The diff id sets broadcast, so the triple store is
     filtered at its scan with zero shuffle.  Oracle = full extraction over
     the new corpus (the from-scratch result the delta must equal)."""
-    from literature_to_facts_spark.datapipe.storage import snapshot_diff
-    from literature_to_facts_spark.engine.delta import delta_reextract
+    from literature_to_facts_spark.engine.delta import delta_reextract, snapshot_diff
 
     docs = _spread(_t(spark, sf_dir, "documents"))
     old = docs.where(F.col("doc_id") % 11 != 0).select("doc_id", "text")
@@ -1740,7 +1577,12 @@ def q_kg_triples_delta(spark, sf_dir):
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_times"))
         )
 
-    return delta_reextract(extract(old), snapshot_diff(old, new), new, extract)
+    reg = []
+    out = delta_reextract(
+        extract(old), snapshot_diff(old, new), new, extract, cache_registry=reg
+    )
+    out._l2f_cache_registry = reg
+    return out
 
 
 def q_text_token_topk(spark, sf_dir):
@@ -3137,8 +2979,8 @@ def q_kg_two_hop(spark, sf_dir):
 
 def q_kg_predicate_stats_incremental(spark, sf_dir):
     """Delta maintenance of the predicate-cardinality statistics
-    (engine/kgquery.predicate_stats_incremental, ninth probe-shaped delta
-    family): the new batch's triples (subj % 5 == 0, a ~20% daily delta)
+    (engine/kgquery.predicate_stats_incremental, probe-shaped): the new
+    batch's triples (subj % 5 == 0, a ~20% daily delta)
     update the persisted stats via an existence probe against the
     (pred, role, value) pair index — the history triple store is never
     rescanned.  Full SQL oracle: the result must be bit-equal to the
@@ -3154,11 +2996,15 @@ def q_kg_predicate_stats_incremental(spark, sf_dir):
     # history stats) — persist it once or the regex-mention subtree runs
     # three times (operationally it is a materialized table anyway)
     triples = _kg_rich_triples(spark, sf_dir).persist()
+    reg = [triples]
     new = triples.where(F.col("subj") % 5 == 0)
     old = triples.where(F.col("subj") % 5 != 0)
-    return predicate_stats_incremental(
-        new, build_predicate_pair_index(old), predicate_stats(old)
+    out = predicate_stats_incremental(
+        new, build_predicate_pair_index(old), predicate_stats(old),
+        cache_registry=reg,
     )
+    out._l2f_cache_registry = reg
+    return out
 
 
 # robots/canonical fixture: each page carries one of four robots-meta shapes
@@ -3254,9 +3100,9 @@ def _html_meta_oracle() -> str:
 
 def q_kg_charsets_incremental(spark, sf_dir):
     """Delta maintenance of the characteristic-set histogram
-    (engine/kgquery.characteristic_sets_incremental, tenth probe-shaped
-    delta family): the new batch's triples (subj % 5 == 0) can MOVE
-    subjects between histogram shapes, so the update transfers counts
+    (engine/kgquery.characteristic_sets_incremental, probe-shaped): the
+    new batch's triples (subj % 5 == 0) can MOVE subjects between
+    histogram shapes, so the update transfers counts
     (decrement old shape, increment new) for touched subjects only — the
     history triple store is never rescanned.  Full SQL oracle: bit-equal
     to the from-scratch histogram over the ENTIRE corpus."""
@@ -3267,11 +3113,15 @@ def q_kg_charsets_incremental(spark, sf_dir):
     )
 
     triples = _kg_rich_triples(spark, sf_dir).persist()
+    reg = [triples]
     new = triples.where(F.col("subj") % 5 == 0)
     old = triples.where(F.col("subj") % 5 != 0)
-    return characteristic_sets_incremental(
-        new, build_subject_pred_index(old), characteristic_sets(old)
+    out = characteristic_sets_incremental(
+        new, build_subject_pred_index(old), characteristic_sets(old),
+        cache_registry=reg,
     )
+    out._l2f_cache_registry = reg
+    return out
 
 
 # canonical-collision variant of the meta fixture: absolute canonicals key on
@@ -3385,7 +3235,9 @@ def q_kg_pattern_join(spark, sf_dir):
 
     triples = _kg_rich_triples(spark, sf_dir).persist()
     stats = predicate_stats(triples)
-    return pattern_join_ordered(triples, "mentions_spark", "lang", stats)
+    out = pattern_join_ordered(triples, "mentions_spark", "lang", stats)
+    out._l2f_cache_registry = [triples]
+    return out
 
 
 def q_crawl_ingest_gate(spark, sf_dir):
@@ -3538,7 +3390,6 @@ def q_kg_cooccurrence_pmi(spark, sf_dir):
         ).alias("entity"),
     )
     return cooccurrence_pmi(mentions, max_entities_per_doc=64)
-
 
 
 # anchor-text fixture: every page names target t{m5}.example.com/p twice
@@ -3708,12 +3559,14 @@ def q_kg_star_join(spark, sf_dir):
 
     triples = _kg_rich_triples(spark, sf_dir).persist()
     stats = predicate_stats(triples)
-    return star_join_ordered(
+    out = star_join_ordered(
         triples,
         ["mentions_spark", "source", "mentions_merge"],
         stats,
         aliases=["n_spark", "src", "n_merge"],
     )
+    out._l2f_cache_registry = [triples]
+    return out
 
 
 def q_kg_triple_provenance(spark, sf_dir):
@@ -4092,226 +3945,6 @@ def _web_frontier_rank_oracle() -> str:
     """
 
 
-# robots fixture: per host a body with a googlebot-only group (must be
-# ignored), a star group (Disallow /p<hid> + Allow /p<hid>/ok + inline
-# comment + empty Disallow + Crawl-delay noise); every 3rd host has NO star
-# group.  ONE template, both engines ({h} = the host-id cast).
-_ROBOTS_BODY_TMPL = (
-    "CASE WHEN hid % 3 = 0 THEN concat('User-agent: googlebot', chr(10),"
-    " 'Disallow: /')"
-    " ELSE concat('# crawl rules', chr(10),"
-    " 'User-agent: googlebot', chr(10), 'Disallow: /', chr(10),"
-    " 'User-agent: *', chr(10),"
-    " 'Disallow: /p', {h}, '   # private', chr(10),"
-    " 'Allow: /p', {h}, '/ok', chr(10),"
-    " 'Crawl-delay: 5', chr(10), 'Disallow:') END"
-)
-_ROBOTS_URL_TMPL = (
-    "concat('http://h', {h7}, '.example.com',"
-    " CASE {m4} WHEN 0 THEN concat('/p', {h7}, '/x')"
-    " WHEN 1 THEN concat('/p', {h7}, '/ok/y')"
-    " WHEN 2 THEN '/open/z' ELSE concat('/p', {h7}, '/oklahoma') END)"
-)
-
-
-def q_web_robots_gate(spark, sf_dir):
-    """robots.txt parsing + frontier gating (datapipe/robots.parse_robots ->
-    apply_robots): per-host rule extraction from the raw file format
-    (comment strip, multi-agent group headers, star-group selection,
-    empty-Disallow skip) and longest-prefix-match URL gating with the
-    Allow tiebreak.  The '/oklahoma' candidate pins prefix (not segment)
-    semantics: it matches Disallow /p<h> but NOT Allow /p<h>/ok.  Rules
-    are hosts-sized and BROADCAST — the frontier is never shuffled; the
-    oracle replays the group-window parse and the ranked match."""
-    from literature_to_facts_spark.datapipe.robots import (
-        apply_robots,
-        parse_robots,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    h = "cast(hid as string)"
-    robots = docs.selectExpr("doc_id % 7 AS hid").distinct().selectExpr(
-        f"concat('h', {h}, '.example.com') AS host",
-        _ROBOTS_BODY_TMPL.format(h=h) + " AS robots_txt",
-    )
-    urls = docs.selectExpr(
-        _ROBOTS_URL_TMPL.format(
-            h7="cast(doc_id % 7 as string)", m4="cast(doc_id % 4 as int)"
-        )
-        + " AS url"
-    )
-    return apply_robots(urls, parse_robots(robots))
-
-
-def _web_robots_gate_oracle() -> str:
-    g = _duck_url_group
-    h = "CAST(hid AS VARCHAR)"
-    body = _ROBOTS_BODY_TMPL.format(h=h)
-    url = _ROBOTS_URL_TMPL.format(
-        h7="CAST(doc_id % 7 AS VARCHAR)", m4="CAST(doc_id % 4 AS INTEGER)"
-    )
-    return f"""
-        WITH hosts AS (SELECT DISTINCT doc_id % 7 AS hid FROM documents),
-        rb AS (
-          SELECT 'h' || {h} || '.example.com' AS host, {body} AS body
-          FROM hosts
-        ),
-        rlines AS (
-          SELECT host, u.pos AS pos, u.line AS line
-          FROM (SELECT host, string_split(body, chr(10)) AS parts FROM rb),
-               UNNEST(list_transform(range(1, len(parts) + 1),
-                      i -> {{'pos': i, 'line': parts[i]}})) AS t(u)
-        ),
-        typed AS (
-          SELECT host, pos,
-                 CASE WHEN instr(trim(split_part(line, '#', 1)), ':') = 0
-                      THEN 'other'
-                      WHEN lower(trim(split_part(trim(split_part(line, '#', 1)), ':', 1))) = 'user-agent' THEN 'ua'
-                      WHEN lower(trim(split_part(trim(split_part(line, '#', 1)), ':', 1))) = 'allow' THEN 'allow'
-                      WHEN lower(trim(split_part(trim(split_part(line, '#', 1)), ':', 1))) = 'disallow' THEN 'disallow'
-                      ELSE 'other' END AS kind,
-                 trim(substring(trim(split_part(line, '#', 1)),
-                      instr(trim(split_part(line, '#', 1)), ':') + 1)) AS val
-          FROM rlines
-        ),
-        marked AS (
-          SELECT host, pos, kind, val,
-                 CASE WHEN kind = 'ua' AND
-                      coalesce(LAG(CASE WHEN kind = 'ua' THEN 1 ELSE 0 END)
-                        OVER (PARTITION BY host ORDER BY pos), 0) = 0
-                      THEN 1 ELSE 0 END AS run_start
-          FROM typed
-        ),
-        grouped AS (
-          SELECT host, pos, kind, val,
-                 SUM(run_start)
-                   OVER (PARTITION BY host ORDER BY pos
-                         ROWS UNBOUNDED PRECEDING) AS gid
-          FROM marked
-        ),
-        stars AS (
-          SELECT host, gid FROM grouped
-          WHERE kind = 'ua' GROUP BY host, gid
-          HAVING max(CASE WHEN val = '*' THEN 1 ELSE 0 END) = 1
-        ),
-        rules AS (
-          SELECT DISTINCT g2.host, g2.kind AS rule, g2.val AS prefix
-          FROM grouped g2 JOIN stars USING (host, gid)
-          WHERE g2.kind IN ('allow', 'disallow') AND g2.val <> ''
-            AND g2.gid > 0
-        ),
-        urls AS (SELECT DISTINCT {url} AS url FROM documents),
-        base AS (
-          SELECT url, lower({g(2, "url")}) AS host,
-                 CASE WHEN {g(4, "url")} = '' THEN '/'
-                      ELSE {g(4, "url")} END AS path
-          FROM urls WHERE lower({g(2, "url")}) <> ''
-        ),
-        joined AS (
-          SELECT base.url, base.host, r.rule, r.prefix
-          FROM base LEFT JOIN rules r
-            ON base.host = r.host AND starts_with(base.path, r.prefix)
-        ),
-        ranked AS (
-          SELECT url, host, rule, prefix,
-                 ROW_NUMBER() OVER (PARTITION BY url
-                   ORDER BY (prefix IS NOT NULL) DESC,
-                            length(prefix) DESC, (rule = 'allow') DESC)
-                   AS rn
-          FROM joined
-        )
-        SELECT url, host,
-               CASE WHEN prefix IS NULL THEN true
-                    ELSE rule = 'allow' END AS allowed,
-               CAST(coalesce(length(prefix), 0) AS INTEGER) AS match_len,
-               CASE WHEN prefix IS NULL THEN ''
-                    WHEN rule = 'allow' THEN 'allow'
-                    ELSE 'disallow' END AS match_rule
-        FROM ranked WHERE rn = 1
-    """
-
-
-# sitemap fixture: per host 4 <url> blocks — padded loc, loc-without-
-# lastmod, lastmod-without-loc (dropped), empty loc (dropped).  ONE
-# template, both engines ({h} = host-id cast).
-_SITEMAP_XML_TMPL = (
-    "concat('<urlset>',"
-    " '<url><loc>  http://h', {h}, '.example.com/a', {h}, '  </loc>',"
-    " '<lastmod>2024-0', cast(hid % 9 + 1 as string_t), '-15T10:00:00Z'"
-    " , '</lastmod></url>',"
-    " '<url><loc>http://h', {h}, '.example.com/b', {h}, '</loc></url>',"
-    " '<url><lastmod>2024-01-01</lastmod></url>',"
-    " '<url><loc></loc></url>',"
-    " '</urlset>')"
-)
-
-
-def q_web_sitemap_parse(spark, sf_dir):
-    """Sitemap XML -> frontier entries (datapipe/robots.parse_sitemap):
-    <url> blocks exploded, loc/lastmod extracted with padded-value trim,
-    loc-less and empty-loc blocks dropped, lastmod also emitted as epoch
-    DAYS (integer, so re-crawl scheduling never compares strings).
-    Per-row regex battery, zero shuffle."""
-    from literature_to_facts_spark.datapipe.robots import parse_sitemap
-
-    h = "cast(hid as string)"
-    sitemaps = (
-        _t(spark, sf_dir, "documents")
-        .selectExpr("doc_id % 5 AS hid")
-        .distinct()
-        .selectExpr(
-            f"concat('h', {h}, '.example.com') AS host",
-            _SITEMAP_XML_TMPL.format(h=h).replace("string_t", "string")
-            + " AS sitemap_xml",
-        )
-    )
-    out = parse_sitemap(sitemaps, carry_cols=("host",))
-    # contract-output NULL parity: the compare harness sorts rows, and
-    # NULL strings/ints break the sort — coalesce in BOTH engines
-    return out.select(
-        "host",
-        "loc",
-        F.coalesce("lastmod", F.lit("")).alias("lastmod"),
-        F.coalesce("lastmod_day", F.lit(-1)).cast("int").alias("lastmod_day"),
-    )
-
-
-def _web_sitemap_parse_oracle() -> str:
-    from literature_to_facts_spark.datapipe.robots import (
-        SITEMAP_LASTMOD_PATTERN,
-        SITEMAP_LOC_PATTERN,
-        SITEMAP_URL_BLOCK_PATTERN,
-    )
-
-    h = "CAST(hid AS VARCHAR)"
-    xml = _SITEMAP_XML_TMPL.format(h=h).replace("string_t", "varchar")
-    return f"""
-        WITH hosts AS (SELECT DISTINCT doc_id % 5 AS hid FROM documents),
-        sm AS (
-          SELECT 'h' || {h} || '.example.com' AS host, {xml} AS xml
-          FROM hosts
-        ),
-        b AS (
-          SELECT host,
-                 unnest(regexp_extract_all(xml,
-                        '{SITEMAP_URL_BLOCK_PATTERN}', 1)) AS blk
-          FROM sm
-        ),
-        f AS (
-          SELECT host,
-                 regexp_extract(blk, '{SITEMAP_LOC_PATTERN}', 1) AS loc,
-                 NULLIF(regexp_extract(blk, '{SITEMAP_LASTMOD_PATTERN}', 1),
-                        '') AS lastmod
-          FROM b
-        )
-        SELECT host, loc, coalesce(lastmod, '') AS lastmod,
-               CAST(coalesce(datediff('day', DATE '1970-01-01',
-                    try_cast(substring(lastmod, 1, 10) AS DATE)), -1)
-                 AS INTEGER) AS lastmod_day
-        FROM f WHERE loc <> ''
-    """
-
-
 # WARC fixture: per doc a 3-record payload — request (full headers),
 # response (LOWERCASE field names, no Content-Length), header-only
 # metadata trailer without the inter-record terminator.  Raw \r\n bytes
@@ -4509,66 +4142,6 @@ def _crawl_warc_chain_oracle() -> str:
     """
 
 
-_ROBOTS_SM_TAIL = (
-    ", chr(10), 'Sitemap: http://h', {h}, '.example.com/sm.xml', chr(10),"
-    " 'sitemap:   http://h', {h}, '.example.com/sm2.xml   # mirrors',"
-    " chr(10), 'Sitemap:', chr(10),"
-    " 'Sitemap: http://h', {h}, '.example.com/sm.xml'"
-)
-
-
-def q_web_robots_sitemaps(spark, sf_dir):
-    """Sitemap directives from robots.txt (datapipe/robots.robots_sitemaps):
-    group-independent per the REP — extracted from the same fixture bodies
-    the gate query parses, plus case-variant / comment-tailed / empty /
-    duplicate directives; distinct (host, sitemap_url) out.  One
-    scan-fused extract-all, one distinct."""
-    from literature_to_facts_spark.datapipe.robots import robots_sitemaps
-
-    h = "cast(hid as string)"
-    robots = (
-        _t(spark, sf_dir, "documents")
-        .selectExpr("doc_id % 7 AS hid")
-        .distinct()
-        .selectExpr(
-            f"concat('h', {h}, '.example.com') AS host",
-            "concat("
-            + _ROBOTS_BODY_TMPL.format(h=h)
-            + _ROBOTS_SM_TAIL.format(h=h)
-            + ") AS robots_txt",
-        )
-    )
-    return robots_sitemaps(robots)
-
-
-def _web_robots_sitemaps_oracle() -> str:
-    from literature_to_facts_spark.datapipe.robots import (
-        SITEMAP_DIRECTIVE_PATTERN,
-    )
-
-    h = "CAST(hid AS VARCHAR)"
-    body = (
-        "concat("
-        + _ROBOTS_BODY_TMPL.format(h=h)
-        + _ROBOTS_SM_TAIL.format(h=h)
-        + ")"
-    )
-    return f"""
-        WITH hosts AS (SELECT DISTINCT doc_id % 7 AS hid FROM documents),
-        rb AS (
-          SELECT 'h' || {h} || '.example.com' AS host, {body} AS body
-          FROM hosts
-        ),
-        v AS (
-          SELECT host,
-                 trim(unnest(regexp_extract_all(body,
-                      '{SITEMAP_DIRECTIVE_PATTERN}', 1))) AS sitemap_url
-          FROM rb
-        )
-        SELECT DISTINCT host, sitemap_url FROM v WHERE sitemap_url <> ''
-    """
-
-
 _TRIANGLE_MAX_DEGREE = 10_000
 
 
@@ -4642,11 +4215,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # follow.  Oracles and the bench address queries by NAME — the
     # registry order carries no semantics.
     return {
-        "web_robots_sitemaps": q_web_robots_sitemaps,
         "crawl_warc_chain": q_crawl_warc_chain,
         "web_warc_parse": q_web_warc_parse,
-        "web_sitemap_parse": q_web_sitemap_parse,
-        "web_robots_gate": q_web_robots_gate,
         "web_frontier_rank": q_web_frontier_rank,
         "web_triangle_count": q_web_triangle_count,
         "text_line_dedup_grouped": q_text_line_dedup_grouped,
@@ -4719,19 +4289,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_counterpart_join": q_kg_counterpart_join,
         "kg_reaction_pivot": q_kg_reaction_pivot,
         "json_extract": q_json_extract,
-        "sessionize_window": q_sessionize_window,
         "events_asof_join": q_events_asof_join,
         "events_interval_join": q_events_interval_join,
-        "tpch_q1_pricing": q_tpch_q1_pricing,
-        "tpch_q6_forecast": q_tpch_q6_forecast,
-        "rollup_orders": q_rollup_orders,
-        "anti_join_inactive_customers": q_anti_join_inactive_customers,
-        "topk_orders_per_priority": q_topk_orders_per_priority,
-        "tpch_q3_shipping": q_tpch_q3_shipping,
-        "tpch_q5_local_supplier": q_tpch_q5_local_supplier,
-        "top_parts_by_qty": q_top_parts_by_qty,
-        "set_ops_union_distinct": q_set_ops_union_distinct,
-        "percentiles_by_flag": q_percentiles_by_flag,
         "dedup_exact": q_dedup_exact,
         "dedup_exact_incremental": q_dedup_exact_incremental,
         "dedup_corpus_purge": q_dedup_corpus_purge,
@@ -5632,9 +5191,6 @@ def _mixture_weights_oracle() -> str:
 
 
 def oracle_sql() -> dict[str, str]:
-    cents = "CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)"
-    dpct = "CAST(FLOOR(l_discount * 100 + 0.5) AS BIGINT)"
-    tpct = "CAST(FLOOR(l_tax * 100 + 0.5) AS BIGINT)"
     toks = "string_split(lower(text), ' ')"
     return {
         "kg_triples_melt": """
@@ -5719,114 +5275,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT CAST(event_id AS BIGINT) AS event_id,
                    CAST(json_extract_string(props, '$.k') AS BIGINT) AS k_val
             FROM events
-        """,
-        "sessionize_window": """
-            SELECT CAST(user_id AS BIGINT) AS user_id,
-                   CAST(SUM(new_session) AS BIGINT) AS n_sessions,
-                   CAST(COUNT(*) AS BIGINT) AS n_events
-            FROM (
-              SELECT user_id,
-                     CASE WHEN prev_ts IS NULL
-                          OR epoch_us(ts) - epoch_us(prev_ts) > 300000000
-                          THEN 1 ELSE 0 END AS new_session
-              FROM (
-                SELECT user_id, ts,
-                       LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-                FROM events
-              )
-            ) GROUP BY user_id
-        """,
-        "tpch_q1_pricing": f"""
-            SELECT l_returnflag, l_linestatus,
-                   CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
-                   CAST(SUM({cents}) AS BIGINT) AS sum_base_cents,
-                   CAST(SUM({cents} * (100 - {dpct})) AS BIGINT) AS sum_disc_c4,
-                   CAST(SUM({cents} * (100 - {dpct}) * (100 + {tpct})) AS BIGINT) AS sum_charge_c6,
-                   CAST(COUNT(*) AS BIGINT) AS count_order
-            FROM lineitem
-            WHERE l_shipdate <= '1998-09-02'
-            GROUP BY l_returnflag, l_linestatus
-        """,
-        "tpch_q6_forecast": f"""
-            SELECT CAST(SUM({cents} * {dpct}) AS BIGINT) AS revenue_c4,
-                   CAST(COUNT(*) AS BIGINT) AS n_items
-            FROM lineitem
-            WHERE l_shipdate >= '1996-01-01' AND l_shipdate < '1997-01-01'
-              AND l_discount >= 0.05 AND l_discount <= 0.07
-              AND l_quantity < 24
-        """,
-        "rollup_orders": """
-            SELECT o_orderstatus, o_orderpriority,
-                   CAST(COUNT(*) AS BIGINT) AS n_orders,
-                   CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT) AS total_cents
-            FROM orders
-            GROUP BY ROLLUP(o_orderstatus, o_orderpriority)
-        """,
-        "anti_join_inactive_customers": """
-            SELECT c_mktsegment, CAST(COUNT(*) AS BIGINT) AS n_inactive
-            FROM customer c
-            WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-            GROUP BY c_mktsegment
-        """,
-        "topk_orders_per_priority": """
-            SELECT o_orderpriority, CAST(o_orderkey AS BIGINT) AS o_orderkey,
-                   cents, CAST(rnk AS BIGINT) AS rnk
-            FROM (
-              SELECT o_orderpriority, o_orderkey,
-                     CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS cents,
-                     ROW_NUMBER() OVER (PARTITION BY o_orderpriority
-                                        ORDER BY CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) DESC,
-                                                 o_orderkey ASC) AS rnk
-              FROM orders
-            ) WHERE rnk <= 3
-        """,
-        "tpch_q3_shipping": f"""
-            SELECT CAST(l_orderkey AS BIGINT) AS l_orderkey,
-                   CAST(o_orderdate AS VARCHAR) AS o_orderdate,
-                   CAST(SUM({cents} * (100 - {dpct})) AS BIGINT) AS revenue_c4
-            FROM customer, orders, lineitem
-            WHERE c_mktsegment = 'BUILDING'
-              AND c_custkey = o_custkey AND l_orderkey = o_orderkey
-              AND o_orderdate < '1997-01-01' AND l_shipdate > '1997-01-01'
-            GROUP BY l_orderkey, o_orderdate
-            ORDER BY revenue_c4 DESC, l_orderkey ASC
-            LIMIT 10
-        """,
-        "tpch_q5_local_supplier": f"""
-            SELECT n_name,
-                   CAST(SUM({cents} * (100 - {dpct})) AS BIGINT) AS revenue_c4
-            FROM customer, orders, lineitem, supplier, nation, region
-            WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-              AND l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-              AND s_nationkey = n_nationkey AND n_regionkey = r_regionkey
-              AND r_name = 'ASIA'
-              AND o_orderdate >= '1995-01-01' AND o_orderdate < '1997-01-01'
-            GROUP BY n_name
-        """,
-        "top_parts_by_qty": """
-            SELECT CAST(p.p_partkey AS BIGINT) AS p_partkey, p.p_name,
-                   CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS total_qty
-            FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-            GROUP BY p.p_partkey, p.p_name
-            ORDER BY total_qty DESC, p_partkey ASC
-            LIMIT 10
-        """,
-        "percentiles_by_flag": """
-            SELECT l_returnflag,
-                   ROUND(quantile_cont(l_extendedprice, 0.5), 6) AS p50,
-                   ROUND(quantile_cont(l_extendedprice, 0.9), 6) AS p90,
-                   ROUND(quantile_cont(l_quantity, 0.5), 6) AS qty_p50
-            FROM lineitem GROUP BY l_returnflag
-        """,
-        "set_ops_union_distinct": """
-            SELECT key % 10 AS key_mod, CAST(COUNT(*) AS BIGINT) AS n_keys
-            FROM (
-              SELECT DISTINCT key FROM (
-                SELECT CAST(o_custkey AS BIGINT) AS key FROM orders
-                UNION ALL
-                SELECT CAST(c_custkey AS BIGINT) FROM customer
-              )
-            ) GROUP BY key % 10
         """,
         "dedup_exact": """
             SELECT md5(text) AS text_hash,
@@ -6557,11 +6005,8 @@ def oracle_sql() -> dict[str, str]:
         "web_extract_gate": _web_extract_gate_oracle(),
         "web_triangle_count": _web_triangle_count_oracle(),
         "web_frontier_rank": _web_frontier_rank_oracle(),
-        "web_robots_gate": _web_robots_gate_oracle(),
-        "web_sitemap_parse": _web_sitemap_parse_oracle(),
         "web_warc_parse": _web_warc_parse_oracle(),
         "crawl_warc_chain": _crawl_warc_chain_oracle(),
-        "web_robots_sitemaps": _web_robots_sitemaps_oracle(),
         "text_line_dedup_grouped": f"""
         WITH m AS (
           SELECT doc_id, 'h' || CAST(doc_id % 4 AS VARCHAR) AS host,

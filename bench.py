@@ -68,36 +68,45 @@ HEADLINE = [
     "kg_canonicalize_salted",
     "kg_dict_view",
     "kg_valuable_filter",
-    "sessionize_window",
-    "tpch_q1_pricing",
-    "tpch_q3_shipping",
-    "tpch_q5_local_supplier",
+    "stream_windowed_counts",
+    "kg_triples_delta",
+    "kg_predicate_stats",
+    "kg_characteristic_sets",
+    "kg_entity_cooccurrence",
+    "kg_two_hop",
+    "kg_predicate_stats_incremental",
+    "kg_cooccurrence_pmi",
+    "kg_charsets_incremental",
+    "kg_pattern_join",
+    "kg_star_join",
+    "kg_triple_provenance",
+    "kg_path_closure",
+    "kg_triples_melt",
+    "kg_counterpart_join",
+    "kg_reaction_pivot",
+    "json_extract",
+]
+
+# Driver queries over the datapipe/ modules still to be deleted (ROADMAP
+# item 4).  They are timed like HEADLINE and reported in the full result
+# line and BENCH/BASELINE.md, so a slowdown in that code still shows, but
+# they stay out of the compact line and the headline total.  Each entry
+# is deleted with its module.
+DATAPIPE_TIMED = [
     "dedup_exact",
     "dedup_minhash_lsh",
     "emb_cosine_topk",
     "text_token_counts",
     "text_fingerprint",
-    # round-2 operators (appended so the original 14 stay comparable
-    # across rounds)
     "dedup_simhash_pairs",
     "dedup_embedding_cosine",
     "emb_ann_ivf",
-    "stream_windowed_counts",
-    # round-3 operators (appended; earlier entries stay comparable).
-    # dedup_clusters_cc is deliberately NOT here: it executes eagerly
-    # (iterative fixpoint) and embeds the full minhash pipeline, so it would
-    # double-count the most expensive query; the correctness gate runs it.
     "sample_hash_fraction",
     "sample_stratified_topn",
     "events_asof_join",
     "events_interval_join",
-    # round-4 operators (appended; earlier entries stay comparable)
     "dedup_minhash_incremental",
     "dedup_simhash_incremental",
-    # round-5 operators (appended; earlier entries stay comparable).
-    # curation_pipeline{,_full} and the CC/cluster-state family are
-    # deliberately NOT here: they execute eagerly (iterative fixpoint) and
-    # embed the full minhash pipeline; the correctness gate runs them.
     "dedup_embedding_incremental",
     "text_repetition",
     "decontam_pairs",
@@ -106,8 +115,6 @@ HEADLINE = [
     "text_pii_redact",
     "sample_mixture_temperature",
     "corpus_snapshot_diff",
-    "kg_triples_delta",
-    # round-6 operators (appended; earlier entries stay comparable)
     "text_lang_trigram",
     "multimodal_features",
     "emb_ann_lsh_multiprobe",
@@ -117,7 +124,6 @@ HEADLINE = [
     "text_span_dedup_incremental",
     "source_quality_stats",
     "sample_pack_sequences",
-    # round-6 second wave (appended; earlier entries stay comparable)
     "url_normalize",
     "url_dedup",
     "semantic_dedup",
@@ -128,9 +134,6 @@ HEADLINE = [
     "text_lm_perplexity",
     "graph_pagerank",
     "html_extract_text",
-    # round-6 third wave (appended; earlier entries stay comparable).
-    # dedup_corpus_keep_best is deliberately NOT here: eager CC fixpoint
-    # over the full minhash pipeline (same rule as dedup_clusters_cc).
     "html_extract_links",
     "text_chunk_sliding",
     "text_tokenize_encode",
@@ -138,35 +141,18 @@ HEADLINE = [
     "url_latest_snapshot",
     "web_link_rank",
     "url_blocklist",
-    # round-6 fourth wave: KG store-side query lane (appended)
-    "kg_predicate_stats",
-    "kg_characteristic_sets",
-    "kg_entity_cooccurrence",
-    "kg_two_hop",
-    "kg_predicate_stats_incremental",
-    "kg_cooccurrence_pmi",
     "html_meta_robots",
     "url_canonical_dedup",
-    "kg_charsets_incremental",
     "crawl_ingest_gate",
-    "kg_pattern_join",
-    # round-6 fifth wave: naming/provenance/star-join (appended)
     "web_anchor_text",
-    "kg_star_join",
-    "kg_triple_provenance",
-    # round-6 sixth wave: path closure / main content / anchor delta
-    "kg_path_closure",
     "html_main_content",
     "web_anchor_text_incremental",
     "web_extract_gate",
     "text_line_dedup_grouped",
     "web_triangle_count",
     "web_frontier_rank",
-    "web_robots_gate",
-    "web_sitemap_parse",
     "web_warc_parse",
     "crawl_warc_chain",
-    "web_robots_sitemaps",
 ]
 
 
@@ -507,47 +493,7 @@ def run_skew_probe(spark) -> dict:
     return out
 
 
-def run_ann_recall(spark) -> dict:
-    """recall@k of the two ANN paths against brute-force ground truth, so
-    the speed/quality trade is a committed baseline number rather than a
-    test assertion.  50 query vectors / k=10 gives 500 truth pairs — fine
-    enough that a recall regression of a few percent is visible (the
-    3-query contract queries quantize recall to fifteenths)."""
-    from pyspark.sql import functions as F
-
-    import __spark_entry__ as em
-    from literature_to_facts_spark.datapipe.similarity import (
-        cosine_topk_bruteforce,
-        cosine_topk_ivf,
-        cosine_topk_lsh,
-    )
-
-    emb = em._spread(em._t(spark, SF_DIR, "embeddings"))
-    n_q, k = 50, 10
-    queries = emb.where(F.col("vec_id") < n_q).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-
-    def pairs(df):
-        return {(r["q_id"], r["vec_id"]) for r in df.select("q_id", "vec_id").collect()}
-
-    truth = pairs(cosine_topk_bruteforce(emb, queries, k=k))
-    out = {"n_queries": n_q, "k": k, "n_truth": len(truth)}
-    # same parameterizations as the contract queries emb_ann_lsh/emb_ann_ivf
-    lsh = pairs(cosine_topk_lsh(spark, emb, queries, k=k, n_planes=6))
-    mp = pairs(
-        cosine_topk_lsh(spark, emb, queries, k=k, n_planes=8, multiprobe=2)
-    )
-    ivf = pairs(
-        cosine_topk_ivf(emb, queries, k=k, n_centroids=8, nprobe=3, refine_iters=1)
-    )
-    out["recall_lsh"] = round(len(lsh & truth) / max(len(truth), 1), 4)
-    out["recall_lsh_multiprobe"] = round(len(mp & truth) / max(len(truth), 1), 4)
-    out["recall_ivf"] = round(len(ivf & truth) / max(len(truth), 1), 4)
-    return out
-
-
-def run_headline() -> tuple[dict, dict, float, float, dict, dict]:
+def run_headline() -> tuple[dict, dict, float, float, dict]:
     sys.path.insert(0, REPO)
     import __spark_entry__ as em
 
@@ -555,11 +501,11 @@ def run_headline() -> tuple[dict, dict, float, float, dict, dict]:
     qmap = em.queries()
     # JIT/codegen warmup so the first headline query isn't charged for it
     spark.range(1_000_000).selectExpr("sum(id)").collect()
-    em.queries()["tpch_q1_pricing"](spark, SF_DIR).write.format("noop").mode("overwrite").save()
+    qmap["kg_triples_melt"](spark, SF_DIR).write.format("noop").mode("overwrite").save()
     timings = {}
     warm = {}
     total = 0.0
-    for name in HEADLINE:
+    for name in HEADLINE + DATAPIPE_TIMED:
         t0 = time.time()
         try:
             df = qmap[name](spark, SF_DIR)
@@ -569,15 +515,14 @@ def run_headline() -> tuple[dict, dict, float, float, dict, dict]:
             continue
         dt = time.time() - t0
         timings[name] = round(dt, 3)
-        total += dt
+        if name in HEADLINE:
+            total += dt
         # second run of the same plan: codegen/JIT compiled, scheduler warm —
         # the steady-state cost a long-lived session pays per execution.
-        # One-shot numbers stay the primary metric (continuity with earlier
-        # rounds); first-run minus warm is almost entirely Janino/JIT compile,
-        # which swings 2-8s on this shared VM for the codegen-heavy dedup
-        # queries depending on host epoch.
-        # clearCache first: queries that persist() intermediates (IVF
-        # centroids, incremental-dedup candidates) would otherwise resolve
+        # One-shot numbers stay the primary metric; first-run minus warm is
+        # almost entirely Janino/JIT compile.
+        # clearCache first: queries that persist() intermediates (path
+        # closure frontiers, incremental-statistics histories) would resolve
         # the second run's plan-identical subtree straight from the cache —
         # reporting cache-hit latency as "warm" and letting entries pile up
         # across the rest of the session.
@@ -602,14 +547,9 @@ def run_headline() -> tuple[dict, dict, float, float, dict, dict]:
             skew = run_skew_probe(spark)
         except Exception as e:  # probe failure must not kill the bench line
             skew = {"error": f"{type(e).__name__}: {e}"}
-    ann = {}
-    try:
-        ann = run_ann_recall(spark)
-    except Exception as e:  # supplemental; never kills the bench line
-        ann = {"error": f"{type(e).__name__}: {e}"}
     spark.stop()
     sf = 0.1 if "0.1" in SF_DIR else (0.01 if "0.01" in SF_DIR else 0.001)
-    return timings, warm, total, sf, skew, ann
+    return timings, warm, total, sf, skew
 
 
 def write_baseline_md(result: dict) -> None:
@@ -680,40 +620,11 @@ def write_baseline_md(result: dict) -> None:
         "## Headline queries (seconds, noop sink)",
         "",
         "one-shot = first execution in the session (includes Janino/JIT "
-        "codegen compile, which swings 2-8s on this shared VM for the "
-        "codegen-heavy dedup queries depending on host epoch); warm = MIN of "
-        "two re-executions of the same plan with the cache CLEARED first "
-        "(steady-state per-execution cost — queries that persist() "
-        "intermediates, like IVF centroids and incremental-dedup candidates, "
-        "recompute them rather than reporting a cache-hit as warm; round-3 "
-        "warm numbers for those queries included the cache hit).",
-        "",
-        "One-shot attribution (round 5, a JVM-metric instrumented profile "
-        "in bench session order): of the "
-        "dedup_minhash_lsh one-shot-minus-warm gap (~1.9-2.3 s depending on "
-        "epoch), Janino generated-class compilation is 0.2-0.3 s (35 "
-        "classes); the remainder is ~1,400-1,700 first-touch JVM class "
-        "loads plus ~10-12 s of HotSpot JIT compiler CPU competing with the "
-        "32 worker threads — per-SESSION fixed costs that amortize to zero "
-        "at deployment (paid once per executor JVM, not per query) and that "
-        "no plan change removes.  Measured one-shots straddle the 4 s bar "
-        "by epoch (3.99 s and 4.68 s in back-to-back profiled runs, "
-        "identical plans); the warm floor (~1.6 s exec) is task-scheduling "
-        "bound: sf0.1 documents is 5,000 rows / ~1.5 MB over 64 shuffle "
-        "partitions x ~8 stages.",
-        "",
-        "Round-5 incremental-dedup numbers read ~1-1.5 s higher than round "
-        "4 AT THIS (tiny) SCALE by design: the history side moved from "
-        "union+regroup (full-index Exchange per batch — the round-4 "
-        "verdict's #1 scale gap) to a broadcast-probe shape with more join "
-        "stages, so a single in-session execution sits higher on the "
-        "JIT/first-touch ramp.  Deep-warm A/B on an idle box (4 "
-        "clearCache'd trials each, same session): union 3.27 s vs probe "
-        "3.25 s — steady-state parity — while the probe eliminates the "
-        "O(history) shuffle entirely (zero Exchange on the history side "
-        "over a bucketed index, plan-pinned).  At 100 TB history the "
-        "round-4 shape re-shuffles the full index every batch; the round-5 "
-        "shape scans it once, filtered at the scan.",
+        "codegen compile); warm = MIN of two re-executions of the same plan "
+        "with the cache CLEARED first (steady-state per-execution cost — "
+        "queries that persist() intermediates, like the path-closure "
+        "frontiers and the incremental-statistics histories, recompute them "
+        "rather than reporting a cache-hit as warm).",
         "",
         "| query | one-shot sec | warm sec |",
         "|---|---|---|",
@@ -754,70 +665,9 @@ def write_baseline_md(result: dict) -> None:
             "the one reducer owning the hot key while every other executor "
             "idles; the salted plan spreads that key over 64 salt partitions.",
         ]
-    ann = result.get("ann_recall", {})
-    if "recall_lsh" in ann:
-        lines += [
-            "",
-            "## ANN quality: recall@k vs brute-force ground truth",
-            "",
-            f"{ann['n_queries']} query vectors, k={ann['k']} "
-            f"({ann['n_truth']} truth pairs), same parameterizations as the "
-            "contract queries: "
-            f"`emb_ann_lsh` (n_planes=6) recall **{ann['recall_lsh']}**, "
-            f"`emb_ann_lsh_multiprobe` (n_planes=8, 2 margin-ordered "
-            f"Hamming-1 probes) recall "
-            f"**{ann.get('recall_lsh_multiprobe', 'n/a')}**, "
-            f"`emb_ann_ivf` (8 centroids, nprobe=3) recall "
-            f"**{ann['recall_ivf']}** — the committed speed/quality trade "
-            "behind the ANN latency rows above.  Both knobs trade recall "
-            "for candidate-set size (fewer planes / more probes -> higher "
-            "recall, more exact scoring).",
-        ]
-    ab_path = os.path.join(REPO, "BENCH", "delta_scale_ab.json")
-    if os.path.exists(ab_path):
-        try:
-            with open(ab_path) as f:
-                ab = json.load(f)
-            ab_lines = [
-                "",
-                "## Delta-dedup at scale: probe vs union history access",
-                "",
-                f"{ab['n_history']:,} history docs/vectors, "
-                f"{ab['n_batch']:,}-doc batch against persisted bucketed "
-                "catalog indexes (scripts/bench_delta_scale.py; pair sets "
-                "asserted identical, trials interleaved).  'union' is the "
-                "round-4 shape (new rows unioned with the FULL index, "
-                "everything re-grouped); 'probe' is the shipped operators "
-                "(broadcast batch keys semi-filter the index at its scan).",
-                "",
-                "| family | history rows | probe s | union s | speedup | probe shuffle MB | union shuffle MB |",
-                "|---|---|---|---|---|---|---|",
-            ]
-            for fam, r in ab.get("families", {}).items():
-                nh = r.get("n_history", ab["n_history"])
-                ab_lines.append(
-                    f"| {fam} | {nh:,} | {r['probe_median']} | "
-                    f"{r['union_median']} | "
-                    f"{r['speedup']}x | {r.get('probe_shuffle_mb', '')} | "
-                    f"{r.get('union_shuffle_mb', '')} |"
-                )
-            ab_lines += [
-                "",
-                "Shuffle bytes are the cluster-scale story the single-node "
-                "wall clock understates: the union shape exchanges the FULL "
-                "history index every batch (grows linearly with the corpus "
-                "— at 100 TB it is the network bill), the probe shape "
-                "exchanges only batch-bounded rows regardless of history "
-                "size.",
-            ]
-            if ab.get("note"):
-                ab_lines += ["", f"Note: {ab['note']}"]
-            lines += ab_lines
-        except Exception:
-            pass
     lines += [
         "",
-        f"Total: {result['value']} s for {len(result['queries'])} queries at sf={result['sf']}.",
+        f"Total: {result['value']} s for the {len(HEADLINE)} HEADLINE queries at sf={result['sf']}.",
         "",
         "## Reference comparison",
         "",
@@ -853,7 +703,7 @@ def main() -> None:
         pipeline_worker(int(sys.argv[2]), sys.argv[3], deadline)
         return
 
-    timings, warm, total, sf, skew, ann = run_headline()
+    timings, warm, total, sf, skew = run_headline()
 
     kg = {}
     if not SKIP_SCALING:
@@ -879,16 +729,14 @@ def main() -> None:
         "sf": sf,
         "queries_warm": warm,
         "skew_probe": skew,
-        "ann_recall": ann,
         "kg_pipeline": kg,
     }
     write_baseline_md(result)
-    with open(os.path.join(REPO, "BENCH", "last_full.json"), "w") as f:
-        json.dump(result, f, indent=1)
     # Full detail on a non-final line (humans / logs); the FINAL stdout line
     # must stay under the driver's 2000-char tail capture or it records
-    # parsed=null (BENCH_r05.json did).  Degrade per-query rounding until the
-    # compact line fits with headroom.
+    # parsed=null (BENCH_r05.json did).  It carries every HEADLINE query
+    # (DATAPIPE_TIMED stays on the full line): rather than drop one, fail
+    # loudly.
     print(json.dumps(result))
     hi = kg.get(f"local[{HI_CPUS}]", {}) if isinstance(kg, dict) else {}
     compact = {
@@ -898,37 +746,18 @@ def main() -> None:
         "sf": sf,
         "eff": kg.get("scaling_efficiency") if isinstance(kg, dict) else None,
         "tps": hi.get("triples_per_sec_median"),
-        "queries": {},
+        "queries": {
+            k: round(v, 2) if isinstance(v, float) else v
+            for k, v in timings.items()
+            if k in HEADLINE
+        },
     }
-    def _fits(c):
-        return len(json.dumps(c, separators=(",", ":"))) <= 1800
-
-    for nd in (2, 1):
-        compact["queries"] = {k: round(v, nd) for k, v in timings.items()}
-        if _fits(compact):
-            break
-    else:
-        # still too long at 1 decimal (the headline list keeps growing):
-        # keep the slowest queries — the ones a per-round comparison cares
-        # about — and point at the full per-query map on disk.  The final
-        # stdout line MUST stay under the driver's tail capture or the
-        # round records parsed=null (BENCH_r05.json did).
-        compact["queries_file"] = "BENCH/last_full.json"
-        numeric = sorted(
-            ((k, v) for k, v in timings.items() if isinstance(v, float)),
-            key=lambda kv: -kv[1],
-        )
-        errs = {k: v for k, v in timings.items() if not isinstance(v, float)}
-        keep = len(numeric)
-        while keep > 0:
-            compact["queries"] = dict(
-                [(k, round(v, 1)) for k, v in numeric[:keep]], **errs
-            )
-            compact["queries_omitted"] = len(numeric) - keep
-            if _fits(compact):
-                break
-            keep -= 5
     line = json.dumps(compact, separators=(",", ":"))
+    if len(line) > 1800:
+        raise RuntimeError(
+            f"compact bench line is {len(line)} chars (> 1800): it would be "
+            "cut by the 2000-char tail capture"
+        )
     print(line)
 
 

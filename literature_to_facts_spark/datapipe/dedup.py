@@ -34,7 +34,7 @@ Every family also ships its DELTA mode over a persisted index (``*_
 incremental`` + ``build_*_index``), all PROBE-shaped since round 5: the
 batch's keys broadcast-semi-join-filter the history index at its scan — one
 filtered pass per batch, zero shuffle of the history (zero Exchange over a
-``storage.write_bucketed`` catalog table) — and the closure itself is
+``engine.kgquery.write_bucketed`` catalog table) — and the closure itself is
 incremental too (``connected_components_incremental`` folds new pairs into
 a persisted cluster map; ``update_cluster_state_partitioned`` rewrites only
 the touched partitions of that map in place).
@@ -523,7 +523,7 @@ def minhash_lsh_pairs_incremental(
     rows of buckets the batch actually touches; everything downstream is
     batch-sized.  One scan of the history index per batch, zero shuffle of
     it — and when the index is a catalog table written with
-    ``datapipe.storage.write_bucketed(..., bucket_col="key")``, the
+    ``engine.kgquery.write_bucketed(..., bucket_col="key")``, the
     touched-bucket aggregation ALSO plans with zero Exchange (bucket
     hash-partitioning on ``key`` satisfies the (band, key) grouping —
     plan-pinned by tests/test_datapipe.py::
@@ -544,9 +544,9 @@ def minhash_lsh_pairs_incremental(
     All are batch-sized; callers running many batches in one
     long session should pass ``cache_registry`` (a list) — every persisted
     DataFrame is appended to it so the caller can ``unpersist()`` after
-    consuming the result (the streaming ``delta_dedup`` loop does this per
-    micro-batch; without it cached DataFrames accumulate per batch for the
-    life of the stream).
+    consuming the result (a streaming loop does this per micro-batch;
+    without it cached DataFrames accumulate per batch for the life of the
+    stream).
     """
     if old_index is None:
         old_index = build_lsh_band_index(
@@ -636,7 +636,7 @@ def minhash_lsh_pairs_incremental(
     # semi-join: the static planner sizes the persisted candidate subtree
     # pessimistically and would plan a SortMergeJoin that shuffles the full
     # corpus text — twice, once per shingle side (measured 1.5x on the
-    # whole batch at 500k history docs, scripts/bench_delta_scale.py)
+    # whole batch at 500k history docs)
     cand_ids = F.broadcast(
         candidates.select(F.explode(F.array("id_a", "id_b")).alias(id_col)).distinct()
     )
@@ -650,8 +650,7 @@ def minhash_lsh_pairs_incremental(
     # without this persist the FULL history corpus is scanned (and the
     # candidates' shingles recomputed) twice per batch.  The frame is
     # batch-bounded (candidate ids only), so the cache is small; measured
-    # 4.02 -> 2.6 s on the embedding analog at 2M history vectors
-    # (scripts/bench_delta_scale.py).
+    # 4.02 -> 2.6 s on the embedding analog at 2M history vectors.
     sh = _shingle_frame(needed_docs, id_col, text_col, n_gram, explode=False).persist()
     if cache_registry is not None:
         cache_registry.append(sh)

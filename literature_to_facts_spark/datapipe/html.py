@@ -712,8 +712,8 @@ def build_anchor_index(
     per-anchor counts merge by SUM and the distinct-anchor /
     distinct-host evidence merges by counting distinct ``tav_key`` rows
     (existence, the predicate-stats trick — distinct counts can never be
-    merged from counts alone).  :func:`datapipe.storage.compact_index`
-    merges partials with ``sum_cols=['n']``.  Write with
+    merged from counts alone); a compaction may merge the partials by
+    summing ``n``.  Write with
     ``write_bucketed(..., bucket_col='tav_key')``: the composite key makes
     the touched-row merge groupBy plan with ZERO Exchange over the
     bucketed scan (hash clustering on ``tav_key`` satisfies any grouping

@@ -557,9 +557,9 @@ def shuffle_deterministic(
 
     Scale shape (100 TB): ONE hash Exchange on ``shard`` plus a per-shard
     sort window — exactly the physical work a sharded training export must
-    do anyway (pair with :func:`~literature_to_facts_spark.datapipe.
-    storage.write_sharded`: ``repartition(n, shard)`` + sortWithinPartitions
-    keeps the window and the file layout in the same shuffle).  Size
+    do anyway (an export that writes ``repartition(n, shard)`` +
+    sortWithinPartitions keeps the window and the file layout in the same
+    shuffle).  Size
     ``n_shards`` >= cluster parallelism so every executor sorts one
     shard-sized run.  Rows with NULL id are excluded (no stable key).
     """

@@ -284,7 +284,7 @@ def embedding_near_dup_pairs_incremental(
     same contract and PROBE shape as ``dedup.minhash_lsh_pairs_incremental``:
     the batch's bucket ids broadcast-semi-join-filter the persisted index
     at its scan (one filtered history pass, zero history shuffle; zero
-    Exchange over a ``storage.write_bucketed("bucket")`` catalog table),
+    Exchange over a ``kgquery.write_bucketed("bucket")`` catalog table),
     matched buckets stream past a broadcast of the new aggregate, new-only
     buckets come from a scalar-keys anti join, and the bucket-size cap
     applies to the TOTAL old+new population.  ``old_vectors`` supplies
@@ -357,8 +357,7 @@ def embedding_near_dup_pairs_incremental(
     # sides) and Spark will not reuse the subtree across the joins — without
     # the persist the full history embedding table is scanned twice per
     # batch.  Batch-bounded (candidate ids only), so the cache is small;
-    # measured 4.02 -> 2.6 s at 2M history vectors
-    # (scripts/bench_delta_scale.py).
+    # measured 4.02 -> 2.6 s at 2M history vectors.
     emb = (
         old_vectors.select(F.col(id_col).alias("vec_id"), F.col(emb_col).alias("embedding"))
         .unionByName(
@@ -588,7 +587,7 @@ def build_ivf_index(
     (sixth delta family).
 
     Persist ``centroids`` as a small table and ``assignments`` via
-    ``datapipe.storage.write_bucketed(..., bucket_col="centroid_id")``; new
+    ``engine.kgquery.write_bucketed(..., bucket_col="centroid_id")``; new
     batches then extend the index through :func:`ivf_index_append` without
     ever touching history, and queries run over the combined lists through
     :func:`cosine_topk_ivf_from_index`.  Centroids are FROZEN after

@@ -3,8 +3,8 @@
 Two storage decisions dominate join/scan cost at corpus scale, and both are
 declared at WRITE time so every later query gets them for free:
 
-* **Bucketing** (`write_bucketed`): pre-hash-partition (and optionally sort)
-  a table on its join key.  Two tables bucketed on the same key with the
+* **Bucketing** (`engine.kgquery.write_bucketed`): pre-hash-partition
+  (and optionally sort) a table on its join key.  Two tables bucketed on the same key with the
   same bucket count join with ZERO Exchange — the single most expensive
   operator in a repeated big-big join (doc joins, signature-index joins)
   disappears from every downstream plan.  Spark persists the bucket spec in
@@ -28,35 +28,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    n_buckets: int,
-    sort_cols: list | None = None,
-    path: str | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Write ``df`` as a bucketed (and optionally sorted) catalog table.
-
-    ``sort_cols`` additionally sorts within each bucket file: a join between
-    two tables bucketed AND sorted on the key needs neither Exchange nor
-    Sort — the SortMergeJoin streams the pre-sorted buckets directly.
-    ``path`` makes it an external table (data at ``path``, metadata in the
-    catalog); omit for a managed table under the warehouse dir.
-
-    Pick ``n_buckets`` so one bucket is a few hundred MB at target scale,
-    and use the SAME count for every table sharing the join key — mismatched
-    counts fall back to shuffling one side.
-    """
-    w = df.write.mode(mode).bucketBy(n_buckets, bucket_col)
-    if sort_cols:
-        w = w.sortBy(sort_cols[0], *sort_cols[1:])
-    if path is not None:
-        w = w.option("path", path)
-    w.format("parquet").saveAsTable(table)
-
-
 def write_partitioned(
     df: DataFrame,
     path: str,
@@ -78,195 +49,3 @@ def co_located_join(
     tests/test_datapipe.py::test_bucketed_join_is_exchange_free."""
     keys = [on] if isinstance(on, str) else list(on)
     return spark.table(left_table).join(spark.table(right_table), on=keys)
-
-
-def write_sharded(
-    df: DataFrame,
-    path: str,
-    n_shards: int,
-    id_col: str = "doc_id",
-    mode: str = "overwrite",
-) -> None:
-    """SIZE-BALANCED export: the ship step of a curated corpus.
-
-    A curated corpus is consumed by a trainer that wants uniform shards;
-    writing whatever partitioning the last shuffle left behind produces a
-    long tail of tiny files plus a few giants (the purge's anti-join and
-    the samplers skew partition sizes badly).  This assigns each row a
-    ``shard`` column — the portable md5-derived hash of ``id_col`` mod
-    ``n_shards``, uniform regardless of id or key skew and deterministic
-    per row (the same doc always lands in the same shard for a given
-    ``n_shards``, so re-exports are file-stable) — and writes one
-    ``shard=k/`` directory with exactly ONE parquet file each: the
-    pre-write ``repartition`` on the shard column puts every row of a
-    shard value in a single task (a bare ``repartition(n, expr)`` hashes
-    the expression VALUE to pick a partition, so shard k does not land in
-    partition k — but it does put all of shard k in ONE partition, which
-    is exactly the one-file-per-directory property partitionBy needs).
-
-    Scale: one full Exchange of the output — unavoidable for balanced
-    shards, and the output of a curation chain is the SAMPLED corpus
-    (typically a small fraction of the input), so this is the cheapest
-    shuffle in the pipeline.  Balance is binomial: shard sizes concentrate
-    within ~1 % of mean for shards of 10^6+ rows.
-    """
-    from pyspark.sql import functions as F
-
-    from literature_to_facts_spark.datapipe.dedup import _h52
-
-    if n_shards < 1:
-        raise ValueError(f"n_shards must be >= 1, got {n_shards}")
-    shard = F.expr(f"pmod({_h52(f'cast({id_col} as string)')}, {int(n_shards)})")
-    (
-        df.withColumn("shard", shard)
-        .repartition(int(n_shards), F.col("shard"))
-        .write.mode(mode)
-        # a re-export is a FULL export: pin static overwrite so an
-        # externally-configured partitionOverwriteMode=dynamic session
-        # cannot leave stale shard=k/ dirs behind when n_shards shrinks
-        # between exports (the repo's own incremental-state machinery sets
-        # dynamic per-write via .option(), which never leaks here)
-        .option("partitionOverwriteMode", "static")
-        .partitionBy("shard")
-        .parquet(path)
-    )
-
-
-def snapshot_diff(
-    old: DataFrame,
-    new: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Corpus versioning: what changed between two snapshots.
-
-    Returns ``(id_col, status, old_hash, new_hash)`` for every document
-    that was ``added`` (id only in ``new``), ``removed`` (only in ``old``)
-    or ``changed`` (both, different ``md5(text)``; NULL text hashes as
-    NULL — a NULL->NULL document is unchanged, a NULL->text transition is
-    a change).  Unchanged documents are NOT emitted — the diff artifact is
-    what an auditor or an incremental re-train actually reads, and at
-    100 TB emitting the unchanged majority would make the diff as big as
-    the corpus.
-
-    Scale: one full outer join on ``id_col`` (both sides shuffle by id —
-    inherent for an id-keyed diff); only the id and the 32-byte text hash
-    flow through it, never the text.
-    """
-    from pyspark.sql import functions as F
-
-    o = old.select(
-        F.col(id_col).alias("_id"), F.md5(F.col(text_col)).alias("old_hash")
-    ).withColumn("_in_old", F.lit(1))
-    n = new.select(
-        F.col(id_col).alias("_id"), F.md5(F.col(text_col)).alias("new_hash")
-    ).withColumn("_in_new", F.lit(1))
-    return (
-        o.join(n, on="_id", how="full_outer")
-        .withColumn(
-            "status",
-            F.when(F.col("_in_old").isNull(), F.lit("added"))
-            .when(F.col("_in_new").isNull(), F.lit("removed"))
-            .when(
-                ~(
-                    F.col("old_hash").eqNullSafe(F.col("new_hash"))
-                ),
-                F.lit("changed"),
-            ),
-        )
-        .where(F.col("status").isNotNull())
-        .select(F.col("_id").alias(id_col), "status", "old_hash", "new_hash")
-    )
-
-
-def compact_index(
-    spark: SparkSession,
-    table: str,
-    target_table: str,
-    bucket_col: str,
-    n_buckets: int,
-    tombstone_ids: DataFrame | None = None,
-    id_col: str = "doc_id",
-    sum_cols: tuple = (),
-    path: str | None = None,
-) -> DataFrame:
-    """Compact an append-only delta-dedup index into a fresh bucketed table.
-
-    The probe-shaped incremental families append per batch forever
-    (``build_lsh_band_index`` / ``build_simhash_band_index`` /
-    ``build_exact_hash_index`` / ``build_embedding_bucket_index`` /
-    ``build_ivf_index`` assignment rows, and ``build_line_frequency_index``
-    / ``build_window_frequency_index`` partial counts): at daily cadence
-    the index accumulates one small file per bucket per batch plus dead
-    rows for purged documents.  This rewrites it as ONE file per bucket with
-
-      * tombstoned ids dropped — pass the purge set (e.g. the non-canonical
-        ids from ``deduplicate_corpus``) accumulated since the last
-        compaction as ``tombstone_ids``; it is broadcast, so keep
-        compactions frequent enough that the set stays batch-scale, and
-      * per-batch partial counts merged — ``sum_cols=("df",)`` for the line
-        frequency index collapses a line's k per-batch rows into one (the
-        probe SUMs touched rows, so pre-summing is semantically a no-op).
-
-    ZERO-Exchange rewrite: the bucketed scan is already hash-partitioned on
-    ``bucket_col``, the tombstone anti-join is broadcast, the ``sum_cols``
-    groupBy is satisfied by the scan's partitioning, and the bucketed
-    WRITE emits each task's single bucket straight to its one output file
-    — at 100 TB the compaction is a linear streaming pass over the index,
-    no shuffle (plan-pinned by tests/test_storage_extras.py).
-
-    Writes ``target_table`` (versioned-table pattern: compact into
-    ``idx_v{k+1}``, point readers at it, then ``DROP TABLE idx_v{k}`` — a
-    catalog swap is atomic for new readers, while overwriting a table that
-    is also the scan source is rejected by Spark).  ``target_table`` must
-    differ from ``table``.  Returns the compacted DataFrame (lazy; the
-    write has already happened).
-
-    Column METADATA survives the rewrite (groupBy/anti-join keep attribute
-    metadata, and parquet round-trips it), so parameter stamps like the
-    line index's ``l2f_min_line_chars`` still guard probe-time mismatches
-    on the compacted table.
-    """
-    from pyspark.sql import functions as F
-
-    if target_table == table:
-        raise ValueError(
-            "compact_index target_table must differ from table "
-            "(versioned-table pattern; Spark rejects scan-source overwrite)"
-        )
-    df = spark.table(table)
-    if tombstone_ids is not None:
-        # pick the purge key by NAME, never by position: the natural
-        # deduplicate_corpus losers frame is (cluster_rep, doc_id) and
-        # keying on column 0 would silently purge the CANONICAL ids
-        if id_col in tombstone_ids.columns:
-            tomb = tombstone_ids.select(id_col)
-        elif len(tombstone_ids.columns) == 1:
-            tomb = tombstone_ids.select(
-                F.col(tombstone_ids.columns[0]).alias(id_col)
-            )
-        else:
-            raise ValueError(
-                f"tombstone_ids has columns {tombstone_ids.columns}; pass a "
-                f"frame containing '{id_col}' or a single-column id frame"
-            )
-        df = df.join(F.broadcast(tomb), on=id_col, how="left_anti")
-    if sum_cols:
-        group_cols = [c for c in df.columns if c not in sum_cols]
-        df = df.groupBy(*[F.col(c) for c in group_cols]).agg(
-            *[F.sum(c).alias(c) for c in sum_cols]
-        )
-    # Force the bucket-aligned scan for the write: with autoBucketedScan on
-    # (the default) Spark notices no operator NEEDS the distribution and
-    # reads the source file-by-file — the bucketed write then emits one
-    # file per (task, bucket) and the compaction multiplies small files
-    # instead of merging them.  Pinned to one-partition-per-bucket here so
-    # each task holds exactly one bucket and writes exactly one file.
-    auto_key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    prev = spark.conf.get(auto_key, "true")
-    spark.conf.set(auto_key, "false")
-    try:
-        write_bucketed(df, target_table, bucket_col, n_buckets, path=path)
-    finally:
-        spark.conf.set(auto_key, prev)
-    return spark.table(target_table)

@@ -238,7 +238,7 @@ def build_line_frequency_index(
     distinct count over the union because batch doc-id sets are disjoint
     (the same contract every incremental family here relies on: re-crawled
     documents get fresh ids upstream).  Write it with
-    ``datapipe.storage.write_bucketed(..., bucket_col="line_key")`` and the
+    ``engine.kgquery.write_bucketed(..., bucket_col="line_key")`` and the
     per-batch probe aggregation plans with zero Exchange on the history
     side (plan-pinned, same composition as the minhash band index).
 
@@ -565,7 +565,7 @@ def build_window_frequency_index(
     APPEND-ONLY: each batch appends its own counts; probes SUM the touched
     rows.  Unlike the line index (distinct-document counts, which need the
     disjoint-batch contract to sum correctly), occurrence counts sum
-    exactly by construction.  Write with ``datapipe.storage.write_bucketed(
+    exactly by construction.  Write with ``engine.kgquery.write_bucketed(
     ..., bucket_col="win_key")`` for the zero-Exchange probe plan.  The
     ``window`` build parameter is STAMPED into the field metadata (same
     verify-at-call-time contract as :func:`build_line_frequency_index`)."""

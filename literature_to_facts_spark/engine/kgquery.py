@@ -21,8 +21,8 @@ operators become DataFrame plans:
 * :func:`cooccurrence_pmi` — PMI edge weighting over the co-mention
   counts (broadcast document-frequency lookups, zero extra shuffles).
 * :func:`build_predicate_pair_index` / :func:`predicate_stats_incremental`
-  — delta maintenance of the predicate statistics (ninth probe-shaped
-  incremental family; exact distinct counts merged via existence probes).
+  — delta maintenance of the predicate statistics (probe-shaped
+  incremental; exact distinct counts merged via existence probes).
 * :func:`star_join_ordered` — N-pattern same-subject star join with
   statistics-driven join ordering and per-side broadcast decisions (the
   N-way generalization of :func:`pattern_join_ordered`).
@@ -35,6 +35,9 @@ operators become DataFrame plans:
   property path ``?a pred{1,k} ?b``) with min-hop depth, computed as a
   frontier-pruned BFS (each round joins only the NEW pairs, never the
   accumulated closure).
+* :func:`write_bucketed` — the catalog-table layout the probe-shaped
+  incrementals read: a history index bucketed on its probe key plans the
+  probe with zero Exchange.
 
 All outputs are deterministic and integer/string-typed so a DuckDB oracle
 recomputes them bit-exactly.
@@ -44,6 +47,35 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def write_bucketed(
+    df: DataFrame,
+    table: str,
+    bucket_col: str,
+    n_buckets: int,
+    sort_cols: list | None = None,
+    path: str | None = None,
+    mode: str = "overwrite",
+) -> None:
+    """Write ``df`` as a bucketed (and optionally sorted) catalog table.
+
+    ``sort_cols`` additionally sorts within each bucket file: a join between
+    two tables bucketed AND sorted on the key needs neither Exchange nor
+    Sort — the SortMergeJoin streams the pre-sorted buckets directly.
+    ``path`` makes it an external table (data at ``path``, metadata in the
+    catalog); omit for a managed table under the warehouse dir.
+
+    Pick ``n_buckets`` so one bucket is a few hundred MB at target scale,
+    and use the SAME count for every table sharing the join key — mismatched
+    counts fall back to shuffling one side.
+    """
+    w = df.write.mode(mode).bucketBy(n_buckets, bucket_col)
+    if sort_cols:
+        w = w.sortBy(sort_cols[0], *sort_cols[1:])
+    if path is not None:
+        w = w.option("path", path)
+    w.format("parquet").saveAsTable(table)
 
 
 def predicate_stats(
@@ -128,11 +160,10 @@ def build_predicate_pair_index(
     APPEND-ONLY (the delta-family convention): each batch appends its own
     partials, so a pair seen by k batches has k rows; probes only test
     EXISTENCE (a value already counted toward ``n_subj``/``n_obj`` must not
-    be counted again) and :func:`datapipe.storage.compact_index` merges the
-    partials with ``sum_cols=['n']``.  Write it with
-    ``write_bucketed(..., bucket_col='pair_key')`` so the probe side plans
-    with zero Exchange (plan-pinned, same composition as the line/minhash
-    indexes).  NULL values are excluded — mirroring ``countDistinct``.
+    be counted again); a compaction may merge the partials by summing
+    ``n``.  Write it with ``write_bucketed(..., bucket_col='pair_key')`` so
+    the probe side plans with zero Exchange (plan-pinned).  NULL values are
+    excluded — mirroring ``countDistinct``.
     """
     s = triples.where(F.col(subj_col).isNotNull()).select(
         F.col(pred_col).alias("pred"),
@@ -175,11 +206,11 @@ def predicate_stats_incremental(
     (pred, role, value) pair has never been seen, which is one EXISTENCE
     probe against the index.  ``n_triples`` is plain count addition.
 
-    PROBE-shaped (the ninth delta family): the batch's distinct pair keys
-    are batch-bounded, so they BROADCAST and semi-join-filter the history
-    index at its scan — only index rows for pairs the batch actually
-    contains go anywhere (zero Exchange over a ``write_bucketed('pair_key')``
-    catalog table, plan-pinned).  The matched key set is itself ⊆ the batch
+    PROBE-shaped: the batch's distinct pair keys are batch-bounded, so
+    they BROADCAST and semi-join-filter the history index at its scan —
+    only index rows for pairs the batch actually contains go anywhere
+    (zero Exchange over a ``write_bucketed('pair_key')`` catalog table,
+    plan-pinned).  The matched key set is itself ⊆ the batch
     keys, so it broadcasts back into a batch-side anti join (a broadcast
     side can never be outer-preserved — the anti's streamed side is the
     batch partials).  Everything downstream of the probe is pred-sized.
@@ -187,8 +218,8 @@ def predicate_stats_incremental(
     ``old_index=None``/``old_stats=None`` mean no history: the first batch
     degenerates to ``predicate_stats(batch)``.  The caller appends
     ``build_predicate_pair_index(batch)`` to the index after each batch
-    (same loop contract as the other eight families); purged history is
-    count-only state — conservative, like the line/window indexes.
+    (the same loop contract as :func:`characteristic_sets_incremental`);
+    purged history is count-only state — conservative.
     """
     spark = batch_triples.sparkSession
     if old_index is None:
@@ -270,8 +301,8 @@ def characteristic_sets_incremental(
     cache_registry: list | None = None,
 ) -> DataFrame:
     """Maintain the :func:`characteristic_sets` histogram under a new batch
-    of triples WITHOUT rescanning the historical triple store (tenth
-    probe-shaped delta family): returns the updated ``(pred_set, n_subj,
+    of triples WITHOUT rescanning the historical triple store (probe-shaped
+    delta maintenance): returns the updated ``(pred_set, n_subj,
     n_preds)`` table, bit-equal to ``characteristic_sets(old ∪ batch)``.
 
     A batch can MOVE a subject between histogram buckets (a page gaining
@@ -289,8 +320,8 @@ def characteristic_sets_incremental(
     with zero Exchange (plan-pinned).  The touched-subject frame (⊆ batch
     subjects) broadcasts into a batch-side LEFT join (the broadcast side is
     the non-preserved one), and everything downstream is histogram-sized.
-    The caller appends ``build_subject_pred_index(batch)`` per batch, same
-    loop contract as the other nine families.
+    The caller appends ``build_subject_pred_index(batch)`` per batch, the
+    same loop contract as :func:`predicate_stats_incremental`.
     """
     spark = batch_triples.sparkSession
     if old_index is None:
@@ -740,8 +771,8 @@ def path_closure(
     edge list, then anti-joins the accumulated closure so a pair is
     emitted exactly once at its minimal depth — cycles terminate naturally
     because a revisited pair is never re-expanded.  Each frontier is
-    persisted (iterative-lineage rule, same as ``datapipe.graphs.pagerank``
-    / connected components) and, with ``early_exit``, probed with a
+    persisted (iterative-lineage rule: an unpersisted frontier would
+    recompute every earlier round) and, with ``early_exit``, probed with a
     bounded ``head(1)`` so a converged graph stops before ``max_depth``
     (the probe materializes the frontier it already needs next round —
     no wasted work; pass ``early_exit=False`` for a fully lazy finite

@@ -705,125 +705,3 @@ def build_corpus(
         ads_authors=GOLDEN_ADS.copy(),
         gazetteer=pd.DataFrame(gaz_rows),
     )
-
-
-# ---------------------------------------------------------------------------
-# Spark-native scale generators (dedup/ANN benchmark corpora)
-# ---------------------------------------------------------------------------
-
-_SCALE_TOKEN_POOL = (
-    "spark batch line column order small sort fast value scan hash slow "
-    "group agg filter query big key window row part table stream merge data "
-    "vector customer supplier region nation price ship clerk comment segment "
-    "market size brand type container retail account address phone balance "
-    "build cache join shuffle stage task executor driver plan codegen arrow "
-    "page block footer header index bucket salt skew probe union delta state"
-).split()
-
-
-def build_scale_documents(
-    spark, n_docs: int, seed: int = 42, dup_rate: int = 10, vocab: int = 0
-):
-    """documents-shaped synthetic corpus (doc_id, text, lang, source,
-    n_chars) at arbitrary scale, generated ENTIRELY Spark-side — one
-    ``spark.range`` plus per-row expressions, so a billion-row corpus is a
-    narrow distributed job, not a driver-side pandas build.
-
-    Deterministic in (n_docs, seed).  ``dup_rate``% of documents draw their
-    content id from a hash instead of their own id: two documents sharing a
-    content id have identical text, except that odd-hashed duplicates get
-    one appended mutation token (a NEAR duplicate — high but not perfect
-    shingle Jaccard / simhash proximity).  Text length 30-119 tokens from a
-    fixed token pool, so the near-dup structure exercises exact bands,
-    signature bands and bucket caps the way a crawl corpus does.
-
-    ``vocab`` > 0 appends a hashed numeric suffix to 3 of every 4 tokens,
-    drawing them from a ``vocab``-sized long tail (the remaining quarter
-    stays on the bare 96-word head — a Zipf-ish head/tail mix).  With the
-    bare pool every large corpus' token-frequency profiles collapse
-    together, which degenerates frequency-profile fingerprints (SimHash) at
-    scale; shingle-based MinHash is unaffected either way."""
-    pool_sql = "array(" + ",".join(f"'{t}'" for t in _SCALE_TOKEN_POOL) + ")"
-    n_pool = len(_SCALE_TOKEN_POOL)
-    n_parts = max(32, n_docs // 125_000)
-    return (
-        spark.range(0, n_docs, 1, n_parts)
-        .selectExpr(
-            "id AS doc_id",
-            f"xxhash64(id, {seed}) AS _h",
-        )
-        .selectExpr(
-            "doc_id",
-            f"CASE WHEN pmod(_h, 100) < {int(dup_rate)}"
-            f" THEN pmod(xxhash64(doc_id, {seed + 1}), {n_docs})"
-            " ELSE doc_id END AS _content",
-            "pmod(_h, 2) = 1 AS _mutate",
-            "_h",
-        )
-        .selectExpr(
-            "doc_id",
-            "concat("
-            " array_join(transform("
-            f"  sequence(0, 29 + CAST(pmod(xxhash64(_content, {seed + 2}), 90) AS INT)),"
-            f"  i -> concat(element_at({pool_sql},"
-            f"       1 + CAST(pmod(xxhash64(_content * 131 + i, {seed + 3}), {n_pool}) AS INT))"
-            + (
-                f", CASE WHEN pmod(xxhash64(_content * 131 + i, {seed + 4}), 4) = 0"
-                f" THEN '' ELSE CAST(pmod(xxhash64(_content * 131 + i, {seed + 5}),"
-                f" {int(vocab)}) AS STRING) END"
-                if vocab > 0
-                else ""
-            )
-            + ")"
-            " ), ' '),"
-            " CASE WHEN _content != doc_id AND _mutate"
-            "      THEN concat(' mut', pmod(_h, 7)) ELSE '' END"
-            ") AS text",
-            "element_at(array('en','de','fr','zh'), 1 + CAST(pmod(_h, 4) AS INT)) AS lang",
-            "concat('src', pmod(_h, 10)) AS source",
-        )
-        .selectExpr(
-            "doc_id", "text", "lang", "source",
-            "CAST(length(text) AS BIGINT) AS n_chars",
-        )
-    )
-
-
-def build_scale_embeddings(
-    spark, n_vecs: int, dim: int = 64, seed: int = 7, dup_rate: int = 10
-):
-    """embeddings-shaped synthetic table (vec_id, embedding float[],
-    label) at arbitrary scale, Spark-side and deterministic in
-    (n_vecs, dim, seed).
-
-    ``dup_rate``% of vectors are NEAR COPIES of a hashed center vector
-    (component noise ~1% of component scale — pairwise cosine ≈ 1), the
-    rest are independent pseudo-random vectors (pairwise cosine ≈ 0 at
-    dim 64), so near-dup detection and ANN have real cluster structure."""
-    n_parts = max(32, n_vecs // 125_000)
-    base = (
-        f"(CAST(pmod(xxhash64(_center * {dim} + i, {seed + 1}), 2001) AS DOUBLE)"
-        " - 1000.0) / 1000.0"
-    )
-    noise = (
-        f"CASE WHEN _center != vec_id THEN"
-        f" (CAST(pmod(xxhash64(vec_id * {dim} + i, {seed + 2}), 21) AS DOUBLE)"
-        " - 10.0) / 1000.0 ELSE 0.0 END"
-    )
-    return (
-        spark.range(0, n_vecs, 1, n_parts)
-        .selectExpr("id AS vec_id", f"xxhash64(id, {seed}) AS _h")
-        .selectExpr(
-            "vec_id",
-            f"CASE WHEN pmod(_h, 100) < {int(dup_rate)}"
-            f" THEN pmod(xxhash64(vec_id, {seed + 3}), GREATEST({n_vecs} DIV 20, 1))"
-            " ELSE vec_id END AS _center",
-            "_h",
-        )
-        .selectExpr(
-            "vec_id",
-            f"transform(sequence(0, {dim - 1}),"
-            f" i -> CAST({base} + {noise} AS FLOAT)) AS embedding",
-            "CAST(pmod(_center, 10) AS INT) AS label",
-        )
-    )

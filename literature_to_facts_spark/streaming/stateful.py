@@ -13,10 +13,9 @@ streaming state):
 * :func:`dedup_stream_first_seen` — cross-batch exact dedup via
   ``applyInPandasWithState``: the first document per text hash ever seen is
   emitted, every later duplicate (same batch, later batch, later RESTART —
-  state lives in the checkpoint) is dropped.  This is the streaming
-  counterpart of datapipe.dedup.exact_duplicate_clusters, keyed the same way
-  (md5(text)); state per key is one boolean-sized marker, partitioned by the
-  shuffle on the group key, so it scales horizontally with executors.
+  state lives in the checkpoint) is dropped, keyed by md5(text); state
+  per key is one boolean-sized marker, partitioned by the shuffle on the
+  group key, so it scales horizontally with executors.
 """
 
 from __future__ import annotations

@@ -860,10 +860,8 @@ def test_bucketed_join_is_exchange_free(spark, documents, tmp_path):
     """The 100 TB layout contract: two tables bucketed+sorted on the join
     key with equal bucket counts join with ZERO Exchange and ZERO Sort —
     the shuffle is paid once at write time, never again per query."""
-    from literature_to_facts_spark.datapipe.storage import (
-        co_located_join,
-        write_bucketed,
-    )
+    from literature_to_facts_spark.datapipe.storage import co_located_join
+    from literature_to_facts_spark.engine.kgquery import write_bucketed
 
     docs = documents.select("doc_id", "text", "lang")
     write_bucketed(
@@ -1058,7 +1056,7 @@ def test_minhash_incremental_bucketed_history_no_exchange(spark, documents, tmp_
         build_lsh_band_index,
         minhash_lsh_pairs_incremental,
     )
-    from literature_to_facts_spark.datapipe.storage import write_bucketed
+    from literature_to_facts_spark.engine.kgquery import write_bucketed
 
     dup = documents.limit(8).withColumn("doc_id", F.col("doc_id") + 1_000_000)
     docs = documents.unionByName(dup)
@@ -1130,7 +1128,7 @@ def test_all_probe_families_bucketed_history_no_exchange(spark, documents, embed
     from literature_to_facts_spark.datapipe.similarity import (
         build_embedding_bucket_index,
     )
-    from literature_to_facts_spark.datapipe.storage import write_bucketed
+    from literature_to_facts_spark.engine.kgquery import write_bucketed
 
     docs = documents.limit(60)
     emb = embeddings.limit(60)
@@ -1169,7 +1167,7 @@ def test_minhash_incremental_daily_loop_bucketed(spark, documents, tmp_path):
         minhash_lsh_pairs,
         minhash_lsh_pairs_incremental,
     )
-    from literature_to_facts_spark.datapipe.storage import write_bucketed
+    from literature_to_facts_spark.engine.kgquery import write_bucketed
 
     dup = documents.limit(9).withColumn("doc_id", F.col("doc_id") + 1_000_000)
     docs = documents.unionByName(dup).select("doc_id", "text")
@@ -2140,7 +2138,7 @@ def test_semantic_incremental_history_probe_shape(spark, embeddings, tmp_path):
         build_ivf_index,
         semantic_dedup_incremental,
     )
-    from literature_to_facts_spark.datapipe.storage import write_bucketed
+    from literature_to_facts_spark.engine.kgquery import write_bucketed
 
     emb = embeddings.limit(100).select("vec_id", "embedding")
     old = emb.where(F.col("vec_id") % 5 != 0)

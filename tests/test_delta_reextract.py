@@ -1,4 +1,5 @@
-"""Tests for engine/delta.delta_reextract — incremental KG maintenance."""
+"""Tests for engine/delta — snapshot_diff and delta_reextract, incremental
+KG maintenance."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -42,9 +43,62 @@ def snapshots(spark):
     return old, new
 
 
+def test_snapshot_diff_semantics(spark):
+    from literature_to_facts_spark.engine.delta import snapshot_diff
+
+    old = spark.createDataFrame(
+        [
+            (1, "same text"),
+            (2, "will change"),
+            (3, "will be removed"),
+            (4, None),
+            (5, None),
+        ],
+        ["doc_id", "text"],
+    )
+    new = spark.createDataFrame(
+        [
+            (1, "same text"),
+            (2, "has changed"),
+            (4, None),  # NULL -> NULL: unchanged
+            (5, "null to text"),  # NULL -> text: changed
+            (6, "brand new"),
+        ],
+        ["doc_id", "text"],
+    )
+    out = {r["doc_id"]: r for r in snapshot_diff(old, new).collect()}
+    # unchanged docs (1 and the NULL->NULL 4) are not emitted
+    assert set(out) == {2, 3, 5, 6}
+    assert out[2]["status"] == "changed"
+    assert out[3]["status"] == "removed" and out[3]["new_hash"] is None
+    assert out[5]["status"] == "changed" and out[5]["old_hash"] is None
+    assert out[6]["status"] == "added" and out[6]["old_hash"] is None
+
+
+def test_snapshot_diff_never_carries_text(spark):
+    """Only id + hash cross the shuffle: md5 is computed map-side (below
+    the Exchange) and the join condition/outputs reference ids and hashes
+    only — at 100 TB the diff must not shuffle document text."""
+    from literature_to_facts_spark.engine.delta import snapshot_diff
+
+    old = spark.createDataFrame([(1, "a")], ["doc_id", "text"])
+    new = spark.createDataFrame([(1, "b")], ["doc_id", "text"])
+    plan = (
+        snapshot_diff(old, new)._jdf.queryExecution().executedPlan().toString()
+    )
+    join_line = next(l for l in plan.splitlines() if "FullOuter" in l)
+    assert "text" not in join_line, plan
+    # the shuffles partition on the id alias, never on/with text
+    for l in plan.splitlines():
+        if "Exchange hashpartitioning" in l:
+            assert "_id#" in l and "text" not in l, l
+    # md5 appears below the exchanges (map-side), i.e. the plan prints the
+    # join/exchange nodes before the md5-computing projects
+    assert plan.index("md5") > plan.index("Exchange hashpartitioning"), plan
+
+
 def test_delta_equals_full_reextraction(spark, snapshots):
-    from literature_to_facts_spark.datapipe.storage import snapshot_diff
-    from literature_to_facts_spark.engine.delta import delta_reextract
+    from literature_to_facts_spark.engine.delta import delta_reextract, snapshot_diff
 
     old, new = snapshots
     for bcast in (True, False):
@@ -62,8 +116,7 @@ def test_delta_does_not_reextract_unchanged_docs(spark, snapshots):
     """Negative-space proof: poison the stored triples of an UNCHANGED doc —
     the poison must survive verbatim (the operator provably never re-derives
     outside the delta), while changed/removed docs' stale triples vanish."""
-    from literature_to_facts_spark.datapipe.storage import snapshot_diff
-    from literature_to_facts_spark.engine.delta import delta_reextract
+    from literature_to_facts_spark.engine.delta import delta_reextract, snapshot_diff
 
     old, new = snapshots
     poisoned = _extract(old).withColumn(
@@ -86,8 +139,7 @@ def test_delta_store_side_is_broadcast_filtered(spark, snapshots):
     BroadcastHashJoins, and the shared (id, status) diff projection is
     built once — the second consumer reads a ReusedExchange, so an
     unpersisted snapshot_diff input runs its full-outer join once."""
-    from literature_to_facts_spark.datapipe.storage import snapshot_diff
-    from literature_to_facts_spark.engine.delta import delta_reextract
+    from literature_to_facts_spark.engine.delta import delta_reextract, snapshot_diff
 
     old, new = snapshots
     out = delta_reextract(
@@ -113,8 +165,7 @@ def test_delta_reextract_real_extractor_battery(spark, corpus, sides):
     engine (extract_triples over the GCN/ATel/arXiv battery) and a
     url-keyed snapshot_diff equals from-scratch extraction of the new
     snapshot — the kg_construct operational loop end to end."""
-    from literature_to_facts_spark.datapipe.storage import snapshot_diff
-    from literature_to_facts_spark.engine.delta import delta_reextract
+    from literature_to_facts_spark.engine.delta import delta_reextract, snapshot_diff
     from literature_to_facts_spark.engine.pipeline import extract_triples
 
     pdf = corpus.documents.reset_index(drop=True)

@@ -400,7 +400,7 @@ def test_anchor_incremental_bucketed_no_exchange(spark, tmp_path):
     from literature_to_facts_spark.datapipe.html import (
         build_anchor_index,
     )
-    from literature_to_facts_spark.datapipe.storage import write_bucketed
+    from literature_to_facts_spark.engine.kgquery import write_bucketed
 
     hist, batch = _anchor_links(spark)
     idx = build_anchor_index(hist, src_host_col="src_host")

@@ -205,11 +205,11 @@ def test_predicate_stats_incremental_bucketed_no_exchange(
     """Over a write_bucketed('pair_key') catalog table the history probe
     (broadcast semi filter -> distinct) plans with ZERO Exchange on the
     streamed side — the ninth delta family keeps the pin."""
-    from literature_to_facts_spark.datapipe.storage import write_bucketed
     from literature_to_facts_spark.engine.kgquery import (
         build_predicate_pair_index,
         predicate_stats,
         predicate_stats_incremental,
+        write_bucketed,
     )
 
     new = delta_triples.where(F.col("subj") % 5 == 0)
@@ -391,11 +391,11 @@ def test_cs_incremental_bucketed_no_exchange(spark, delta_triples, tmp_path):
     """Over a write_bucketed('subj') catalog table the per-subject history
     probe (broadcast semi filter -> collect_set BY THE BUCKET COLUMN) plans
     with ZERO Exchange on the streamed side."""
-    from literature_to_facts_spark.datapipe.storage import write_bucketed
     from literature_to_facts_spark.engine.kgquery import (
         build_subject_pred_index,
         characteristic_sets,
         characteristic_sets_incremental,
+        write_bucketed,
     )
 
     new = delta_triples.where(F.col("subj") % 5 == 0)

@@ -356,7 +356,7 @@ def test_delta_dedup_state_read_classification(spark, tmp_path):
     pairing)."""
     import os
 
-    from literature_to_facts_spark.streaming.delta_dedup import _read_state
+    from literature_to_facts_spark.streaming.kg_stats import _read_state
 
     root = str(tmp_path / "band_index")
     assert _read_state(spark, root, 1) is None  # path absent
@@ -380,245 +380,6 @@ def test_delta_dedup_state_read_classification(spark, tmp_path):
 
     with pytest.raises(Exception):
         _read_state(spark, root, 1).collect()
-
-
-def test_streaming_delta_dedup_exactly_once(spark, tmp_path):
-    """Streaming MinHash delta dedup (streaming/delta_dedup): a file stream
-    split into per-file micro-batches emits, per batch, the near-dup pairs
-    touching that batch; the union over batches equals the full-corpus pair
-    set exactly-once, and a REPLAYED batch (at-least-once foreachBatch)
-    overwrites its _batch dirs without duplicating or self-pairing."""
-    from pyspark.sql import functions as F
-
-    from literature_to_facts_spark.datapipe.dedup import minhash_lsh_pairs
-    from literature_to_facts_spark.streaming.delta_dedup import (
-        make_delta_dedup_batch_fn,
-        stream_near_dup_pairs,
-    )
-
-    base = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
-        "doc_id", "text"
-    )
-    dup = base.limit(9).withColumn("doc_id", F.col("doc_id") + 1_000_000)
-    docs = base.unionByName(dup)
-    src = tmp_path / "src"
-    src.mkdir()
-    # three source files -> three micro-batches (maxFilesPerTrigger=1)
-    for i in range(3):
-        docs.where(F.col("doc_id") % 3 == i).toPandas().to_parquet(
-            src / f"part{i}.parquet"
-        )
-    params = dict(n_gram=3, n_hashes=16, bands=4, threshold=0.5)
-    stream_params = dict(
-        params, maintain_clusters=True, cluster_partitions=8
-    )
-    state = str(tmp_path / "state")
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = stream_near_dup_pairs(
-        stream, state, checkpoint=str(tmp_path / "ckpt"), **stream_params
-    )
-    q.awaitTermination(300)
-
-    got = sorted(
-        (r["id_a"], r["id_b"], r["jaccard"])
-        for r in spark.read.parquet(f"{state}/pairs").drop("_batch").collect()
-    )
-    full = sorted(
-        (r["id_a"], r["id_b"], r["jaccard"])
-        for r in minhash_lsh_pairs(docs, **params).collect()
-    )
-    assert got == full and len(full) > 0  # exactly-once: no dupes, no gaps
-
-    # replay the LAST batch (its state writes already landed): output must
-    # be unchanged - the state read excludes _batch >= replayed id
-    last_batch = max(
-        int(r["_batch"])
-        for r in spark.read.parquet(f"{state}/pairs").select("_batch").distinct().collect()
-    )
-    # in-stream cluster-state maintenance: the partitioned state equals the
-    # full-corpus connected components over all pairs emitted so far
-    from literature_to_facts_spark.datapipe.dedup import connected_components
-
-    cc_full = {
-        (r["doc_id"], r["cluster_rep"])
-        for r in connected_components(
-            spark.read.parquet(f"{state}/pairs").select("id_a", "id_b")
-        ).collect()
-    }
-    cc_state = {
-        (r["doc_id"], r["cluster_rep"])
-        for r in spark.read.parquet(f"{state}/clusters")
-        .select("doc_id", "cluster_rep")
-        .collect()
-    }
-    assert cc_state == cc_full and len(cc_full) > 0
-
-    replay_df = spark.read.parquet(str(src / f"part{last_batch}.parquet"))
-    make_delta_dedup_batch_fn(state, **stream_params)(replay_df, last_batch)
-    again = sorted(
-        (r["id_a"], r["id_b"], r["jaccard"])
-        for r in spark.read.parquet(f"{state}/pairs").drop("_batch").collect()
-    )
-    assert again == full
-    # replaying the batch re-applies its pairs to a state that already
-    # absorbed them: a closure no-op
-    cc_again = {
-        (r["doc_id"], r["cluster_rep"])
-        for r in spark.read.parquet(f"{state}/clusters")
-        .select("doc_id", "cluster_rep")
-        .collect()
-    }
-    assert cc_again == cc_full
-
-
-def test_stream_state_compaction(spark, tmp_path):
-    """compact_stream_state between micro-batches: the later batch's pairs
-    are bit-equal over compacted vs uncompacted state, the per-batch dirs
-    collapse into one negative-id dir, a replayed batch still excludes
-    itself (negative ids always pass the `_batch < current` prune), and a
-    re-run of the compaction (the crash-heal path) is a no-op."""
-    import os as _os
-
-    from pyspark.sql import functions as F
-
-    from literature_to_facts_spark.datapipe.dedup import minhash_lsh_pairs
-    from literature_to_facts_spark.streaming.delta_dedup import (
-        compact_stream_state,
-        make_delta_dedup_batch_fn,
-    )
-
-    base = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
-        "doc_id", "text"
-    )
-    dup = base.limit(9).withColumn("doc_id", F.col("doc_id") + 1_000_000)
-    docs = base.unionByName(dup)
-    batches = [docs.where(F.col("doc_id") % 3 == i) for i in range(3)]
-    params = dict(n_gram=3, n_hashes=16, bands=4, threshold=0.5)
-
-    def run(state, compact_after_1):
-        fn = make_delta_dedup_batch_fn(state, **params)
-        for i, b in enumerate(batches):
-            fn(b, i)
-            if compact_after_1 and i == 1:
-                merged = compact_stream_state(spark, state, upto_batch=1)
-                assert merged == {"band_index": 2, "docs": 2}, merged
-        return sorted(
-            (r["id_a"], r["id_b"], r["jaccard"])
-            for r in spark.read.parquet(f"{state}/pairs").drop("_batch").collect()
-        )
-
-    plain = run(str(tmp_path / "s0"), compact_after_1=False)
-    compacted = run(str(tmp_path / "s1"), compact_after_1=True)
-    assert plain == compacted and len(plain) > 0
-    full = sorted(
-        (r["id_a"], r["id_b"], r["jaccard"])
-        for r in minhash_lsh_pairs(docs, **params).collect()
-    )
-    assert compacted == full
-
-    # layout: batches 0 and 1 merged into _batch=-1, batch 2 stands alone
-    idx_dirs = sorted(
-        d for d in _os.listdir(str(tmp_path / "s1" / "band_index"))
-        if d.startswith("_batch=")
-    )
-    assert idx_dirs == ["_batch=-1", "_batch=2"], idx_dirs
-
-    # replaying batch 2 over the compacted state is still idempotent
-    fn = make_delta_dedup_batch_fn(str(tmp_path / "s1"), **params)
-    fn(batches[2], 2)
-    again = sorted(
-        (r["id_a"], r["id_b"], r["jaccard"])
-        for r in spark.read.parquet(f"{tmp_path}/s1/pairs").drop("_batch").collect()
-    )
-    assert again == full
-
-    # crash-heal: a second compaction run over already-compacted state
-    # merges {-1, 2} -> _batch=-2 and stays row-identical
-    before = sorted(
-        tuple(r)
-        for r in spark.read.parquet(f"{tmp_path}/s1/band_index").drop("_batch").collect()
-    )
-    merged = compact_stream_state(spark, str(tmp_path / "s1"), upto_batch=2)
-    assert merged == {"band_index": 2, "docs": 2}
-    after_dirs = sorted(
-        d for d in _os.listdir(str(tmp_path / "s1" / "band_index"))
-        if d.startswith("_batch=")
-    )
-    assert after_dirs == ["_batch=-2"], after_dirs
-    after = sorted(
-        tuple(r)
-        for r in spark.read.parquet(f"{tmp_path}/s1/band_index").drop("_batch").collect()
-    )
-    assert after == before
-
-
-def test_streaming_span_clean(spark, tmp_path):
-    """Streaming span dedup: per-micro-batch cleaning equals the batch
-    delta contract (full span_dedup over everything-so-far restricted to
-    the batch), replay is idempotent, and the distinct-merge compaction is
-    count-safe because per-batch index rows carry src_batch."""
-    from literature_to_facts_spark.datapipe.textclean import span_dedup
-    from literature_to_facts_spark.streaming.delta_dedup import (
-        compact_stream_state,
-        make_span_clean_batch_fn,
-    )
-
-    texts = {
-        1: "a b c d e f",
-        2: "x a b c d y",
-        3: "a b c q r s",          # 'a b c' recurs across batches
-        4: "q r s t u v",
-        5: "a b c d e z",
-    }
-    mk = lambda ids: spark.createDataFrame(
-        [(i, texts[i]) for i in ids], ["doc_id", "text"]
-    )
-    state = str(tmp_path / "span_state")
-    fn = make_span_clean_batch_fn(state, window=3, min_df=2)
-    batches = [[1, 2], [3, 4], [5]]
-    for bid, ids in enumerate(batches):
-        fn(mk(ids), bid)
-
-    def cleaned(bid):
-        return sorted(
-            map(tuple, spark.read.parquet(f"{state}/clean/_batch={bid}")
-                .select("doc_id", "n_dup_windows", "dup_tokens").collect())
-        )
-
-    def expected(bid):
-        seen = [i for b in batches[: bid + 1] for i in b]
-        full = span_dedup(mk(seen), window=3, min_df=2)
-        return sorted(
-            map(tuple, full.where(F.col("doc_id").isin(batches[bid]))
-                .select("doc_id", "n_dup_windows", "dup_tokens").collect())
-        )
-
-    for bid in range(3):
-        assert cleaned(bid) == expected(bid), f"batch {bid}"
-
-    # replay of the last batch is idempotent
-    before = cleaned(2)
-    fn(mk(batches[2]), 2)
-    assert cleaned(2) == before
-
-    # compaction: merge batches 0..1, then a NEW batch sees identical state
-    out = compact_stream_state(spark, state, upto_batch=1, stores=("win_index",))
-    assert out["win_index"] == 2
-    # total counts preserved through the distinct-merge (src_batch keeps
-    # equal (win_key, cnt) rows from different batches distinct)
-    tot = (
-        spark.read.option("basePath", f"{state}/win_index")
-        .parquet(f"{state}/win_index/_batch=*")
-        .groupBy().sum("cnt").collect()[0][0]
-    )
-    exp_tot = sum(len(texts[i].split()) - 2 for b in batches for i in b)
-    assert tot == exp_tot
-    fn(mk(batches[2]), 2)          # re-clean batch 2 over compacted state
-    assert cleaned(2) == before
 
 
 def test_streaming_kg_stats_exact_and_replay(spark, tmp_path):
@@ -656,63 +417,3 @@ def test_streaming_kg_stats_exact_and_replay(spark, tmp_path):
     fn(triples.where(F.col("subj") % 3 == 2), 2)
     got = sorted(map(tuple, read_current_stats(spark, state).collect()))
     assert got == sorted(map(tuple, predicate_stats(triples).collect()))
-
-
-def test_streaming_anchor_profile_exact_and_replay(spark, tmp_path):
-    """Micro-batch anchor-profile maintenance (eleventh family face): each
-    batch's changed-profile feed equals the from-scratch profile over
-    everything seen so far restricted to batch targets; the audit path
-    (profile from the index alone) equals the full profile; replaying a
-    batch heals bit-exactly."""
-    from pyspark.sql import functions as F
-
-    from literature_to_facts_spark.datapipe.html import anchor_text_profile
-    from literature_to_facts_spark.streaming.anchor_profile import (
-        make_anchor_profile_batch_fn,
-        read_current_profile,
-    )
-
-    rows = []
-    for i in range(60):
-        rows.append((i, f"T{i % 7}", ["home", "news", "blog"][i % 3], f"h{i % 4}"))
-        if i % 5 == 0:
-            rows.append((i, f"T{i % 7}", "", f"h{i % 4}"))  # empty: excluded
-    links = spark.createDataFrame(
-        rows, "i bigint, link_url string, anchor_text string, src_host string"
-    )
-
-    state = str(tmp_path / "anchors")
-    fn = make_anchor_profile_batch_fn(state, src_host_col="src_host", k=2)
-    seen = None
-    for b in range(3):
-        batch = links.where(F.col("i") % 3 == b)
-        fn(batch, b)
-        seen = batch if seen is None else seen.unionByName(batch)
-        changed = spark.read.parquet(f"{state}/profiles/_batch={b}")
-        batch_targets = [
-            r["link_url"]
-            for r in batch.where(F.col("anchor_text") != "")
-            .select("link_url").distinct().collect()
-        ]
-        want = anchor_text_profile(
-            seen, src_host_col="src_host", k=2
-        ).where(F.col("link_url").isin(batch_targets))
-        assert sorted(map(tuple, changed.collect())) == sorted(
-            map(tuple, want.collect())
-        ), f"batch {b}"
-
-    # audit path: full profile from the evidence index alone
-    audit = read_current_profile(spark, state, with_hosts=True, k=2)
-    full = anchor_text_profile(links, src_host_col="src_host", k=2)
-    assert sorted(map(tuple, audit.collect())) == sorted(
-        map(tuple, full.collect())
-    )
-
-    # crash replay: re-running the LAST batch must heal both stores
-    fn(links.where(F.col("i") % 3 == 2), 2)
-    audit2 = read_current_profile(spark, state, with_hosts=True, k=2)
-    assert sorted(map(tuple, audit2.collect())) == sorted(
-        map(tuple, full.collect())
-    )
-    changed2 = spark.read.parquet(f"{state}/profiles/_batch=2")
-    assert changed2.count() > 0

@@ -409,7 +409,7 @@ def test_line_dedup_incremental_bucketed_history_no_exchange(spark, delta_line_d
     table, the history side of the probe (broadcast semi-join filter ->
     touched-key SUM) plans with ZERO Exchange — same pin as the other four
     delta families."""
-    from literature_to_facts_spark.datapipe.storage import write_bucketed
+    from literature_to_facts_spark.engine.kgquery import write_bucketed
     from literature_to_facts_spark.datapipe.textclean import (
         build_line_frequency_index,
         line_dedup_incremental,
@@ -855,7 +855,7 @@ def test_span_dedup_incremental_index_stamp_and_plan(spark, span_docs, tmp_path)
     mismatched probe fails loudly; over a write_bucketed("win_key") catalog
     table the history side plans with ZERO Exchange (seventh delta family,
     same pin as the other six)."""
-    from literature_to_facts_spark.datapipe.storage import write_bucketed
+    from literature_to_facts_spark.engine.kgquery import write_bucketed
     from literature_to_facts_spark.datapipe.textclean import (
         build_window_frequency_index,
         span_dedup_incremental,
