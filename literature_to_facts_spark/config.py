@@ -38,9 +38,8 @@ JVM, C1-only runs cost 34-37 CPU-s from the third run on, C2 runs 24-30
 run many operations in one JVM pass ``LONG_LIVED_DRIVER_CONF``, which drops
 the option (a host's own value then applies unchanged): ``scripts/daily.py``
 loop mode, the test suite's session and the ``bench.py`` /
-``scripts/check_oracles.py`` / ``scripts/bench_delta_scale.py`` harnesses
-(C1-only, on 4 cores: check_oracles at sf0.01 185 -> 248 s, the quick bench
-274 -> 392 s, the 20,000-doc delta-scale smoke 550 -> 996 s).
+``scripts/check_oracles.py`` harnesses (C1-only, on 4 cores: check_oracles
+at sf0.01 185 -> 248 s, the quick bench 274 -> 392 s).
 """
 
 from __future__ import annotations

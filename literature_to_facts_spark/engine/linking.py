@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from literature_to_facts_spark.engine.pipeline import dedup_triples
+
 # predicates whose objects are entity surface forms
 MENTION_PREDS = (
     "mentions_named_event",
@@ -46,11 +48,11 @@ def link_entities(triples: DataFrame, gazetteer: DataFrame) -> DataFrame:
 def link_triples(links: DataFrame) -> DataFrame:
     """Entity links re-expressed as graph triples (dtype 'uri') so they can be
     unioned into the materialized graph alongside literal triples."""
-    return links.select(
+    return dedup_triples(links.select(
         "url",
         "subj",
         F.lit(LINK_PRED).alias("pred"),
         F.col("canonical_uri").alias("obj"),
         F.lit("uri").alias("dtype"),
         F.concat(F.lit("<"), F.col("canonical_uri"), F.lit(">")).alias("obj_n3"),
-    ).dropDuplicates(["subj", "pred", "obj_n3"])
+    ))

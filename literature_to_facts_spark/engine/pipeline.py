@@ -8,7 +8,9 @@ Spark shape (SURVEY.md §3.1):
                                                        #   pass: prep -> all
                                                        #   extractors -> melt
                                                        #   -> valuable filter
-      ... dropDuplicates / dict view / linking downstream
+      .repartition(pred).dropDuplicates(...)           # dedup_triples: the
+                                                       #   one shuffle
+      ... dict view / linking downstream
 
 Design notes for 100 TB scale:
 * the valuable filter (facts/core.py:121-123) is computed *inside* the batch
@@ -58,6 +60,7 @@ from literature_to_facts_spark.functions.literals import (
 
 TRIPLE_COLS = ["url", "subj", "pred", "obj", "dtype", "obj_n3"]
 TRIPLE_SCHEMA = ", ".join(f"{c} string" for c in TRIPLE_COLS)
+TRIPLE_KEY = ["subj", "pred", "obj_n3"]
 LINEAGE_PRED = "__lineage__"
 
 _PREPARERS = {
@@ -452,8 +455,9 @@ def extract_triples(
     """documents DataFrame -> triples DataFrame (the KG-construction core).
 
     ``dedup=True`` adds the rdflib-Graph set semantics
-    (facts/core.py:197-219) via ``dropDuplicates`` — the only shuffle in the
-    extraction phase; AQE handles skew/coalescing.
+    (facts/core.py:197-219) via ``dedup_triples`` — the only shuffle in the
+    extraction phase, hash-partitioned on ``pred`` so ``write_triples``
+    commits one file per predicate; AQE coalesces its partitions.
 
     ``run_id`` appends one lineage row per task (pred ``LINEAGE_PRED``,
     subj ``run_id``) whose ``obj`` is the JSON of the task's metrics
@@ -493,6 +497,18 @@ def extract_triples(
             yield pd.DataFrame([row], columns=TRIPLE_COLS)
 
     triples = relevant_docs(docs).mapInPandas(run, schema=TRIPLE_SCHEMA)
-    if dedup:
-        triples = triples.dropDuplicates(["subj", "pred", "obj_n3"])
-    return triples
+    return dedup_triples(triples) if dedup else triples
+
+
+def dedup_triples(triples: DataFrame) -> DataFrame:
+    """Graph set semantics (facts/core.py:197-219): distinct on
+    ``TRIPLE_KEY``, computed in ONE shuffle hash-partitioned on ``pred``.
+
+    Hashing on a subset of the dedup key satisfies the aggregate's
+    distribution, so ``repartition("pred")`` is that aggregate's own
+    exchange, not a second one.  Every predicate then lives in exactly one
+    task, and ``engine.graph.write_triples`` commits one file per ``pred=``
+    directory instead of one per (task, predicate).  No partition count is
+    given: AQE still coalesces post-shuffle partitions by size.  Every
+    graph-table dedup goes through here."""
+    return triples.repartition("pred").dropDuplicates(TRIPLE_KEY)

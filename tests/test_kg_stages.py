@@ -194,6 +194,78 @@ def test_compact_graph(spark, docs_df, sides, tmp_path):
     assert back.where("pred = 'integral_ul'").count() > 0
 
 
+def _only_exchange(df) -> str:
+    """Partitioning of the one shuffle in ``df``'s plan (broadcasts aside)."""
+    import re
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    (ex,) = re.findall(r"(?:^|- )Exchange ([^,\s]+)", plan, re.M)
+    return ex
+
+
+def _parquet_files_per_pred(path: str) -> dict[str, int]:
+    import os
+
+    return {
+        d: sum(f.endswith(".parquet") for f in os.listdir(os.path.join(path, d)))
+        for d in os.listdir(path)
+        if d.startswith("pred=")
+    }
+
+
+def test_graph_dedup_hashes_pred_one_file_per_pred(
+    spark, docs_df, sides, triples_raw_df, gazetteer_df, tmp_path, monkeypatch
+):
+    """Graph-table dedups shuffle once, hash-partitioned on ``pred``, so a
+    pred-partitioned write commits one parquet file per predicate.
+    Post-shuffle coalescing is off here: every shuffle partition is its own
+    writer task, as on a cluster, where a dedup hashed on the whole triple
+    key spreads each predicate over all of them."""
+    from literature_to_facts_spark.engine import graph
+    from literature_to_facts_spark.engine.linking import link_entities, link_triples
+    from literature_to_facts_spark.engine.pipeline import TRIPLE_KEY, extract_triples
+    from literature_to_facts_spark.streaming.incremental import run_incremental
+
+    def key_set(df):
+        return {tuple(r) for r in df.select(*TRIPLE_KEY).collect()}
+
+    expected = key_set(triples_raw_df)
+    written, real_write = [], graph.write_triples
+
+    def spy(df, path, mode="overwrite"):
+        written.append(df)
+        real_write(df, path, mode)
+
+    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    before = spark.conf.get(coalesce)
+    spark.conf.set(coalesce, "false")
+    try:
+        triples = extract_triples(spark, docs_df, sides)
+        assert _only_exchange(triples).startswith("hashpartitioning(pred#")
+        one_shot = str(tmp_path / "graph")
+        graph.write_triples(triples, one_shot)
+
+        inc = str(tmp_path / "inc")
+        run_incremental(spark, docs_df, inc, sides, n_buckets=2, run_id="p1")
+        compacted = str(tmp_path / "compact")
+        monkeypatch.setattr(graph, "write_triples", spy)
+        graph.compact_graph(spark, f"{inc}/triples/bucket=*", compacted)
+    finally:
+        spark.conf.set(coalesce, before)
+    (deduped,) = written
+    assert _only_exchange(deduped).startswith("hashpartitioning(pred#")
+    # link triples carry one constant pred: Spark plans a hash on a
+    # constant as one partition, still the dedup's only exchange
+    links = link_entities(graph.read_triples(spark, one_shot), gazetteer_df)
+    assert _only_exchange(link_triples(links)) == "SinglePartition"
+
+    for path in (one_shot, compacted):
+        files = _parquet_files_per_pred(path)
+        assert len(files) > 32 and set(files.values()) == {1}, files
+        back = graph.read_triples(spark, path)
+        assert back.count() == len(expected) and key_set(back) == expected
+
+
 def test_n3_export_round_trip(spark, triples_df):
     from literature_to_facts_spark.engine.graph import export_n3
     from literature_to_facts_spark.functions.literals import from_n3

@@ -385,15 +385,23 @@ def _jobs_launched(spark, group: str, fn) -> int:
 def test_kg_driver_job_budget(spark, docs_df, sides, triples_df, tmp_path):
     """Each committed table is one write: counts and lineage are observed on
     it, never re-read; graph reads pin their schema and list on the driver.
-    With AQE a write behind one shuffle is two jobs (map stage + result)."""
+    With AQE a write behind one shuffle is two jobs (map stage + result):
+    hashing the dedup on ``pred`` adds no job."""
     from literature_to_facts_spark.engine.graph import (
         compact_graph,
         read_triples,
         write_triples,
     )
+    from literature_to_facts_spark.engine.pipeline import extract_triples
     from literature_to_facts_spark.streaming.incremental import run_incremental
 
     docs_df.count()  # materialize the cached fixture outside the budget
+    one_shot = str(tmp_path / "one_shot")
+    n_write = _jobs_launched(
+        spark, "budget-write",
+        lambda: write_triples(extract_triples(spark, docs_df, sides), one_shot),
+    )
+    assert n_write <= 2  # the dedup's pred-hashed map stage + write
     out = str(tmp_path / "inc")
     n_inc = _jobs_launched(
         spark, "budget-inc",
