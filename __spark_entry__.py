@@ -525,22 +525,6 @@ def q_dedup_embedding_incremental(spark, sf_dir):
     return out
 
 
-def q_stream_windowed_counts(spark, sf_dir):
-    """The streaming watermarked windowed-agg operator (streaming/stateful)
-    run in batch mode: tumbling 1h event-time windows over warc_ts.  The
-    exact same definition serves readStream (watermark active) and this
-    oracle check (batch ignores the watermark)."""
-    from literature_to_facts_spark.streaming.stateful import windowed_doc_counts
-
-    out = windowed_doc_counts(
-        _t(spark, sf_dir, "events"), "1 hour", "2 hours",
-        ts_col="ts", key_col="event_type",
-    )
-    return out.select(
-        F.unix_micros(F.col("win_start").cast("timestamp")).alias("win_start_us"),
-        F.col("key").alias("event_type"),
-        F.col("n_docs").cast("bigint").alias("n_events"),
-    )
 
 
 def q_emb_ann_ivf(spark, sf_dir):
@@ -1517,72 +1501,8 @@ def q_text_span_dedup(spark, sf_dir):
     )
 
 
-def q_corpus_snapshot_diff(spark, sf_dir):
-    """Dataset versioning (engine/delta.snapshot_diff): added / removed /
-    changed documents between two corpus snapshots, comparing only id + text
-    hash (the text itself never flows through the join).  Snapshots are
-    synthesized deterministically: old = doc_id % 11 != 0, new = doc_id %
-    13 != 0 with every 7th doc's text perturbed.  Full SQL oracle (DuckDB
-    FULL OUTER JOIN recomputes the same md5 hashes)."""
-    from literature_to_facts_spark.engine.delta import snapshot_diff
-
-    docs = _t(spark, sf_dir, "documents")
-    old = docs.where(F.col("doc_id") % 11 != 0).select("doc_id", "text")
-    new = (
-        docs.where(F.col("doc_id") % 13 != 0)
-        .selectExpr(
-            "doc_id",
-            "CASE WHEN doc_id % 7 = 0 THEN concat(text, ' v2') ELSE text END AS text",
-        )
-    )
-    out = snapshot_diff(old, new)
-    return out.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        "status",
-        "old_hash",
-        "new_hash",
-    )
 
 
-def q_kg_triples_delta(spark, sf_dir):
-    """Incremental KG maintenance (engine/delta.delta_reextract): the new
-    snapshot's mention triples from the OLD triple store + a snapshot diff
-    + re-extraction of ONLY added/changed documents (changed docs gain a
-    ' updated batch v2' suffix — which adds a 'batch' mention, so both
-    failure modes are oracle-visible: keeping stale triples AND failing to
-    re-extract).  The diff id sets broadcast, so the triple store is
-    filtered at its scan with zero shuffle.  Oracle = full extraction over
-    the new corpus (the from-scratch result the delta must equal)."""
-    from literature_to_facts_spark.engine.delta import delta_reextract, snapshot_diff
-
-    docs = _spread(_t(spark, sf_dir, "documents"))
-    old = docs.where(F.col("doc_id") % 11 != 0).select("doc_id", "text")
-    new = docs.where(F.col("doc_id") % 13 != 0).selectExpr(
-        "doc_id",
-        "CASE WHEN doc_id % 7 = 0 THEN concat(text, ' updated batch v2')"
-        " ELSE text END AS text",
-    )
-
-    def extract(d):
-        return (
-            d.select(
-                F.col("doc_id").cast("bigint").alias("doc_id"),
-                F.explode(
-                    F.regexp_extract_all(
-                        F.col("text"), F.lit("(spark|window|merge|batch)"), F.lit(1)
-                    )
-                ).alias("mention"),
-            )
-            .groupBy("doc_id", "mention")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n_times"))
-        )
-
-    reg = []
-    out = delta_reextract(
-        extract(old), snapshot_diff(old, new), new, extract, cache_registry=reg
-    )
-    out._l2f_cache_registry = reg
-    return out
 
 
 def q_text_token_topk(spark, sf_dir):
@@ -4255,8 +4175,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_tokenize_encode": q_text_tokenize_encode,
         "text_token_topk": q_text_token_topk,
         "text_blocklist_filter": q_text_blocklist_filter,
-        "kg_triples_delta": q_kg_triples_delta,
-        "corpus_snapshot_diff": q_corpus_snapshot_diff,
         "sample_pack_sequences": q_sample_pack_sequences,
         "source_quality_stats": q_source_quality_stats,
         "text_quality_clf": q_text_quality_clf,
@@ -4317,7 +4235,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "emb_ann_lsh_multiprobe": q_emb_ann_lsh_multiprobe,
         "emb_ann_ivf": q_emb_ann_ivf,
         "emb_ann_ivf_incremental": q_emb_ann_ivf_incremental,
-        "stream_windowed_counts": q_stream_windowed_counts,
         "text_token_counts": q_text_token_counts,
     }
 
@@ -5750,32 +5667,6 @@ def oracle_sql() -> dict[str, str]:
         "emb_ann_ivf_incremental": _ann_ivf_oracle(
             k=5, n_centroids=8, nprobe=3, train_restrict="vec_id % 5 != 0"
         ),
-        # tumbling event-time window == epoch-aligned hour bucket
-        "stream_windowed_counts": """
-            SELECT CAST(FLOOR(epoch_us(ts) / 3600000000) * 3600000000 AS BIGINT)
-                     AS win_start_us,
-                   event_type,
-                   CAST(COUNT(*) AS BIGINT) AS n_events
-            FROM events
-            GROUP BY 1, 2
-        """,
-        "kg_triples_delta": """
-            WITH n AS (
-              SELECT doc_id,
-                     CASE WHEN doc_id % 7 = 0 THEN text || ' updated batch v2'
-                          ELSE text END AS text
-              FROM documents WHERE doc_id % 13 != 0
-            )
-            SELECT CAST(doc_id AS BIGINT) AS doc_id, mention,
-                   CAST(count(*) AS BIGINT) AS n_times
-            FROM (
-              SELECT doc_id,
-                     unnest(regexp_extract_all(text, '(spark|window|merge|batch)', 1))
-                       AS mention
-              FROM n
-            )
-            GROUP BY 1, 2
-        """,
         "text_blocklist_filter": """
             SELECT CAST(doc_id AS BIGINT) AS doc_id,
                    CAST(coalesce(len(list_intersect(
@@ -5803,31 +5694,6 @@ def oracle_sql() -> dict[str, str]:
         """,
         "text_tokenize_encode": _tokenize_encode_oracle(),
         "text_line_dedup": _line_dedup_oracle(),
-        # '||' not concat(): NULL-propagating like Spark's concat, so a
-        # NULL-text doc perturbs to NULL (unchanged), matching snapshot_diff
-        "corpus_snapshot_diff": """
-            WITH o AS (
-              SELECT CAST(doc_id AS BIGINT) AS doc_id, md5(text) AS old_hash
-              FROM documents WHERE doc_id % 11 != 0
-            ),
-            n AS (
-              SELECT CAST(doc_id AS BIGINT) AS doc_id,
-                     md5(CASE WHEN doc_id % 7 = 0 THEN text || ' v2'
-                              ELSE text END) AS new_hash
-              FROM documents WHERE doc_id % 13 != 0
-            ),
-            j AS (
-              SELECT COALESCE(o.doc_id, n.doc_id) AS doc_id,
-                     o.old_hash, n.new_hash,
-                     CASE WHEN o.doc_id IS NULL THEN 'added'
-                          WHEN n.doc_id IS NULL THEN 'removed'
-                          WHEN o.old_hash IS DISTINCT FROM n.new_hash THEN 'changed'
-                          END AS status
-              FROM o FULL OUTER JOIN n ON o.doc_id = n.doc_id
-            )
-            SELECT doc_id, status, old_hash, new_hash FROM j
-            WHERE status IS NOT NULL
-        """,
         "text_line_dedup_incremental": _line_dedup_oracle(restrict="k.doc_id % 5 = 0"),
         "text_span_dedup": _span_dedup_oracle(),
         "text_span_dedup_clean": _span_dedup_oracle(emit="clean"),

@@ -68,8 +68,6 @@ HEADLINE = [
     "kg_canonicalize_salted",
     "kg_dict_view",
     "kg_valuable_filter",
-    "stream_windowed_counts",
-    "kg_triples_delta",
     "kg_predicate_stats",
     "kg_characteristic_sets",
     "kg_entity_cooccurrence",
@@ -114,7 +112,6 @@ DATAPIPE_TIMED = [
     "text_line_dedup",
     "text_pii_redact",
     "sample_mixture_temperature",
-    "corpus_snapshot_diff",
     "text_lang_trigram",
     "multimodal_features",
     "emb_ann_lsh_multiprobe",

@@ -54,13 +54,6 @@ from literature_to_facts_spark.shim import reference_shim as _shim
 from literature_to_facts_spark.streaming.incremental import (  # noqa: F401
     run_incremental,
 )
-from literature_to_facts_spark.streaming.stateful import (  # noqa: F401
-    dedup_stream_first_seen,
-    windowed_doc_counts,
-)
-from literature_to_facts_spark.streaming.stream import (  # noqa: F401
-    stream_documents_to_graph,
-)
 
 
 def parse_document(

@@ -36,10 +36,10 @@ The cost is steady-state speed: re-running a 40,000-doc dense input in one
 JVM, C1-only runs cost 34-37 CPU-s from the third run on, C2 runs 24-30
 (set-up included, C1 is still ahead in total after five).  Drivers that
 run many operations in one JVM pass ``LONG_LIVED_DRIVER_CONF``, which drops
-the option (a host's own value then applies unchanged): ``scripts/daily.py``
-loop mode, the test suite's session and the ``bench.py`` /
-``scripts/check_oracles.py`` harnesses (C1-only, on 4 cores: check_oracles
-at sf0.01 185 -> 248 s, the quick bench 274 -> 392 s).
+the option (a host's own value then applies unchanged): the
+``scripts/run_pipeline.py --period`` loop, the test suite's session and the
+``bench.py`` / ``scripts/check_oracles.py`` harnesses (C1-only, on 4 cores:
+check_oracles at sf0.01 185 -> 248 s, the quick bench 274 -> 392 s).
 """
 
 from __future__ import annotations

@@ -162,7 +162,8 @@ def export_turtle(triples: DataFrame, path: str | None = None) -> str | None:
 
 def compact_graph(spark: SparkSession, bucketed_triples_glob: str, out_path: str) -> int:
     """Graph-table maintenance: merge incremental bucket outputs
-    (streaming/incremental.py layout) into one globally-deduplicated,
+    (streaming/incremental.py layout; ``incremental.buckets_glob`` names
+    exactly one run's buckets) into one globally-deduplicated,
     pred-partitioned table.  Returns the compacted triple count.
 
     Cross-bucket duplicates exist when the same fact is re-derived from

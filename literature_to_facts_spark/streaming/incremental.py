@@ -2,15 +2,20 @@
 
 The reference's "streaming" is a daily poll loop (facts/tools.py:17-53) that
 re-fetches and re-learns.  At 10^12-doc scale the equivalent is incremental
-batch over table snapshots (Iceberg ``Trigger.AvailableNow`` semantics): the
-input keyspace is split into deterministic url-hash buckets; each bucket is
-extracted and committed independently, and a ledger records completed buckets
-with their lineage metrics.  A re-run (after a crash or with new data) skips
-completed buckets — resumability from checkpoint per the north rule.
+batch over table snapshots: the input keyspace is split into deterministic
+url-hash buckets; each bucket is extracted and committed independently, and a
+ledger records completed buckets with their lineage metrics.  A re-run under
+the same run id (after a crash) skips completed buckets — resumability from
+checkpoint per the north rule.  ``scripts/run_pipeline.py --period`` is the
+poll loop: one run id per tick, each tick compacted into ``graph/``.
 
 Layout under ``output_dir``:
     triples/bucket=<b>/...parquet     per-bucket triple output
     ledger/...parquet                 one row per completed bucket
+
+A run writes only ``bucket=0..n_buckets-1``; a directory left by an earlier
+run with more buckets stays on disk, so readers of a run's triples go
+through :func:`buckets_glob`, never a ``bucket=*`` glob.
 """
 
 from __future__ import annotations
@@ -37,6 +42,13 @@ LEDGER_SCHEMA = (
 
 def bucket_of(url_col, n_buckets: int):
     return F.pmod(F.xxhash64(url_col), F.lit(n_buckets)).cast("int")
+
+
+def buckets_glob(output_dir: str, n_buckets: int) -> str:
+    """Hadoop glob of the triples of buckets ``0..n_buckets-1`` under
+    ``output_dir``: exactly the buckets a run with ``n_buckets`` writes."""
+    ids = ",".join(str(b) for b in range(n_buckets))
+    return os.path.join(output_dir, "triples", f"bucket={{{ids}}}")
 
 
 def write_observed(combined: DataFrame, path: str) -> dict:
@@ -69,10 +81,9 @@ def completed_buckets(spark: SparkSession, output_dir: str, run_id: str) -> set[
 
     The ledger is scoped per run_id: resuming a crashed run (same run_id)
     skips its committed buckets, while a NEW run_id (a fresh snapshot /
-    daily tick) reprocesses everything — otherwise a second tick over a
-    grown table would skip all buckets forever.  For new-files-only
-    incremental ingestion use streaming/stream.py (checkpointed
-    AvailableNow), which tracks progress at file granularity.
+    ``scripts/run_pipeline.py --period`` tick) reprocesses everything —
+    otherwise a second tick over a grown table would skip all buckets
+    forever.
 
     Only a missing ledger, or one holding no data files yet (a crash during
     the first ledger append leaves just ``_temporary``; the pinned schema
@@ -153,5 +164,6 @@ def run_incremental(
     }
 
 
-def read_all_triples(spark: SparkSession, output_dir: str) -> DataFrame:
-    return read_triples(spark, os.path.join(output_dir, "triples", "bucket=*"))
+def read_all_triples(spark: SparkSession, output_dir: str, n_buckets: int) -> DataFrame:
+    """The per-bucket triples of a run with ``n_buckets`` buckets."""
+    return read_triples(spark, buckets_glob(output_dir, n_buckets))

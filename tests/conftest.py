@@ -12,7 +12,7 @@ def spark():
     from literature_to_facts_spark.config import LONG_LIVED_DRIVER_CONF, get_spark
 
     # one JVM runs the whole suite: a long-lived driver keeps C2, as the
-    # daily loop does (on 4 cores the suite took 1,099-1,228 s C1-only, 898 s)
+    # looping driver does (on 4 cores the suite took 1,099-1,228 s C1-only, 898 s)
     s = get_spark(
         app_name="l2f-spark-tests", master="local[8]", shuffle_partitions=8,
         extra_conf=LONG_LIVED_DRIVER_CONF,

@@ -182,11 +182,14 @@ def test_driver_jvm_gets_c1_and_caller_java_options(spark):
 def test_compact_graph(spark, docs_df, sides, tmp_path):
     from literature_to_facts_spark.engine.graph import compact_graph
     from literature_to_facts_spark.engine.pipeline import extract_triples
-    from literature_to_facts_spark.streaming.incremental import run_incremental
+    from literature_to_facts_spark.streaming.incremental import (
+        buckets_glob,
+        run_incremental,
+    )
 
     out = str(tmp_path / "inc2")
     run_incremental(spark, docs_df, out, sides, n_buckets=3, run_id="c1")
-    n = compact_graph(spark, f"{out}/triples/bucket=*", str(tmp_path / "compact"))
+    n = compact_graph(spark, buckets_glob(out, 3), str(tmp_path / "compact"))
     direct = extract_triples(spark, docs_df, sides).count()
     assert n == direct
     # compacted table stays pred-partitioned (pruning works)
@@ -224,7 +227,10 @@ def test_graph_dedup_hashes_pred_one_file_per_pred(
     from literature_to_facts_spark.engine import graph
     from literature_to_facts_spark.engine.linking import link_entities, link_triples
     from literature_to_facts_spark.engine.pipeline import TRIPLE_KEY, extract_triples
-    from literature_to_facts_spark.streaming.incremental import run_incremental
+    from literature_to_facts_spark.streaming.incremental import (
+        buckets_glob,
+        run_incremental,
+    )
 
     def key_set(df):
         return {tuple(r) for r in df.select(*TRIPLE_KEY).collect()}
@@ -249,7 +255,7 @@ def test_graph_dedup_hashes_pred_one_file_per_pred(
         run_incremental(spark, docs_df, inc, sides, n_buckets=2, run_id="p1")
         compacted = str(tmp_path / "compact")
         monkeypatch.setattr(graph, "write_triples", spy)
-        graph.compact_graph(spark, f"{inc}/triples/bucket=*", compacted)
+        graph.compact_graph(spark, buckets_glob(inc, 2), compacted)
     finally:
         spark.conf.set(coalesce, before)
     (deduped,) = written

@@ -174,7 +174,7 @@ def test_incremental_resume(spark, docs_df, sides, tmp_path):
     out = str(tmp_path / "inc")
     r1 = run_incremental(spark, docs_df, out, sides, n_buckets=4, run_id="r1")
     assert r1["buckets_processed"] == 4 and r1["buckets_skipped"] == 0
-    n1 = read_all_triples(spark, out).count()
+    n1 = read_all_triples(spark, out, 4).count()
     # every relevant doc is counted once in the ledger: the per-task lineage
     # rows must survive the bucket's dedup (one row per task, not per bucket)
     ledger = spark.read.parquet(os.path.join(out, "ledger"))
@@ -186,11 +186,11 @@ def test_incremental_resume(spark, docs_df, sides, tmp_path):
     # resume: same run_id -> committed buckets are skipped
     r2 = run_incremental(spark, docs_df, out, sides, n_buckets=4, run_id="r1")
     assert r2["buckets_processed"] == 0 and r2["buckets_skipped"] == 4
-    assert read_all_triples(spark, out).count() == n1
-    # a NEW run_id (fresh snapshot / daily tick) reprocesses, idempotently
+    assert read_all_triples(spark, out, 4).count() == n1
+    # a NEW run_id (fresh snapshot / loop tick) reprocesses, idempotently
     r3 = run_incremental(spark, docs_df, out, sides, n_buckets=4, run_id="r3")
     assert r3["buckets_processed"] == 4 and r3["buckets_skipped"] == 0
-    assert read_all_triples(spark, out).count() == n1
+    assert read_all_triples(spark, out, 4).count() == n1
     # and the union of buckets equals the one-shot pipeline
     from literature_to_facts_spark.engine.pipeline import extract_triples
 
@@ -322,6 +322,7 @@ def test_incremental_crash_resume_converges(
     from literature_to_facts_spark.engine.graph import compact_graph, read_triples
     from literature_to_facts_spark.engine.pipeline import extract_triples
     from literature_to_facts_spark.streaming.incremental import (
+        buckets_glob,
         completed_buckets,
         run_incremental,
     )
@@ -334,7 +335,7 @@ def test_incremental_crash_resume_converges(
     r = run_incremental(spark, mirrored_docs, out, sides, n_buckets=3, run_id="c")
     assert r["buckets_skipped"] == skipped and r["buckets_processed"] == 3 - skipped
     graph = str(tmp_path / "graph")
-    compact_graph(spark, f"{out}/triples/bucket=*", graph)
+    compact_graph(spark, buckets_glob(out, 3), graph)
     assert _triple_set(read_triples(spark, graph)) == _triple_set(
         extract_triples(spark, mirrored_docs, sides)
     )
@@ -350,6 +351,7 @@ def test_cross_bucket_duplicates_compact_to_one_shot(
     from literature_to_facts_spark.engine.pipeline import extract_triples
     from literature_to_facts_spark.streaming.incremental import (
         bucket_of,
+        buckets_glob,
         read_all_triples,
         run_incremental,
     )
@@ -363,8 +365,8 @@ def test_cross_bucket_duplicates_compact_to_one_shot(
     out = str(tmp_path / "inc")
     run_incremental(spark, mirrored_docs, out, sides, n_buckets=3, run_id="x")
     graph = str(tmp_path / "graph")
-    n_graph = compact_graph(spark, f"{out}/triples/bucket=*", graph)
-    assert read_all_triples(spark, out).count() > n_graph
+    n_graph = compact_graph(spark, buckets_glob(out, 3), graph)
+    assert read_all_triples(spark, out, 3).count() > n_graph
     assert _triple_set(read_triples(spark, graph)) == _triple_set(
         extract_triples(spark, mirrored_docs, sides)
     )
@@ -393,7 +395,10 @@ def test_kg_driver_job_budget(spark, docs_df, sides, triples_df, tmp_path):
         write_triples,
     )
     from literature_to_facts_spark.engine.pipeline import extract_triples
-    from literature_to_facts_spark.streaming.incremental import run_incremental
+    from literature_to_facts_spark.streaming.incremental import (
+        buckets_glob,
+        run_incremental,
+    )
 
     docs_df.count()  # materialize the cached fixture outside the budget
     one_shot = str(tmp_path / "one_shot")
@@ -411,7 +416,7 @@ def test_kg_driver_job_budget(spark, docs_df, sides, triples_df, tmp_path):
     graph = str(tmp_path / "graph")
     n_compact = _jobs_launched(
         spark, "budget-compact",
-        lambda: compact_graph(spark, f"{out}/triples/bucket=*", graph),
+        lambda: compact_graph(spark, buckets_glob(out, 2), graph),
     )
     assert n_compact <= 2
 
