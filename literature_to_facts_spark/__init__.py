@@ -18,4 +18,11 @@ Everything runs through ``mapInPandas``/built-in SQL functions — no
 row-at-a-time Python UDFs on the hot path.
 """
 
+from literature_to_facts_spark import zipcache
+
+# A Python worker imports the package in its first task (the batch closure
+# or the side-table broadcast); from then on pyspark's per-task import-cache
+# invalidation re-reads no unchanged zip archive.
+zipcache.install()
+
 __version__ = "0.1.0"

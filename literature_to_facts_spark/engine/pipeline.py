@@ -25,13 +25,16 @@ Design notes for 100 TB scale:
 
 from __future__ import annotations
 
+import itertools
 import json
+import os
 import re
+import weakref
 from typing import Iterator, Optional
 
 import numpy as np
 import pandas as pd
-from pyspark import TaskContext
+from pyspark import Broadcast, SparkContext, TaskContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -425,6 +428,52 @@ def make_sides(
     )
 
 
+_extract_calls = itertools.count()
+# id(sides) -> (weak reference to the Sides, its SparkContext, its broadcast)
+_side_broadcasts: dict[int, tuple] = {}
+# (SparkContext, broadcast) whose Sides is gone; a plan may still hold it
+_retired: list[tuple] = []
+# (JVM weak reference to a retired broadcast, the driver file of its value)
+_released: list[tuple] = []
+
+
+def side_broadcast(sc: SparkContext, sides: Sides) -> Broadcast:
+    """The one broadcast of ``sides`` on ``sc``: every ``extract_triples``
+    call with the same Sides object reuses it, so a driver that extracts
+    bucket after bucket, tick after tick, pickles its side tables once.
+
+    A broadcast is released only when nothing can still execute against it:
+    its Sides object has been collected, so no new plan takes it, and the
+    JVM has collected its broadcast object, so no plan holds it (Spark's
+    ContextCleaner drops the broadcast's blocks on the same cue).  Then the
+    pickled value, a file in ``sc._temp_dir``, is deleted.  Checked on every
+    call; a stopped context keeps its files until the JVM exits."""
+    while _retired:
+        old_sc, bc = _retired.pop()
+        if old_sc._jsc is not None:
+            ref = old_sc._jvm.java.lang.ref.WeakReference(bc._jbroadcast)
+            _released.append((ref, bc._path))
+    for entry in list(_released):
+        if entry[0].get() is None:
+            _released.remove(entry)
+            if os.path.exists(entry[1]):
+                os.unlink(entry[1])
+
+    key = id(sides)
+    hit = _side_broadcasts.get(key)
+    if hit is not None and hit[0]() is sides and hit[1] is sc:
+        return hit[2]
+    bc = sc.broadcast(sides)
+
+    def retire(ref, key=key, sc=sc, bc=bc):
+        if _side_broadcasts.get(key, (None,))[0] is ref:
+            del _side_broadcasts[key]
+        _retired.append((sc, bc))
+
+    _side_broadcasts[key] = (weakref.ref(sides, retire), sc, bc)
+    return bc
+
+
 def relevant_docs(docs: DataFrame) -> DataFrame:
     """Prune to extractable kinds with pushable url-prefix predicates and
     prune columns to (url, text) — never reads ``html``.  Plugin-kind
@@ -468,12 +517,16 @@ def extract_triples(
     counted in the same single pass as the data.  The row's ``obj_n3`` is
     ``partition:<pid>``, so it is unique per task and survives the dedup.
     """
-    sides = sides or make_sides()
-    bc = spark.sparkContext.broadcast(sides)
+    bc = side_broadcast(spark.sparkContext, sides or make_sides())
     batteries = snapshot_batteries()  # carries driver-registered plugins
     preparers = snapshot_preparers()  # incl. problematic-identity fallbacks
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    # ``_call`` keeps each call its own computation, as when every call had
+    # its own broadcast: a function pickled identically to a cached frame's
+    # would be answered from that cache, hiding the extraction's plan and jobs
+    def run(
+        batches: Iterator[pd.DataFrame], _call: int = next(_extract_calls)
+    ) -> Iterator[pd.DataFrame]:
         local_sides = bc.value
         m = {
             "docs_in": 0,

@@ -32,12 +32,14 @@ pd.set_option("future.no_silent_downcasting", True)
 DYNAMIC = "__dynamic__"
 
 
-@dataclass
+@dataclass(frozen=True)
 class Sides:
     """Pre-fetched side tables (pandas), broadcast to executors.
 
     Replaces the reference's in-extractor HTTP calls with broadcast joins
-    (SURVEY.md §2.1 "network side-lookups").
+    (SURVEY.md §2.1 "network side-lookups").  Frozen: a Sides object is
+    broadcast once and every extraction with it reuses that broadcast
+    (``pipeline.side_broadcast``).
     """
 
     balrog: pd.DataFrame = field(default_factory=pd.DataFrame)

@@ -35,8 +35,8 @@ from literature_to_facts_spark.engine.graph import read_triples
 from literature_to_facts_spark.engine.pipeline import LINEAGE_PRED, extract_triples
 
 LEDGER_SCHEMA = (
-    "bucket int, run_id string, committed_at double, n_triples long, "
-    "docs_in long, identity_failures long, metrics_json string"
+    "bucket int, n_buckets int, run_id string, committed_at double, "
+    "n_triples long, docs_in long, identity_failures long, metrics_json string"
 )
 
 
@@ -76,7 +76,9 @@ def write_observed(combined: DataFrame, path: str) -> dict:
     }
 
 
-def completed_buckets(spark: SparkSession, output_dir: str, run_id: str) -> set[int]:
+def completed_buckets(
+    spark: SparkSession, output_dir: str, run_id: str, n_buckets: Optional[int] = None
+) -> set[int]:
     """Buckets already committed FOR THIS RUN.
 
     The ledger is scoped per run_id: resuming a crashed run (same run_id)
@@ -84,6 +86,11 @@ def completed_buckets(spark: SparkSession, output_dir: str, run_id: str) -> set[
     ``scripts/run_pipeline.py --period`` tick) reprocesses everything —
     otherwise a second tick over a grown table would skip all buckets
     forever.
+
+    A bucket id means something only under the bucket count it was hashed
+    with, so given ``n_buckets`` this raises ``ValueError`` when the run's
+    committed rows carry another count, or none (a ledger written before
+    rows recorded it).
 
     Only a missing ledger, or one holding no data files yet (a crash during
     the first ledger append leaves just ``_temporary``; the pinned schema
@@ -98,13 +105,20 @@ def completed_buckets(spark: SparkSession, output_dir: str, run_id: str) -> set[
         if e.getCondition() != "PATH_NOT_FOUND":
             raise
         return set()
-    return {
-        r["bucket"]
-        for r in ledger.where(F.col("run_id") == run_id)
-        .select("bucket")
+    rows = (
+        ledger.where(F.col("run_id") == run_id)
+        .select("bucket", "n_buckets")
         .distinct()
         .collect()
-    }
+    )
+    other = {r["n_buckets"] for r in rows} - {n_buckets}
+    if n_buckets is not None and other:
+        raise ValueError(
+            f"run id {run_id!r} has buckets committed under n_buckets "
+            f"{', '.join('unrecorded' if c is None else str(c) for c in other)}, "
+            f"not {n_buckets}; resume it with that bucket count or start a new run id"
+        )
+    return {r["bucket"] for r in rows}
 
 
 def run_incremental(
@@ -121,13 +135,15 @@ def run_incremental(
     ledger row is appended only after the triple write succeeds, so a crash
     mid-bucket re-processes just that bucket (idempotent overwrite).  The
     resume scope is ``run_id``: rerunning with the same run_id skips its
-    completed buckets; a new run_id reprocesses the (new) snapshot.
+    completed buckets; a new run_id reprocesses the (new) snapshot.  A
+    resume must use the run's bucket count: each ledger row records it, and
+    another count raises (``completed_buckets``).
 
     Each bucket is one write job that runs the battery once: the triple
     count and the lineage metrics for the ledger are observed on that write
     (``write_observed``), never counted, collected or re-read afterwards.
     """
-    done = completed_buckets(spark, output_dir, run_id)
+    done = completed_buckets(spark, output_dir, run_id, n_buckets)
     triples_root = os.path.join(output_dir, "triples")
     ledger_path = os.path.join(output_dir, "ledger")
     docs_b = docs.withColumn("_bucket", bucket_of(F.col("url"), n_buckets))
@@ -143,6 +159,7 @@ def run_incremental(
         )
         ledger_row = pd.DataFrame([{
             "bucket": b,
+            "n_buckets": n_buckets,
             "run_id": run_id,
             "committed_at": time.time(),
             "n_triples": m["n_triples"],

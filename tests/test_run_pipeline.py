@@ -2,8 +2,10 @@
 in ``graph/``, and the ``--period`` loop around it (driven with a fake tick,
 clock and sleep, so those tests start no JVM)."""
 
+import gc
 import json
 import os
+import time
 
 import pytest
 
@@ -108,3 +110,44 @@ def test_without_period_exactly_one_tick_runs(outcome, status, capsys):
     assert calls == ["pipeline"] and fake.sleeps == []
     (line,) = _lines(capsys)
     assert line["run_id"] == "pipeline" and ("error" in line) == bool(status)
+
+
+def test_ticks_pickle_the_side_tables_once(spark, docs_df, sides, tmp_path):
+    """Every bucket of every tick reuses the one broadcast of the loop's
+    Sides: a second tick leaves no new file in the driver's broadcast dir."""
+    temp = spark.sparkContext._temp_dir
+    out = str(tmp_path / "out")
+    tick(spark, docs_df, out, sides, 2, "a")
+    n_files = len(os.listdir(temp))
+    tick(spark, docs_df, out, sides, 2, "b")
+    assert len(os.listdir(temp)) == n_files
+
+
+def test_side_broadcast_released_when_no_plan_holds_it(spark, docs_df):
+    """A plan built from a Sides that is gone still runs; once the plan is
+    gone too, the broadcast's file is deleted."""
+    from literature_to_facts_spark.engine.pipeline import (
+        extract_triples,
+        make_sides,
+        side_broadcast,
+    )
+
+    sc = spark.sparkContext
+    sides = make_sides()
+    path = side_broadcast(sc, sides)._path
+    frame = extract_triples(spark, docs_df, sides, dedup=False)
+    del sides
+    gc.collect()
+    side_broadcast(sc, make_sides())
+    assert frame.count() > 0
+    assert os.path.exists(path)
+    del frame
+    other = make_sides()
+    for _ in range(20):
+        gc.collect()
+        sc._jvm.System.gc()
+        side_broadcast(sc, other)
+        if not os.path.exists(path):
+            break
+        time.sleep(0.5)
+    assert not os.path.exists(path)

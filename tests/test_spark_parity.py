@@ -198,6 +198,30 @@ def test_incremental_resume(spark, docs_df, sides, tmp_path):
     assert n1 == direct
 
 
+def test_resume_under_another_bucket_count_raises(spark, docs_df, sides, tmp_path):
+    """A bucket id means something only under the count it was hashed with:
+    resuming a run id at another bucket count, or from ledger rows that did
+    not record one, raises instead of skipping the old ids."""
+    from literature_to_facts_spark.streaming.incremental import run_incremental
+
+    out = str(tmp_path / "inc")
+    run_incremental(spark, docs_df, out, sides, n_buckets=4, run_id="r")
+    ledger = spark.read.parquet(os.path.join(out, "ledger")).collect()
+    assert {x["n_buckets"] for x in ledger} == {4}
+    with pytest.raises(ValueError, match="n_buckets 4.*not 2"):
+        run_incremental(spark, docs_df, out, sides, n_buckets=2, run_id="r")
+    assert len(spark.read.parquet(os.path.join(out, "ledger")).collect()) == 4
+
+    legacy = str(tmp_path / "legacy")  # a ledger row from before n_buckets
+    spark.createDataFrame(
+        [(0, "r", 0.0, 0, 0, 0, "[]")],
+        "bucket int, run_id string, committed_at double, n_triples long, "
+        "docs_in long, identity_failures long, metrics_json string",
+    ).write.parquet(os.path.join(legacy, "ledger"))
+    with pytest.raises(ValueError, match="n_buckets unrecorded"):
+        run_incremental(spark, docs_df, legacy, sides, n_buckets=2, run_id="r")
+
+
 def test_incremental_runs_battery_once(spark, docs_df, sides, tmp_path):
     """The resumable driver shows each relevant doc to the battery exactly
     once: a plugin extractor counts the rows it sees in an accumulator."""
