@@ -376,215 +376,6 @@ def q_dedup_simhash_incremental(spark, sf_dir):
     return out
 
 
-def q_emb_cosine_topk(spark, sf_dir):
-    from literature_to_facts_spark.datapipe.similarity import cosine_topk_bruteforce
-
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    out = cosine_topk_bruteforce(emb, queries, k=5)
-    return out.select(
-        F.col("q_id").cast("bigint").alias("q_id"),
-        F.col("vec_id").cast("bigint").alias("vec_id"),
-        F.round("cosine", 4).cast("double").alias("cosine_r4"),
-        F.col("rank").cast("bigint").alias("rank"),
-    )
-
-
-def q_emb_ann_lsh(spark, sf_dir):
-    """LSH-bucketed ANN.  Full SQL oracle: the hyperplane constants are
-    inlined into the generated oracle SQL, so bucketing + scoring + ranking
-    are checked end-to-end."""
-    from literature_to_facts_spark.datapipe.similarity import cosine_topk_lsh
-
-    emb = _spread(_t(spark, sf_dir, "embeddings"))
-    queries = emb.where(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    out = cosine_topk_lsh(spark, emb, queries, k=5, n_planes=6)
-    return out.select(
-        F.col("q_id").cast("bigint").alias("q_id"),
-        F.col("vec_id").cast("bigint").alias("vec_id"),
-        F.round("cosine", 4).cast("double").alias("cosine_r4"),
-        F.col("rank").cast("bigint").alias("rank"),
-    )
-
-
-def q_emb_ann_lsh_multiprobe(spark, sf_dir):
-    """Multi-probe LSH ANN: 8 planes (tighter buckets — the corpus-scale
-    setting) + 2 margin-ordered Hamming-1 probes per query recovering the
-    recall the extra planes cost.  Full SQL oracle: plane constants AND the
-    margin-ordered flip computation are inlined/regenerated in DuckDB."""
-    from literature_to_facts_spark.datapipe.similarity import cosine_topk_lsh
-
-    emb = _spread(_t(spark, sf_dir, "embeddings"))
-    queries = emb.where(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    out = cosine_topk_lsh(spark, emb, queries, k=5, n_planes=8, multiprobe=2)
-    return out.select(
-        F.col("q_id").cast("bigint").alias("q_id"),
-        F.col("vec_id").cast("bigint").alias("vec_id"),
-        F.round("cosine", 4).cast("double").alias("cosine_r4"),
-        F.col("rank").cast("bigint").alias("rank"),
-    )
-
-
-def _ann_lsh_multiprobe_oracle(
-    k: int = 5, n_planes: int = 8, multiprobe: int = 2, dim: int = 64, seed: int = 7
-) -> str:
-    from literature_to_facts_spark.datapipe.similarity import _hyperplanes
-
-    planes = _hyperplanes(dim, n_planes, seed)
-    lits = ["[" + ", ".join(str(x) for x in p) + "]::DOUBLE[]" for p in planes]
-    bucket = " + ".join(
-        f"(CASE WHEN list_dot_product({lit}, e) > 0 THEN {1 << i} ELSE 0 END)"
-        for i, lit in enumerate(lits)
-    )
-    margins = ", ".join(
-        f"{{'m': round(abs(list_dot_product({lit}, e)), 6), 'i': {i}}}"
-        for i, lit in enumerate(lits)
-    )
-    return f"""
-            WITH v AS (SELECT CAST(vec_id AS BIGINT) AS vec_id,
-                              embedding::DOUBLE[] AS e,
-                              {bucket} AS bucket
-                       FROM embeddings),
-            q AS (SELECT vec_id AS q_id, e AS qe, bucket,
-                         list_transform(
-                           list_sort([{margins}])[1:{multiprobe}],
-                           s -> xor(bucket, 1::BIGINT << s.i)) AS flips
-                  FROM v WHERE vec_id < 3),
-            probes AS (SELECT q_id, qe,
-                              UNNEST(list_prepend(bucket, flips)) AS bucket
-                       FROM q),
-            scored AS (
-              SELECT p.q_id, v.vec_id,
-                     ROUND(list_dot_product(p.qe, v.e) /
-                       (sqrt(list_dot_product(p.qe, p.qe)) *
-                        sqrt(list_dot_product(v.e, v.e))), 6) AS c6
-              FROM v JOIN probes p USING (bucket)
-            )
-            SELECT q_id, vec_id, ROUND(c6, 4) AS cosine_r4, CAST(rnk AS BIGINT) AS rank
-            FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
-                                               ORDER BY c6 DESC, vec_id ASC) AS rnk
-                  FROM scored)
-            WHERE rnk <= {k}
-        """
-
-
-def q_dedup_embedding_cosine(spark, sf_dir):
-    """Embedding-cosine near-dup pairs (hyperplane-bucketed candidates +
-    exact cosine verify).  Full SQL oracle with inlined plane constants —
-    LSH recall does not weaken the check because the oracle replicates the
-    bucketing itself."""
-    from literature_to_facts_spark.datapipe.similarity import embedding_near_dup_pairs
-
-    emb = _spread(_t(spark, sf_dir, "embeddings"))
-    pairs = embedding_near_dup_pairs(emb, threshold=0.4, n_planes=4)
-    return pairs.select(
-        F.col("id_a").cast("bigint").alias("id_a"),
-        F.col("id_b").cast("bigint").alias("id_b"),
-        F.round("cosine", 4).cast("double").alias("cosine_r4"),
-    )
-
-
-def q_dedup_embedding_incremental(spark, sf_dir):
-    """Delta embedding near-dup (datapipe/similarity.
-    embedding_near_dup_pairs_incremental): the new batch (vec_id % 5 == 0)
-    pairs against the persisted hyperplane-bucket index — the fourth
-    probe-shaped delta family.  Full SQL oracle: DuckDB recomputes the
-    full-corpus bucketed pair set (inlined plane constants) and restricts
-    to pairs touching a new vector."""
-    from literature_to_facts_spark.datapipe.similarity import (
-        build_embedding_bucket_index,
-        embedding_near_dup_pairs_incremental,
-    )
-
-    emb = _spread(_t(spark, sf_dir, "embeddings"))
-    new = emb.where(F.col("vec_id") % 5 == 0)
-    old = emb.where(F.col("vec_id") % 5 != 0)
-    # shared bucket-index build over the whole corpus, filtered into the
-    # two halves (per-row deterministic — same shape as the other two
-    # incremental wrappers)
-    full_idx = build_embedding_bucket_index(emb, n_planes=4).persist()
-    idx = full_idx.where(F.col("vec_id") % 5 != 0)
-    nidx = full_idx.where(F.col("vec_id") % 5 == 0)
-    reg = [full_idx]
-    pairs = embedding_near_dup_pairs_incremental(
-        new, old, idx, threshold=0.4, n_planes=4,
-        cache_registry=reg, new_index=nidx,
-    )
-    out = pairs.select(
-        F.col("id_a").cast("bigint").alias("id_a"),
-        F.col("id_b").cast("bigint").alias("id_b"),
-        F.round("cosine", 4).cast("double").alias("cosine_r4"),
-    )
-    out._l2f_cache_registry = reg
-    return out
-
-
-
-
-def q_emb_ann_ivf(spark, sf_dir):
-    """IVF-flat ANN: deterministic hash-sampled seed centroids + one Lloyd
-    refinement pass (full SQL oracle — centroid choice, the refinement's
-    fixed-point per-dimension means, assignment, probing and ranking all
-    mirrored)."""
-    from literature_to_facts_spark.datapipe.similarity import cosine_topk_ivf
-
-    emb = _spread(_t(spark, sf_dir, "embeddings"))
-    queries = emb.where(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    reg = []
-    out = cosine_topk_ivf(
-        emb, queries, k=5, n_centroids=8, nprobe=3, refine_iters=1,
-        cache_registry=reg,
-    ).select(
-        F.col("q_id").cast("bigint").alias("q_id"),
-        F.col("vec_id").cast("bigint").alias("vec_id"),
-        F.round("cosine", 4).cast("double").alias("cosine_r4"),
-        F.col("rank").cast("bigint").alias("rank"),
-    )
-    out._l2f_cache_registry = reg
-    return out
-
-
-def q_emb_ann_ivf_incremental(spark, sf_dir):
-    """Incremental IVF (datapipe/similarity.build_ivf_index /
-    ivf_index_append / cosine_topk_ivf_from_index — the sixth delta
-    family): centroids train on HISTORY only (vec_id % 5 != 0) and freeze;
-    the batch quantizes against them map-side (history never re-read);
-    queries probe the combined inverted lists.  Full SQL oracle via
-    _ann_ivf_oracle(train_restrict=...) — training, append-assignment,
-    probing and ranking all recomputed."""
-    from literature_to_facts_spark.datapipe.similarity import (
-        build_ivf_index,
-        cosine_topk_ivf_from_index,
-        ivf_index_append,
-    )
-
-    emb = _spread(_t(spark, sf_dir, "embeddings"))
-    hist = emb.where(F.col("vec_id") % 5 != 0)
-    batch = emb.where(F.col("vec_id") % 5 == 0)
-    reg = []
-    centroids, hist_idx = build_ivf_index(hist, n_centroids=8, cache_registry=reg)
-    idx = hist_idx.unionByName(ivf_index_append(batch, centroids))
-    queries = emb.where(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    out = cosine_topk_ivf_from_index(idx, centroids, queries, k=5, nprobe=3).select(
-        F.col("q_id").cast("bigint").alias("q_id"),
-        F.col("vec_id").cast("bigint").alias("vec_id"),
-        F.round("cosine", 4).cast("double").alias("cosine_r4"),
-        F.col("rank").cast("bigint").alias("rank"),
-    )
-    out._l2f_cache_registry = reg
-    return out
-
-
 def q_dedup_clusters_cc(spark, sf_dir):
     """Near-dup PAIRS merged into duplicate CLUSTERS via connected
     components (min-label propagation + pointer jumping, O(log diameter)
@@ -871,71 +662,6 @@ def q_sample_stratified_topn(spark, sf_dir):
     out = sample_topn_per_group(docs, n=7, group_col="lang")
     return out.select(
         F.col("doc_id").cast("bigint").alias("doc_id"), F.col("lang").alias("lang")
-    )
-
-
-def q_events_asof_join(spark, sf_dir):
-    """Backward as-of join (datapipe/joins.asof_join): each purchase event
-    attaches the user's most recent click at-or-before it — the temporal
-    join Spark lacks natively, re-expressed as one union + one key shuffle +
-    a running last() sweep (no row multiplication).  Full SQL oracle via
-    DuckDB's native ASOF LEFT JOIN.  The right side is pre-deduped to one
-    row per (user, ts) — max event_id — so tie semantics are engine-defined
-    on both sides."""
-    from literature_to_facts_spark.datapipe.joins import asof_join
-
-    ev = _t(spark, sf_dir, "events")
-    purchases = ev.where(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts"
-    )
-    clicks = (
-        ev.where(F.col("event_type") == "click")
-        .groupBy("user_id", "ts")
-        .agg(F.max("event_id").alias("click_event_id"))
-    )
-    out = asof_join(
-        purchases, clicks, on="user_id", left_ts="ts", right_ts="ts",
-        right_cols=["click_event_id"], suffix="_r",
-    )
-    # inner-ASOF for the contract query: the compare harness sorts row
-    # tuples, and NULLs from unmatched left rows are not orderable there
-    out = out.where(F.col("click_event_id_r").isNotNull())
-    return out.select(
-        F.col("event_id").cast("bigint").alias("event_id"),
-        F.col("user_id").cast("bigint").alias("user_id"),
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-        F.col("click_event_id_r").cast("bigint").alias("click_event_id"),
-        F.unix_micros(F.col("ts_r")).alias("click_ts_us"),
-    )
-
-
-def q_events_interval_join(spark, sf_dir):
-    """Range join (datapipe/joins.interval_join): clicks attributed to the
-    [purchase - 1 hour, purchase) window of the same user — bucketed
-    equi-join + exact residual predicate instead of the quadratic
-    BroadcastNestedLoopJoin Spark plans for a bare BETWEEN join.  Full SQL
-    oracle (plain range-predicate join — DuckDB plans IEJoin for it)."""
-    from literature_to_facts_spark.datapipe.joins import interval_join
-
-    ev = _t(spark, sf_dir, "events")
-    clicks = ev.where(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_id"), "user_id", "ts"
-    )
-    windows = ev.where(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        "user_id",
-        (F.col("ts") - F.expr("INTERVAL 1 HOUR")).alias("win_start"),
-        F.col("ts").alias("win_end"),
-    )
-    out = interval_join(
-        clicks, windows, ts_col="ts", start_col="win_start", end_col="win_end",
-        on="user_id", bucket_seconds=3600,
-    )
-    return out.select(
-        F.col("purchase_id").cast("bigint").alias("purchase_id"),
-        F.col("click_id").cast("bigint").alias("click_id"),
-        F.col("user_id").cast("bigint").alias("user_id"),
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("click_ts_us"),
     )
 
 
@@ -1501,10 +1227,6 @@ def q_text_span_dedup(spark, sf_dir):
     )
 
 
-
-
-
-
 def q_text_token_topk(spark, sf_dir):
     """Corpus heavy hitters (datapipe/textstats.token_topk): top-20 tokens
     by occurrence with document counts.  The Zipf-skewed token distribution
@@ -1649,72 +1371,6 @@ def q_sample_mixture_temperature(spark, sf_dir):
     )
 
 
-def q_multimodal_features(spark, sf_dir):
-    """Multimodal decode lane (datapipe/multimodal.extract_media_features):
-    a deterministic binary-column fixture (real BMP/PPM/WAV payloads plus
-    truncated and compressed-magic rows) decoded to fixed-dim features via
-    mapInPandas.  Features are fixed-pointed (1e5) for bit-portable
-    comparison; the oracle regenerates the same payloads and decodes them
-    row-at-a-time outside Spark — what the check pins is the distributed
-    plumbing: Arrow batching, schema, per-row error degradation, payload
-    hash integrity.  sf_dir is unused (the fixture is the contract)."""
-    from literature_to_facts_spark.datapipe.multimodal import (
-        build_media_fixture,
-        extract_media_features,
-    )
-
-    media = spark.createDataFrame(
-        [(m, k, bytearray(p)) for m, k, p in build_media_fixture()],
-        schema="media_id long, kind string, payload binary",
-    ).repartition(8)
-    fx = [
-        f"CAST(CASE WHEN feature IS NULL THEN NULL ELSE "
-        f"floor(CAST(element_at(feature, {i + 1}) AS DOUBLE) * 100000 + 0.5) "
-        f"END AS BIGINT) AS f{i}"
-        for i in range(8)
-    ]
-    return extract_media_features(media).selectExpr(
-        "media_id", "kind", "n_bytes", "sha1", "decoder", *fx
-    )
-
-
-def _multimodal_oracle_sql() -> str:
-    """Row-at-a-time oracle for q_multimodal_features: regenerate the
-    fixture, decode each payload in plain Python (same honest decoders, no
-    Spark), fixed-point the features identically, and emit a VALUES table
-    DuckDB selects from."""
-    import hashlib as _hl
-    import math as _m
-
-    from literature_to_facts_spark.datapipe.multimodal import (
-        build_media_fixture,
-        decode_media,
-    )
-
-    rows = []
-    for mid, kind, payload in build_media_fixture():
-        try:
-            feat = decode_media(payload, kind)
-            dec = "real"
-        except NotImplementedError:
-            feat, dec = None, "unsupported"
-        except Exception:  # noqa: BLE001 — mirrors the operator's per-row net
-            feat, dec = None, "error"
-        fs = (
-            ["CAST(NULL AS BIGINT)"] * 8
-            if feat is None
-            else [str(int(_m.floor(float(f) * 100000 + 0.5))) for f in feat]
-        )
-        rows.append(
-            f"({mid}, '{kind}', {len(payload)}, "
-            f"'{_hl.sha1(payload).hexdigest()}', '{dec}', {', '.join(fs)})"
-        )
-    cols = "media_id, kind, n_bytes, sha1, decoder, " + ", ".join(
-        f"f{i}" for i in range(8)
-    )
-    return f"SELECT * FROM (VALUES {', '.join(rows)}) AS t({cols})"
-
-
 # ---------------------------------------------------------------------------
 # URL canonicalization lane (datapipe/urls.py) — the crawl-pipeline stage
 # that precedes every text-level operator.  The fixture synthesizes URLs
@@ -1805,149 +1461,6 @@ def q_url_dedup(spark, sf_dir):
         F.col("rep_id").cast("bigint").alias("rep_id"),
         "n_docs",
     )
-
-
-_SEMDEDUP_PARAMS = dict(n_clusters=8, refine_iters=1, threshold=0.4, max_cluster=400)
-
-
-def q_semantic_dedup(spark, sf_dir):
-    """Semantic dedup (datapipe/similarity.semantic_dedup — SemDeDup):
-    fixed-point k-means clustering + intra-cluster exact-cosine pruning
-    with the min-id-representative rule; clusters above max_cluster are
-    excluded from pair generation and flagged.  Full SQL oracle — DuckDB
-    recomputes seeds, the Lloyd pass, assignment, sizes and the pruning
-    join end-to-end."""
-    from literature_to_facts_spark.datapipe.similarity import semantic_dedup
-
-    emb = _spread(_t(spark, sf_dir, "embeddings"))
-    reg = []
-    out = semantic_dedup(emb, cache_registry=reg, **_SEMDEDUP_PARAMS)
-    out = out.select(
-        F.col("vec_id").cast("bigint").alias("vec_id"),
-        F.col("centroid_id").cast("bigint").alias("centroid_id"),
-        "n_cluster",
-        "capped",
-        # row-tuple sort safety (the gate sorts rows; None < int raises):
-        # NULL dup_of -> -1, is_dup still derives from the raw column
-        F.coalesce(F.col("dup_of").cast("bigint"), F.lit(-1)).alias("dup_of"),
-        "is_dup",
-    )
-    out._l2f_cache_registry = reg  # released by callers that materialize
-    return out
-
-
-def _semantic_dedup_oracle(
-    n_clusters: int = 8,
-    threshold: float = 0.4,
-    max_cluster: int = 400,
-    dim: int = 64,
-    train_restrict: str | None = None,
-    out_restrict: str | None = None,
-) -> str:
-    """Mirrors semantic_dedup end-to-end: the _ann_ivf_oracle head (seed +
-    one fixed-point Lloyd pass + assignment), then cluster sizes, the cap
-    flag and the min-lower-id pruning join.  ``train_restrict`` freezes
-    centroid training to a corpus subset and ``out_restrict`` keeps only
-    those rows (and their dup groups' b-side) — together they are the
-    incremental query's frozen-quantizer contract."""
-    h = _H1.format(x="CAST(vec_id AS VARCHAR)")
-    train_where = f"WHERE {train_restrict}" if train_restrict else ""
-    out_and = f"AND ({out_restrict.replace('vec_id', 'b.vec_id')})" if out_restrict else ""
-    out_where = f"WHERE {out_restrict.replace('vec_id', 's.vec_id')}" if out_restrict else ""
-    avgs = ", ".join(
-        f"FLOOR(SUM(CAST(FLOOR(e[{i + 1}] * 1000000.0 + 0.5) AS BIGINT))"
-        f" / COUNT(*) + 0.5) / 1000000.0 AS a{i}"
-        for i in range(dim)
-    )
-    relist = "[" + ", ".join(f"a{i}" for i in range(dim)) + "]"
-    return f"""
-            WITH v AS (SELECT CAST(vec_id AS BIGINT) AS vec_id,
-                              embedding::DOUBLE[] AS e
-                       FROM embeddings),
-            vt AS (SELECT * FROM v {train_where}),
-            seed AS (SELECT vec_id AS centroid_id, e AS ce FROM vt
-                     ORDER BY {h} ASC, vec_id ASC LIMIT {n_clusters}),
-            assign0 AS (
-              SELECT vec_id, e, centroid_id FROM (
-                SELECT v.vec_id, v.e, c.centroid_id,
-                       ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                         ORDER BY list_dot_product(v.e, c.ce) DESC,
-                                  c.centroid_id ASC) AS rn
-                FROM vt v, seed c) WHERE rn = 1),
-            lmeans AS (SELECT centroid_id, {avgs}
-                       FROM assign0 GROUP BY centroid_id),
-            cent AS (SELECT centroid_id, {relist}::DOUBLE[] AS ce FROM lmeans),
-            assign AS (
-              SELECT vec_id, e, centroid_id FROM (
-                SELECT v.vec_id, v.e, c.centroid_id,
-                       ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                         ORDER BY list_dot_product(v.e, c.ce) DESC,
-                                  c.centroid_id ASC) AS rn
-                FROM v, cent c) WHERE rn = 1),
-            sizes AS (SELECT centroid_id, CAST(COUNT(*) AS BIGINT) AS n_cluster
-                      FROM assign GROUP BY centroid_id),
-            spine AS (SELECT a.vec_id, a.e, a.centroid_id, s.n_cluster,
-                             s.n_cluster > {max_cluster} AS capped
-                      FROM assign a JOIN sizes s USING (centroid_id)),
-            dups AS (
-              SELECT b.vec_id, MIN(a.vec_id) AS dup_of
-              FROM spine a JOIN spine b USING (centroid_id)
-              WHERE NOT a.capped AND a.vec_id < b.vec_id {out_and}
-                AND ROUND(list_dot_product(a.e, b.e) /
-                      (sqrt(list_dot_product(a.e, a.e)) *
-                       sqrt(list_dot_product(b.e, b.e))), 6) >= {threshold}
-              GROUP BY b.vec_id)
-            SELECT s.vec_id, CAST(s.centroid_id AS BIGINT) AS centroid_id,
-                   s.n_cluster, s.capped,
-                   coalesce(CAST(d.dup_of AS BIGINT), -1) AS dup_of,
-                   d.dup_of IS NOT NULL AS is_dup
-            FROM spine s LEFT JOIN dups d USING (vec_id)
-            {out_where}
-        """
-
-
-def q_semantic_dedup_incremental(spark, sf_dir):
-    """Delta SemDeDup (datapipe/similarity.semantic_dedup_incremental — the
-    eighth probe-shaped incremental family): the new batch (vec_id % 5 ==
-    0) quantized against centroids trained on HISTORY ONLY (frozen-quantizer
-    contract shared with emb_ann_ivf_incremental), scored only against
-    history members of its touched clusters.  Oracle = the frozen-quantizer
-    full semantic dedup restricted to the batch ids."""
-    from literature_to_facts_spark.datapipe.similarity import (
-        build_ivf_index,
-        semantic_dedup_incremental,
-    )
-
-    emb = _spread(_t(spark, sf_dir, "embeddings"))
-    new = emb.where(F.col("vec_id") % 5 == 0)
-    old = emb.where(F.col("vec_id") % 5 != 0)
-    reg = []
-    cents, assigns = build_ivf_index(
-        old, n_centroids=_SEMDEDUP_PARAMS["n_clusters"],
-        refine_iters=_SEMDEDUP_PARAMS["refine_iters"], cache_registry=reg,
-    )
-    # operationally `assigns` is a persisted catalog table; recomputing it
-    # here per consumer would charge the whole IVF assign pipeline twice
-    # (the operator's two history passes are scans of stored state, not
-    # recomputes) — persist emulates the stored index, results unchanged
-    assigns = assigns.persist()
-    reg.append(assigns)
-    out = semantic_dedup_incremental(
-        new, assigns, cents,
-        threshold=_SEMDEDUP_PARAMS["threshold"],
-        max_cluster=_SEMDEDUP_PARAMS["max_cluster"],
-        cache_registry=reg,
-    )
-    out = out.select(
-        F.col("vec_id").cast("bigint").alias("vec_id"),
-        F.col("centroid_id").cast("bigint").alias("centroid_id"),
-        "n_cluster",
-        "capped",
-        F.coalesce(F.col("dup_of").cast("bigint"), F.lit(-1)).alias("dup_of"),
-        "is_dup",
-    )
-    out._l2f_cache_registry = reg
-    return out
 
 
 def q_text_span_dedup_clean(spark, sf_dir):
@@ -4166,9 +3679,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "url_parts": q_url_parts,
         "text_chunk_sliding": q_text_chunk_sliding,
         "sample_shuffle_shards": q_sample_shuffle_shards,
-        "semantic_dedup_incremental": q_semantic_dedup_incremental,
-        "semantic_dedup": q_semantic_dedup,
-        "multimodal_features": q_multimodal_features,
         "sample_mixture_temperature": q_sample_mixture_temperature,
         "sample_mixture_weights": q_sample_mixture_weights,
         "text_pii_redact": q_text_pii_redact,
@@ -4207,8 +3717,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_counterpart_join": q_kg_counterpart_join,
         "kg_reaction_pivot": q_kg_reaction_pivot,
         "json_extract": q_json_extract,
-        "events_asof_join": q_events_asof_join,
-        "events_interval_join": q_events_interval_join,
         "dedup_exact": q_dedup_exact,
         "dedup_exact_incremental": q_dedup_exact_incremental,
         "dedup_corpus_purge": q_dedup_corpus_purge,
@@ -4228,13 +3736,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_simhash": q_dedup_simhash,
         "dedup_simhash_pairs": q_dedup_simhash_pairs,
         "dedup_simhash_incremental": q_dedup_simhash_incremental,
-        "dedup_embedding_cosine": q_dedup_embedding_cosine,
-        "dedup_embedding_incremental": q_dedup_embedding_incremental,
-        "emb_cosine_topk": q_emb_cosine_topk,
-        "emb_ann_lsh": q_emb_ann_lsh,
-        "emb_ann_lsh_multiprobe": q_emb_ann_lsh_multiprobe,
-        "emb_ann_ivf": q_emb_ann_ivf,
-        "emb_ann_ivf_incremental": q_emb_ann_ivf_incremental,
         "text_token_counts": q_text_token_counts,
     }
 
@@ -4525,158 +4026,6 @@ def _simhash_pairs_oracle(max_hamming: int = 8, max_bucket: int = 1000) -> str:
             JOIN bsize s ON s.band = l.band AND s.key = l.key
             WHERE s.n BETWEEN 2 AND {max_bucket}
               AND bit_count(xor(l.simhash, r.simhash)) <= {max_hamming}
-        """
-
-
-def _ann_lsh_oracle(k: int = 5, n_planes: int = 6, dim: int = 64, seed: int = 7) -> str:
-    from literature_to_facts_spark.datapipe.similarity import _hyperplanes
-
-    planes = _hyperplanes(dim, n_planes, seed)
-
-    def bucket(col: str) -> str:
-        terms = []
-        for i, p in enumerate(planes):
-            lit = "[" + ", ".join(str(x) for x in p) + "]"
-            terms.append(
-                f"(CASE WHEN list_dot_product({lit}::DOUBLE[], {col}) > 0 "
-                f"THEN {1 << i} ELSE 0 END)"
-            )
-        return " + ".join(terms)
-
-    return f"""
-            WITH v AS (SELECT CAST(vec_id AS BIGINT) AS vec_id,
-                              embedding::DOUBLE[] AS e,
-                              {bucket("embedding::DOUBLE[]")} AS bucket
-                       FROM embeddings),
-            q AS (SELECT vec_id AS q_id, e AS qe, bucket FROM v WHERE vec_id < 3),
-            scored AS (
-              SELECT q.q_id, v.vec_id,
-                     ROUND(list_dot_product(q.qe, v.e) /
-                       (sqrt(list_dot_product(q.qe, q.qe)) *
-                        sqrt(list_dot_product(v.e, v.e))), 6) AS c6
-              FROM v JOIN q USING (bucket)
-            )
-            SELECT q_id, vec_id, ROUND(c6, 4) AS cosine_r4, CAST(rnk AS BIGINT) AS rank
-            FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
-                                               ORDER BY c6 DESC, vec_id ASC) AS rnk
-                  FROM scored)
-            WHERE rnk <= {k}
-        """
-
-
-def _emb_near_dup_oracle(
-    threshold: float = 0.4,
-    n_planes: int = 4,
-    dim: int = 64,
-    seed: int = 7,
-    max_bucket: int = 1000,
-) -> str:
-    from literature_to_facts_spark.datapipe.similarity import _hyperplanes
-
-    planes = _hyperplanes(dim, n_planes, seed)
-    terms = []
-    for i, p in enumerate(planes):
-        lit = "[" + ", ".join(str(x) for x in p) + "]"
-        terms.append(
-            f"(CASE WHEN list_dot_product({lit}::DOUBLE[], e) > 0 "
-            f"THEN {1 << i} ELSE 0 END)"
-        )
-    bucket = " + ".join(terms)
-    return f"""
-            WITH v AS (SELECT CAST(vec_id AS BIGINT) AS vec_id,
-                              embedding::DOUBLE[] AS e
-                       FROM embeddings),
-            vb AS (SELECT vec_id, e, {bucket} AS bucket FROM v),
-            bsize AS (SELECT bucket, COUNT(*) AS n FROM vb GROUP BY bucket),
-            cand AS (
-              SELECT DISTINCT l.vec_id AS id_a, r.vec_id AS id_b,
-                     l.e AS e_a, r.e AS e_b
-              FROM vb l
-              JOIN vb r ON l.bucket = r.bucket AND l.vec_id < r.vec_id
-              JOIN bsize s ON s.bucket = l.bucket
-              WHERE s.n BETWEEN 2 AND {max_bucket}
-            ),
-            scored AS (
-              SELECT id_a, id_b,
-                     ROUND(list_dot_product(e_a, e_b) /
-                       (sqrt(list_dot_product(e_a, e_a)) *
-                        sqrt(list_dot_product(e_b, e_b))), 6) AS c6
-              FROM cand
-            )
-            SELECT id_a, id_b, ROUND(c6, 4) AS cosine_r4
-            FROM scored WHERE c6 >= {threshold}
-        """
-
-
-def _ann_ivf_oracle(
-    k: int = 5,
-    n_centroids: int = 8,
-    nprobe: int = 3,
-    dim: int = 64,
-    train_restrict: str | None = None,
-) -> str:
-    """Mirrors cosine_topk_ivf end-to-end: hash-sampled seed centroids, ONE
-    Lloyd refinement (per-dimension FIXED-POINT mean: components quantized to
-    integer micro-units, summed exactly, divided and floor-rounded with
-    single IEEE ops — order-independent, so the mean is bit-portable; a
-    ROUND(AVG) of raw doubles could flip in the last ulp between engines),
-    assignment, probing and ranking.  DuckDB lists are 1-indexed, hence
-    e[i+1].
-
-    ``train_restrict`` freezes centroid training (seed + Lloyd) to a subset
-    of the corpus while the inverted lists still cover everything — the
-    incremental-index contract (build_ivf_index over history,
-    ivf_index_append for the batch)."""
-    h = _H1.format(x="CAST(vec_id AS VARCHAR)")
-    train_where = f"WHERE {train_restrict}" if train_restrict else ""
-    avgs = ", ".join(
-        f"FLOOR(SUM(CAST(FLOOR(e[{i + 1}] * 1000000.0 + 0.5) AS BIGINT))"
-        f" / COUNT(*) + 0.5) / 1000000.0 AS a{i}"
-        for i in range(dim)
-    )
-    relist = "[" + ", ".join(f"a{i}" for i in range(dim)) + "]"
-    return f"""
-            WITH v AS (SELECT CAST(vec_id AS BIGINT) AS vec_id,
-                              embedding::DOUBLE[] AS e
-                       FROM embeddings),
-            vt AS (SELECT * FROM v {train_where}),
-            seed AS (SELECT vec_id AS centroid_id, e AS ce FROM vt
-                     ORDER BY {h} ASC, vec_id ASC LIMIT {n_centroids}),
-            assign0 AS (
-              SELECT vec_id, e, centroid_id FROM (
-                SELECT v.vec_id, v.e, c.centroid_id,
-                       ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                         ORDER BY list_dot_product(v.e, c.ce) DESC,
-                                  c.centroid_id ASC) AS rn
-                FROM vt v, seed c) WHERE rn = 1),
-            lmeans AS (SELECT centroid_id, {avgs}
-                       FROM assign0 GROUP BY centroid_id),
-            cent AS (SELECT centroid_id, {relist}::DOUBLE[] AS ce FROM lmeans),
-            assign AS (
-              SELECT vec_id, e, centroid_id FROM (
-                SELECT v.vec_id, v.e, c.centroid_id,
-                       ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                         ORDER BY list_dot_product(v.e, c.ce) DESC,
-                                  c.centroid_id ASC) AS rn
-                FROM v, cent c) WHERE rn = 1),
-            probes AS (
-              SELECT q_id, qe, centroid_id FROM (
-                SELECT q.vec_id AS q_id, q.e AS qe, c.centroid_id,
-                       ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                         ORDER BY list_dot_product(q.e, c.ce) DESC,
-                                  c.centroid_id ASC) AS rn
-                FROM v q, cent c WHERE q.vec_id < 3) WHERE rn <= {nprobe}),
-            scored AS (
-              SELECT p.q_id, a.vec_id,
-                     ROUND(list_dot_product(p.qe, a.e) /
-                       (sqrt(list_dot_product(p.qe, p.qe)) *
-                        sqrt(list_dot_product(a.e, a.e))), 6) AS c6
-              FROM probes p JOIN assign a USING (centroid_id))
-            SELECT q_id, vec_id, ROUND(c6, 4) AS cosine_r4, CAST(rnk AS BIGINT) AS rank
-            FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
-                                               ORDER BY c6 DESC, vec_id ASC) AS rnk
-                  FROM scored)
-            WHERE rnk <= {k}
         """
 
 
@@ -5224,25 +4573,6 @@ def oracle_sql() -> dict[str, str]:
             JOIN sizes b ON b.doc_id = id_b
             WHERE CAST(n_inter AS DOUBLE) / (a.n_sh + b.n_sh - n_inter) >= 0.08
         """,
-        "emb_cosine_topk": """
-            WITH q AS (SELECT vec_id AS q_id, embedding::DOUBLE[] AS q_emb FROM embeddings WHERE vec_id < 3),
-            scored AS (
-              SELECT q.q_id, v.vec_id,
-                     ROUND(ROUND(list_dot_product(q.q_emb, v.embedding::DOUBLE[]) /
-                       (sqrt(list_dot_product(q.q_emb, q.q_emb)) *
-                        sqrt(list_dot_product(v.embedding::DOUBLE[], v.embedding::DOUBLE[]))), 6), 4) AS cosine_r4,
-                     ROUND(list_dot_product(q.q_emb, v.embedding::DOUBLE[]) /
-                       (sqrt(list_dot_product(q.q_emb, q.q_emb)) *
-                        sqrt(list_dot_product(v.embedding::DOUBLE[], v.embedding::DOUBLE[]))), 6) AS c6
-              FROM embeddings v, q
-            )
-            SELECT CAST(q_id AS BIGINT) AS q_id, CAST(vec_id AS BIGINT) AS vec_id,
-                   cosine_r4, CAST(rnk AS BIGINT) AS rank
-            FROM (
-              SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY c6 DESC, vec_id ASC) AS rnk
-              FROM scored
-            ) WHERE rnk <= 5
-        """,
         "text_token_counts": r"""
             SELECT CAST(doc_id AS BIGINT) AS doc_id,
                    CAST(len(list_filter(string_split(lower(text), ' '), t -> t != '')) AS BIGINT) AS n_ws_tokens,
@@ -5317,38 +4647,6 @@ def oracle_sql() -> dict[str, str]:
                      + alpha_ratio * 0.2
                      + least(stopword_ratio * 5.0, 1.0) * 0.2, 6) AS quality_score
             FROM m
-        """,
-        "events_interval_join": """
-            SELECT CAST(p.event_id AS BIGINT) AS purchase_id,
-                   CAST(c.event_id AS BIGINT) AS click_id,
-                   CAST(c.user_id AS BIGINT) AS user_id,
-                   epoch_us(c.ts) AS click_ts_us
-            FROM events p
-            JOIN events c
-              ON c.user_id = p.user_id
-             AND c.ts >= p.ts - INTERVAL 1 HOUR
-             AND c.ts < p.ts
-            WHERE p.event_type = 'purchase' AND c.event_type = 'click'
-        """,
-        "events_asof_join": """
-            WITH purchases AS (
-              SELECT CAST(event_id AS BIGINT) AS event_id,
-                     CAST(user_id AS BIGINT) AS user_id, ts
-              FROM events WHERE event_type = 'purchase'
-            ),
-            clicks AS (
-              SELECT CAST(user_id AS BIGINT) AS user_id, ts,
-                     CAST(MAX(event_id) AS BIGINT) AS click_event_id
-              FROM events WHERE event_type = 'click'
-              GROUP BY user_id, ts
-            )
-            SELECT l.event_id, l.user_id,
-                   epoch_us(l.ts) AS ts_us,
-                   r.click_event_id,
-                   epoch_us(r.ts) AS click_ts_us
-            FROM purchases l
-            ASOF JOIN clicks r
-              ON l.user_id = r.user_id AND l.ts >= r.ts
         """,
         "decontam_pairs": f"""
             WITH tr AS (
@@ -5461,9 +4759,8 @@ def oracle_sql() -> dict[str, str]:
                    CAST(COUNT(*) AS BIGINT) AS n_docs
             FROM gated GROUP BY 1
         """,
-        # generated oracles: md5-derived hash family + inlined hyperplane
-        # constants make the full LSH/ANN pipelines engine-portable (round 1
-        # recorded these as no_oracle)
+        # generated oracles: the md5-derived hash family makes the full LSH
+        # pipelines engine-portable (round 1 recorded these as no_oracle)
         "dedup_minhash_lsh": _minhash_oracle(
             n_gram=3, threshold=0.5, n_hashes=16, bands=4
         ),
@@ -5655,18 +4952,6 @@ def oracle_sql() -> dict[str, str]:
               {_simhash_pairs_oracle(max_hamming=8)}
             ) WHERE id_a % 5 = 0 OR id_b % 5 = 0
         """,
-        "dedup_embedding_cosine": _emb_near_dup_oracle(threshold=0.4, n_planes=4),
-        "dedup_embedding_incremental": f"""
-            SELECT id_a, id_b, cosine_r4 FROM (
-              {_emb_near_dup_oracle(threshold=0.4, n_planes=4)}
-            ) WHERE id_a % 5 = 0 OR id_b % 5 = 0
-        """,
-        "emb_ann_lsh": _ann_lsh_oracle(k=5, n_planes=6),
-        "emb_ann_lsh_multiprobe": _ann_lsh_multiprobe_oracle(),
-        "emb_ann_ivf": _ann_ivf_oracle(k=5, n_centroids=8, nprobe=3),
-        "emb_ann_ivf_incremental": _ann_ivf_oracle(
-            k=5, n_centroids=8, nprobe=3, train_restrict="vec_id % 5 != 0"
-        ),
         "text_blocklist_filter": """
             SELECT CAST(doc_id AS BIGINT) AS doc_id,
                    CAST(coalesce(len(list_intersect(
@@ -5720,15 +5005,8 @@ def oracle_sql() -> dict[str, str]:
             FROM documents d JOIN fr USING (lang)
             WHERE {_H1.format(x="CAST(d.doc_id AS VARCHAR)")} % 1000000 < fr.t
         """,
-        "multimodal_features": _multimodal_oracle_sql(),
-        "semantic_dedup_incremental": _semantic_dedup_oracle(
-            train_restrict="vec_id % 5 <> 0",
-            out_restrict="vec_id % 5 = 0",
-            **{k: v for k, v in _SEMDEDUP_PARAMS.items() if k != "refine_iters"},
-        ),
         "sample_shuffle_shards": _shuffle_shards_oracle(),
         "text_chunk_sliding": _chunk_sliding_oracle(),
-        "semantic_dedup": _semantic_dedup_oracle(**{k: v for k, v in _SEMDEDUP_PARAMS.items() if k != "refine_iters"}),
         "url_parts": _url_parts_oracle(),
         "url_normalize": _url_normalize_oracle(),
         "url_dedup": _url_dedup_oracle(),

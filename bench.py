@@ -93,19 +93,13 @@ HEADLINE = [
 DATAPIPE_TIMED = [
     "dedup_exact",
     "dedup_minhash_lsh",
-    "emb_cosine_topk",
     "text_token_counts",
     "text_fingerprint",
     "dedup_simhash_pairs",
-    "dedup_embedding_cosine",
-    "emb_ann_ivf",
     "sample_hash_fraction",
     "sample_stratified_topn",
-    "events_asof_join",
-    "events_interval_join",
     "dedup_minhash_incremental",
     "dedup_simhash_incremental",
-    "dedup_embedding_incremental",
     "text_repetition",
     "decontam_pairs",
     "sample_token_budget",
@@ -113,18 +107,13 @@ DATAPIPE_TIMED = [
     "text_pii_redact",
     "sample_mixture_temperature",
     "text_lang_trigram",
-    "multimodal_features",
-    "emb_ann_lsh_multiprobe",
     "text_span_dedup",
     "text_quality_clf",
-    "emb_ann_ivf_incremental",
     "text_span_dedup_incremental",
     "source_quality_stats",
     "sample_pack_sequences",
     "url_normalize",
     "url_dedup",
-    "semantic_dedup",
-    "semantic_dedup_incremental",
     "sample_shuffle_shards",
     "url_domain_quality",
     "text_span_dedup_clean",

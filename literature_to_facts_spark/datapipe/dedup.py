@@ -649,8 +649,7 @@ def minhash_lsh_pairs_incremental(
     # sides), and Spark will not reuse the subtree across the two joins —
     # without this persist the FULL history corpus is scanned (and the
     # candidates' shingles recomputed) twice per batch.  The frame is
-    # batch-bounded (candidate ids only), so the cache is small; measured
-    # 4.02 -> 2.6 s on the embedding analog at 2M history vectors.
+    # batch-bounded (candidate ids only), so the cache is small.
     sh = _shingle_frame(needed_docs, id_col, text_col, n_gram, explode=False).persist()
     if cache_registry is not None:
         cache_registry.append(sh)

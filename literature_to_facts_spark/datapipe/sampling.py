@@ -271,8 +271,7 @@ def mixture_weights(
     and would break the DuckDB oracle.  The three supported temperatures
     use only IEEE-exact operations — ``sqrt`` (correctly rounded by
     IEEE-754), multiplication and division — with weights snapped to exact
-    integer micro-units (the IVF Lloyd-means pattern), so every engine
-    computes the identical fractions:
+    integer micro-units, so every engine computes the identical fractions:
 
     * ``alpha=0.5`` — ``weight_micro = FLOOR(sqrt(n_tokens) * 1e6 + 0.5)``
     * ``alpha=1.0`` — natural share (``weight_micro = n_tokens``; the

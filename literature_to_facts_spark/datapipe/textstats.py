@@ -250,7 +250,7 @@ def with_fingerprint(docs: DataFrame, text_col: str = "text") -> DataFrame:
       portable canonical content hash);
     * ``fp_rolling``: 52-bit polynomial rolling hash over tokens
       (``acc' = (31*acc + h52(token)) mod 2^52``, where h52 is the repo's
-      portable md5-derived hash family — the same family every dedup/ANN
+      portable md5-derived hash family — the same family every dedup
       operator uses, so an independent SQL engine recomputes it bit-exactly)
       — order-sensitive, cheap to compute incrementally at ingest.  ANSI-safe
       by construction: acc < 2^52, so 31*acc + h52 < 2^57 + 2^52 << 2^63.

@@ -9,7 +9,7 @@ stages key on (type, target URI, fetch timestamp, declared length, body)
 (re-crawl collapse needs ``warc_ts``) and the html extraction lane.
 
 Documented subset: the payload is TEXT (gzip/chunked transfer belong to
-the fetch layer — same boundary as the multimodal codec stubs); record
+the fetch layer); record
 bodies are delimited by the header blank line and the inter-record
 ``\\r\\n\\r\\n`` terminator rather than ``Content-Length`` byte slicing
 (Spark string ops are codepoint-, not byte-, indexed; the declared length

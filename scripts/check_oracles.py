@@ -24,7 +24,7 @@ import duckdb
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-TABLES = ["documents", "events", "embeddings"]
+TABLES = ["documents", "events"]
 
 
 def _norm(v):

@@ -1,6 +1,5 @@
 """Training-data pipeline operators on the driver testdata (sf0.001)."""
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -10,11 +9,6 @@ SF_DIR = "/root/testdata/sf0.001"
 @pytest.fixture(scope="module")
 def documents(spark):
     return spark.read.parquet(f"{SF_DIR}/documents.parquet").cache()
-
-
-@pytest.fixture(scope="module")
-def embeddings(spark):
-    return spark.read.parquet(f"{SF_DIR}/embeddings.parquet").cache()
 
 
 def test_exact_duplicate_clusters(spark, documents):
@@ -81,121 +75,6 @@ def test_simhash_deterministic_and_near_dup(spark, documents):
     assert {(i, i + 1000000) for i in range(5)} <= found
 
 
-def test_cosine_topk_matches_numpy(spark, embeddings):
-    from literature_to_facts_spark.datapipe.similarity import cosine_topk_bruteforce
-
-    queries = embeddings.limit(3).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    got = cosine_topk_bruteforce(embeddings, queries, k=5).collect()
-
-    vecs = {r["vec_id"]: np.array(r["embedding"], dtype=np.float64) for r in embeddings.collect()}
-    for q_id in [r["q_id"] for r in queries.collect()]:
-        q = vecs[q_id]
-        sims = sorted(
-            (
-                (round(float(np.dot(q, v) / (np.linalg.norm(q) * np.linalg.norm(v))), 6), vid)
-                for vid, v in vecs.items()
-            ),
-            key=lambda t: (-t[0], t[1]),
-        )[:5]
-        expected = [(vid, s) for s, vid in sims]
-        actual = [
-            (r["vec_id"], r["cosine"])
-            for r in sorted((x for x in got if x["q_id"] == q_id), key=lambda r: r["rank"])
-        ]
-        assert [a[0] for a in actual] == [e[0] for e in expected]
-        for a, e in zip(actual, expected):
-            assert abs(a[1] - e[1]) < 1e-5
-
-
-def test_lsh_and_ivf_recall(spark, embeddings):
-    from literature_to_facts_spark.datapipe.similarity import (
-        cosine_topk_bruteforce,
-        cosine_topk_ivf,
-        cosine_topk_lsh,
-    )
-
-    queries = embeddings.limit(5).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    exact = cosine_topk_bruteforce(embeddings, queries, k=10).collect()
-    approx_lsh = cosine_topk_lsh(spark, embeddings, queries, k=10, n_planes=4).collect()
-    approx_ivf = cosine_topk_ivf(embeddings, queries, k=10, n_centroids=8, nprobe=4).collect()
-
-    def recall(approx):
-        tot, hit = 0, 0
-        for q in {r["q_id"] for r in exact}:
-            e = {r["vec_id"] for r in exact if r["q_id"] == q}
-            a = {r["vec_id"] for r in approx if r["q_id"] == q}
-            tot += len(e)
-            hit += len(e & a)
-        return hit / tot
-
-    # the query vector itself must always be found (cosine 1.0 bucket-safe)
-    for r in exact:
-        if r["rank"] == 1:
-            assert r["vec_id"] == r["q_id"]
-    # testdata embeddings are pure noise (no cluster structure), so LSH
-    # recall is bounded by bucket collision probability; the invariant under
-    # test is the plumbing + that identical vectors always collide.
-    assert recall(approx_lsh) > 0.1
-    assert recall(approx_ivf) > 0.4   # nprobe=4 of 8 centroid lists
-
-    # second Lloyd pass: the refine_iters=1 default is a documented choice —
-    # publish the iters=2 point (must not DEGRADE recall materially; on
-    # structureless noise the lists just rebalance) and exercise the cache
-    # lifecycle handle (one persisted centroid frame per call, unpersistable)
-    registry = []
-    approx_ivf2 = cosine_topk_ivf(
-        embeddings, queries, k=10, n_centroids=8, nprobe=4, refine_iters=2,
-        cache_registry=registry,
-    ).collect()
-    r1, r2 = recall(approx_ivf), recall(approx_ivf2)
-    assert r2 > 0.4
-    print(f"IVF recall@10 nprobe=4: iters=1 {r1:.3f}, iters=2 {r2:.3f}")
-    assert len(registry) == 1 and registry[0].is_cached
-    registry[0].unpersist()
-    assert not registry[0].is_cached
-
-
-def test_lsh_multiprobe_recall(spark, embeddings):
-    """Margin-ordered multiprobe probes strictly more buckets, so its
-    candidate set (and recall vs brute force) dominates same-plane plain
-    LSH; result rows still come from the same exact-scoring pipeline."""
-    from pyspark.sql import functions as F
-
-    from literature_to_facts_spark.datapipe.similarity import (
-        cosine_topk_bruteforce,
-        cosine_topk_lsh,
-    )
-
-    queries = embeddings.where(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-
-    def pairs(df):
-        return {(r["q_id"], r["vec_id"]) for r in df.collect()}
-
-    truth = pairs(cosine_topk_bruteforce(embeddings, queries, k=5))
-    plain = pairs(cosine_topk_lsh(spark, embeddings, queries, k=5, n_planes=8))
-    mp = pairs(
-        cosine_topk_lsh(
-            spark, embeddings, queries, k=5, n_planes=8, multiprobe=3
-        )
-    )
-    # every plain hit is reachable by multiprobe (superset of probes),
-    # and recall must not degrade
-    r_plain = len(plain & truth) / len(truth)
-    r_mp = len(mp & truth) / len(truth)
-    assert r_mp >= r_plain, (r_mp, r_plain)
-    assert len(mp) >= len(plain)
-    # multiprobe=0 is exactly the plain path
-    assert pairs(
-        cosine_topk_lsh(spark, embeddings, queries, k=5, n_planes=8, multiprobe=0)
-    ) == plain
-
-
 def test_textstats(spark, documents):
     from literature_to_facts_spark.datapipe.textstats import (
         with_fingerprint,
@@ -252,108 +131,6 @@ def test_lang_id_trigram(spark):
     assert out[1]["n_tri"] == len(rows[0][1]) - 2
 
 
-def test_multimodal_plumbing(spark, docs_df):
-    from literature_to_facts_spark.datapipe.multimodal import (
-        FEATURE_DIM,
-        decode_media,
-        extract_media_features,
-        media_table_from_documents,
-    )
-
-    media = media_table_from_documents(docs_df.limit(50))
-    feats = extract_media_features(media, fake=True).collect()
-    assert len(feats) == 50
-    for r in feats:
-        assert len(r["feature"]) == FEATURE_DIM
-        assert all(0.0 <= x <= 1.0 for x in r["feature"])
-        assert r["decoder"] == "fake"
-    # the real decoder is an explicit stub
-    with pytest.raises(NotImplementedError):
-        decode_media(b"xx", "image", fake=False)
-    # deterministic features
-    f1 = decode_media(b"payload", "image", fake=True)
-    f2 = decode_media(b"payload", "image", fake=True)
-    assert np.allclose(f1, f2)
-
-
-def _make_bmp(w, h, rgb):
-    """Minimal 24-bit bottom-up BMP with solid color (b, g, r rows padded)."""
-    import struct
-
-    stride = (w * 3 + 3) & ~3
-    row = bytes(rgb[::-1]) * w + b"\x00" * (stride - w * 3)
-    pixels = row * h
-    off = 54
-    header = struct.pack(
-        "<2sIHHI", b"BM", off + len(pixels), 0, 0, off
-    ) + struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(pixels), 2835, 2835, 0, 0)
-    return header + pixels
-
-
-def _make_wav(freq=440.0, rate=8000, secs=0.5):
-    import io
-    import wave
-
-    import numpy as np
-
-    t = np.arange(int(rate * secs)) / rate
-    x = (np.sin(2 * np.pi * freq * t) * 20000).astype("<i2")
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as wf:
-        wf.setnchannels(1)
-        wf.setsampwidth(2)
-        wf.setframerate(rate)
-        wf.writeframes(x.tobytes())
-    return buf.getvalue()
-
-
-def test_multimodal_real_decoders(spark):
-    """BMP/PPM/WAV decode for real (stdlib + numpy) through the same
-    mapInPandas plumbing; only compressed formats remain stubbed."""
-    import numpy as np
-
-    from literature_to_facts_spark.datapipe.multimodal import (
-        decode_image,
-        decode_media,
-        extract_media_features,
-        resize_image,
-    )
-
-    bmp = _make_bmp(5, 3, (255, 0, 0))            # solid red
-    ppm = b"P6\n# c\n4 2\n255\n" + bytes([0, 255, 0]) * 8  # solid green
-    wav = _make_wav()
-
-    px = decode_image(bmp)
-    assert px.shape == (3, 5, 3) and (px[0, 0] == [255, 0, 0]).all()
-    assert decode_image(ppm).shape == (2, 4, 3)
-    assert resize_image(px, 8, 8).shape == (8, 8, 3)
-
-    f_img = decode_media(bmp, "image")
-    assert abs(float(f_img[2]) - 1.0) < 1e-6 and float(f_img[3]) < 1e-6  # red
-    f_wav = decode_media(wav, "audio")
-    assert abs(float(f_wav[0]) - 0.5) < 1e-6      # duration
-    assert 0.40 < float(f_wav[2]) < 0.46          # sine RMS = ampl/sqrt(2) ~ 0.43
-
-    import pandas as pd
-
-    media = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "media_id": [1, 2, 3],
-                "kind": ["image", "image", "audio"],
-                "payload": [bmp, ppm, wav],
-            }
-        )
-    )
-    rows = {r["media_id"]: r for r in extract_media_features(media).collect()}
-    assert len(rows) == 3
-    assert abs(rows[2]["feature"][3] - 1.0) < 1e-6  # green channel
-    assert rows[3]["decoder"] == "real"
-
-    with pytest.raises(Exception):
-        decode_media(b"\x89PNG....", "image")  # compressed stays stubbed
-
-
 def test_lsh_bucket_stats_and_signature_view(spark, documents):
     from literature_to_facts_spark.datapipe.dedup import (
         lsh_bucket_stats,
@@ -392,27 +169,6 @@ def test_minhash_plan_single_signature_consumer(spark, documents):
     )
     # one signature projection computes h1 and h2 -> exactly two conv(md5)
     assert plan.count("conv(substr(md5") == 2
-
-
-def test_multimodal_degrades_per_row(spark):
-    """One unsupported payload must not fail the job: it yields a null
-    feature with decoder='unsupported' while decodable rows stay real."""
-    import pandas as pd
-
-    from literature_to_facts_spark.datapipe.multimodal import extract_media_features
-
-    media = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "media_id": [1, 2],
-                "kind": ["image", "image"],
-                "payload": [_make_bmp(3, 3, (0, 0, 255)), b"\x89PNG not supported"],
-            }
-        )
-    )
-    rows = {r["media_id"]: r for r in extract_media_features(media).collect()}
-    assert rows[1]["decoder"] == "real" and rows[1]["feature"] is not None
-    assert rows[2]["decoder"] == "unsupported" and rows[2]["feature"] is None
 
 
 def test_minhash_null_text_docs_emit_nothing(spark):
@@ -479,38 +235,6 @@ def test_connected_components_raises_on_non_convergence(spark):
     )
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(chain, max_iters=2)
-
-
-def test_embedding_incremental_equals_restricted_full(spark, embeddings):
-    """Delta embedding near-dup (fourth probe family): incremental pairs
-    over (new batch, persisted bucket index) == full-corpus pairs
-    restricted to pairs touching a new vector, with the bucket cap applied
-    to the total old+new population."""
-    from literature_to_facts_spark.datapipe.similarity import (
-        build_embedding_bucket_index,
-        embedding_near_dup_pairs,
-        embedding_near_dup_pairs_incremental,
-    )
-
-    new = embeddings.where(F.col("vec_id") % 5 == 0)
-    old = embeddings.where(F.col("vec_id") % 5 != 0)
-    full = embedding_near_dup_pairs(embeddings, threshold=0.4, n_planes=4).collect()
-    new_ids = {r["vec_id"] for r in new.select("vec_id").collect()}
-    expected = {
-        (r["id_a"], r["id_b"], r["cosine"])
-        for r in full
-        if r["id_a"] in new_ids or r["id_b"] in new_ids
-    }
-    assert expected and len(expected) < len(full)
-    idx = build_embedding_bucket_index(old, n_planes=4)
-    got = {
-        (r["id_a"], r["id_b"], r["cosine"])
-        for r in embedding_near_dup_pairs_incremental(
-            new, old, idx, threshold=0.4, n_planes=4
-        ).collect()
-    }
-    assert got == expected
-    assert any((a in new_ids) != (b in new_ids) for a, b, _ in got)
 
 
 def test_exact_dedup_null_text_excluded(spark):
@@ -766,148 +490,6 @@ def test_minhash_incremental_equals_restricted_full(spark, documents):
     ), "new×old pairs must cross the boundary"
 
 
-def test_temporal_joins_match_reference_model(spark):
-    """Property fuzz: asof_join (both the single-sweep and the pre-split
-    path) and interval_join (both the explode path and the long-span
-    broadcast path) match a brute-force pure-Python reference on random
-    small corpora — keys, equal timestamps, empty sides, boundary buckets
-    and all."""
-    import datetime as dt
-
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from literature_to_facts_spark.datapipe.joins import asof_join, interval_join
-
-    EPOCH = dt.datetime(2026, 1, 1)
-    T = lambda s: EPOCH + dt.timedelta(seconds=s)
-
-    rows = st.lists(
-        st.tuples(st.integers(0, 2), st.integers(0, 120)), min_size=0, max_size=18
-    )
-
-    @settings(max_examples=12, deadline=None)
-    @given(left_rows=rows, right_rows=rows)
-    def check_asof(left_rows, right_rows):
-        # dedupe right on (key, ts): tie semantics among equal right rows
-        # are engine-defined, the contract query pre-dedupes the same way
-        right_rows = list({(k, s): None for k, s in right_rows})
-        left = spark.createDataFrame(
-            [(i, k, T(s)) for i, (k, s) in enumerate(left_rows)],
-            "event_id long, k long, ts timestamp",
-        )
-        right = spark.createDataFrame(
-            [(100 + i, k, T(s)) for i, (k, s) in enumerate(right_rows)],
-            "rid long, k long, ts timestamp",
-        )
-        expected = {}
-        for i, (k, s) in enumerate(left_rows):
-            prior = [
-                (100 + j, rs)
-                for j, (rk, rs) in enumerate(right_rows)
-                if rk == k and rs <= s
-            ]
-            expected[i] = max(prior, key=lambda p: (p[1], p[0]))[0] if prior else None
-        for split in (None, 7):
-            got = {
-                r["event_id"]: r["rid_r"]
-                for r in asof_join(
-                    left, right, on="k", right_cols=["rid"], split_seconds=split
-                ).collect()
-            }
-            assert got == expected, (split, got, expected)
-
-    @settings(max_examples=12, deadline=None)
-    @given(
-        pts=rows,
-        ivs=st.lists(
-            st.tuples(st.integers(0, 2), st.integers(0, 120), st.integers(0, 130)),
-            min_size=0,
-            max_size=12,
-        ),
-    )
-    def check_interval(pts, ivs):
-        points = spark.createDataFrame(
-            [(i, k, T(s)) for i, (k, s) in enumerate(pts)],
-            "pid long, k long, ts timestamp",
-        )
-        intervals = spark.createDataFrame(
-            [(100 + i, k, T(a), T(b)) for i, (k, a, b) in enumerate(ivs)],
-            "iid long, k long, start timestamp, end timestamp",
-        )
-        expected = {
-            (i, 100 + j)
-            for i, (k, s) in enumerate(pts)
-            for j, (ik, a, b) in enumerate(ivs)
-            if ik == k and a <= s < b
-        }
-        for bucket_s, max_span in ((7, 2), (7, None), (50, 4)):
-            got = {
-                (r["pid"], r["iid"])
-                for r in interval_join(
-                    points, intervals, ts_col="ts", start_col="start",
-                    end_col="end", on="k", bucket_seconds=bucket_s,
-                    max_span_buckets=max_span,
-                ).collect()
-            }
-            assert got == expected, (bucket_s, max_span, got, expected)
-
-    check_asof()
-    check_interval()
-
-
-def test_bucketed_join_is_exchange_free(spark, documents, tmp_path):
-    """The 100 TB layout contract: two tables bucketed+sorted on the join
-    key with equal bucket counts join with ZERO Exchange and ZERO Sort —
-    the shuffle is paid once at write time, never again per query."""
-    from literature_to_facts_spark.datapipe.storage import co_located_join
-    from literature_to_facts_spark.engine.kgquery import write_bucketed
-
-    docs = documents.select("doc_id", "text", "lang")
-    write_bucketed(
-        docs, "t_docs_a", "doc_id", 4, sort_cols=["doc_id"],
-        path=str(tmp_path / "a"),
-    )
-    write_bucketed(
-        docs.select("doc_id", "n_chars" if "n_chars" in docs.columns else "lang"),
-        "t_docs_b", "doc_id", 4, sort_cols=["doc_id"],
-        path=str(tmp_path / "b"),
-    )
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = co_located_join(spark, "t_docs_a", "t_docs_b", "doc_id")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan, plan
-        assert joined.count() == documents.count()
-        # control: the same join WITHOUT bucketing shuffles both sides
-        raw = spark.read.parquet(str(tmp_path / "a")).join(
-            spark.read.parquet(str(tmp_path / "b")), on="doc_id"
-        )
-        raw_plan = raw._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange hashpartitioning" in raw_plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-        spark.sql("DROP TABLE IF EXISTS t_docs_a")
-        spark.sql("DROP TABLE IF EXISTS t_docs_b")
-
-
-def test_partitioned_write_prunes_scan(spark, documents, tmp_path):
-    """Directory partitioning: a filter on the partition column shows up as
-    PartitionFilters in the scan (planning-time pruning, zero I/O for the
-    pruned partitions)."""
-    from literature_to_facts_spark.datapipe.storage import write_partitioned
-
-    p = str(tmp_path / "by_lang")
-    write_partitioned(documents.select("doc_id", "text", "lang"), p, ["lang"])
-    got = spark.read.parquet(p).where(F.col("lang") == "en")
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [isnotnull(lang" in plan
-    expected = documents.where(F.col("lang") == "en").count()
-    assert got.count() == expected
-
-
 def test_bucket_stats_from_index_matches_direct(spark, documents):
     """The incremental-monitoring path (stats over a persisted index) must
     equal the direct corpus-shaped report."""
@@ -1115,27 +697,22 @@ def test_minhash_incremental_bucketed_history_no_exchange(spark, documents, tmp_
         spark.sql("DROP TABLE IF EXISTS t_lsh_idx")
 
 
-def test_all_probe_families_bucketed_history_no_exchange(spark, documents, embeddings, tmp_path):
-    """The zero-Exchange history fragment holds for ALL FOUR delta
-    families: (broadcast semi-join filter -> key aggregation) over a
-    write_bucketed catalog index plans with no Exchange on the streamed
-    side — bucket hash-partitioning on the key column satisfies each
-    family's grouping clustering (subset rule)."""
+def test_all_probe_families_bucketed_history_no_exchange(spark, documents, tmp_path):
+    """The zero-Exchange history fragment pinned for MinHash above holds
+    for the simhash and exact delta families too: (broadcast semi-join
+    filter -> key aggregation) over a write_bucketed catalog index plans
+    with no Exchange on the streamed side — bucket hash-partitioning on the
+    key column satisfies each family's grouping clustering (subset rule)."""
     from literature_to_facts_spark.datapipe.dedup import (
         build_exact_hash_index,
         build_simhash_band_index,
     )
-    from literature_to_facts_spark.datapipe.similarity import (
-        build_embedding_bucket_index,
-    )
     from literature_to_facts_spark.engine.kgquery import write_bucketed
 
     docs = documents.limit(60)
-    emb = embeddings.limit(60)
     cases = [
         ("t_simhash_idx", build_simhash_band_index(docs), "key", ["band", "key"]),
         ("t_exact_idx", build_exact_hash_index(docs), "text_hash", ["text_hash"]),
-        ("t_emb_idx", build_embedding_bucket_index(emb, n_planes=4), "bucket", ["bucket"]),
     ]
     try:
         for table, idx, bucket_col, group_cols in cases:
@@ -1577,242 +1154,6 @@ def test_quality_filter_reason_codes(spark):
     assert "Exchange" not in plan
 
 
-def test_asof_join_semantics(spark):
-    """Backward as-of: latest right row at-or-before each left row per key;
-    left-outer NULLs when nothing prior; equal timestamps match; ties among
-    equal (key, ts) right rows resolve to the greatest payload struct."""
-    import datetime as dt
-
-    from literature_to_facts_spark.datapipe.joins import asof_join
-
-    T = lambda s: dt.datetime.fromisoformat(s)
-    left = spark.createDataFrame(
-        [
-            (1, 10, T("2026-01-01 10:00:00")),   # after r2 -> matches r2
-            (2, 10, T("2026-01-01 08:00:00")),   # equal ts to r1 -> matches r1
-            (3, 10, T("2026-01-01 07:00:00")),   # before everything -> NULL
-            (4, 20, T("2026-01-01 12:00:00")),   # tie: two right rows same ts
-        ],
-        "event_id long, user_id long, ts timestamp",
-    )
-    right = spark.createDataFrame(
-        [
-            (101, 10, T("2026-01-01 08:00:00")),  # r1
-            (102, 10, T("2026-01-01 09:30:00")),  # r2
-            (201, 20, T("2026-01-01 11:00:00")),  # tie pair (same ts)
-            (202, 20, T("2026-01-01 11:00:00")),
-        ],
-        "rid long, user_id long, ts timestamp",
-    )
-    out = {
-        r["event_id"]: (r["rid_r"], r["ts_r"])
-        for r in asof_join(left, right, on="user_id", right_cols=["rid"]).collect()
-    }
-    assert out[1][0] == 102
-    assert out[2][0] == 101        # <= semantics: equal ts matches
-    assert out[3] == (None, None)  # left-outer
-    assert out[4][0] == 202        # greatest payload struct wins the tie
-    assert len(out) == 4           # exactly one output row per left row
-
-
-def test_interval_join_long_interval_guard(spark):
-    """A year-long interval at hourly buckets must NOT explode into 8,760
-    bucket copies: with max_span_buckets it routes through the broadcast
-    range branch, and results equal the naive range join exactly."""
-    import datetime as dt
-
-    from literature_to_facts_spark.datapipe.joins import interval_join
-
-    T = lambda s: dt.datetime.fromisoformat(s)
-    pts = spark.createDataFrame(
-        [
-            (1, 7, T("2026-06-15 12:00:00")),  # inside the year-long interval
-            (2, 7, T("2026-01-01 10:30:00")),  # inside the short interval too
-            (3, 7, T("2027-03-01 00:00:00")),  # outside everything
-            (4, 8, T("2026-06-15 12:00:00")),  # other key: no interval
-        ],
-        "pid long, k long, ts timestamp",
-    )
-    ivs = spark.createDataFrame(
-        [
-            (100, 7, T("2026-01-01 10:00:00"), T("2026-01-01 11:00:00")),  # 1h
-            (200, 7, T("2026-01-01 00:00:00"), T("2027-01-01 00:00:00")),  # 1y
-        ],
-        "iid long, k long, start timestamp, end timestamp",
-    )
-    guarded = interval_join(
-        pts, ivs, ts_col="ts", start_col="start", end_col="end", on="k",
-        bucket_seconds=3600, max_span_buckets=24,
-    )
-    plan = guarded._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan  # the long branch
-    got = {(r["pid"], r["iid"]) for r in guarded.collect()}
-    expected = {(1, 200), (2, 100), (2, 200)}
-    assert got == expected
-    # unguarded (explode-everything) agrees
-    unguarded = interval_join(
-        pts, ivs, ts_col="ts", start_col="start", end_col="end", on="k",
-        bucket_seconds=3600, max_span_buckets=None,
-    )
-    assert {(r["pid"], r["iid"]) for r in unguarded.collect()} == expected
-    # the guarded plan's explode branch carries only the SHORT interval:
-    # the generate output row count stays bounded by span(short)=1..2, far
-    # under the 8,760 copies the year-long interval would have produced
-    n_gen = 0
-    for node in plan.splitlines():
-        if "Generate explode" in node:
-            n_gen += 1
-    assert n_gen == 1
-
-
-def test_interval_join_mostly_long_corpus_raises(spark):
-    """When long spans are the BULK (not outliers), the broadcast branch
-    must fail with an actionable error naming the bucket_seconds fix —
-    before Spark's broadcast limit produces an opaque failure."""
-    import datetime as dt
-
-    import pytest
-
-    from literature_to_facts_spark.datapipe.joins import interval_join
-
-    T = lambda s: dt.datetime.fromisoformat(s)
-    pts = spark.createDataFrame(
-        [(1, 7, T("2026-06-15 12:00:00"))], "pid long, k long, ts timestamp"
-    )
-    # 40 year-long intervals at hourly buckets: all land in the long branch
-    ivs = spark.range(40).selectExpr(
-        "id AS iid", "CAST(7 AS LONG) AS k",
-        "timestamp'2026-01-01 00:00:00' AS start",
-        "timestamp'2027-01-01 00:00:00' AS end",
-    )
-    # the guard is LAZY: building the plan schedules no job and raises
-    # nothing — the assert_true fires at execution
-    guarded = interval_join(
-        pts, ivs, ts_col="ts", start_col="start", end_col="end", on="k",
-        bucket_seconds=3600, max_span_buckets=24, max_long_rows=10,
-    )
-    with pytest.raises(Exception, match="bucket_seconds"):
-        guarded.count()
-    # raising the cap (or disabling the probe) restores the broadcast path
-    out = interval_join(
-        pts, ivs, ts_col="ts", start_col="start", end_col="end", on="k",
-        bucket_seconds=3600, max_span_buckets=24, max_long_rows=None,
-    )
-    assert out.count() == 40
-
-
-def test_asof_join_split_matches_unsplit(spark):
-    """Hot-key mitigation: split_seconds partitions one key's sweep across
-    coarse time buckets with boundary carry-forward — results must be
-    IDENTICAL to the single-reducer sweep, including carries across buckets
-    with no right rows, on a single key holding 10^6 left rows."""
-    import datetime as dt
-
-    from literature_to_facts_spark.datapipe.joins import asof_join
-
-    # (a) the handcrafted semantics corpus, hourly buckets: exercises the
-    # carry path (left 10:00 matches right 09:30 from the previous bucket),
-    # no-carry NULLs, equal-ts matches and same-ts payload tie-break
-    T = lambda s: dt.datetime.fromisoformat(s)
-    left = spark.createDataFrame(
-        [
-            (1, 10, T("2026-01-01 10:00:00")),
-            (2, 10, T("2026-01-01 08:00:00")),
-            (3, 10, T("2026-01-01 07:00:00")),
-            (4, 20, T("2026-01-01 12:00:00")),
-        ],
-        "event_id long, user_id long, ts timestamp",
-    )
-    right = spark.createDataFrame(
-        [
-            (101, 10, T("2026-01-01 08:00:00")),
-            (102, 10, T("2026-01-01 09:30:00")),
-            (201, 20, T("2026-01-01 11:00:00")),
-            (202, 20, T("2026-01-01 11:00:00")),
-        ],
-        "rid long, user_id long, ts timestamp",
-    )
-    base = {
-        r["event_id"]: (r["rid_r"], r["ts_r"])
-        for r in asof_join(left, right, on="user_id", right_cols=["rid"]).collect()
-    }
-    split = {
-        r["event_id"]: (r["rid_r"], r["ts_r"])
-        for r in asof_join(
-            left, right, on="user_id", right_cols=["rid"], split_seconds=3600
-        ).collect()
-    }
-    assert split == base
-
-    # (b) ONE pathological key, 10^6 left rows, sparse right rows: split
-    # sweep (20 buckets) must equal the unsplit sweep row-for-row (checked
-    # via aggregate checksums — collect of 10^6 rows is the slow part)
-    n = 1_000_000
-    big_left = spark.range(n).select(
-        F.col("id").alias("event_id"),
-        F.lit(1).alias("user_id"),
-        F.timestamp_seconds(F.col("id")).alias("ts"),
-    )
-    big_right = spark.range(0, n, 997).select(
-        F.col("id").alias("rid"),
-        F.lit(1).alias("user_id"),
-        F.timestamp_seconds(F.col("id")).alias("ts"),
-    )
-
-    def checksum(df):
-        return df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("event_id").alias("s_ev"),
-            F.sum("rid_r").alias("s_rid"),
-            F.sum(F.unix_micros(F.col("ts_r"))).alias("s_ts"),
-            F.sum(F.when(F.col("rid_r").isNull(), 1).otherwise(0)).alias("n_null"),
-        ).collect()[0].asDict()
-
-    unsplit = checksum(asof_join(big_left, big_right, on="user_id", right_cols=["rid"]))
-    split_big = checksum(
-        asof_join(
-            big_left, big_right, on="user_id", right_cols=["rid"],
-            split_seconds=50_000,
-        )
-    )
-    assert split_big == unsplit
-    assert unsplit["n"] == n and unsplit["n_null"] == 0
-
-
-def test_interval_join_semantics(spark):
-    """Half-open [start, end) containment incl. bucket-boundary spans; a
-    point in two overlapping intervals emits two rows; inverted intervals
-    are dropped; key isolation holds."""
-    import datetime as dt
-
-    from literature_to_facts_spark.datapipe.joins import interval_join
-
-    T = lambda s: dt.datetime.fromisoformat(s)
-    pts = spark.createDataFrame(
-        [
-            (1, 7, T("2026-01-01 10:30:00")),
-            (2, 7, T("2026-01-01 11:00:00")),   # == end of iv1 -> excluded
-            (3, 7, T("2026-01-01 09:59:59")),   # just before iv1 start
-            (4, 8, T("2026-01-01 10:30:00")),   # other key
-        ],
-        "pid long, k long, ts timestamp",
-    )
-    ivs = spark.createDataFrame(
-        [
-            (100, 7, T("2026-01-01 10:00:00"), T("2026-01-01 11:00:00")),
-            (101, 7, T("2026-01-01 10:15:00"), T("2026-01-01 12:45:00")),  # spans buckets
-            (102, 7, T("2026-01-01 13:00:00"), T("2026-01-01 12:00:00")),  # inverted
-            (103, 9, T("2026-01-01 10:00:00"), T("2026-01-01 11:00:00")),  # other key
-        ],
-        "iid long, k long, start timestamp, end timestamp",
-    )
-    got = {
-        (r["pid"], r["iid"])
-        for r in interval_join(pts, ivs, on="k", bucket_seconds=1800).collect()
-    }
-    assert got == {(1, 100), (1, 101), (2, 101)}
-
-
 def test_quality_classifier(spark):
     """Linear bag-of-tokens scoring: mean token weight + bias, keep rule on
     the rounded score, every doc emitted (NULL text = bias, n_toks 0),
@@ -1849,47 +1190,6 @@ def test_quality_classifier(spark):
     # plan: the model joins broadcast (no shuffle on the corpus side)
     plan = quality_classifier(docs)._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
-
-
-def test_ivf_incremental_index_append(spark, embeddings, tmp_path):
-    """Sixth delta family: build_ivf_index over history + ivf_index_append
-    for the batch equals assigning the full corpus against the same frozen
-    centroids; the persisted-index query path returns identical top-k, and
-    the probe join is broadcast (no corpus-side shuffle join)."""
-    from literature_to_facts_spark.datapipe.similarity import (
-        _ivf_assign,
-        build_ivf_index,
-        cosine_topk_ivf_from_index,
-        ivf_index_append,
-    )
-
-    hist = embeddings.where(F.col("vec_id") % 4 != 0)
-    batch = embeddings.where(F.col("vec_id") % 4 == 0)
-    centroids, hist_idx = build_ivf_index(hist, n_centroids=4)
-    combined = hist_idx.unionByName(ivf_index_append(batch, centroids))
-
-    # append path == one-shot assignment of everything to the same quantizer
-    base = embeddings.select("vec_id", "embedding")
-    oneshot = _ivf_assign(base, centroids)
-    a = {(r["vec_id"], r["centroid_id"]) for r in combined.collect()}
-    b = {(r["vec_id"], r["centroid_id"]) for r in oneshot.collect()}
-    assert a == b
-
-    # query over a PERSISTED index round-trips and matches the in-memory path
-    path = str(tmp_path / "ivf_idx")
-    combined.write.parquet(path)
-    queries = embeddings.where(F.col("vec_id") < 2).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    from_disk = cosine_topk_ivf_from_index(
-        spark.read.parquet(path), centroids, queries, k=5, nprobe=2
-    )
-    in_mem = cosine_topk_ivf_from_index(combined, centroids, queries, k=5, nprobe=2)
-    assert sorted(map(tuple, from_disk.collect())) == sorted(
-        map(tuple, in_mem.collect())
-    )
-    plan = from_disk._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan
 
 
 def test_source_stats_and_filter(spark):
@@ -1976,58 +1276,6 @@ def test_pack_sequences_semantics(spark):
         pack_sequences(docs, n_buckets=0)
 
 
-def test_semantic_dedup_semantics(spark):
-    """SemDeDup contract: min-lower-id representative within a cluster,
-    cap flag excludes oversized clusters from pair generation, NULL-free
-    spine (one row per input vector)."""
-    from literature_to_facts_spark.datapipe.similarity import semantic_dedup
-
-    # two well-separated directions in 4-d; ids 1..3 colinear (cos=1),
-    # ids 10..11 colinear on the other axis, id 12 orthogonal-ish
-    rows = [
-        (1, [1.0, 0.0, 0.0, 0.0]),
-        (2, [2.0, 0.0, 0.0, 0.0]),
-        (3, [3.0, 0.0, 0.0, 0.0]),
-        (10, [0.0, 1.0, 0.0, 0.0]),
-        (11, [0.0, 2.0, 0.0, 0.0]),
-        (12, [0.0, 0.0, 1.0, 0.0]),
-    ]
-    vecs = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    reg = []
-    out = semantic_dedup(
-        vecs, n_clusters=2, refine_iters=1, threshold=0.95,
-        max_cluster=100, cache_registry=reg,
-    )
-    got = {r.vec_id: r for r in out.collect()}
-    for df in reg:
-        df.unpersist()
-    assert len(got) == len(rows)  # spine preserved
-    # colinear group 1,2,3: 1 kept, 2 and 3 both point at min id 1
-    assert not got[1].is_dup and got[1].dup_of is None
-    assert got[2].is_dup and got[2].dup_of == 1
-    assert got[3].is_dup and got[3].dup_of == 1
-    assert not got[10].is_dup or got[10].dup_of is None  # min of its own group
-
-
-def test_semantic_dedup_capped_cluster(spark):
-    """Clusters above max_cluster are excluded from pair generation: rows
-    flagged capped, never marked dup."""
-    from literature_to_facts_spark.datapipe.similarity import semantic_dedup
-
-    rows = [(i, [1.0 + i * 0.001, 0.0]) for i in range(10)]
-    vecs = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    reg = []
-    out = semantic_dedup(
-        vecs, n_clusters=1, refine_iters=0, threshold=0.5,
-        max_cluster=5, cache_registry=reg,
-    ).collect()
-    for df in reg:
-        df.unpersist()
-    assert all(r.capped for r in out)
-    assert all(not r.is_dup and r.dup_of is None for r in out)
-    assert all(r.n_cluster == 10 for r in out)
-
-
 def test_shuffle_deterministic_semantics(spark):
     """Seeded shuffle: exact permutation (every row once, dense per-shard
     positions), reproducible across partitionings, seed-sensitive, NULL ids
@@ -2061,123 +1309,6 @@ def test_shuffle_deterministic_semantics(spark):
         shuffle_deterministic(docs.withColumn("shard", F.lit(1)))
     with _pt.raises(ValueError, match="n_shards"):
         shuffle_deterministic(docs, n_shards=0)
-
-
-def test_semantic_dedup_incremental_vs_numpy_reference(spark, embeddings):
-    """Delta SemDeDup equals an INDEPENDENT row-level reference: frozen
-    centroids from the history index, numpy assignment (same tie-break),
-    full-cluster sizes, pairwise HALF_UP-rounded cosine, min-lower-id rule
-    restricted to the batch."""
-    import math
-
-    from literature_to_facts_spark.datapipe.similarity import (
-        build_ivf_index,
-        semantic_dedup_incremental,
-    )
-
-    emb = embeddings.limit(120).select("vec_id", "embedding")
-    new = emb.where(F.col("vec_id") % 5 == 0)
-    old = emb.where(F.col("vec_id") % 5 != 0)
-    reg = []
-    cents, assigns = build_ivf_index(
-        old, n_centroids=4, refine_iters=1, cache_registry=reg
-    )
-    got = {
-        r.vec_id: r
-        for r in semantic_dedup_incremental(
-            new, assigns, cents, threshold=0.4, max_cluster=100,
-            cache_registry=reg,
-        ).collect()
-    }
-    for df in reg:
-        df.unpersist()
-
-    c = {r.centroid_id: r.c_emb for r in cents.collect()}
-    vecs = {r.vec_id: r.embedding for r in emb.collect()}
-
-    def dot(a, b):
-        return sum(x * y for x, y in zip(a, b))
-
-    def assign(v):  # max sim, then lowest centroid id
-        return max(c, key=lambda k: (dot(vecs[v], c[k]), -k))
-
-    member = {v: assign(v) for v in vecs}
-    sizes = {}
-    for v, k in member.items():
-        sizes[k] = sizes.get(k, 0) + 1
-
-    def cos6(a, b):
-        x = dot(vecs[a], vecs[b]) / (
-            math.sqrt(dot(vecs[a], vecs[a])) * math.sqrt(dot(vecs[b], vecs[b]))
-        )
-        return math.floor(x * 1e6 + 0.5) / 1e6  # Spark round() HALF_UP (x>0)
-
-    batch_ids = [v for v in vecs if v % 5 == 0]
-    assert set(got) == set(batch_ids)
-    for v in batch_ids:
-        k = member[v]
-        assert got[v].centroid_id == k
-        assert got[v].n_cluster == sizes[k]
-        assert not got[v].capped
-        lower = [
-            a for a in vecs
-            if a < v and member[a] == k and cos6(a, v) >= 0.4
-        ]
-        exp = min(lower) if lower else None
-        assert got[v].dup_of == exp, f"vec {v}: {got[v].dup_of} != {exp}"
-        assert got[v].is_dup == (exp is not None)
-
-
-def test_semantic_incremental_history_probe_shape(spark, embeddings, tmp_path):
-    """Delta SemDeDup history access is probe-shaped: the centroid_id-
-    bucketed assignment index is consumed by a broadcast LEFT SEMI directly
-    at its scan (zero Exchange between scan and filter), so untouched
-    clusters are never read past the filter and nothing history-sized is
-    shuffled."""
-    from literature_to_facts_spark.datapipe.similarity import (
-        build_ivf_index,
-        semantic_dedup_incremental,
-    )
-    from literature_to_facts_spark.engine.kgquery import write_bucketed
-
-    emb = embeddings.limit(100).select("vec_id", "embedding")
-    old = emb.where(F.col("vec_id") % 5 != 0)
-    new = emb.where(F.col("vec_id") % 5 == 0)
-    reg = []
-    try:
-        cents, assigns = build_ivf_index(
-            old, n_centroids=4, refine_iters=1, cache_registry=reg
-        )
-        write_bucketed(
-            assigns, "t_sem_probe_idx", "centroid_id", 4,
-            path=str(tmp_path / "sem_idx"),
-        )
-        t = spark.table("t_sem_probe_idx")
-        # (a) the operator's own plan consumes the bucketed scan through a
-        # broadcast LeftSemi (the probe filter sits AT the scan)
-        out = semantic_dedup_incremental(
-            new, t, cents, threshold=0.4, max_cluster=400, cache_registry=reg
-        )
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        i = plan.find("t_sem_probe_idx")
-        assert i > 0 and "Bucketed: true" in plan
-        assert "LeftSemi" in plan[max(0, i - 2500):i], plan[max(0, i - 2500):i]
-        # (b) the isolated history fragment (semi-filter -> per-cluster agg)
-        # plans with ZERO Exchange on the streamed side, like the other
-        # probe families
-        probe_keys = t.limit(3).select("centroid_id")
-        frag = (
-            t.join(F.broadcast(probe_keys), on="centroid_id", how="left_semi")
-            .groupBy("centroid_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        fplan = frag._jdf.queryExecution().executedPlan().toString()
-        streamed = fplan.split("BroadcastExchange")[0]
-        assert "Exchange" not in streamed, fplan
-    finally:
-        for df in reg:
-            df.unpersist()
-        spark.sql("DROP TABLE IF EXISTS t_sem_probe_idx")
 
 
 def test_lm_perplexity_semantics(spark):
@@ -2423,46 +1554,6 @@ def test_bloom_filter_membership_and_plan(spark):
         build_bloom_filter(grams, m_bits=10)
     with _pt.raises(ValueError, match="min_hits"):
         bloom_contaminated(tr, bloom, min_hits=0)
-
-
-def test_semantic_incremental_partition_pruning(spark, embeddings, tmp_path):
-    """prune_partitions=True pushes a static centroid_id IN filter to a
-    partitionBy('centroid_id') state table — PartitionFilters prunes
-    untouched clusters' files — and the results equal the default path."""
-    from literature_to_facts_spark.datapipe.similarity import (
-        build_ivf_index,
-        semantic_dedup_incremental,
-    )
-
-    emb = embeddings.limit(120).select("vec_id", "embedding")
-    old = emb.where(F.col("vec_id") % 5 != 0)
-    new = emb.where(F.col("vec_id") % 5 == 0).limit(8)
-    reg = []
-    try:
-        cents, assigns = build_ivf_index(
-            old, n_centroids=6, refine_iters=1, cache_registry=reg
-        )
-        path = str(tmp_path / "sm_part_idx")
-        assigns.write.mode("overwrite").partitionBy("centroid_id").parquet(path)
-        t = spark.read.parquet(path)
-        pruned = semantic_dedup_incremental(
-            new, t, cents, threshold=0.4, max_cluster=400,
-            cache_registry=reg, prune_partitions=True,
-        )
-        plan = pruned._jdf.queryExecution().executedPlan().toString()
-        assert "centroid_id#" in plan and "PartitionFilters" in plan
-        import re as _re
-
-        m = _re.search(r"PartitionFilters: \[[^\]]*centroid_id[^\]]*IN", plan)
-        assert m, plan[:2000]
-        default = semantic_dedup_incremental(
-            new, t, cents, threshold=0.4, max_cluster=400, cache_registry=reg
-        )
-        key = lambda df: sorted(map(tuple, df.collect()))  # noqa: E731
-        assert key(pruned) == key(default)
-    finally:
-        for df in reg:
-            df.unpersist()
 
 
 def test_triangle_count_semantics_and_cap(spark):

@@ -10,7 +10,7 @@ import pytest
 import __spark_entry__ as entrymod
 
 SF_DIR = "/root/testdata/sf0.001"
-TABLES = ["documents", "events", "embeddings"]
+TABLES = ["documents", "events"]
 
 
 @pytest.fixture(scope="module")
@@ -53,8 +53,8 @@ def test_oracle_keys_subset():
     q = entrymod.queries()
     o = entrymod.oracle_sql()
     assert set(o) <= set(q)
-    # every query has a full DuckDB oracle (the md5-derived hash family and
-    # inlined hyperplane constants made the LSH/ANN pipelines portable)
+    # every query has a full DuckDB oracle (the md5-derived hash family made
+    # the LSH pipelines portable)
     assert set(q) == set(o)
 
 

@@ -198,12 +198,32 @@ def test_compact_graph(spark, docs_df, sides, tmp_path):
 
 
 def _only_exchange(df) -> str:
-    """Partitioning of the one shuffle in ``df``'s plan (broadcasts aside)."""
+    """Partitioning of the one shuffle in ``df``'s plan (broadcasts aside).
+    A materialized AQE plan (a cached frame's, say) prints its final plan
+    and its initial plan; only the final one is read."""
     import re
 
     plan = df._jdf.queryExecution().executedPlan().toString()
+    if "== Final Plan ==" in plan:
+        plan = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
     (ex,) = re.findall(r"(?:^|- )Exchange ([^,\s]+)", plan, re.M)
     return ex
+
+
+def test_only_exchange_reads_final_plan_of_cached_frame(spark):
+    from literature_to_facts_spark.engine.pipeline import dedup_triples
+
+    rows = [("s1", "p1", "o1"), ("s1", "p1", "o1"), ("s2", "p2", "o2")]
+    deduped = dedup_triples(
+        spark.createDataFrame(rows, "subj string, pred string, obj_n3 string")
+    ).cache()
+    try:
+        assert deduped.count() == 2
+        plan = deduped._jdf.queryExecution().executedPlan().toString()
+        assert "== Initial Plan ==" in plan
+        assert _only_exchange(deduped).startswith("hashpartitioning(pred#")
+    finally:
+        deduped.unpersist()
 
 
 def _parquet_files_per_pred(path: str) -> dict[str, int]:

@@ -422,6 +422,44 @@ def test_cs_incremental_bucketed_no_exchange(spark, delta_triples, tmp_path):
         spark.sql("DROP TABLE IF EXISTS t_sp_idx")
 
 
+def test_bucketed_join_is_exchange_free(spark, tmp_path):
+    """The 100 TB layout contract: two tables bucketed+sorted on the join
+    key with equal bucket counts join with ZERO Exchange — the shuffle is
+    paid once at write time, never again per query.  Read both through the
+    catalog: a bare parquet read of the same files drops the bucket spec."""
+    from literature_to_facts_spark.engine.kgquery import write_bucketed
+
+    docs = spark.range(400).selectExpr(
+        "id AS doc_id", "CAST(id % 7 AS STRING) AS lang", "id * 3 AS n_chars"
+    )
+    write_bucketed(
+        docs.select("doc_id", "lang"), "t_docs_a", "doc_id", 4,
+        sort_cols=["doc_id"], path=str(tmp_path / "a"),
+    )
+    write_bucketed(
+        docs.select("doc_id", "n_chars"), "t_docs_b", "doc_id", 4,
+        sort_cols=["doc_id"], path=str(tmp_path / "b"),
+    )
+    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        joined = spark.table("t_docs_a").join(spark.table("t_docs_b"), "doc_id")
+        plan = joined._jdf.queryExecution().executedPlan().toString()
+        assert "SortMergeJoin" in plan
+        assert "Exchange" not in plan, plan
+        assert joined.count() == 400
+        # control: the same join WITHOUT bucketing shuffles both sides
+        raw = spark.read.parquet(str(tmp_path / "a")).join(
+            spark.read.parquet(str(tmp_path / "b")), on="doc_id"
+        )
+        raw_plan = raw._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange hashpartitioning" in raw_plan
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
+        spark.sql("DROP TABLE IF EXISTS t_docs_a")
+        spark.sql("DROP TABLE IF EXISTS t_docs_b")
+
+
 # ---------------------------------------------------------------------------
 # pattern_join_ordered (statistics-driven physical planning)
 # ---------------------------------------------------------------------------
