@@ -526,145 +526,6 @@ def q_dedup_lsh_bucket_stats(spark, sf_dir):
     )
 
 
-def q_sample_token_budget(spark, sf_dir):
-    """Token-budget mixture sampling (datapipe/sampling.
-    sample_to_token_budget): per group, the deterministic hash-ordered
-    document prefix whose cumulative whitespace-token count stays under the
-    group's budget — the recipe form training mixtures are specified in.
-    Bucketed boundary search (no per-group single-reducer window over the
-    corpus); full SQL oracle computes the naive window prefix, which the
-    implementation must equal row-for-row."""
-    from literature_to_facts_spark.datapipe.sampling import sample_to_token_budget
-    from literature_to_facts_spark.datapipe.textstats import with_token_counts
-
-    docs = with_token_counts(
-        _spread(_t(spark, sf_dir, "documents")).select("doc_id", "lang", "text")
-    )
-    out = sample_to_token_budget(
-        docs, {"en": 5000, "de": 2000}, weight_col="n_ws_tokens"
-    )
-    return out.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"), F.col("lang").alias("lang")
-    )
-
-
-def q_curation_pipeline(spark, sf_dir):
-    """The COMPOSED curation contract (datapipe/curation.curate_corpus):
-    quality gate -> MinHash near-dup purge -> deterministic mixture sample,
-    as one operator.  Full SQL oracle: the gated CTE, the pair generation
-    (parametrized over the gated survivors), the recursive closure and the
-    hash-threshold sample compose into a single DuckDB statement — exactly
-    where column/contract drift between stages would surface.  EAGER
-    (embeds the CC fixpoint)."""
-    from literature_to_facts_spark.datapipe.curation import curate_corpus
-
-    docs = _spread(_t(spark, sf_dir, "documents"))
-    reg = []
-    out = curate_corpus(
-        docs,
-        fractions={"en": 0.5, "de": 0.2},
-        default_fraction=0.05,
-        minhash_params=dict(n_gram=3, n_hashes=16, bands=4, threshold=0.5),
-        cache_registry=reg,
-    ).select(
-        F.col("doc_id").cast("bigint").alias("doc_id"), F.col("lang").alias("lang")
-    )
-    out._l2f_cache_registry = reg
-    return out
-
-
-def q_curation_pipeline_full(spark, sf_dir):
-    """The COMPLETE curation chain (datapipe/curation.curate_corpus with
-    every stage enabled): quality gate -> eval-set decontamination ->
-    MinHash near-dup purge -> token-budget mixture — the end-to-end recipe
-    a training corpus actually ships through, as ONE operator with ONE
-    composed DuckDB oracle (gated CTE + broadcast-gram decontam + pair
-    generation over the survivors + recursive closure + window-prefix
-    budget, nested into a single statement).  EAGER (embeds the CC
-    fixpoint)."""
-    from literature_to_facts_spark.datapipe.curation import curate_corpus
-    from literature_to_facts_spark.datapipe.textstats import with_token_counts
-
-    docs = _spread(_t(spark, sf_dir, "documents")).select("doc_id", "lang", "text")
-    ev = docs.where(F.col("doc_id") % 17 == 0)
-    tr = with_token_counts(docs.where(F.col("doc_id") % 17 != 0))
-    reg = []
-    out = curate_corpus(
-        tr,
-        minhash_params=dict(n_gram=3, n_hashes=16, bands=4, threshold=0.5),
-        eval_docs=ev,
-        decontam_params=dict(n_gram=4, min_overlap=1),
-        token_budgets={"en": 3000, "de": 1200},
-        cache_registry=reg,
-    ).select(
-        F.col("doc_id").cast("bigint").alias("doc_id"), F.col("lang").alias("lang")
-    )
-    out._l2f_cache_registry = reg
-    return out
-
-
-def q_curation_pipeline_cleaned(spark, sf_dir):
-    """The cleaned curation chain (round 5): sentence-per-line synthesis with
-    planted PII -> cross-document line dedup -> PII masking -> quality gate
-    -> MinHash closure purge -> hash-fraction mixture sample, all inside
-    datapipe/curation.curate_corpus (line_dedup_params + pii=True) — and all
-    recomputed by ONE composed DuckDB oracle.  Boilerplate removal precedes
-    the gate and the signatures (it changes both), masking precedes the
-    gate so the shipped sample is redacted.  EAGER (embeds the CC
-    fixpoint)."""
-    from literature_to_facts_spark.datapipe.curation import curate_corpus
-
-    docs = _spread(_t(spark, sf_dir, "documents")).selectExpr(
-        "doc_id",
-        "lang",
-        "concat(replace(text, '. ', concat('.', chr(10))),"
-        f" {_PII_SUFFIX_SPARK}) AS text",
-    )
-    reg = []
-    out = curate_corpus(
-        docs,
-        fractions={"en": 0.5, "de": 0.2},
-        default_fraction=0.05,
-        minhash_params=dict(n_gram=3, n_hashes=16, bands=4, threshold=0.5),
-        line_dedup_params=dict(
-            min_df=_LINE_DEDUP_MIN_DF, min_line_chars=_LINE_DEDUP_MIN_CHARS
-        ),
-        pii=True,
-        cache_registry=reg,
-    ).select(
-        F.col("doc_id").cast("bigint").alias("doc_id"), F.col("lang").alias("lang")
-    )
-    out._l2f_cache_registry = reg
-    return out
-
-
-def q_sample_hash_fraction(spark, sf_dir):
-    """Zero-shuffle deterministic mixture sampling: per-group keep fractions
-    via a portable hash filter (datapipe/sampling.sample_fraction_by_group).
-    Full SQL oracle — DuckDB recomputes the identical hash buckets."""
-    from literature_to_facts_spark.datapipe.sampling import sample_fraction_by_group
-
-    docs = _t(spark, sf_dir, "documents")
-    out = sample_fraction_by_group(
-        docs, {"en": 0.5, "de": 0.2}, group_col="lang", default_fraction=0.05
-    )
-    return out.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"), F.col("lang").alias("lang")
-    )
-
-
-def q_sample_stratified_topn(spark, sf_dir):
-    """Exact-n-per-group deterministic sampling (hash-order window rank).
-    Full SQL oracle."""
-    from literature_to_facts_spark.datapipe.sampling import sample_topn_per_group
-
-    docs = _t(spark, sf_dir, "documents")
-    out = sample_topn_per_group(docs, n=7, group_col="lang")
-    return out.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"), F.col("lang").alias("lang")
-    )
-
-
 def q_text_token_counts(spark, sf_dir):
     from literature_to_facts_spark.datapipe.textstats import with_token_counts
 
@@ -795,136 +656,6 @@ def _lang_trigram_oracle_sql() -> str:
     """
 
 
-def q_decontam_pairs(spark, sf_dir):
-    """Eval-set decontamination report (datapipe/decontam.
-    contamination_pairs): training docs (doc_id % 17 != 0) sharing word
-    4-grams with the eval split (doc_id % 17 == 0), with the shared-gram
-    count per (train, eval) pair.  The eval gram set is broadcast — one
-    pass over the training corpus, zero shuffle of it.  Full SQL oracle."""
-    from literature_to_facts_spark.datapipe.decontam import contamination_pairs
-
-    docs = _spread(_t(spark, sf_dir, "documents"))
-    ev = docs.where(F.col("doc_id") % 17 == 0)
-    tr = docs.where(F.col("doc_id") % 17 != 0)
-    out = contamination_pairs(tr, ev, n_gram=4, min_overlap=1)
-    return out.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.col("eval_id").cast("bigint").alias("eval_id"),
-        F.col("n_shared_grams").cast("bigint").alias("n_shared_grams"),
-    )
-
-
-_BLOOM_PARAMS = dict(m_bits=1 << 16, k_hashes=5, n_gram=4)
-
-
-def q_decontam_bloom(spark, sf_dir):
-    """Constant-memory decontamination (datapipe/decontam.
-    build_bloom_filter + bloom_contaminated): the eval split's 4-gram set
-    folds into a 2^16-bit Bloom table (<= 1,041 bigint words — executor
-    state independent of eval-corpus size); training grams probe it
-    through k=5 reused BroadcastHashJoins with NO gram-level shuffle.
-    The portable md5 hash family makes the filter — false positives
-    included — bit-identical in DuckDB, so the oracle is exact."""
-    from literature_to_facts_spark.datapipe.decontam import (
-        bloom_contaminated,
-        build_bloom_filter,
-    )
-    from literature_to_facts_spark.datapipe.dedup import _shingle_frame
-
-    docs = _spread(_t(spark, sf_dir, "documents"))
-    ev = docs.where(F.col("doc_id") % 17 == 0)
-    tr = docs.where(F.col("doc_id") % 17 != 0)
-    ev_grams = _shingle_frame(
-        ev.where(F.col("text").isNotNull()), "doc_id", "text",
-        _BLOOM_PARAMS["n_gram"], explode=True,
-    )
-    bloom = build_bloom_filter(
-        ev_grams, key_col="sh",
-        m_bits=_BLOOM_PARAMS["m_bits"], k_hashes=_BLOOM_PARAMS["k_hashes"],
-    )
-    out = bloom_contaminated(tr, bloom, **_BLOOM_PARAMS)
-    return out.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        "n_flagged_grams",
-        "contaminated",
-    )
-
-
-def _decontam_bloom_oracle() -> str:
-    """DuckDB replay of the Bloom build + probe: identical md5-derived
-    positions, 63-bit words, bit_or aggregation, k-way hit conjunction."""
-    from literature_to_facts_spark.datapipe.decontam import (
-        BLOOM_WORD_BITS as WB,
-    )
-
-    m = _BLOOM_PARAMS["m_bits"]
-    k = _BLOOM_PARAMS["k_hashes"]
-    n = _BLOOM_PARAMS["n_gram"]
-
-    def pos(key: str, i: int) -> str:
-        return (
-            f"(CAST('0x' || substr(md5('{i}:' || {key}), 1, 13) AS BIGINT)"
-            f" % {m})"
-        )
-
-    gram_cte = f"""
-          SELECT CAST(doc_id AS BIGINT) AS doc_id,
-                 unnest({_duck_shingles(n)}) AS sh
-          FROM documents WHERE text IS NOT NULL"""
-    ev_pos = " UNION ALL ".join(
-        f"SELECT {pos('sh', i)} AS p FROM evg" for i in range(k)
-    )
-    probe_cols = ", ".join(
-        f"{pos('sh', i)} // {WB} AS w{i}, "
-        f"(CAST(1 AS BIGINT) << CAST({pos('sh', i)} % {WB} AS INTEGER))"
-        f" AS mk{i}"
-        for i in range(k)
-    )
-    joins = " ".join(
-        f"LEFT JOIN bloom b{i} ON g.w{i} = b{i}.word_idx" for i in range(k)
-    )
-    hit = " AND ".join(f"(coalesce(b{i}.bits, 0) & g.mk{i}) <> 0" for i in range(k))
-    return f"""
-        WITH evg AS (
-          SELECT doc_id, sh FROM ({gram_cte}) WHERE doc_id % 17 = 0
-        ),
-        positions AS ({ev_pos}),
-        bloom AS (
-          SELECT p // {WB} AS word_idx,
-                 bit_or(CAST(1 AS BIGINT) << CAST(p % {WB} AS INTEGER)) AS bits
-          FROM positions GROUP BY 1
-        ),
-        trg AS (
-          SELECT doc_id, sh FROM ({gram_cte}) WHERE doc_id % 17 <> 0
-        ),
-        g AS (SELECT doc_id, {probe_cols} FROM trg),
-        flags AS (
-          SELECT g.doc_id,
-                 CAST(sum(CASE WHEN {hit} THEN 1 ELSE 0 END) AS BIGINT)
-                   AS nf
-          FROM g {joins}
-          GROUP BY g.doc_id
-        )
-        SELECT doc_id, nf AS n_flagged_grams, nf >= 1 AS contaminated
-        FROM flags
-    """
-
-
-def q_decontam_purge(spark, sf_dir):
-    """The shipped decontamination artifact (datapipe/decontam.
-    decontaminate): the training split minus every flagged doc.  Full SQL
-    oracle (anti-select against the recomputed pair set)."""
-    from literature_to_facts_spark.datapipe.decontam import decontaminate
-
-    docs = _spread(_t(spark, sf_dir, "documents"))
-    ev = docs.where(F.col("doc_id") % 17 == 0)
-    tr = docs.where(F.col("doc_id") % 17 != 0)
-    out = decontaminate(tr, ev, n_gram=4, min_overlap=1)
-    return out.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"), F.col("lang").alias("lang")
-    )
-
-
 def q_text_repetition(spark, sf_dir):
     """Gopher-style intra-document repetition signals (datapipe/textstats.
     with_repetition): duplicate-word fraction, duplicate-bigram fraction,
@@ -956,12 +687,11 @@ def q_text_fingerprint(spark, sf_dir):
     )
 
 
-# -- shared parameters for the round-5 text-cleaning / mixture queries: the
+# -- shared parameters for the round-5 text-cleaning queries: the
 # -- generated oracles interpolate THESE SAME constants, so operator params
 # -- and oracle SQL cannot drift (the CLAUDE.md sync invariant).
 _LINE_DEDUP_MIN_DF = 2
 _LINE_DEDUP_MIN_CHARS = 10
-_MIXTURE_TOKEN_BUDGET = 200_000
 
 # Deterministic PII synthesis: the corpus text carries no real PII, so the
 # query plants one email + phone + IPv4 on every third document (engine-
@@ -1137,30 +867,6 @@ def q_text_span_dedup_incremental(spark, sf_dir):
     return out
 
 
-def q_sample_pack_sequences(spark, sf_dir):
-    """Sequence packing (datapipe/sampling.pack_sequences — the GPT-style
-    concat-and-split pretraining layout): each document's exclusive token
-    prefix-sum in the canonical hash order, mapped to fixed-length training
-    sequences.  The distributed two-phase cumsum (per-bucket windows over
-    contiguous hash ranges + an n_buckets-row base-offset window) replaces
-    the serialize-everything global window; the oracle recomputes with a
-    plain global window — equality proves the decomposition exact."""
-    from literature_to_facts_spark.datapipe.sampling import pack_sequences
-
-    docs = _spread(_t(spark, sf_dir, "documents")).select("doc_id", "text")
-    reg = []
-    out = pack_sequences(docs, seq_len=512, n_buckets=8, cache_registry=reg).select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        "n_toks",
-        "global_start",
-        F.col("seq_id").cast("bigint").alias("seq_id"),
-        F.col("seq_end").cast("bigint").alias("seq_end"),
-        "seq_offset",
-    )
-    out._l2f_cache_registry = reg
-    return out
-
-
 def q_source_quality_stats(spark, sf_dir):
     """Host/source-level curation (datapipe/textstats.source_stats — the
     RefinedWeb/Dolma domain-filter stage): per-source doc counts, corpus
@@ -1331,43 +1037,6 @@ def q_text_blocklist_filter(spark, sf_dir):
         F.col("doc_id").cast("bigint").alias("doc_id"),
         "n_blocked_terms",
         "blocked",
-    )
-
-
-def q_sample_mixture_weights(spark, sf_dir):
-    """Temperature mixture reweighting (datapipe/sampling.mixture_weights,
-    alpha=0.5): per-language token mass -> sqrt-temperature weight -> keep
-    fraction under a total token budget.  IEEE-exact arithmetic only
-    (sqrt + integer micro-units), so DuckDB recomputes the identical
-    fractions."""
-    from literature_to_facts_spark.datapipe.sampling import mixture_weights
-
-    return mixture_weights(
-        _t(spark, sf_dir, "documents"),
-        token_budget=_MIXTURE_TOKEN_BUDGET,
-        group_col="lang",
-        weight_col="n_chars",
-        alpha=0.5,
-    ).select("lang", "n_docs", "n_tokens", "weight_micro", "sample_fraction")
-
-
-def q_sample_mixture_temperature(spark, sf_dir):
-    """The applied form of mixture_weights (datapipe/sampling.
-    sample_by_temperature): the per-group fractions broadcast-join back onto
-    the corpus as a deterministic hash filter — the corpus is never
-    shuffled, and the recipe is one lazy plan (no driver collect)."""
-    from literature_to_facts_spark.datapipe.sampling import sample_by_temperature
-
-    out = sample_by_temperature(
-        _t(spark, sf_dir, "documents"),
-        token_budget=_MIXTURE_TOKEN_BUDGET,
-        group_col="lang",
-        id_col="doc_id",
-        weight_col="n_chars",
-        alpha=0.5,
-    )
-    return out.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"), F.col("lang").alias("lang")
     )
 
 
@@ -1920,96 +1589,6 @@ def q_web_link_rank(spark, sf_dir):
 
 
 _SHUFFLE_SEED, _SHUFFLE_SHARDS = 42, 8
-
-
-def q_sample_shuffle_shards(spark, sf_dir):
-    """Seeded global training shuffle (datapipe/sampling.
-    shuffle_deterministic): reproducible (shard, pos) permutation layout
-    keyed by the portable md5 family — one hash Exchange + per-shard sort
-    window, the physical work of a sharded training export."""
-    from literature_to_facts_spark.datapipe.sampling import shuffle_deterministic
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-    out = shuffle_deterministic(
-        docs, seed=_SHUFFLE_SEED, n_shards=_SHUFFLE_SHARDS
-    )
-    return out.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.col("shard").cast("bigint").alias("shard"),
-        "pos",
-    )
-
-
-_CHUNK_PARAMS = dict(chunk_size=12, overlap=4)
-
-
-def q_text_chunk_sliding(spark, sf_dir):
-    """Sliding-window token chunking (datapipe/sampling.chunk_documents —
-    the long-document context-length stage): whitespace tokens, stride
-    chunk_size - overlap, exact integer chunk math, zero shuffle (explode
-    + slice fused into the scan).  Small chunk_size so multi-chunk docs
-    and the short-last-chunk edge are exercised at test scale."""
-    from literature_to_facts_spark.datapipe.sampling import chunk_documents
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    out = chunk_documents(docs, **_CHUNK_PARAMS)
-    return out.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        "chunk_id",
-        "chunk_start",
-        "n_chunk_tokens",
-        "chunk_text",
-    )
-
-
-def _chunk_sliding_oracle() -> str:
-    cs = _CHUNK_PARAMS["chunk_size"]
-    step = cs - _CHUNK_PARAMS["overlap"]
-    return f"""
-        WITH t AS (
-          SELECT doc_id,
-                 list_filter(string_split(text, ' '), s -> s <> '') AS toks
-          FROM documents WHERE text IS NOT NULL
-        ),
-        n AS (
-          SELECT doc_id, toks, len(toks) AS n FROM t WHERE len(toks) > 0
-        ),
-        c AS (
-          SELECT doc_id, toks,
-                 unnest(range(0, 1 + (greatest(n - {cs}, 0) + {step} - 1)
-                        // {step})) AS chunk_id
-          FROM n
-        ),
-        s AS (
-          SELECT doc_id, chunk_id,
-                 list_slice(toks, chunk_id * {step} + 1,
-                            chunk_id * {step} + {cs}) AS chunk
-          FROM c
-        )
-        SELECT CAST(doc_id AS BIGINT) AS doc_id,
-               CAST(chunk_id AS BIGINT) AS chunk_id,
-               CAST(chunk_id * {step} AS BIGINT) AS chunk_start,
-               CAST(len(chunk) AS BIGINT) AS n_chunk_tokens,
-               array_to_string(chunk, ' ') AS chunk_text
-        FROM s
-    """
-
-
-def _shuffle_shards_oracle() -> str:
-    key = _H1.format(
-        x=f"'{_SHUFFLE_SEED}' || ':' || CAST(doc_id AS VARCHAR)"
-    )
-    return f"""
-        WITH k AS (
-          SELECT CAST(doc_id AS BIGINT) AS doc_id, {key} AS key
-          FROM documents WHERE doc_id IS NOT NULL
-        )
-        SELECT doc_id, CAST(key % {_SHUFFLE_SHARDS} AS BIGINT) AS shard,
-               CAST(ROW_NUMBER() OVER (
-                 PARTITION BY key % {_SHUFFLE_SHARDS}
-                 ORDER BY key ASC, doc_id ASC) - 1 AS BIGINT) AS pos
-        FROM k
-    """
 
 
 def _duck_url_group(i: int, src: str = "url") -> str:
@@ -3642,11 +3221,10 @@ def _web_triangle_count_oracle() -> str:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # Registry order is the driver correctness gate's sampling order (it
-    # checks the first 50 entries): the 68 operators that never had a
-    # driver row lead, newest lanes first (the round-6 web/kg-query/url
-    # waves land inside the 50-entry window); the long-green original 50
-    # follow.  Oracles and the bench address queries by NAME — the
-    # registry order carries no semantics.
+    # checks the first 50 of these 75 entries): newest lanes first (the
+    # round-6 web/kg-query/url waves lead), the long-green original
+    # kg/dedup/text queries follow.  Oracles and the bench address queries
+    # by NAME — the registry order carries no semantics.
     return {
         "crawl_warc_chain": q_crawl_warc_chain,
         "web_warc_parse": q_web_warc_parse,
@@ -3677,15 +3255,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "url_dedup": q_url_dedup,
         "url_normalize": q_url_normalize,
         "url_parts": q_url_parts,
-        "text_chunk_sliding": q_text_chunk_sliding,
-        "sample_shuffle_shards": q_sample_shuffle_shards,
-        "sample_mixture_temperature": q_sample_mixture_temperature,
-        "sample_mixture_weights": q_sample_mixture_weights,
         "text_pii_redact": q_text_pii_redact,
         "text_tokenize_encode": q_text_tokenize_encode,
         "text_token_topk": q_text_token_topk,
         "text_blocklist_filter": q_text_blocklist_filter,
-        "sample_pack_sequences": q_sample_pack_sequences,
         "source_quality_stats": q_source_quality_stats,
         "text_quality_clf": q_text_quality_clf,
         "web_link_rank": q_web_link_rank,
@@ -3698,9 +3271,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_span_dedup": q_text_span_dedup,
         "text_line_dedup_incremental": q_text_line_dedup_incremental,
         "text_line_dedup": q_text_line_dedup,
-        "decontam_bloom": q_decontam_bloom,
-        "decontam_purge": q_decontam_purge,
-        "decontam_pairs": q_decontam_pairs,
         "text_repetition": q_text_repetition,
         "text_fingerprint": q_text_fingerprint,
         "text_lang_trigram": q_text_lang_trigram,
@@ -3727,12 +3297,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_lsh_bucket_stats": q_dedup_lsh_bucket_stats,
         "dedup_clusters_cc": q_dedup_clusters_cc,
         "dedup_clusters_cc_incremental": q_dedup_clusters_cc_incremental,
-        "sample_hash_fraction": q_sample_hash_fraction,
-        "sample_stratified_topn": q_sample_stratified_topn,
-        "sample_token_budget": q_sample_token_budget,
-        "curation_pipeline": q_curation_pipeline,
-        "curation_pipeline_full": q_curation_pipeline_full,
-        "curation_pipeline_cleaned": q_curation_pipeline_cleaned,
         "dedup_simhash": q_dedup_simhash,
         "dedup_simhash_pairs": q_dedup_simhash_pairs,
         "dedup_simhash_incremental": q_dedup_simhash_incremental,
@@ -3770,11 +3334,7 @@ def _minhash_oracle(
     bands: int = 8,
     threshold: float = 0.5,
     max_bucket: int = 1000,
-    src: str = "documents",
 ) -> str:
-    """``src`` is the table/CTE the pairs are computed over — "documents"
-    for the standalone dedup oracles, the gated-survivors CTE for the
-    composed curation pipeline."""
     rpb = n_hashes // bands
     mins = ",\n                   ".join(
         f"MIN(h1 + {s} * h2) AS m{s}" for s in range(n_hashes)
@@ -3791,7 +3351,7 @@ def _minhash_oracle(
             WITH sh AS (
               SELECT CAST(doc_id AS BIGINT) AS doc_id,
                      unnest({_duck_shingles(n_gram)}) AS sh
-              FROM {src} WHERE text IS NOT NULL
+              FROM documents WHERE text IS NOT NULL
             ),
             h AS (SELECT doc_id, {h1} AS h1, {h2} AS h2 FROM sh),
             sig AS (SELECT doc_id, {mins} FROM h GROUP BY doc_id),
@@ -3810,7 +3370,7 @@ def _minhash_oracle(
               SELECT mn AS id_a, doc_id AS id_b FROM (
                 SELECT CAST(d.doc_id AS BIGINT) AS doc_id,
                        MIN(CAST(d.doc_id AS BIGINT)) OVER (PARTITION BY md5(d.text)) AS mn
-                FROM {src} d WHERE d.text IS NOT NULL
+                FROM documents d WHERE d.text IS NOT NULL
               ) WHERE doc_id > mn
             ),
             cands AS (
@@ -3832,34 +3392,6 @@ def _minhash_oracle(
             JOIN sizes sa ON sa.doc_id = i.id_a
             JOIN sizes sb ON sb.doc_id = i.id_b
             WHERE CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter) >= {threshold}
-        """
-
-
-def _sample_fraction_oracle(fractions: dict, default_fraction: float) -> str:
-    # round(), not int(): truncation under-samples by up to 1e-6 of the
-    # requested fraction (0.29 * 1e6 floats to 289999.999...); the engine
-    # computes the identical Python round, so parity is unchanged either way
-    h = _H1.format(x="CAST(doc_id AS VARCHAR)")
-    thresh = str(round(default_fraction * 1_000_000))
-    cases = " ".join(
-        f"WHEN lang = '{val}' THEN {round(frac * 1_000_000)}"
-        for val, frac in sorted(fractions.items())
-    )
-    return f"""
-            SELECT CAST(doc_id AS BIGINT) AS doc_id, lang
-            FROM documents
-            WHERE ({h}) % 1000000 < (CASE {cases} ELSE {thresh} END)
-        """
-
-
-def _sample_topn_oracle(n: int) -> str:
-    h = _H1.format(x="CAST(doc_id AS VARCHAR)")
-    return f"""
-            SELECT doc_id, lang FROM (
-              SELECT CAST(doc_id AS BIGINT) AS doc_id, lang,
-                     ROW_NUMBER() OVER (PARTITION BY lang
-                       ORDER BY {h} ASC, CAST(doc_id AS BIGINT) ASC) AS rk
-              FROM documents) WHERE rk <= {n}
         """
 
 
@@ -4033,9 +3565,8 @@ def _simhash_pairs_oracle(max_hamming: int = 8, max_bucket: int = 1000) -> str:
 # must gate identically — one definition, two SELECT tails)
 def _quality_gated_cte(src: str = "documents") -> str:
     """The quality-gate CTE chain (t -> m -> gated), parametrized over the
-    source relation so composed pipelines can gate CLEANED text (the
-    curation_pipeline_cleaned oracle gates the line-deduped + PII-redacted
-    CTE instead of raw documents)."""
+    source relation so composed pipelines can gate derived text (the
+    web_extract_gate oracle gates the extracted main-content CTE)."""
     return f"""t AS (
               SELECT doc_id,
                      list_filter(string_split(lower(text), ' '), x -> x != '') AS toks,
@@ -4106,39 +3637,6 @@ def _line_dedup_oracle(restrict: str | None = None) -> str:
         FROM keyed k LEFT JOIN freq f ON k.key_e = f.fkey
         GROUP BY k.doc_id
         {where}
-    """
-
-
-def _pack_sequences_oracle(seq_len: int = 512) -> str:
-    """DuckDB recomputation of pack_sequences with a PLAIN GLOBAL window
-    over the same canonical order — matching the Spark side's bucketed
-    two-phase cumsum proves the decomposition exact.  Integer division
-    throughout (prefix sums are corpus-total-token-sized; double division
-    is only exact to 2^53)."""
-    h = _H1.format(x="CAST(doc_id AS VARCHAR)")
-    sl = int(seq_len)
-    return f"""
-        WITH t AS (
-          SELECT CAST(doc_id AS BIGINT) AS doc_id,
-                 CAST(len(list_filter(string_split(text, ' '), x -> x != ''))
-                   AS BIGINT) AS n,
-                 {h} AS h
-          FROM documents WHERE text IS NOT NULL
-        ),
-        c AS (
-          SELECT doc_id, n,
-                 SUM(n) OVER (ORDER BY h ASC, doc_id ASC
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n
-                   AS gs
-          FROM t
-        )
-        SELECT doc_id,
-               n AS n_toks,
-               gs AS global_start,
-               gs // {sl} AS seq_id,
-               (gs + greatest(n - 1, 0)) // {sl} AS seq_end,
-               gs % {sl} AS seq_offset
-        FROM c
     """
 
 
@@ -4358,104 +3856,6 @@ def _pii_oracle() -> str:
     """
 
 
-def _duck_pii_clean_chain(col: str) -> str:
-    """The sequential mask chain over ``col``, patterns verbatim from
-    textclean.PII_PATTERNS."""
-    from literature_to_facts_spark.datapipe.textclean import PII_PATTERNS
-
-    clean = col
-    for _, pat, mask in PII_PATTERNS:
-        clean = f"regexp_replace({clean}, '{pat}', '{mask}', 'g')"
-    return clean
-
-
-def _curation_cleaned_oracle() -> str:
-    """The five-stage cleaned curation chain in ONE statement: sentence-split
-    + planted-PII synthesis -> cross-document line dedup -> PII masking ->
-    quality gate -> MinHash closure purge -> hash-fraction mixture sample.
-    Every fragment is the same SQL the stage's standalone oracle uses
-    (line-dedup CTEs, PII chain from PII_PATTERNS, the parametrized gated
-    CTE, the closure over ``src="kept"``), so stage drift surfaces here."""
-    return f"""
-        WITH m0 AS (
-          SELECT doc_id, lang,
-                 replace(text, '. ', '.' || chr(10)) || ({_PII_SUFFIX_DUCK}) AS text
-          FROM documents
-        ),
-        lines AS (
-          SELECT doc_id, lang, u.pos AS pos, u.line AS line
-          FROM (SELECT doc_id, lang, string_split(text, chr(10)) AS parts
-                FROM m0 WHERE text IS NOT NULL),
-               UNNEST(list_transform(range(1, len(parts) + 1),
-                      i -> {{'pos': i, 'line': parts[i]}})) AS t(u)
-        ),
-        keyed AS (
-          SELECT doc_id, lang, pos, line,
-                 CASE WHEN length(trim(line)) >= {_LINE_DEDUP_MIN_CHARS}
-                      THEN {_H1.format(x="line")} END AS key_e
-          FROM lines
-        ),
-        lfreq AS (
-          SELECT key_e AS fkey FROM keyed WHERE key_e IS NOT NULL
-          GROUP BY 1 HAVING count(DISTINCT doc_id) >= {_LINE_DEDUP_MIN_DF}
-        ),
-        cleaned AS (
-          SELECT CAST(k.doc_id AS BIGINT) AS doc_id, min(k.lang) AS lang,
-                 coalesce(string_agg(CASE WHEN f.fkey IS NULL THEN k.line END,
-                                     chr(10) ORDER BY k.pos), '') AS text0
-          FROM keyed k LEFT JOIN lfreq f ON k.key_e = f.fkey
-          GROUP BY k.doc_id
-        ),
-        red AS (
-          SELECT doc_id, lang, {_duck_pii_clean_chain("text0")} AS text
-          FROM cleaned
-        ),
-        {_quality_gated_cte(src="red")},
-        kept AS (
-          SELECT r.doc_id, r.text, r.lang
-          FROM red r JOIN gated g ON r.doc_id = g.doc_id
-          WHERE g.drop_reason IS NULL
-        )
-        SELECT k.doc_id, k.lang
-        FROM kept k
-        WHERE k.doc_id NOT IN (
-          SELECT doc_id FROM (
-            {_cc_oracle(_minhash_oracle(n_gram=3, threshold=0.5, n_hashes=16, bands=4, src="kept"))}
-          ) WHERE doc_id != cluster_rep)
-          AND ({_H1.format(x="CAST(k.doc_id AS VARCHAR)")}) % 1000000 <
-              (CASE WHEN k.lang = 'de' THEN 200000
-                    WHEN k.lang = 'en' THEN 500000
-                    ELSE 50000 END)
-    """
-
-
-def _mixture_weights_oracle() -> str:
-    """mixture_weights(alpha=0.5) recomputed end-to-end: sqrt is correctly
-    rounded under IEEE-754 and the weights are exact integer micro-units, so
-    the fractions are bit-identical (see datapipe/sampling.py)."""
-    return f"""
-        WITH g AS (
-          SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-                 CAST(coalesce(sum(n_chars), 0) AS BIGINT) AS n_tokens
-          FROM documents GROUP BY lang
-        ),
-        w AS (
-          SELECT *, CAST(FLOOR(sqrt(CAST(n_tokens AS DOUBLE)) * 1000000 + 0.5)
-                         AS BIGINT) AS weight_micro
-          FROM g
-        ),
-        s AS (SELECT *, SUM(weight_micro) OVER () AS w_sum FROM w)
-        SELECT lang, n_docs, n_tokens, weight_micro,
-               CASE WHEN n_tokens = 0 THEN CAST(0.0 AS DOUBLE)
-                    ELSE least(CAST(1.0 AS DOUBLE),
-                      round((CAST({_MIXTURE_TOKEN_BUDGET} AS DOUBLE)
-                             * CAST(weight_micro AS DOUBLE))
-                            / (CAST(w_sum AS DOUBLE) * CAST(n_tokens AS DOUBLE)),
-                            6)) END AS sample_fraction
-        FROM s
-    """
-
-
 def oracle_sql() -> dict[str, str]:
     toks = "string_split(lower(text), ' ')"
     return {
@@ -4648,73 +4048,6 @@ def oracle_sql() -> dict[str, str]:
                      + least(stopword_ratio * 5.0, 1.0) * 0.2, 6) AS quality_score
             FROM m
         """,
-        "decontam_pairs": f"""
-            WITH tr AS (
-              SELECT CAST(doc_id AS BIGINT) AS doc_id,
-                     unnest({_duck_shingles(4)}) AS g
-              FROM documents WHERE doc_id % 17 != 0 AND text IS NOT NULL
-            ),
-            ev AS (
-              SELECT CAST(doc_id AS BIGINT) AS eval_id,
-                     unnest({_duck_shingles(4)}) AS g
-              FROM documents WHERE doc_id % 17 = 0 AND text IS NOT NULL
-            ),
-            gram_pairs AS (
-              SELECT tr.doc_id, ev.eval_id,
-                     CAST(COUNT(*) AS BIGINT) AS n
-              FROM tr JOIN ev ON tr.g = ev.g
-              GROUP BY tr.doc_id, ev.eval_id
-              HAVING COUNT(*) >= 1
-            ),
-            short_ev AS (
-              SELECT CAST(doc_id AS BIGINT) AS eval_id, lower(text) AS ev_lt
-              FROM documents
-              WHERE doc_id % 17 = 0 AND text IS NOT NULL
-                AND len(string_split(lower(text), ' ')) < 4
-                AND length(lower(text)) > 0
-            ),
-            contain_pairs AS (
-              SELECT CAST(d.doc_id AS BIGINT) AS doc_id, s.eval_id,
-                     CAST(1 AS BIGINT) AS n
-              FROM documents d, short_ev s
-              WHERE d.doc_id % 17 != 0 AND d.text IS NOT NULL
-                AND instr(lower(d.text), s.ev_lt) >= 1
-            )
-            SELECT doc_id, eval_id,
-                   CAST(MAX(n) AS BIGINT) AS n_shared_grams
-            FROM (SELECT * FROM gram_pairs UNION ALL SELECT * FROM contain_pairs)
-            GROUP BY doc_id, eval_id
-        """,
-        "decontam_bloom": _decontam_bloom_oracle(),
-        "decontam_purge": f"""
-            WITH tr_g AS (
-              SELECT CAST(doc_id AS BIGINT) AS doc_id,
-                     unnest({_duck_shingles(4)}) AS g
-              FROM documents WHERE doc_id % 17 != 0 AND text IS NOT NULL
-            ),
-            ev_g AS (
-              SELECT unnest({_duck_shingles(4)}) AS g
-              FROM documents WHERE doc_id % 17 = 0 AND text IS NOT NULL
-            ),
-            short_ev AS (
-              SELECT lower(text) AS ev_lt FROM documents
-              WHERE doc_id % 17 = 0 AND text IS NOT NULL
-                AND len(string_split(lower(text), ' ')) < 4
-                AND length(lower(text)) > 0
-            ),
-            bad AS (
-              SELECT DISTINCT tr_g.doc_id FROM tr_g
-              JOIN ev_g ON tr_g.g = ev_g.g
-              UNION
-              SELECT DISTINCT CAST(d.doc_id AS BIGINT) FROM documents d, short_ev s
-              WHERE d.doc_id % 17 != 0 AND d.text IS NOT NULL
-                AND instr(lower(d.text), s.ev_lt) >= 1
-            )
-            SELECT CAST(doc_id AS BIGINT) AS doc_id, lang
-            FROM documents
-            WHERE doc_id % 17 != 0
-              AND CAST(doc_id AS BIGINT) NOT IN (SELECT doc_id FROM bad)
-        """,
         "text_repetition": """
             WITH t AS (
               SELECT CAST(doc_id AS BIGINT) AS doc_id,
@@ -4839,112 +4172,6 @@ def oracle_sql() -> dict[str, str]:
               SELECT doc_id FROM m
               WHERE doc_id NOT IN (SELECT doc_id FROM best))
         """,
-        # the COMPLETE curation chain: gate -> decontam -> purge -> budget
-        # prefix, every stage's SQL fragment nested into one statement over
-        # the survivors of the previous one
-        "curation_pipeline_full": f"""
-            WITH {_quality_gated_cte()},
-            base AS (
-              SELECT CAST(d.doc_id AS BIGINT) AS doc_id, d.lang, d.text,
-                     len(list_filter(string_split(lower(d.text), ' '),
-                                     x -> x != '')) AS w
-              FROM documents d WHERE d.doc_id % 17 != 0
-            ),
-            kept0 AS (
-              SELECT b.* FROM base b JOIN gated g ON b.doc_id = g.doc_id
-              WHERE g.drop_reason IS NULL
-            ),
-            ev_g AS (
-              SELECT unnest({_duck_shingles(4)}) AS g
-              FROM documents WHERE doc_id % 17 = 0 AND text IS NOT NULL
-            ),
-            short_ev AS (
-              SELECT lower(text) AS ev_lt FROM documents
-              WHERE doc_id % 17 = 0 AND text IS NOT NULL
-                AND len(string_split(lower(text), ' ')) < 4
-                AND length(lower(text)) > 0
-            ),
-            contam AS (
-              SELECT DISTINCT k.doc_id FROM (
-                SELECT doc_id, unnest({_duck_shingles(4)}) AS g
-                FROM kept0 WHERE text IS NOT NULL
-              ) k JOIN ev_g e ON k.g = e.g
-              UNION
-              SELECT DISTINCT k2.doc_id FROM kept0 k2, short_ev s
-              WHERE k2.text IS NOT NULL
-                AND instr(lower(k2.text), s.ev_lt) >= 1
-            ),
-            kept AS (
-              SELECT * FROM kept0
-              WHERE doc_id NOT IN (SELECT doc_id FROM contam)
-            ),
-            purged AS (
-              SELECT k.doc_id, k.lang, k.w,
-                     {_H1.format(x="CAST(k.doc_id AS VARCHAR)")} AS h
-              FROM kept k
-              WHERE k.doc_id NOT IN (
-                SELECT doc_id FROM (
-                  {_cc_oracle(_minhash_oracle(n_gram=3, threshold=0.5, n_hashes=16, bands=4, src="kept"))}
-                ) WHERE doc_id != cluster_rep)
-            ),
-            c AS (
-              SELECT doc_id, lang,
-                     COALESCE(SUM(w) OVER (PARTITION BY lang ORDER BY h, doc_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cb
-              FROM purged
-            )
-            SELECT doc_id, lang FROM c
-            WHERE cb < (CASE lang WHEN 'en' THEN 3000
-                                  WHEN 'de' THEN 1200 ELSE 0 END)
-        """,
-        "sample_hash_fraction": _sample_fraction_oracle(
-            {"en": 0.5, "de": 0.2}, default_fraction=0.05
-        ),
-        # the composed curation contract: gate -> purge -> sample in ONE
-        # statement; the pair/closure fragments run over the gated CTE (the
-        # `src="kept"` parametrization), the purge anti-selects
-        # non-representative closure members, and the sample thresholds are
-        # the same round(frac*1e6) integers the engine compiles
-        "curation_pipeline": f"""
-            WITH {_quality_gated_cte()},
-            kept AS (
-              SELECT CAST(d.doc_id AS BIGINT) AS doc_id, d.text, d.lang
-              FROM documents d JOIN gated g ON CAST(d.doc_id AS BIGINT) = g.doc_id
-              WHERE g.drop_reason IS NULL
-            )
-            SELECT k.doc_id, k.lang
-            FROM kept k
-            WHERE k.doc_id NOT IN (
-              SELECT doc_id FROM (
-                {_cc_oracle(_minhash_oracle(n_gram=3, threshold=0.5, n_hashes=16, bands=4, src="kept"))}
-              ) WHERE doc_id != cluster_rep)
-              AND ({_H1.format(x="CAST(k.doc_id AS VARCHAR)")}) % 1000000 <
-                  (CASE WHEN k.lang = 'de' THEN 200000
-                        WHEN k.lang = 'en' THEN 500000
-                        ELSE 50000 END)
-        """,
-        "sample_stratified_topn": _sample_topn_oracle(n=7),
-        "curation_pipeline_cleaned": _curation_cleaned_oracle(),
-        # the naive per-group hash-ordered prefix window — the contract the
-        # bucketed boundary-search implementation must equal row-for-row
-        "sample_token_budget": f"""
-            WITH t AS (
-              SELECT CAST(doc_id AS BIGINT) AS doc_id, lang,
-                     len(list_filter(string_split(lower(text), ' '),
-                                     x -> x != '')) AS w,
-                     {_H1.format(x="CAST(doc_id AS VARCHAR)")} AS h
-              FROM documents
-            ),
-            c AS (
-              SELECT doc_id, lang,
-                     COALESCE(SUM(w) OVER (PARTITION BY lang ORDER BY h, doc_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cb
-              FROM t
-            )
-            SELECT doc_id, lang FROM c
-            WHERE cb < (CASE lang WHEN 'en' THEN 5000
-                                  WHEN 'de' THEN 2000 ELSE 0 END)
-        """,
         "dedup_simhash": _simhash_oracle(),
         "dedup_simhash_pairs": _simhash_pairs_oracle(max_hamming=8),
         "dedup_simhash_incremental": f"""
@@ -4992,21 +4219,7 @@ def oracle_sql() -> dict[str, str]:
         ),
         "text_quality_clf": _quality_clf_oracle(),
         "source_quality_stats": _source_stats_oracle(),
-        "sample_pack_sequences": _pack_sequences_oracle(),
         "text_pii_redact": _pii_oracle(),
-        "sample_mixture_weights": _mixture_weights_oracle(),
-        "sample_mixture_temperature": f"""
-            WITH fr AS (
-              SELECT lang,
-                     CAST(FLOOR(sample_fraction * 1000000 + 0.5) AS BIGINT) AS t
-              FROM ({_mixture_weights_oracle()})
-            )
-            SELECT CAST(d.doc_id AS BIGINT) AS doc_id, d.lang AS lang
-            FROM documents d JOIN fr USING (lang)
-            WHERE {_H1.format(x="CAST(d.doc_id AS VARCHAR)")} % 1000000 < fr.t
-        """,
-        "sample_shuffle_shards": _shuffle_shards_oracle(),
-        "text_chunk_sliding": _chunk_sliding_oracle(),
         "url_parts": _url_parts_oracle(),
         "url_normalize": _url_normalize_oracle(),
         "url_dedup": _url_dedup_oracle(),

@@ -96,34 +96,25 @@ DATAPIPE_TIMED = [
     "text_token_counts",
     "text_fingerprint",
     "dedup_simhash_pairs",
-    "sample_hash_fraction",
-    "sample_stratified_topn",
     "dedup_minhash_incremental",
     "dedup_simhash_incremental",
     "text_repetition",
-    "decontam_pairs",
-    "sample_token_budget",
     "text_line_dedup",
     "text_pii_redact",
-    "sample_mixture_temperature",
     "text_lang_trigram",
     "text_span_dedup",
     "text_quality_clf",
     "text_span_dedup_incremental",
     "source_quality_stats",
-    "sample_pack_sequences",
     "url_normalize",
     "url_dedup",
-    "sample_shuffle_shards",
     "url_domain_quality",
     "text_span_dedup_clean",
     "text_lm_perplexity",
     "graph_pagerank",
     "html_extract_text",
     "html_extract_links",
-    "text_chunk_sliding",
     "text_tokenize_encode",
-    "decontam_bloom",
     "url_latest_snapshot",
     "web_link_rank",
     "url_blocklist",

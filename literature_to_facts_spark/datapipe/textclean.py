@@ -40,7 +40,7 @@ Scale notes (100 TB):
   Exchanges).  The exploded frame feeds two consumers
   (the frequency count and the join's left side); the upstream is a narrow
   scan + split, so two scan-fused passes beat materializing an exploded
-  copy of the corpus (same trade as datapipe/curation.py documents).
+  copy of the corpus.
 * ``pii_redact`` is pure per-row expressions: zero shuffle, scan-fused,
   pushdown-transparent.
 """
@@ -421,8 +421,7 @@ def span_dedup(
     token intervals ``[pos, pos+window-1]`` (overlapping spans counted
     once) and ``dup_frac = round(dup_tokens / n_tokens, 6)``.  Documents
     shorter than ``window`` tokens have zero windows and zero coverage.
-    Callers curate on the coverage signal (e.g. drop ``dup_frac > 0.5`` or
-    feed :func:`~literature_to_facts_spark.datapipe.curation.curate_corpus`).
+    Callers curate on the coverage signal (e.g. drop ``dup_frac > 0.5``).
 
     Tokenization is split-on-single-space with empty tokens dropped (the
     repo-wide shingle convention, minus lowercasing — span identity is

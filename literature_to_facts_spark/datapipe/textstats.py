@@ -335,23 +335,6 @@ def with_repetition(
     )
 
 
-# every column quality_filter adds/replaces on its input — callers that
-# re-emit the input schema after gating (curation.curate_corpus) guard
-# against collisions with this set so it cannot drift from the code below
-QUALITY_GATE_COLS = frozenset(
-    {
-        "n_words",
-        "mean_word_len",
-        "alpha_ratio",
-        "punct_ratio",
-        "stopword_ratio",
-        "quality_score",
-        "drop_reason",
-        "keep",
-    }
-)
-
-
 def quality_filter(
     docs: DataFrame,
     text_col: str = "text",
@@ -719,8 +702,7 @@ def tokenize_encode(
     method: str = "broadcast_map",
 ) -> DataFrame:
     """Encode each document's token stream into integer ids against a
-    ``(token, token_id)`` vocabulary — the text -> model-input stage that
-    precedes :func:`~literature_to_facts_spark.datapipe.sampling.pack_sequences`.
+    ``(token, token_id)`` vocabulary — the text -> model-input stage.
     Tokens are the same lowercased non-empty whitespace splits as
     :func:`token_topk` (build the vocab with it and the normalization
     matches by construction); out-of-vocabulary tokens encode as

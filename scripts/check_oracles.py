@@ -47,9 +47,9 @@ def _rowset(cols, rows):
 # Forced JVM collections before the count is read: the fewest that read 0.
 # Measured at sf0.01 on 4 cores, reading Spark's weak-valued persistentRdds
 # map (which pins nothing) after each collection: a sweep of
-# dedup_clusters_cc alone (3 runs) or curation_pipeline_full alone (2 runs)
-# read 4, 4, 0 after 0, 1, 2 collections, and 0 up to 5; the full
-# 104-query sweep (2 runs) read 0 before the first.
+# dedup_clusters_cc alone (3 runs) or curation_pipeline_full (since
+# deleted) alone (2 runs) read 4, 4, 0 after 0, 1, 2 collections, and 0
+# up to 5; the full 104-query sweep (2 runs) read 0 before the first.
 _GC_ROUNDS = 2
 
 
@@ -57,7 +57,7 @@ def _persistent_rdds(spark) -> int:
     """The session's persistent RDD count once unreachable ones are freed.
 
     ``localCheckpoint`` (the connected-components fixpoint behind the
-    dedup/curation queries) persists RDDs that no cache entry owns;
+    dedup_clusters_cc queries) persists RDDs that no cache entry owns;
     Spark's ContextCleaner unpersists them after the JVM collects their
     last reference, so ``_GC_ROUNDS`` forced collections run first.  The
     count is read once, at the end: ``getPersistentRDDs()`` returns a copy

@@ -12,10 +12,11 @@ def spark():
     from literature_to_facts_spark.config import LONG_LIVED_DRIVER_CONF, get_spark
 
     # one JVM runs the whole suite: a long-lived driver keeps C2, as the
-    # looping driver does (on 4 cores the suite took 1,099-1,228 s C1-only, 898 s)
+    # looping driver does (on 4 cores the suite took 1,099-1,228 s C1-only, 898 s).
+    # A 4g heap: under the 8g default the JVM grew to ~9 GB RSS on a 15 GB host.
     s = get_spark(
         app_name="l2f-spark-tests", master="local[8]", shuffle_partitions=8,
-        extra_conf=LONG_LIVED_DRIVER_CONF,
+        extra_conf={**LONG_LIVED_DRIVER_CONF, "spark.driver.memory": "4g"},
     )
     yield s
     s.stop()

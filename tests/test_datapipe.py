@@ -781,180 +781,6 @@ def test_minhash_incremental_daily_loop_bucketed(spark, documents, tmp_path):
         spark.sql("DROP TABLE IF EXISTS t_lsh_daily")
 
 
-def test_sample_to_token_budget(spark, documents):
-    """Token-budget mixture sampling: row-for-row identical to the naive
-    per-group hash-ordered cumulative-prefix window (which the bucketed
-    implementation exists to avoid at scale), budget reached via the
-    crossing doc, smaller budgets nest inside larger ones, unlisted groups
-    dropped, and robust to a tiny bucket count (every bucket astride or
-    full)."""
-    from pyspark.sql import Window
-
-    from literature_to_facts_spark.datapipe.sampling import (
-        _h52,
-        sample_to_token_budget,
-    )
-    from literature_to_facts_spark.datapipe.textstats import with_token_counts
-
-    docs = with_token_counts(documents.select("doc_id", "lang", "text"))
-    budgets = {"en": 5000, "de": 2000}
-
-    def naive(buds):
-        w = (
-            Window.partitionBy("lang")
-            .orderBy(F.col("_h").asc(), F.col("doc_id").asc())
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        b = F.lit(None).cast("long")
-        for k, v in buds.items():
-            b = F.when(F.col("lang") == k, v).otherwise(b)
-        return {
-            r["doc_id"]
-            for r in docs.withColumn("_h", _h52("doc_id"))
-            .withColumn("_cb", F.coalesce(F.sum("n_ws_tokens").over(w), F.lit(0)))
-            .where(F.col("_cb") < F.coalesce(b, F.lit(0)))
-            .collect()
-        }
-
-    expected = naive(budgets)
-    got = {
-        r["doc_id"]
-        for r in sample_to_token_budget(
-            docs, budgets, weight_col="n_ws_tokens"
-        ).collect()
-    }
-    assert got == expected and got
-    # budgets actually bind: kept token sums land in [budget, budget + max doc)
-    kept = sample_to_token_budget(docs, budgets, weight_col="n_ws_tokens")
-    sums = {
-        r["lang"]: r["s"]
-        for r in kept.groupBy("lang").agg(F.sum("n_ws_tokens").alias("s")).collect()
-    }
-    assert set(sums) == {"en", "de"}
-    for lang, b in budgets.items():
-        assert sums[lang] >= b  # crossing doc included
-    # nesting: half budgets form a subset
-    half = {
-        r["doc_id"]
-        for r in sample_to_token_budget(
-            docs, {"en": 2500, "de": 1000}, weight_col="n_ws_tokens"
-        ).collect()
-    }
-    assert half < got
-    # degenerate bucket count: identical result
-    got2 = {
-        r["doc_id"]
-        for r in sample_to_token_budget(
-            docs, budgets, weight_col="n_ws_tokens", n_hash_buckets=2
-        ).collect()
-    }
-    assert got2 == expected
-
-
-def test_sample_to_token_budget_exact_boundary_zero_weight(spark):
-    """Round-5 review repro: when a bucket's cumulative sum lands EXACTLY
-    on the budget, trailing zero-weight rows (empty/NULL text) have
-    cum-before == budget and must be DROPPED (strict prefix) — a wholesale
-    'full' bucket classification kept them."""
-    from pyspark.sql import Window
-
-    from literature_to_facts_spark.datapipe.sampling import (
-        _h52,
-        sample_to_token_budget,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, "g", 50 if i <= 10 else 0) for i in range(1, 15)],
-        "doc_id long, lang string, w long",
-    )
-    budget = {"g": 100}
-    w = (
-        Window.partitionBy("lang")
-        .orderBy(F.col("_h").asc(), F.col("doc_id").asc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    naive = {
-        r["doc_id"]
-        for r in docs.withColumn("_h", _h52("doc_id"))
-        .withColumn("_cb", F.coalesce(F.sum("w").over(w), F.lit(0)))
-        .where(F.col("_cb") < 100)
-        .collect()
-    }
-    for nb in (1, 2, 4096):
-        got = {
-            r["doc_id"]
-            for r in sample_to_token_budget(
-                docs, budget, weight_col="w", n_hash_buckets=nb
-            ).collect()
-        }
-        assert got == naive, f"n_hash_buckets={nb}"
-
-
-def test_decontamination(spark):
-    """Training docs sharing >= min_overlap distinct n-grams with any eval
-    doc are flagged (and only those); eval_df_cap drops benchmark
-    boilerplate grams; the training side joins the broadcast eval gram set
-    with no shuffle below the join (plan-pinned)."""
-    from literature_to_facts_spark.datapipe.decontam import (
-        contamination_pairs,
-        decontaminate,
-    )
-
-    tr = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog"),
-            (2, "totally unrelated training text goes here now"),
-            (3, "answer: the quick brown fox strikes again"),
-            (4, None),
-        ],
-        "doc_id long, text string",
-    )
-    ev = spark.createDataFrame(
-        [
-            (100, "eval question about the quick brown fox"),
-            (101, "another eval item entirely different words"),
-        ],
-        "doc_id long, text string",
-    )
-    pairs = contamination_pairs(tr, ev, n_gram=4, min_overlap=1)
-    got = {(r["doc_id"], r["eval_id"], r["n_shared_grams"]) for r in pairs.collect()}
-    # docs 1 and 3 share the 4-gram "the quick brown fox" with eval 100
-    assert got == {(1, 100, 1), (3, 100, 1)}
-    kept = {r["doc_id"] for r in decontaminate(tr, ev, n_gram=4).collect()}
-    assert kept == {2, 4}
-    # min_overlap=2 requires two distinct shared grams -> nothing flagged
-    assert contamination_pairs(tr, ev, n_gram=4, min_overlap=2).count() == 0
-    # capping grams present in > 0 eval docs removes every gram -> no pairs
-    assert (
-        contamination_pairs(tr, ev, n_gram=4, min_overlap=1, eval_df_cap=0).count()
-        == 0
-    )
-    # plan: the training side streams into a BroadcastHashJoin; the ONLY
-    # shuffle anywhere is the (matched-pair-sized) count aggregation above
-    # the join — the corpus itself is never exchanged
-    # (the df already executed, so AQE prints Final + Initial sections —
-    # count in the final section only)
-    plan = pairs._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
-    assert "BroadcastHashJoin" in final
-    assert final.count("Exchange hashpartitioning") == 1
-
-    # short eval items (< n_gram tokens) match by CONTAINMENT: gram
-    # equality can never fire for them (round-5 review finding) — and
-    # containment is exempt from min_overlap (categorical contamination)
-    ev2 = spark.createDataFrame(
-        [(200, "training text"), (201, "zz qq")], "doc_id long, text string"
-    )
-    got2 = {
-        (r["doc_id"], r["eval_id"])
-        for r in contamination_pairs(tr, ev2, n_gram=4, min_overlap=2).collect()
-    }
-    assert got2 == {(2, 200)}  # 'training text' ⊂ doc 2; 'zz qq' nowhere
-    assert {r["doc_id"] for r in decontaminate(tr, ev2, n_gram=4).collect()} == {
-        1, 3, 4,
-    }
-
-
 def test_repetition_metrics(spark):
     """Degenerate looping text scores near 1, varied text near 0; empty
     text scores 0, NULL text NULL; top_word_frac equals the dominant
@@ -984,143 +810,6 @@ def test_repetition_metrics(spark):
     assert rows[5]["dup_word_frac"] == round(1 - 2 / 6, 6)
     assert rows[5]["dup_ngram_frac"] == round(1 - 2 / 5, 6)
     assert rows[5]["top_word_frac"] == 0.5
-
-
-def test_curation_pipeline_plan_and_containment(spark, documents):
-    """The composed gate->purge->sample chain: sampling adds ZERO Exchanges
-    (its hash filter pushes through the purge's left-anti join onto the
-    scan side, next to the fused quality gate), and the stage outputs nest:
-    sampled ⊆ purged ⊆ gated ⊆ docs, deterministically."""
-    from literature_to_facts_spark.datapipe.curation import curate_corpus
-    from literature_to_facts_spark.datapipe.textstats import quality_filter
-
-    mh = dict(n_gram=3, n_hashes=16, bands=4, threshold=0.5)
-    purged = curate_corpus(documents, fractions=None, minhash_params=mh)
-    sampled = curate_corpus(
-        documents, fractions={"en": 0.5, "de": 0.2}, default_fraction=0.05,
-        minhash_params=mh,
-    )
-    plan_p = purged._jdf.queryExecution().executedPlan().toString()
-    plan_s = sampled._jdf.queryExecution().executedPlan().toString()
-    n_p = plan_p.count("Exchange hashpartitioning")
-    n_s = plan_s.count("Exchange hashpartitioning")
-    assert n_s == n_p, f"sampling must add no shuffle: {n_p} -> {n_s}"
-    # the sample's hash-threshold predicate sits in the plan as a pushed
-    # filter (the md5-derived bucket), not above the join output only
-    assert "conv(substr(md5" in plan_s
-    p_ids = {r["doc_id"] for r in purged.collect()}
-    s_ids = {r["doc_id"] for r in sampled.collect()}
-    g_ids = {
-        r["doc_id"]
-        for r in quality_filter(documents).where(F.col("keep")).collect()
-    }
-    assert s_ids < p_ids <= g_ids and len(s_ids) > 0
-    # deterministic: re-running the chain keeps exactly the same rows
-    assert {
-        r["doc_id"]
-        for r in curate_corpus(
-            documents, fractions={"en": 0.5, "de": 0.2}, default_fraction=0.05,
-            minhash_params=mh,
-        ).collect()
-    } == s_ids
-
-
-def test_sampling_deterministic_nested_and_exact(spark, documents):
-    """Hash-fraction sampling: zero-shuffle plan, deterministic, and samples
-    NEST across fractions (the 10% set contains the 5% set); top-n sampling:
-    exactly min(n, group size) per group, stable across partitionings."""
-    from literature_to_facts_spark.datapipe.sampling import (
-        sample_fraction_by_group,
-        sample_topn_per_group,
-    )
-
-    docs = documents.select("doc_id", "lang", "text")
-    s10 = sample_fraction_by_group(docs, {}, default_fraction=0.10)
-    s05 = sample_fraction_by_group(docs, {}, default_fraction=0.05)
-    ids10 = {r["doc_id"] for r in s10.collect()}
-    ids05 = {r["doc_id"] for r in s05.collect()}
-    assert ids05 <= ids10  # nesting
-    assert ids10 == {r["doc_id"] for r in s10.collect()}  # deterministic
-    # narrow plan: no shuffle anywhere in the fraction sampler
-    plan = s10._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-
-    topn = sample_topn_per_group(docs, n=3, group_col="lang")
-    counts = {
-        r["lang"]: r["n"]
-        for r in topn.groupBy("lang").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    sizes = {
-        r["lang"]: r["n"]
-        for r in docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    assert counts == {k: min(3, v) for k, v in sizes.items()}
-    # repartitioning must not change the selection
-    a = {(r["doc_id"]) for r in topn.collect()}
-    b = {(r["doc_id"]) for r in sample_topn_per_group(docs.repartition(13), 3, "lang").collect()}
-    assert a == b
-
-
-def test_sampling_broadcast_path_matches_case_path(spark):
-    """Large mixture recipes switch from the nested-CASE filter to a
-    broadcast-joined fractions table.  The CASE chain is not merely slow at
-    5k groups — Catalyst's column-node converter recurses per WHEN and dies
-    with a StackOverflowError, so the broadcast path is the ONLY shape that
-    works there.  Verified against an independently Python-computed expected
-    set (same md5 hash, same rounded thresholds); the big side must not
-    shuffle."""
-    import hashlib
-
-    from literature_to_facts_spark.datapipe.sampling import sample_fraction_by_group
-
-    n_rows, n_groups = 20_000, 5_000
-    docs = spark.range(0, n_rows).select(
-        F.col("id").alias("doc_id"),
-        F.concat(F.lit("g"), (F.col("id") % n_groups).cast("string")).alias("grp"),
-    )
-    fractions = {f"g{i}": (i % 100) / 100.0 for i in range(n_groups)}
-    bcast_out = sample_fraction_by_group(
-        docs, fractions, group_col="grp", default_fraction=0.5, max_case_groups=32
-    )
-    plan = bcast_out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    # broadcast only, big side unshuffled: a shuffle would print as
-    # "Exchange hashpartitioning" (the class name ShuffleExchangeExec never
-    # appears in plan strings — asserting on it would be vacuous)
-    assert "hashpartitioning" not in plan
-
-    def bucket(doc_id: int) -> int:
-        return int(hashlib.md5(str(doc_id).encode()).hexdigest()[:13], 16) % 1_000_000
-
-    expected = {
-        i
-        for i in range(n_rows)
-        if bucket(i) < round(fractions[f"g{i % n_groups}"] * 1_000_000)
-    }
-    got = {r["doc_id"] for r in bcast_out.collect()}
-    assert got == expected and len(got) > 0
-    # small recipes still take the CASE path (no join node) and agree with
-    # the same Python-computed expectation incl. the round() threshold
-    small = sample_fraction_by_group(
-        docs, {"g1": 0.29}, group_col="grp", default_fraction=0.0
-    )
-    assert "Join" not in small._jdf.queryExecution().executedPlan().toString()
-    exp_small = {
-        i for i in range(n_rows) if i % n_groups == 1 and bucket(i) < 290_000
-    }
-    assert {r["doc_id"] for r in small.collect()} == exp_small
-
-    # non-string group keys must survive the broadcast path (the fractions
-    # table takes the group column's TYPE from the input frame)
-    int_docs = spark.range(0, 2_000).select(
-        F.col("id").alias("doc_id"), (F.col("id") % 40).alias("grp_id")
-    )
-    int_fracs = {i: 0.5 for i in range(40)}
-    int_out = sample_fraction_by_group(
-        int_docs, int_fracs, group_col="grp_id", max_case_groups=8
-    )
-    exp_int = {i for i in range(2_000) if bucket(i) < 500_000}
-    assert {r["doc_id"] for r in int_out.collect()} == exp_int
 
 
 def test_quality_filter_reason_codes(spark):
@@ -1234,81 +923,6 @@ def test_source_stats_and_filter(spark):
     # explicit total_docs skips the window (no Window node in the plan)
     p2 = source_stats(docs, total_docs=10)._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in p2
-
-
-def test_pack_sequences_semantics(spark):
-    """Global concat-and-split layout: starts are the exclusive prefix sums
-    of token counts in (hash, id) order; results are INDEPENDENT of the
-    bucket decomposition (n_buckets=1 == 64 == the global window); boundary
-    spans and empty docs are mapped correctly."""
-    from literature_to_facts_spark.datapipe.sampling import pack_sequences
-
-    docs = spark.createDataFrame(
-        [(i, " ".join(["tok"] * (3 + i % 5))) for i in range(40)]
-        + [(100, ""), (101, None)],
-        ["doc_id", "text"],
-    )
-    out = pack_sequences(docs, seq_len=10, n_buckets=4).collect()
-    assert len(out) == 41                      # NULL text excluded, '' kept
-    rows = sorted(out, key=lambda r: r["global_start"])
-    pos = 0
-    for r in rows:
-        assert r["global_start"] == pos
-        assert r["seq_id"] == pos // 10
-        last = pos + max(r["n_toks"] - 1, 0)
-        assert r["seq_end"] == last // 10
-        assert r["seq_offset"] == pos % 10
-        pos += r["n_toks"]
-    # a doc with n_toks > seq_len must span sequences
-    assert any(r["seq_end"] > r["seq_id"] for r in rows)
-    # empty doc: zero tokens, seq_end == seq_id
-    empty = next(r for r in out if r["doc_id"] == 100)
-    assert empty["n_toks"] == 0 and empty["seq_end"] == empty["seq_id"]
-
-    for nb in (1, 64):
-        same = pack_sequences(docs, seq_len=10, n_buckets=nb).collect()
-        assert sorted(map(tuple, same)) == sorted(map(tuple, out))
-
-    import pytest as _pt
-    with _pt.raises(ValueError, match="seq_len"):
-        pack_sequences(docs, seq_len=0)
-    with _pt.raises(ValueError, match="n_buckets"):
-        pack_sequences(docs, n_buckets=0)
-
-
-def test_shuffle_deterministic_semantics(spark):
-    """Seeded shuffle: exact permutation (every row once, dense per-shard
-    positions), reproducible across partitionings, seed-sensitive, NULL ids
-    excluded, collision guard loud."""
-    import pytest as _pt
-
-    from literature_to_facts_spark.datapipe.sampling import shuffle_deterministic
-
-    docs = spark.range(200).selectExpr(
-        "CASE WHEN id = 199 THEN NULL ELSE id END AS doc_id"
-    )
-    out = shuffle_deterministic(docs, n_shards=4).collect()
-    assert len(out) == 199  # NULL id dropped
-    assert sorted(r.doc_id for r in out) == list(range(199))
-    by_shard = {}
-    for r in out:
-        by_shard.setdefault(r.shard, []).append(r.pos)
-    assert set(by_shard) <= set(range(4))
-    for poss in by_shard.values():  # dense 0..n-1 within each shard
-        assert sorted(poss) == list(range(len(poss)))
-
-    # partitioning-independent: same layout from a different partitioning
-    out2 = shuffle_deterministic(docs.repartition(7), n_shards=4).collect()
-    assert sorted(map(tuple, out)) == sorted(map(tuple, out2))
-
-    # a different seed yields a different permutation
-    out3 = shuffle_deterministic(docs, seed=7, n_shards=4).collect()
-    assert sorted(map(tuple, out)) != sorted(map(tuple, out3))
-
-    with _pt.raises(ValueError, match="shard"):
-        shuffle_deterministic(docs.withColumn("shard", F.lit(1)))
-    with _pt.raises(ValueError, match="n_shards"):
-        shuffle_deterministic(docs, n_shards=0)
 
 
 def test_lm_perplexity_semantics(spark):
@@ -1428,43 +1042,6 @@ def test_deduplicate_corpus_keep_best(spark):
     assert kept == {11, 14, 15}
 
 
-def test_chunk_documents_sliding(spark):
-    """Sliding chunks: stride = chunk_size - overlap, short last chunk,
-    exact coverage, zero rows for empty/NULL docs, param validation."""
-    from literature_to_facts_spark.datapipe.sampling import chunk_documents
-
-    toks = " ".join(str(i) for i in range(9))  # 9 tokens
-    docs = spark.createDataFrame(
-        [(1, toks), (2, "a b"), (3, ""), (4, None), (5, "  ")],
-        "doc_id long, text string",
-    )
-    rows = sorted(
-        (r.doc_id, r.chunk_id, r.chunk_start, r.n_chunk_tokens, r.chunk_text)
-        for r in chunk_documents(docs, chunk_size=4, overlap=2).collect()
-    )
-    # doc 1: n=9, step=2 -> 1 + ceil(5/2) = 4 chunks at starts 0,2,4,6
-    assert rows == [
-        (1, 0, 0, 4, "0 1 2 3"),
-        (1, 1, 2, 4, "2 3 4 5"),
-        (1, 2, 4, 4, "4 5 6 7"),
-        (1, 3, 6, 3, "6 7 8"),
-        (2, 0, 0, 2, "a b"),
-    ]
-    import pytest as _pt
-
-    with _pt.raises(ValueError, match="overlap"):
-        chunk_documents(docs, chunk_size=4, overlap=4)
-    with _pt.raises(ValueError, match="chunk_size"):
-        chunk_documents(docs, chunk_size=0)
-
-    # plan pin: chunking is scan-fused — zero Exchange
-    plan = (
-        chunk_documents(docs, chunk_size=4, overlap=2)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "Exchange" not in plan
-
-
 def test_tokenize_encode_methods_agree(spark):
     """broadcast_map (mapInPandas + broadcast dict) and join (posexplode +
     broadcast join + ordered regroup) produce identical encodings; NULL /
@@ -1506,54 +1083,6 @@ def test_tokenize_encode_methods_agree(spark):
         tokenize_encode(docs.withColumn("token_ids", F.lit("x")), vocab)
     with _pt.raises(ValueError, match="method"):
         tokenize_encode(docs, vocab, method="nope")
-
-
-def test_bloom_filter_membership_and_plan(spark):
-    """Bloom build/probe: true members always hit, NULL-text semantics,
-    param guards; plan pin — k broadcast joins, no SortMergeJoin, no
-    gram-level aggregation before the per-doc count."""
-    from literature_to_facts_spark.datapipe.decontam import (
-        bloom_contaminated,
-        build_bloom_filter,
-    )
-    from literature_to_facts_spark.datapipe.dedup import _shingle_frame
-
-    ev = spark.createDataFrame(
-        [(100, "alpha beta gamma delta epsilon")], "doc_id long, text string"
-    )
-    grams = _shingle_frame(ev, "doc_id", "text", 4, explode=True)
-    bloom = build_bloom_filter(grams, key_col="sh", m_bits=1 << 12, k_hashes=5)
-    tr = spark.createDataFrame(
-        [
-            (1, "alpha beta gamma delta epsilon zeta"),  # shares 2 grams
-            (2, "totally unrelated words here friend"),
-            (3, None),
-        ],
-        "doc_id long, text string",
-    )
-    out = bloom_contaminated(
-        tr, bloom, m_bits=1 << 12, k_hashes=5, n_gram=4
-    )
-    got = {r.doc_id: (r.n_flagged_grams, r.contaminated) for r in out.collect()}
-    assert got[1][0] >= 2 and got[1][1] is True  # true members always hit
-    assert 3 not in got  # NULL-text docs omitted (report shape)
-    # doc 2 can only be flagged by false positives; with 25 set bits in
-    # 4096 the 5-probe FP rate is ~(25/4096)^5 — assert no flag
-    assert got[2] == (0, False)
-
-    # AQE plan strings repeat the tree under '== Initial Plan ==' — count
-    # joins in the final section only
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
-    assert "SortMergeJoin" not in final  # report shape: no corpus rejoin
-    assert final.count("BroadcastHashJoin") == 5
-
-    import pytest as _pt
-
-    with _pt.raises(ValueError, match="m_bits"):
-        build_bloom_filter(grams, m_bits=10)
-    with _pt.raises(ValueError, match="min_hits"):
-        bloom_contaminated(tr, bloom, min_hits=0)
 
 
 def test_triangle_count_semantics_and_cap(spark):

@@ -1,16 +1,9 @@
-"""Tests for datapipe/textclean (line dedup + PII redaction) and the
-temperature-mixture samplers in datapipe/sampling."""
+"""Tests for datapipe/textclean (line dedup + PII redaction)."""
 
-import hashlib
-import math
 import random
 
 import pytest
 from pyspark.sql import functions as F
-
-
-def _h52(s: str) -> int:
-    return int(hashlib.md5(s.encode()).hexdigest()[:13], 16)
 
 
 # ---------------------------------------------------------------------------
@@ -202,121 +195,6 @@ def test_pii_cross_engine_fuzz(spark):
 
 
 # ---------------------------------------------------------------------------
-# mixture_weights / sample_by_temperature
-# ---------------------------------------------------------------------------
-
-
-@pytest.fixture(scope="module")
-def mix_docs(spark):
-    rows = []
-    i = 0
-    for lang, n, chars in [("en", 40, 1000), ("de", 10, 400), ("xx", 2, 0)]:
-        for _ in range(n):
-            rows.append((i, lang, chars))
-            i += 1
-    return spark.createDataFrame(rows, ["doc_id", "lang", "n_chars"])
-
-
-def test_mixture_weights_alpha_half(spark, mix_docs):
-    from literature_to_facts_spark.datapipe.sampling import mixture_weights
-
-    out = {
-        r["lang"]: r
-        for r in mixture_weights(mix_docs, token_budget=10_000, alpha=0.5).collect()
-    }
-    toks = {"en": 40_000, "de": 4_000, "xx": 0}
-    w = {g: math.floor(math.sqrt(t) * 1e6 + 0.5) for g, t in toks.items()}
-    s = sum(w.values())
-    for g in toks:
-        assert out[g]["n_tokens"] == toks[g]
-        assert out[g]["weight_micro"] == w[g]
-        if toks[g] == 0:
-            assert out[g]["sample_fraction"] == 0.0
-        else:
-            expect = min(1.0, round(10_000.0 * w[g] / (float(s) * toks[g]), 6))
-            assert out[g]["sample_fraction"] == expect
-    # sqrt temperature up-samples the small group relative to natural share
-    assert out["de"]["sample_fraction"] > out["en"]["sample_fraction"]
-
-
-def test_mixture_weights_other_alphas(spark, mix_docs):
-    from literature_to_facts_spark.datapipe.sampling import mixture_weights
-
-    nat = {
-        r["lang"]: r["sample_fraction"]
-        for r in mixture_weights(mix_docs, token_budget=10_000, alpha=1.0).collect()
-    }
-    # alpha=1: expected kept tokens proportional to group mass -> equal
-    # fractions for every non-empty group (budget/total)
-    assert nat["en"] == nat["de"] == round(10_000 / 44_000, 6)
-    uni = {
-        r["lang"]: r
-        for r in mixture_weights(mix_docs, token_budget=10_000, alpha=0.0).collect()
-    }
-    assert uni["en"]["weight_micro"] == uni["xx"]["weight_micro"] == 1
-    with pytest.raises(ValueError, match="alpha"):
-        mixture_weights(mix_docs, token_budget=10_000, alpha=0.7)
-
-
-def test_sample_by_temperature_keep_rule_and_plan(spark, mix_docs):
-    from literature_to_facts_spark.datapipe.sampling import (
-        mixture_weights,
-        sample_by_temperature,
-    )
-
-    out = sample_by_temperature(mix_docs, token_budget=10_000, alpha=0.5)
-    kept = {r["doc_id"] for r in out.collect()}
-    fr = {
-        r["lang"]: round(r["sample_fraction"] * 1e6)
-        for r in mixture_weights(mix_docs, token_budget=10_000, alpha=0.5).collect()
-    }
-    for row in mix_docs.collect():
-        keep = _h52(str(row["doc_id"])) % 1_000_000 < fr[row["lang"]]
-        assert (row["doc_id"] in kept) == keep
-    assert out.columns == mix_docs.columns
-    # corpus side is never shuffled: the only Exchange hashpartitioning is
-    # the tiny per-group aggregate feeding the broadcast
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
-    assert "BroadcastHashJoin" in final
-    assert final.count("Exchange hashpartitioning") == 1
-
-
-def test_sample_by_temperature_null_group_never_sampled(spark):
-    from literature_to_facts_spark.datapipe.sampling import (
-        mixture_weights,
-        sample_by_temperature,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "en", 100), (2, None, 100), (3, None, 100)],
-        ["doc_id", "lang", "n_chars"],
-    )
-    # the NULL group aggregates a weight row like any other ...
-    w = {r["lang"]: r for r in mixture_weights(docs, token_budget=50).collect()}
-    assert None in w and w[None]["n_docs"] == 2
-    # ... but the join can never match it, so its docs are never kept
-    kept = {r["doc_id"] for r in sample_by_temperature(docs, token_budget=1_000_000).collect()}
-    assert kept <= {1}
-
-
-def test_sample_by_temperature_nests(spark, mix_docs):
-    """A smaller budget's sample is a subset of a larger one's (same hash
-    order per id, monotone fractions)."""
-    from literature_to_facts_spark.datapipe.sampling import sample_by_temperature
-
-    small = {
-        r["doc_id"]
-        for r in sample_by_temperature(mix_docs, token_budget=5_000).collect()
-    }
-    large = {
-        r["doc_id"]
-        for r in sample_by_temperature(mix_docs, token_budget=20_000).collect()
-    }
-    assert small <= large
-
-
-# ---------------------------------------------------------------------------
 # line_dedup_incremental (fifth probe-shaped delta family)
 # ---------------------------------------------------------------------------
 
@@ -503,70 +381,6 @@ def test_pii_oracle_null_text_parity(spark):
     assert by_id[9][2] == 2 and by_id[9][4] is True  # own ip + planted suffix
 
 
-def test_curate_corpus_cleaned_stages_equal_manual(spark):
-    """curate_corpus(line_dedup_params, pii=True) == the hand-chained
-    stages — the composition contract for the two new pre-stages (carry
-    columns survive, masking happens before the gate)."""
-    from literature_to_facts_spark.datapipe.curation import curate_corpus
-    from literature_to_facts_spark.datapipe.textclean import line_dedup, pii_redact
-
-    rows = []
-    for i in range(30):
-        # distinct bodies (most 3-gram shingles carry i) so the near-dup
-        # purge keeps most docs; the shared BOILER line still exercises
-        # line dedup and each email line exercises masking
-        body = (
-            f"Sentence {i} about {i * i} unique content the quick item"
-            f" {i * 31} goes onward beyond the number {i} here."
-        )
-        extra = f"\nwrite to user{i}@example.com for more details today."
-        rows.append((i, "en" if i % 3 else "de", f"{BOILER}\n{body}{extra}"))
-    docs = spark.createDataFrame(rows, ["doc_id", "lang", "text"])
-    params = dict(
-        fractions={"en": 0.8, "de": 0.8},
-        minhash_params=dict(n_gram=3, n_hashes=16, bands=4, threshold=0.5),
-    )
-    got = curate_corpus(
-        docs, line_dedup_params=dict(min_df=2, min_line_chars=10), pii=True, **params
-    )
-    manual_clean = line_dedup(
-        docs, min_df=2, min_line_chars=10, carry_cols=("lang",)
-    ).select("doc_id", F.col("clean_text").alias("text"), "lang")
-    manual = curate_corpus(
-        pii_redact(manual_clean, output_col="text").drop(
-            "n_email", "n_ipv4", "n_phone", "has_pii"
-        ),
-        **params,
-    )
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, manual.collect()))
-    # the carried lang column survived and the boilerplate line is gone from
-    # the shipped text; every email is masked
-    out = {r["doc_id"]: r for r in got.collect()}
-    assert out and all(r["lang"] in ("en", "de") for r in out.values())
-    assert all(BOILER not in r["text"] for r in out.values())
-    assert all("@example.com" not in r["text"] for r in out.values())
-    assert all("<EMAIL>" in r["text"] for r in out.values())
-
-
-def test_curate_corpus_carry_guards(spark):
-    """Reserved-name carry columns fail loudly; reserved-WORD carry columns
-    (SQL keywords) work — they ride F.col, never selectExpr."""
-    from literature_to_facts_spark.datapipe.curation import curate_corpus
-    from literature_to_facts_spark.datapipe.textclean import line_dedup
-
-    clash = spark.createDataFrame(
-        [(1, "long enough line of text here.", "x")],
-        ["doc_id", "text", "clean_text"],
-    )
-    with pytest.raises(ValueError, match="clean_text"):
-        curate_corpus(clash, line_dedup_params={})
-    kw = spark.createDataFrame(
-        [(1, "long enough line of text here.", "k")], ["doc_id", "text", "order"]
-    )
-    out = line_dedup(kw, carry_cols=("order",)).collect()
-    assert out[0]["order"] == "k"
-
-
 def test_blocklist_filter_semantics(spark):
     from literature_to_facts_spark.datapipe.textstats import blocklist_filter
 
@@ -606,37 +420,6 @@ def test_blocklist_filter_backslash_terms(spark):
     assert out[1] == 1 and out[2] == 1
 
 
-def test_sample_token_budget_null_group_gets_default(spark):
-    """A NULL group is a legitimate group: with default_budget > 0 its rows
-    must flow through the bucketed prefix exactly like the naive window
-    prefix would keep them (round-5 review finding: the decisions equi-join
-    silently dropped every NULL-group row)."""
-    from literature_to_facts_spark.datapipe.sampling import sample_to_token_budget
-
-    docs = spark.createDataFrame(
-        [(1, "en", 10), (2, "en", 10), (3, None, 10), (4, None, 10)],
-        ["doc_id", "lang", "n_tokens"],
-    )
-    kept = {
-        r["doc_id"]
-        for r in sample_to_token_budget(
-            docs, {"en": 15}, default_budget=100
-        ).collect()
-    }
-    # en: 15-token budget keeps the boundary-crossing prefix (both docs'
-    # cum-before < 15 only for the first; the crossing doc is kept -> the
-    # hash-ordered first two docs depend on hash order, budget 15 keeps 2
-    # docs' worth? cum-before of 2nd = 10 < 15 -> both kept); NULL group:
-    # default budget 100 keeps both
-    assert {3, 4} <= kept
-    # and a zero default still drops unlisted groups
-    kept0 = {
-        r["doc_id"]
-        for r in sample_to_token_budget(docs, {"en": 15}, default_budget=0).collect()
-    }
-    assert kept0 & {3, 4} == set()
-
-
 def test_token_topk_semantics_and_plan(spark):
     from literature_to_facts_spark.datapipe.textstats import token_topk
 
@@ -672,27 +455,6 @@ def test_blocklist_filter_empty_terms(spark):
     assert rows[1]["n_blocked_terms"] == 0 and rows[1]["blocked"] is False
     assert rows[2]["n_blocked_terms"] == 0 and rows[2]["blocked"] is False
     assert dict(blocklist_filter(docs, []).dtypes)["n_blocked_terms"] == "bigint"
-
-
-def test_curate_corpus_quality_gate_collision_guard(spark):
-    """An input column named like a quality_filter output ('keep',
-    'drop_reason', a metric) would be silently replaced by the gate and
-    re-emitted with gate values — it must fail loudly like the
-    line_dedup / pii collision guards do."""
-    from literature_to_facts_spark.datapipe.curation import curate_corpus
-
-    clash = spark.createDataFrame(
-        [(1, "long enough line of text here to pass.", False)],
-        ["doc_id", "text", "keep"],
-    )
-    with pytest.raises(ValueError, match="keep"):
-        curate_corpus(clash)
-    clash2 = spark.createDataFrame(
-        [(1, "long enough line of text here to pass.", 0.5)],
-        ["doc_id", "text", "quality_score"],
-    )
-    with pytest.raises(ValueError, match="quality_score"):
-        curate_corpus(clash2)
 
 
 def test_line_dedup_incremental_index_param_stamp(spark, tmp_path):
