@@ -93,28 +93,19 @@ HEADLINE = [
 DATAPIPE_TIMED = [
     "dedup_exact",
     "dedup_minhash_lsh",
-    "text_token_counts",
-    "text_fingerprint",
     "dedup_simhash_pairs",
     "dedup_minhash_incremental",
     "dedup_simhash_incremental",
-    "text_repetition",
     "text_line_dedup",
     "text_pii_redact",
-    "text_lang_trigram",
     "text_span_dedup",
-    "text_quality_clf",
     "text_span_dedup_incremental",
-    "source_quality_stats",
     "url_normalize",
     "url_dedup",
-    "url_domain_quality",
     "text_span_dedup_clean",
-    "text_lm_perplexity",
     "graph_pagerank",
     "html_extract_text",
     "html_extract_links",
-    "text_tokenize_encode",
     "url_latest_snapshot",
     "web_link_rank",
     "url_blocklist",
@@ -124,12 +115,10 @@ DATAPIPE_TIMED = [
     "web_anchor_text",
     "html_main_content",
     "web_anchor_text_incremental",
-    "web_extract_gate",
     "text_line_dedup_grouped",
     "web_triangle_count",
     "web_frontier_rank",
     "web_warc_parse",
-    "crawl_warc_chain",
 ]
 
 

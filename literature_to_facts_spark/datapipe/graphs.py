@@ -3,9 +3,7 @@
 Web-scale training pipelines rank hosts/pages by link-graph centrality
 (Common Crawl publishes harmonic-centrality/PageRank host rankings; curation
 recipes weight or gate sources by them).  This module provides a
-deterministic, fully-oracle-able PageRank over a ``(src, dst)`` edge table —
-the graph analog of the corpus-level quality signals in
-:mod:`~literature_to_facts_spark.datapipe.textstats`.
+deterministic, fully-oracle-able PageRank over a ``(src, dst)`` edge table.
 
 All arithmetic is FIXED-POINT INTEGER (ranks in micro-units, contributions
 integer-divided by out-degree): iterations are exact, order-independent and

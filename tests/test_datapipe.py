@@ -75,62 +75,6 @@ def test_simhash_deterministic_and_near_dup(spark, documents):
     assert {(i, i + 1000000) for i in range(5)} <= found
 
 
-def test_textstats(spark, documents):
-    from literature_to_facts_spark.datapipe.textstats import (
-        with_fingerprint,
-        with_lang_id,
-        with_quality,
-        with_token_counts,
-    )
-
-    out = with_token_counts(documents).collect()
-    for r in out[:50]:
-        assert r["n_ws_tokens"] == len([t for t in r["text"].split(" ") if t])
-    langs = with_lang_id(documents).select("lang_guess").distinct().collect()
-    assert {r["lang_guess"] for r in langs} <= {"en", "de", "fr", "es", "und"}
-    q = with_quality(documents).collect()
-    assert all(0.0 <= r["quality_score"] <= 1.0 for r in q)
-    assert any(r["quality_score"] > 0.5 for r in q)
-    fp = with_fingerprint(documents).collect()
-    # same text -> same fingerprints; fingerprints deterministic across runs
-    fp2 = with_fingerprint(documents).collect()
-    assert {(r["doc_id"], r["fp_md5"], r["fp_rolling"]) for r in fp} == {
-        (r["doc_id"], r["fp_md5"], r["fp_rolling"]) for r in fp2
-    }
-
-
-def test_lang_id_trigram(spark):
-    from literature_to_facts_spark.datapipe.textstats import (
-        TRIGRAM_LANGS,
-        lang_id_trigram_scores,
-    )
-
-    rows = [
-        (1, "the cat sat on the mat and the dog was there for the night", "en"),
-        (2, "der hund und die katze sind ein schoenes paar und das ist gut", "de"),
-        (3, "les enfants mangent des pommes dans le jardin parce que la vie est belle", "fr"),
-        (4, "los ninos comen manzanas en el jardin porque la vida es buena con ellos", "es"),
-        (5, "il governo della regione ha deciso che la situazione non cambia per ora", "it"),
-        (6, "os meninos foram ao mercado e a cidade nao estava com as suas ruas", "pt"),
-        (7, "het kind van een vrouw heeft een boek voor het eerst aan zij gegeven", "nl"),
-        (8, "zz qq xx", None),  # no model trigrams -> und
-        (9, "ab", None),  # too short -> n_tri 0, und
-        (10, None, None),  # NULL text survives with zeros
-    ]
-    docs = spark.createDataFrame(
-        [(i, t) for i, t, _ in rows], ["doc_id", "text"]
-    )
-    out = {r["doc_id"]: r for r in lang_id_trigram_scores(docs).collect()}
-    assert len(out) == len(rows)  # every doc kept, incl. NULL/short
-    for i, text, want in rows:
-        got = out[i]["lang_trigram"]
-        assert got == (want or "und"), (i, got, want, dict(out[i].asDict()))
-    assert out[9]["n_tri"] == 0 and out[10]["n_tri"] == 0
-    assert all(out[10][f"score_{lg}"] == 0 for lg in TRIGRAM_LANGS)
-    # n_tri == char_length(normalized) - 2
-    assert out[1]["n_tri"] == len(rows[0][1]) - 2
-
-
 def test_lsh_bucket_stats_and_signature_view(spark, documents):
     from literature_to_facts_spark.datapipe.dedup import (
         lsh_bucket_stats,
@@ -781,197 +725,31 @@ def test_minhash_incremental_daily_loop_bucketed(spark, documents, tmp_path):
         spark.sql("DROP TABLE IF EXISTS t_lsh_daily")
 
 
-def test_repetition_metrics(spark):
-    """Degenerate looping text scores near 1, varied text near 0; empty
-    text scores 0, NULL text NULL; top_word_frac equals the dominant
-    token's share (run-length over the sorted array == true max count)."""
-    from literature_to_facts_spark.datapipe.textstats import with_repetition
+def test_deduplicate_corpus_keep_best(spark):
+    """Quality-aware purge: per-cluster argmax on (quality DESC, id ASC),
+    NULL quality sorts worst, unclustered docs all survive."""
+    from literature_to_facts_spark.datapipe.dedup import (
+        deduplicate_corpus_keep_best,
+    )
 
     docs = spark.createDataFrame(
         [
-            (1, "spam spam spam spam spam spam"),
-            (2, "each word here appears exactly once"),
-            (3, ""),
-            (4, None),
-            (5, "a b a b a b"),
+            (10, 1.0), (11, 9.0), (12, 9.0),   # cluster {10,11,12}: 11 wins (tie 11<12)
+            (13, None), (14, 0.5),             # cluster {13,14}: NULL worst -> 14 wins
+            (15, 0.0),                         # unclustered
         ],
-        "doc_id long, text string",
+        "doc_id long, quality double",
     )
-    rows = {r["doc_id"]: r for r in with_repetition(docs, n_gram=2).collect()}
-    assert rows[1]["dup_word_frac"] == round(1 - 1 / 6, 6)
-    assert rows[1]["dup_ngram_frac"] == round(1 - 1 / 5, 6)
-    assert rows[1]["top_word_frac"] == 1.0
-    assert rows[2]["dup_word_frac"] == 0.0
-    assert rows[2]["top_word_frac"] == round(1 / 6, 6)
-    assert rows[3]["dup_word_frac"] == 0.0 and rows[3]["top_word_frac"] == 0.0
-    assert rows[4]["dup_word_frac"] is None and rows[4]["top_word_frac"] is None
-    assert rows[4]["dup_ngram_frac"] is None  # consistent NULL, not 0.0
-    # "a b" x3: 6 tokens 2 distinct; 5 bigrams, 2 distinct; top token 3/6
-    assert rows[5]["dup_word_frac"] == round(1 - 2 / 6, 6)
-    assert rows[5]["dup_ngram_frac"] == round(1 - 2 / 5, 6)
-    assert rows[5]["top_word_frac"] == 0.5
-
-
-def test_quality_filter_reason_codes(spark):
-    """First-failing-rule semantics + threshold edges: a too-short doc is
-    'too_few_words' even if it would ALSO fail other rules; a clean doc
-    keeps; the plan stays shuffle-free."""
-    import pandas as pd
-
-    from literature_to_facts_spark.datapipe.textstats import quality_filter
-
-    good = "the quick brown fox jumps over the lazy dog and runs to the old barn in town again today"
-    rows = pd.DataFrame(
-        {
-            "doc_id": [1, 2, 3, 4],
-            "text": [
-                good,                                  # keep
-                "x",                                   # too_few_words (first rule)
-                " ".join(["zqxjkv"] * 40),             # no stopwords
-                " ".join(["a.,;!?.,;!?"] * 30),        # punct... but alpha fails first
-            ],
-        }
+    pairs = spark.createDataFrame(
+        [(10, 11), (11, 12), (13, 14)], "id_a long, id_b long"
     )
-    docs = spark.createDataFrame(rows)
-    got = {r["doc_id"]: (r["keep"], r["drop_reason"]) for r in quality_filter(docs).collect()}
-    assert got[1] == (True, None)
-    assert got[2] == (False, "too_few_words")
-    assert got[3] == (False, "no_stopwords")
-    # doc 4 fails several rules; mean_word_len_high fires FIRST in the ladder
-    assert got[4] == (False, "mean_word_len_high")
-    plan = quality_filter(docs)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-
-
-def test_quality_classifier(spark):
-    """Linear bag-of-tokens scoring: mean token weight + bias, keep rule on
-    the rounded score, every doc emitted (NULL text = bias, n_toks 0),
-    OOV tokens weigh zero, custom model DataFrames accepted."""
-    from literature_to_facts_spark.datapipe.textstats import quality_classifier
-
-    docs = spark.createDataFrame(
-        [
-            (1, "the cat and the hat"),     # the:+1 x2, and:+1 -> 3/5
-            (2, "click subscribe now"),     # -2 -2 0 -> -4/3
-            (3, None),                      # bias only
-            (4, "zzz qqq"),                 # all OOV -> 0
-        ],
-        ["doc_id", "text"],
-    )
-    out = {
-        r["doc_id"]: (r["n_toks"], r["w_sum"], r["clf_score"], r["clf_keep"])
-        for r in quality_classifier(docs).collect()
-    }
-    assert out[1] == (5, 3, round(3 / 5, 6), True)
-    assert out[2] == (3, -4, round(-4 / 3, 6), False)
-    assert out[3] == (0, 0, 0.0, True)
-    assert out[4] == (2, 0, 0.0, True)
-
-    model = spark.createDataFrame([("cat", 5), ("hat", -7)], "token string, w int")
-    out2 = {
-        r["doc_id"]: (r["w_sum"], r["clf_keep"])
-        for r in quality_classifier(
-            docs, model=model, bias=0.1, threshold=0.2
+    kept = {
+        r["doc_id"]
+        for r in deduplicate_corpus_keep_best(
+            docs, pairs, quality_col="quality"
         ).collect()
     }
-    assert out2[1] == (-2, False)           # 0.1 - 2/5 = -0.3
-    assert out2[2] == (0, False)            # 0.1 < 0.2
-    # plan: the model joins broadcast (no shuffle on the corpus side)
-    plan = quality_classifier(docs)._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-
-
-def test_source_stats_and_filter(spark):
-    """Host-level curation: fixed-point per-source mean quality, corpus
-    share, keep rule (quality floor AND share cap), broadcast semi-join
-    filter-back; NULL-text docs leave the mean, sources with no scored
-    docs drop, NULL-source docs never survive the filter."""
-    from literature_to_facts_spark.datapipe.textstats import (
-        filter_by_source,
-        source_stats,
-        with_quality,
-    )
-
-    good = "the cat sat on the mat and the dog ran to the park in the sun"
-    docs = spark.createDataFrame(
-        [(i, "hog", good) for i in range(6)]          # over-represented
-        + [(6, "niche", good), (7, "niche", good)]
-        + [(8, "junk", "z z z z"), (9, "nulls", None)],
-        ["doc_id", "source", "text"],
-    )
-    stats = {
-        r["source"]: r
-        for r in source_stats(
-            docs, min_mean_quality=0.4, max_doc_share=0.5
-        ).collect()
-    }
-    assert stats["hog"]["n_docs"] == 6 and stats["hog"]["doc_share"] == 0.6
-    assert not stats["hog"]["keep"]                   # share cap fires
-    assert stats["niche"]["keep"]                     # good quality, small
-    assert not stats["junk"]["keep"]                  # quality floor fires
-    assert stats["nulls"]["mean_quality"] is None and not stats["nulls"]["keep"]
-    # fixed-point mean equals the quantized per-doc score (all docs equal)
-    q = with_quality(docs.where(F.col("doc_id") == 6)).collect()[0]["quality_score"]
-    assert abs(stats["niche"]["mean_quality"] - q) < 1e-9
-
-    kept = filter_by_source(
-        docs, source_stats(docs, min_mean_quality=0.4, max_doc_share=0.5)
-    )
-    assert sorted(r["doc_id"] for r in kept.collect()) == [6, 7]
-    plan = kept._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan
-    # explicit total_docs skips the window (no Window node in the plan)
-    p2 = source_stats(docs, total_docs=10)._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in p2
-
-
-def test_lm_perplexity_semantics(spark):
-    """CCNet perplexity stage: exact micro-unit sums, OOV penalty, the
-    one-penalty rule for sub-n-gram/NULL docs, and all three buckets."""
-    from literature_to_facts_spark.datapipe.textstats import lm_perplexity
-
-    model = spark.createDataFrame(
-        [("a b", -1_000_000), ("b c", -2_000_000)], "gram string, lp_micro long"
-    )
-    rows = [
-        (1, "a b c"),     # grams: 'a b'(-1), 'b c'(-2) -> mean 1.5 -> head
-        (2, "a b z z"),   # 'a b'(-1), 'b z'(oov), 'z z'(oov) -> (1+20+20)/3
-        (3, "q q q"),     # all OOV -> 20 -> tail
-        (4, "solo"),      # sub-bigram: one penalty, n_grams 0 -> 20 -> tail
-        (5, None),        # NULL text: same one-penalty rule
-    ]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = {
-        r.doc_id: r
-        for r in lm_perplexity(
-            docs, model, oov_lp_micro=-20_000_000, head_max=2.0,
-            middle_max=15.0,
-        ).collect()
-    }
-    assert (out[1].n_grams, out[1].lp_sum_micro) == (2, -3_000_000)
-    assert out[1].log_ppl == 1.5 and out[1].ppl_bucket == "head"
-    assert (out[2].n_grams, out[2].lp_sum_micro) == (3, -41_000_000)
-    assert out[2].ppl_bucket == "middle"
-    assert out[3].ppl_bucket == "tail" and out[3].log_ppl == 20.0
-    assert (out[4].n_grams, out[4].lp_sum_micro) == (0, -20_000_000)
-    assert out[4].log_ppl == 20.0 and out[4].ppl_bucket == "tail"
-    assert (out[5].n_grams, out[5].lp_sum_micro) == (0, -20_000_000)
-
-    import pytest as _pt
-    with _pt.raises(ValueError, match="n_gram"):
-        lm_perplexity(docs, model, n_gram=0)
-
-
-def test_lm_perplexity_plan_broadcast(spark):
-    """The model joins broadcast (never shuffling the corpus side) and the
-    per-doc groupBy partial-aggregates map-side."""
-    from literature_to_facts_spark.datapipe.textstats import lm_perplexity
-
-    docs = spark.range(50).selectExpr("id AS doc_id", "'a b c d' AS text")
-    model = spark.createDataFrame([("a b", -1_000_000)], "gram string, lp_micro long")
-    plan = lm_perplexity(docs, model)._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
+    assert kept == {11, 14, 15}
 
 
 def test_pagerank_fixed_point_semantics(spark):
@@ -1013,76 +791,6 @@ def test_pagerank_fixed_point_semantics(spark):
         pagerank(df, iters=0)
     with _pt.raises(ValueError, match="damping"):
         pagerank(df, damping_micro=1_000_000)
-
-
-def test_deduplicate_corpus_keep_best(spark):
-    """Quality-aware purge: per-cluster argmax on (quality DESC, id ASC),
-    NULL quality sorts worst, unclustered docs all survive."""
-    from literature_to_facts_spark.datapipe.dedup import (
-        deduplicate_corpus_keep_best,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            (10, 1.0), (11, 9.0), (12, 9.0),   # cluster {10,11,12}: 11 wins (tie 11<12)
-            (13, None), (14, 0.5),             # cluster {13,14}: NULL worst -> 14 wins
-            (15, 0.0),                         # unclustered
-        ],
-        "doc_id long, quality double",
-    )
-    pairs = spark.createDataFrame(
-        [(10, 11), (11, 12), (13, 14)], "id_a long, id_b long"
-    )
-    kept = {
-        r["doc_id"]
-        for r in deduplicate_corpus_keep_best(
-            docs, pairs, quality_col="quality"
-        ).collect()
-    }
-    assert kept == {11, 14, 15}
-
-
-def test_tokenize_encode_methods_agree(spark):
-    """broadcast_map (mapInPandas + broadcast dict) and join (posexplode +
-    broadcast join + ordered regroup) produce identical encodings; NULL /
-    empty / OOV semantics; collision guard."""
-    from literature_to_facts_spark.datapipe.textstats import tokenize_encode
-
-    docs = spark.createDataFrame(
-        [
-            (1, "The cat SAT on the mat"),
-            (2, "unknown words only"),
-            (3, ""),
-            (4, None),
-            (5, "the the the"),
-        ],
-        "doc_id long, text string",
-    )
-    vocab = spark.createDataFrame(
-        [("the", 1), ("cat", 2), ("sat", 3), ("on", 4), ("mat", 5)],
-        "token string, token_id long",
-    )
-    exp = {
-        1: ([1, 2, 3, 4, 1, 5], 0),
-        2: ([0, 0, 0], 3),
-        3: ([], 0),
-        5: ([1, 1, 1], 0),
-    }
-    for method in ("broadcast_map", "join"):
-        got = {
-            r.doc_id: (r.token_ids, r.n_oov)
-            for r in tokenize_encode(docs, vocab, method=method).collect()
-        }
-        assert got[4] == (None, None), method
-        for k, v in exp.items():
-            assert got[k] == v, (method, k)
-
-    import pytest as _pt
-
-    with _pt.raises(ValueError, match="token_ids"):
-        tokenize_encode(docs.withColumn("token_ids", F.lit("x")), vocab)
-    with _pt.raises(ValueError, match="method"):
-        tokenize_encode(docs, vocab, method="nope")
 
 
 def test_triangle_count_semantics_and_cap(spark):

@@ -1,3 +1,122 @@
+from pyspark.sql import functions as F
+
+
+# ---------------------------------------------------------------------------
+# html_extract_text / html_extract_links
+# ---------------------------------------------------------------------------
+
+
+def test_html_extract_text_semantics(spark):
+    """HTML strip chain: script/style/comment removal, tag strip, entity
+    decode order (&amp; last), binary ascii-replace decode, NULL pass."""
+    from pyspark.sql import Row
+
+    from literature_to_facts_spark.datapipe.html import html_extract_text
+
+    page = (
+        '<html><head><STYLE a="b">p{}</STYLE><script>if(1<2){x()}</script>'
+        "</head><body><!-- no --><p>A&amp;lt;B</p>\n\t<b>bold</b>"
+        "&nbsp;&quot;q&#39; </body></html>"
+    )
+    df = spark.createDataFrame(
+        [Row(doc_id=1, html=page), Row(doc_id=2, html=None)]
+    )
+    out = {r.doc_id: r.extracted_text for r in html_extract_text(df).collect()}
+    # &amp;lt; single-pass decodes to the literal &lt;  (amp decoded LAST)
+    assert out[1] == 'A&lt;B bold "q\''
+    assert out[2] is None
+
+    # binary column: ascii-replace decode (U+FFFD for non-ascii bytes),
+    # checked against python's own decode('ascii', 'replace')
+    import re as _re
+
+    raw = b"<p>caf\xc3\xa9</p>"
+    dfb = spark.createDataFrame([Row(doc_id=1, html=bytearray(raw))])
+    got = html_extract_text(dfb).collect()[0].extracted_text
+    exp = _re.sub(r"<[^>]+>", " ", raw.decode("ascii", "replace")).strip()
+    assert got == exp == "caf��"
+
+    import pytest as _pt
+    with _pt.raises(ValueError, match="extracted_text"):
+        html_extract_text(df.withColumn("extracted_text", df.html))
+
+
+def test_html_extract_links_resolution(spark):
+    """Anchor extraction + resolution: quote styles, scheme filtering,
+    protocol/root/dir-relative resolution, fragment strip, invalid-page
+    guard, html column dropped, collision guards."""
+    from pyspark.sql import Row
+
+    from literature_to_facts_spark.datapipe.html import html_extract_links
+
+    page = (
+        '<body><a href="https://CDN.Example.com/lib.html#frag">abs</a>'
+        "<A id='n' HREF='/root.html'>root</A>"
+        "<a href=rel/x.html>unquoted rel</a>"
+        '<a href="//mirror.net/m">proto-rel</a>'
+        '<a href="mailto:a@b.c">drop</a>'
+        '<a href="#sec">drop</a>'
+        '<a href = "sib.html">spaced eq</a>'
+    )
+    df = spark.createDataFrame(
+        [
+            Row(doc_id=1, url="https://Ex.org:8443/a/b/page.html?q=1", html=page),
+            Row(doc_id=2, url="not-a-url", html=page),
+            Row(doc_id=3, url=None, html=page),
+            Row(doc_id=4, url="https://ex.org/", html="<p>no links</p>"),
+        ]
+    )
+    out = html_extract_links(df)
+    assert "html" not in out.columns
+    rows = out.collect()
+    by_doc = {}
+    for r in rows:
+        by_doc.setdefault(r.doc_id, []).append((r.link_url, r.link_host))
+    # valid page: 5 links survive (mailto + fragment-only dropped)
+    assert sorted(by_doc[1]) == sorted(
+        [
+            ("https://CDN.Example.com/lib.html", "cdn.example.com"),
+            ("https://ex.org:8443/root.html", "ex.org"),
+            ("https://ex.org:8443/a/b/rel/x.html", "ex.org"),
+            ("https://mirror.net/m", "mirror.net"),
+            ("https://ex.org:8443/a/b/sib.html", "ex.org"),
+        ]
+    )
+    # invalid / NULL page urls: only the fully-absolute http(s) link
+    # survives (protocol-relative needs the page scheme -> dropped too)
+    for d in (2, 3):
+        assert by_doc[d] == [
+            ("https://CDN.Example.com/lib.html", "cdn.example.com")
+        ]
+    assert 4 not in by_doc  # no anchors -> no rows
+
+    # binary html decodes like the text path
+    dfb = spark.createDataFrame(
+        [Row(doc_id=1, url="https://e.com/", html=bytearray(b'<a href="/x">b</a>'))]
+    )
+    got = html_extract_links(dfb).collect()
+    assert [(r.link_url, r.link_host) for r in got] == [("https://e.com/x", "e.com")]
+
+    # dedup collapses repeated links
+    dfd = spark.createDataFrame(
+        [Row(doc_id=1, url="https://e.com/", html='<a href="/x">1</a><a href="/x#f">2</a>')]
+    )
+    assert html_extract_links(dfd, dedup=True).count() == 1
+    assert html_extract_links(dfd).count() == 2
+
+    import pytest as _pt
+
+    with _pt.raises(ValueError, match="_pg_base"):
+        html_extract_links(df.withColumn("_pg_base", F.lit("x")))
+    with _pt.raises(ValueError, match="link_url"):
+        html_extract_links(df.withColumn("link_url", F.lit("x")))
+
+    # plan pin: the default path is scan-fused — zero Exchange
+    plan = html_extract_links(df)._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan
+
+
+
 
 
 # ---------------------------------------------------------------------------
@@ -289,8 +408,6 @@ def test_main_content_guards(spark):
 
 
 # ------------------------------------------- incremental anchor profile
-
-from pyspark.sql import functions as F  # noqa: E402
 
 def _anchor_links(spark):
     """(link_url, anchor_text, src_host) edge rows with cross-batch anchor

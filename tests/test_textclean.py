@@ -381,82 +381,6 @@ def test_pii_oracle_null_text_parity(spark):
     assert by_id[9][2] == 2 and by_id[9][4] is True  # own ip + planted suffix
 
 
-def test_blocklist_filter_semantics(spark):
-    from literature_to_facts_spark.datapipe.textstats import blocklist_filter
-
-    docs = spark.createDataFrame(
-        [
-            (1, "the Merge ran a batch job"),  # case-insensitive, 2 terms
-            (2, "merge merge merge"),  # distinct terms, not occurrences
-            (3, "submerged batches"),  # substrings do NOT match
-            (4, None),
-            (5, "clean text"),
-        ],
-        ["doc_id", "text"],
-    )
-    out = {r["doc_id"]: r for r in blocklist_filter(docs, ["merge", "BATCH"]).collect()}
-    assert out[1]["n_blocked_terms"] == 2 and out[1]["blocked"] is True
-    assert out[2]["n_blocked_terms"] == 1
-    assert out[3]["n_blocked_terms"] == 0 and out[3]["blocked"] is False
-    assert out[4]["n_blocked_terms"] == 0 and out[4]["blocked"] is False
-    assert out[5]["blocked"] is False
-    # zero shuffle
-    plan = blocklist_filter(docs, ["merge"])._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-
-
-def test_blocklist_filter_backslash_terms(spark):
-    """A blocklist term containing a backslash must match a token that is
-    exactly that term (SQL-literal escaping round-trips)."""
-    from literature_to_facts_spark.datapipe.textstats import blocklist_filter
-
-    docs = spark.createDataFrame(
-        [(1, "path a\\b here"), (2, "term o'clock quoted")], ["doc_id", "text"]
-    )
-    out = {
-        r["doc_id"]: r["n_blocked_terms"]
-        for r in blocklist_filter(docs, ["a\\b", "o'clock"]).collect()
-    }
-    assert out[1] == 1 and out[2] == 1
-
-
-def test_token_topk_semantics_and_plan(spark):
-    from literature_to_facts_spark.datapipe.textstats import token_topk
-
-    docs = spark.createDataFrame(
-        [
-            (1, "the the the alpha beta"),
-            (2, "the alpha gamma"),
-            (3, None),
-        ],
-        ["doc_id", "text"],
-    )
-    rows = token_topk(docs, k=3).collect()
-    assert [(r["token"], r["n_occurrences"], r["n_docs"]) for r in rows] == [
-        ("the", 4, 2),
-        ("alpha", 2, 2),
-        ("beta", 1, 1),  # tie with gamma broken by token asc
-    ]
-    plan = token_topk(docs, k=3)._jdf.queryExecution().executedPlan().toString()
-    # top-k without a global sort, skew handled by map-side partials
-    assert "TakeOrderedAndProject" in plan
-    assert "partial_count" in plan
-
-
-def test_blocklist_filter_empty_terms(spark):
-    """An empty blocklist blocks nothing — and must not fail analysis
-    (array() compiles as array<void>, poisoning array_intersect)."""
-    from literature_to_facts_spark.datapipe.textstats import blocklist_filter
-
-    docs = spark.createDataFrame(
-        [(1, "anything at all"), (2, None)], ["doc_id", "text"]
-    )
-    rows = {r["doc_id"]: r for r in blocklist_filter(docs, []).collect()}
-    assert rows[1]["n_blocked_terms"] == 0 and rows[1]["blocked"] is False
-    assert rows[2]["n_blocked_terms"] == 0 and rows[2]["blocked"] is False
-    assert dict(blocklist_filter(docs, []).dtypes)["n_blocked_terms"] == "bigint"
-
-
 def test_line_dedup_incremental_index_param_stamp(spark, tmp_path):
     """build_line_frequency_index stamps min_line_chars into the line_key
     field metadata; the stamp survives a parquet round-trip and a
@@ -715,116 +639,6 @@ def test_span_dedup_clean_collision_guard(spark):
     )
     with _pt.raises(ValueError, match="clean_text"):
         span_dedup_clean(docs)
-
-
-def test_html_extract_text_semantics(spark):
-    """HTML strip chain: script/style/comment removal, tag strip, entity
-    decode order (&amp; last), binary ascii-replace decode, NULL pass."""
-    from pyspark.sql import Row
-
-    from literature_to_facts_spark.datapipe.html import html_extract_text
-
-    page = (
-        '<html><head><STYLE a="b">p{}</STYLE><script>if(1<2){x()}</script>'
-        "</head><body><!-- no --><p>A&amp;lt;B</p>\n\t<b>bold</b>"
-        "&nbsp;&quot;q&#39; </body></html>"
-    )
-    df = spark.createDataFrame(
-        [Row(doc_id=1, html=page), Row(doc_id=2, html=None)]
-    )
-    out = {r.doc_id: r.extracted_text for r in html_extract_text(df).collect()}
-    # &amp;lt; single-pass decodes to the literal &lt;  (amp decoded LAST)
-    assert out[1] == 'A&lt;B bold "q\''
-    assert out[2] is None
-
-    # binary column: ascii-replace decode (U+FFFD for non-ascii bytes),
-    # checked against python's own decode('ascii', 'replace')
-    import re as _re
-
-    raw = b"<p>caf\xc3\xa9</p>"
-    dfb = spark.createDataFrame([Row(doc_id=1, html=bytearray(raw))])
-    got = html_extract_text(dfb).collect()[0].extracted_text
-    exp = _re.sub(r"<[^>]+>", " ", raw.decode("ascii", "replace")).strip()
-    assert got == exp == "caf��"
-
-    import pytest as _pt
-    with _pt.raises(ValueError, match="extracted_text"):
-        html_extract_text(df.withColumn("extracted_text", df.html))
-
-
-def test_html_extract_links_resolution(spark):
-    """Anchor extraction + resolution: quote styles, scheme filtering,
-    protocol/root/dir-relative resolution, fragment strip, invalid-page
-    guard, html column dropped, collision guards."""
-    from pyspark.sql import Row
-
-    from literature_to_facts_spark.datapipe.html import html_extract_links
-
-    page = (
-        '<body><a href="https://CDN.Example.com/lib.html#frag">abs</a>'
-        "<A id='n' HREF='/root.html'>root</A>"
-        "<a href=rel/x.html>unquoted rel</a>"
-        '<a href="//mirror.net/m">proto-rel</a>'
-        '<a href="mailto:a@b.c">drop</a>'
-        '<a href="#sec">drop</a>'
-        '<a href = "sib.html">spaced eq</a>'
-    )
-    df = spark.createDataFrame(
-        [
-            Row(doc_id=1, url="https://Ex.org:8443/a/b/page.html?q=1", html=page),
-            Row(doc_id=2, url="not-a-url", html=page),
-            Row(doc_id=3, url=None, html=page),
-            Row(doc_id=4, url="https://ex.org/", html="<p>no links</p>"),
-        ]
-    )
-    out = html_extract_links(df)
-    assert "html" not in out.columns
-    rows = out.collect()
-    by_doc = {}
-    for r in rows:
-        by_doc.setdefault(r.doc_id, []).append((r.link_url, r.link_host))
-    # valid page: 5 links survive (mailto + fragment-only dropped)
-    assert sorted(by_doc[1]) == sorted(
-        [
-            ("https://CDN.Example.com/lib.html", "cdn.example.com"),
-            ("https://ex.org:8443/root.html", "ex.org"),
-            ("https://ex.org:8443/a/b/rel/x.html", "ex.org"),
-            ("https://mirror.net/m", "mirror.net"),
-            ("https://ex.org:8443/a/b/sib.html", "ex.org"),
-        ]
-    )
-    # invalid / NULL page urls: only the fully-absolute http(s) link
-    # survives (protocol-relative needs the page scheme -> dropped too)
-    for d in (2, 3):
-        assert by_doc[d] == [
-            ("https://CDN.Example.com/lib.html", "cdn.example.com")
-        ]
-    assert 4 not in by_doc  # no anchors -> no rows
-
-    # binary html decodes like the text path
-    dfb = spark.createDataFrame(
-        [Row(doc_id=1, url="https://e.com/", html=bytearray(b'<a href="/x">b</a>'))]
-    )
-    got = html_extract_links(dfb).collect()
-    assert [(r.link_url, r.link_host) for r in got] == [("https://e.com/x", "e.com")]
-
-    # dedup collapses repeated links
-    dfd = spark.createDataFrame(
-        [Row(doc_id=1, url="https://e.com/", html='<a href="/x">1</a><a href="/x#f">2</a>')]
-    )
-    assert html_extract_links(dfd, dedup=True).count() == 1
-    assert html_extract_links(dfd).count() == 2
-
-    import pytest as _pt
-
-    with _pt.raises(ValueError, match="_pg_base"):
-        html_extract_links(df.withColumn("_pg_base", F.lit("x")))
-    with _pt.raises(ValueError, match="link_url"):
-        html_extract_links(df.withColumn("link_url", F.lit("x")))
-
-    # plan pin: the default path is scan-fused — zero Exchange
-    plan = html_extract_links(df)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
 
 
 # ----------------------------------------------- group-scoped (per-host) mode
