@@ -40,6 +40,15 @@ the option (a host's own value then applies unchanged): the
 ``scripts/run_pipeline.py --period`` loop, the test suite's session and the
 ``bench.py`` / ``scripts/check_oracles.py`` harnesses (C1-only, on 4 cores:
 check_oracles at sf0.01 185 -> 248 s, the quick bench 274 -> 392 s).
+
+A short-lived driver JVM that ``get_spark`` launches itself also maps the
+Spark classes from a class-data-sharing archive (``cds``), primed by the
+first such run on a host: the archive options join the C1 option in
+``spark.driver.defaultJavaOptions``, computed per launch, so
+``LONG_LIVED_DRIVER_CONF`` and a caller's own value drop them too, and
+``DRIVER_JAVA_OPTIONS`` stays the static C1 string.  A driver JVM that
+already exists (``spark-submit``, ``PYSPARK_GATEWAY_PORT``) gets no
+archive; nor do executors.
 """
 
 from __future__ import annotations
@@ -47,7 +56,10 @@ from __future__ import annotations
 import os
 import time
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+from literature_to_facts_spark import cds
 
 # C1-only JIT for the short-lived driver JVM (module docstring)
 DRIVER_JAVA_OPTIONS = "-XX:TieredStopAtLevel=1"
@@ -59,6 +71,15 @@ def pin_utc() -> None:
     """Pin the process TZ to UTC (parity requirement, see module docstring)."""
     os.environ["TZ"] = "UTC"
     time.tzset()
+
+
+def _driver_archive(conf: dict) -> cds.Archive | None:
+    """The class-data-sharing archive for a short-lived driver JVM that
+    ``get_spark`` is about to launch with ``conf`` (module docstring)."""
+    if (conf.get("spark.driver.defaultJavaOptions") != DRIVER_JAVA_OPTIONS
+            or SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ):
+        return None
+    return cds.plan(conf)
 
 
 def get_spark(
@@ -108,8 +129,13 @@ def get_spark(
     }
     if extra_conf:
         conf.update(extra_conf)
+    archive = _driver_archive(conf)
+    if archive is not None:
+        conf["spark.driver.defaultJavaOptions"] += " " + archive.java_options
     for k, v in conf.items():
         if v is not None:
             builder = builder.config(k, v)
 
-    return builder.getOrCreate()
+    if archive is None:
+        return builder.getOrCreate()
+    return archive.launch(builder.getOrCreate)

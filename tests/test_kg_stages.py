@@ -147,11 +147,12 @@ def test_read_triples_keeps_numeric_looking_pred_a_string(spark, docs_df, sides,
     assert [r["pred"] for r in preds] == ["1999"] and preds[0]["count"] > 0
 
 
-def test_driver_jvm_gets_c1_and_caller_java_options(spark):
+def test_driver_jvm_gets_c1_and_caller_java_options(spark, tmp_path):
     """The driver's C1-only option reaches the JVM together with a caller's
     own extraJavaOptions (a fresh JVM: the session fixture's is already up);
     the fixture's long-lived session, built with ``LONG_LIVED_DRIVER_CONF``,
-    keeps C2."""
+    keeps C2.  The fresh JVM's class-data-sharing archive goes to the test's
+    own cache directory, not the user's."""
     import json
     import os
     import subprocess
@@ -167,7 +168,7 @@ def test_driver_jvm_gets_c1_and_caller_java_options(spark):
         "s.stop()\n"
     )
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    env = {**os.environ, "SPARK_GRAFT_DRIVER_MEM": "1g"}
+    env = {**os.environ, "SPARK_GRAFT_DRIVER_MEM": "1g", "XDG_CACHE_HOME": str(tmp_path)}
     r = subprocess.run(
         [sys.executable, "-c", probe],
         capture_output=True, text=True, cwd=repo, env=env, timeout=300,
