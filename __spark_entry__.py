@@ -1396,8 +1396,8 @@ def _url_dedup_oracle() -> str:
 
 
 # ---------------------------------------------------------------------------
-# KG store-side query lane (engine/kgquery.py): statistics + path joins over
-# the materialized triple table
+# KG store-side query lane (engine/kgquery.py): statistics + pattern joins
+# over the materialized triple table
 # ---------------------------------------------------------------------------
 
 _KG_MENTION_RE = "(spark|window|merge|batch)"
@@ -1405,8 +1405,8 @@ _KG_MENTION_RE = "(spark|window|merge|batch)"
 
 def _kg_rich_triples(spark, sf_dir):
     """Melted doc triples + per-doc mention-count triples — the entry()
-    flagship's triple table, reused by the store-side query lane so the
-    characteristic sets actually vary across subjects.  `_spread` because
+    flagship's triple table, reused by the store-side query lane so
+    subjects carry different predicate sets.  `_spread` because
     the mention leg regex-scans every document's text (compute-heavy over
     the single-row-group local fixtures)."""
     docs = _spread(_t(spark, sf_dir, "documents"))
@@ -1466,77 +1466,6 @@ def q_kg_predicate_stats(spark, sf_dir):
     from literature_to_facts_spark.engine.kgquery import predicate_stats
 
     return predicate_stats(_kg_rich_triples(spark, sf_dir))
-
-
-def q_kg_characteristic_sets(spark, sf_dir):
-    """Characteristic-set histogram (Neumann & Moerkotte ICDE'11) of the
-    flagship triple table: one row per distinct per-subject predicate set."""
-    from literature_to_facts_spark.engine.kgquery import characteristic_sets
-
-    return characteristic_sets(_kg_rich_triples(spark, sf_dir))
-
-
-def q_kg_entity_cooccurrence(spark, sf_dir):
-    """Co-mention edge building: unordered keyword-entity pairs sharing a
-    document, with distinct-doc counts and the quadratic-blowup cap."""
-    from literature_to_facts_spark.engine.kgquery import entity_cooccurrence
-
-    docs = _t(spark, sf_dir, "documents")
-    mentions = docs.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.explode(
-            F.regexp_extract_all(F.col("text"), F.lit(_KG_MENTION_RE), F.lit(1))
-        ).alias("entity"),
-    )
-    return entity_cooccurrence(mentions, max_entities_per_doc=64)
-
-
-def q_kg_two_hop(spark, sf_dir):
-    """Two-triple-pattern path join (SPARQL ``?src p1 ?doc . ?doc p2 ?ent``):
-    which entities each source co-occurs with, via how many distinct docs."""
-    from literature_to_facts_spark.engine.kgquery import two_hop
-
-    docs = _t(spark, sf_dir, "documents")
-    ab = docs.select(
-        F.col("source").alias("src"), F.col("doc_id").cast("bigint").alias("dst")
-    )
-    bc = docs.select(
-        F.col("doc_id").cast("bigint").alias("src"),
-        F.explode(
-            F.regexp_extract_all(F.col("text"), F.lit(_KG_MENTION_RE), F.lit(1))
-        ).alias("dst"),
-    )
-    return two_hop(ab, bc)
-
-
-def q_kg_predicate_stats_incremental(spark, sf_dir):
-    """Delta maintenance of the predicate-cardinality statistics
-    (engine/kgquery.predicate_stats_incremental, probe-shaped): the new
-    batch's triples (subj % 5 == 0, a ~20% daily delta)
-    update the persisted stats via an existence probe against the
-    (pred, role, value) pair index — the history triple store is never
-    rescanned.  Full SQL oracle: the result must be bit-equal to the
-    from-scratch ``predicate_stats`` over the ENTIRE corpus, so DuckDB
-    recomputes exactly that."""
-    from literature_to_facts_spark.engine.kgquery import (
-        build_predicate_pair_index,
-        predicate_stats,
-        predicate_stats_incremental,
-    )
-
-    # the triple table feeds THREE consumers here (batch, history index,
-    # history stats) — persist it once or the regex-mention subtree runs
-    # three times (operationally it is a materialized table anyway)
-    triples = _kg_rich_triples(spark, sf_dir).persist()
-    reg = [triples]
-    new = triples.where(F.col("subj") % 5 == 0)
-    old = triples.where(F.col("subj") % 5 != 0)
-    out = predicate_stats_incremental(
-        new, build_predicate_pair_index(old), predicate_stats(old),
-        cache_registry=reg,
-    )
-    out._l2f_cache_registry = reg
-    return out
 
 
 # robots/canonical fixture: each page carries one of four robots-meta shapes
@@ -1628,32 +1557,6 @@ def _html_meta_oracle() -> str:
                  AS canonical_href
         FROM x
     """
-
-
-def q_kg_charsets_incremental(spark, sf_dir):
-    """Delta maintenance of the characteristic-set histogram
-    (engine/kgquery.characteristic_sets_incremental, probe-shaped): the
-    new batch's triples (subj % 5 == 0) can MOVE subjects between
-    histogram shapes, so the update transfers counts
-    (decrement old shape, increment new) for touched subjects only — the
-    history triple store is never rescanned.  Full SQL oracle: bit-equal
-    to the from-scratch histogram over the ENTIRE corpus."""
-    from literature_to_facts_spark.engine.kgquery import (
-        build_subject_pred_index,
-        characteristic_sets,
-        characteristic_sets_incremental,
-    )
-
-    triples = _kg_rich_triples(spark, sf_dir).persist()
-    reg = [triples]
-    new = triples.where(F.col("subj") % 5 == 0)
-    old = triples.where(F.col("subj") % 5 != 0)
-    out = characteristic_sets_incremental(
-        new, build_subject_pred_index(old), characteristic_sets(old),
-        cache_registry=reg,
-    )
-    out._l2f_cache_registry = reg
-    return out
 
 
 # canonical-collision variant of the meta fixture: absolute canonicals key on
@@ -1908,22 +1811,6 @@ def _crawl_ingest_gate_oracle() -> str:
     """
 
 
-def q_kg_cooccurrence_pmi(spark, sf_dir):
-    """PMI-weighted co-mention edges (engine/kgquery.cooccurrence_pmi):
-    association scores over the same keyword-entity mention frame as
-    kg_entity_cooccurrence, document frequencies broadcast-joined."""
-    from literature_to_facts_spark.engine.kgquery import cooccurrence_pmi
-
-    docs = _spread(_t(spark, sf_dir, "documents"))
-    mentions = docs.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.explode(
-            F.regexp_extract_all(F.col("text"), F.lit(_KG_MENTION_RE), F.lit(1))
-        ).alias("entity"),
-    )
-    return cooccurrence_pmi(mentions, max_entities_per_doc=64)
-
-
 # anchor-text fixture: every page names target t{m5}.example.com/p twice
 # ("Read <b>More</b>" and "story {m3}" — a real frequency ranking), links a
 # per-doc root-relative page with messy whitespace, an unquoted dir-relative
@@ -2099,107 +1986,6 @@ def q_kg_star_join(spark, sf_dir):
     )
     out._l2f_cache_registry = [triples]
     return out
-
-
-def q_kg_triple_provenance(spark, sf_dir):
-    """Per-fact provenance aggregation (engine/kgquery.triple_provenance):
-    raw co-mention assertions — one row per keyword-pair INSTANCE per
-    document (occurrence-count multiplicity, not per-doc dedup) with a
-    per-doc crawl stamp — collapse to set semantics WITHOUT losing the
-    evidence: distinct asserting docs, raw assertion count, first/last
-    seen (epoch micros).  The reference's graph build drops this on the
-    floor (facts/core.py:197-226); a web KG gates and re-crawls by it."""
-    from literature_to_facts_spark.engine.kgquery import triple_provenance
-
-    docs = _spread(_t(spark, sf_dir, "documents"))
-    m = docs.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.explode(
-            F.regexp_extract_all(F.col("text"), F.lit(_KG_MENTION_RE), F.lit(1))
-        ).alias("kw"),
-    )
-    # every occurrence pairs with every occurrence of a later keyword in
-    # the same doc: n_a * n_b assertion rows per (doc, pair) — real
-    # multiplicity (entity_cooccurrence's cap guards the unbounded case;
-    # the fixture mention counts are prose-bounded)
-    a = m.select("doc_id", F.col("kw").alias("subj"))
-    b = m.select("doc_id", F.col("kw").alias("obj"))
-    assertions = (
-        a.join(b, on="doc_id")
-        .where(F.col("subj") < F.col("obj"))
-        .select(
-            "subj",
-            F.lit("comentions").alias("pred"),
-            "obj",
-            "doc_id",
-            (F.col("doc_id") * 3600000000 + F.lit(1500000000000000)).alias(
-                "ts_us"
-            ),
-        )
-    )
-    return triple_provenance(assertions, doc_col="doc_id", ts_col="ts_us")
-
-
-# deterministic 37-node host graph with cycles and branching (two functional
-# edge maps per doc) — the property-path fixture; identical in both engines
-_PATH_EDGES_EXPRS = [
-    ("concat('h', cast(doc_id % 37 as string))",
-     "concat('h', cast((doc_id * 7 + 3) % 37 as string))"),
-    ("concat('h', cast(doc_id % 37 as string))",
-     "concat('h', cast((doc_id * 5 + 11) % 37 as string))"),
-]
-_PATH_MAX_DEPTH = 4
-
-
-def q_kg_path_closure(spark, sf_dir):
-    """Bounded-depth property-path closure (engine/kgquery.path_closure):
-    SPARQL ``?a link{1,4} ?b`` over a cyclic host graph — every reachable
-    (src, dst) pair with its MIN-hop depth.  Frontier-pruned BFS: round d
-    joins only pairs first reached at d-1 (persisted, anti-joined against
-    the accumulated closure), so cycles terminate and each output pair is
-    expanded exactly once.  Oracle = DuckDB recursive CTE (min depth per
-    pair), bit-exact including the cycle/self-loop rows."""
-    from literature_to_facts_spark.engine.kgquery import path_closure
-
-    docs = _t(spark, sf_dir, "documents")
-    parts = [
-        docs.selectExpr(f"{s} AS src", f"{d} AS dst")
-        for s, d in _PATH_EDGES_EXPRS
-    ]
-    edges = parts[0].unionByName(parts[1])
-    reg = []
-    # early_exit=False: the fixture graph does not converge before
-    # max_depth, so the per-round eager head(1) probes only serialized 3
-    # extra driver round-trips into the timed build; the lazy finite chain
-    # computes the identical closure (beyond-convergence rounds are empty
-    # joins AQE collapses)
-    out = path_closure(
-        edges, _PATH_MAX_DEPTH, cache_registry=reg, early_exit=False
-    )
-    out._l2f_cache_registry = reg
-    return out
-
-
-def _kg_path_closure_oracle() -> str:
-    dup = " UNION ALL ".join(
-        f"SELECT {s.replace('as string', 'as varchar')} AS src, "
-        f"{d.replace('as string', 'as varchar')} AS dst FROM documents"
-        for s, d in _PATH_EDGES_EXPRS
-    )
-    return f"""
-        WITH RECURSIVE e AS (
-          SELECT DISTINCT src, dst FROM ({dup})
-        ),
-        r AS (
-          SELECT src, dst, 1 AS depth FROM e
-          UNION
-          SELECT r.src, e2.dst, r.depth + 1
-          FROM r JOIN e e2 ON r.dst = e2.src
-          WHERE r.depth < {_PATH_MAX_DEPTH}
-        )
-        SELECT src, dst, CAST(MIN(depth) AS INTEGER) AS depth
-        FROM r GROUP BY src, dst
-    """
 
 
 # main-content fixture: nav (link-saturated), short heading, two long
@@ -2552,6 +2338,14 @@ def _web_warc_parse_oracle() -> str:
     """
 
 
+# deterministic 37-node host graph with cycles and branching (two functional
+# edge maps per doc) — the triangle-count fixture; identical in both engines
+_HOST_EDGES_EXPRS = [
+    ("concat('h', cast(doc_id % 37 as string))",
+     "concat('h', cast((doc_id * 7 + 3) % 37 as string))"),
+    ("concat('h', cast(doc_id % 37 as string))",
+     "concat('h', cast((doc_id * 5 + 11) % 37 as string))"),
+]
 _TRIANGLE_MAX_DEGREE = 10_000
 
 
@@ -2559,15 +2353,14 @@ def q_web_triangle_count(spark, sf_dir):
     """Per-host triangle counts over the cyclic host graph (datapipe/graphs.
     triangle_count): the link-farm density signal — canonical undirected
     edges, ordered-wedge enumeration (each triangle once), degree cap for
-    super-hubs.  Shares the path-closure fixture; oracle is the same
-    two-join enumeration in DuckDB, bit-exact including degrees and the
-    cap flag."""
+    super-hubs.  Oracle is the same two-join enumeration in DuckDB,
+    bit-exact including degrees and the cap flag."""
     from literature_to_facts_spark.datapipe.graphs import triangle_count
 
     docs = _t(spark, sf_dir, "documents")
     parts = [
         docs.selectExpr(f"{s} AS src", f"{d} AS dst")
-        for s, d in _PATH_EDGES_EXPRS
+        for s, d in _HOST_EDGES_EXPRS
     ]
     return triangle_count(
         parts[0].unionByName(parts[1]), max_degree=_TRIANGLE_MAX_DEGREE
@@ -2578,7 +2371,7 @@ def _web_triangle_count_oracle() -> str:
     dup = " UNION ALL ".join(
         f"SELECT {s.replace('as string', 'as varchar')} AS src, "
         f"{d.replace('as string', 'as varchar')} AS dst FROM documents"
-        for s, d in _PATH_EDGES_EXPRS
+        for s, d in _HOST_EDGES_EXPRS
     )
     cap = _TRIANGLE_MAX_DEGREE
     return f"""
@@ -2619,10 +2412,10 @@ def _web_triangle_count_oracle() -> str:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # Registry order is the driver correctness gate's sampling order (it
-    # checks the first 50 of these 58 entries): newest lanes first (the
-    # round-6 web/kg-query/url waves lead), the long-green original
-    # kg/dedup/text queries follow.  Oracles and the bench address queries
-    # by NAME — the registry order carries no semantics.
+    # checks the first 50 entries, which are now all 50): newest lanes
+    # first (the round-6 web/kg-query/url waves lead), the long-green
+    # original kg/dedup/text queries follow.  Oracles and the bench address
+    # queries by NAME — the registry order carries no semantics.
     return {
         "web_warc_parse": q_web_warc_parse,
         "web_frontier_rank": q_web_frontier_rank,
@@ -2630,20 +2423,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_line_dedup_grouped": q_text_line_dedup_grouped,
         "web_anchor_text_incremental": q_web_anchor_text_incremental,
         "html_main_content": q_html_main_content,
-        "kg_path_closure": q_kg_path_closure,
-        "kg_triple_provenance": q_kg_triple_provenance,
         "kg_star_join": q_kg_star_join,
         "web_anchor_text": q_web_anchor_text,
         "kg_pattern_join": q_kg_pattern_join,
         "crawl_ingest_gate": q_crawl_ingest_gate,
-        "kg_charsets_incremental": q_kg_charsets_incremental,
         "url_canonical_dedup": q_url_canonical_dedup,
         "html_meta_robots": q_html_meta_robots,
-        "kg_cooccurrence_pmi": q_kg_cooccurrence_pmi,
-        "kg_predicate_stats_incremental": q_kg_predicate_stats_incremental,
-        "kg_two_hop": q_kg_two_hop,
-        "kg_entity_cooccurrence": q_kg_entity_cooccurrence,
-        "kg_characteristic_sets": q_kg_characteristic_sets,
         "kg_predicate_stats": q_kg_predicate_stats,
         "url_blocklist": q_url_blocklist,
         "url_latest_snapshot": q_url_latest_snapshot,
@@ -3327,91 +3112,8 @@ def oracle_sql() -> dict[str, str]:
                    CAST(COUNT(DISTINCT obj) AS BIGINT) AS n_obj
             FROM triples GROUP BY pred
         """,
-        "kg_characteristic_sets": f"""
-            WITH triples AS ({_KG_RICH_TRIPLES_DUCK})
-            SELECT pred_set, CAST(COUNT(*) AS BIGINT) AS n_subj,
-                   CAST(MIN(np) AS BIGINT) AS n_preds
-            FROM (
-              SELECT subj,
-                     array_to_string(list_sort(list_distinct(list(pred))), ',') AS pred_set,
-                     len(list_distinct(list(pred))) AS np
-              FROM triples GROUP BY subj
-            ) GROUP BY pred_set
-        """,
-        "kg_entity_cooccurrence": f"""
-            WITH de AS (
-              SELECT DISTINCT CAST(doc_id AS BIGINT) AS doc,
-                     unnest(regexp_extract_all(text, '{_KG_MENTION_RE}', 1)) AS ent
-              FROM documents
-            ),
-            keep AS (SELECT doc FROM de GROUP BY doc HAVING COUNT(*) <= 64)
-            SELECT a.ent AS entity_a, b.ent AS entity_b,
-                   CAST(COUNT(*) AS BIGINT) AS n_docs
-            FROM de a
-            JOIN de b ON a.doc = b.doc AND a.ent < b.ent
-            JOIN keep k ON a.doc = k.doc
-            GROUP BY a.ent, b.ent
-        """,
-        "kg_two_hop": f"""
-            WITH ab AS (
-              SELECT DISTINCT source AS a, CAST(doc_id AS BIGINT) AS b FROM documents
-            ),
-            bc AS (
-              SELECT DISTINCT CAST(doc_id AS BIGINT) AS b,
-                     unnest(regexp_extract_all(text, '{_KG_MENTION_RE}', 1)) AS c
-              FROM documents
-            )
-            SELECT a, c, CAST(COUNT(DISTINCT b) AS BIGINT) AS n_mid
-            FROM ab JOIN bc USING (b) GROUP BY a, c
-        """,
-        # the incremental contract IS "bit-equal to the full recompute over
-        # old ∪ batch", so the oracle is the full-corpus stats query
-        "kg_predicate_stats_incremental": f"""
-            WITH triples AS ({_KG_RICH_TRIPLES_DUCK})
-            SELECT pred, CAST(COUNT(*) AS BIGINT) AS n_triples,
-                   CAST(COUNT(DISTINCT subj) AS BIGINT) AS n_subj,
-                   CAST(COUNT(DISTINCT obj) AS BIGINT) AS n_obj
-            FROM triples GROUP BY pred
-        """,
-        "kg_cooccurrence_pmi": f"""
-            WITH de AS (
-              SELECT DISTINCT CAST(doc_id AS BIGINT) AS doc,
-                     unnest(regexp_extract_all(text, '{_KG_MENTION_RE}', 1)) AS ent
-              FROM documents
-            ),
-            keep AS (SELECT doc FROM de GROUP BY doc HAVING COUNT(*) <= 64),
-            pairs AS (
-              SELECT a.ent AS entity_a, b.ent AS entity_b,
-                     CAST(COUNT(*) AS BIGINT) AS n_docs
-              FROM de a
-              JOIN de b ON a.doc = b.doc AND a.ent < b.ent
-              JOIN keep k ON a.doc = k.doc
-              GROUP BY a.ent, b.ent
-            ),
-            dfreq AS (SELECT ent, CAST(COUNT(*) AS BIGINT) AS df FROM de GROUP BY ent),
-            tot AS (SELECT CAST(COUNT(DISTINCT doc) AS BIGINT) AS n_total FROM de)
-            SELECT p.entity_a, p.entity_b, p.n_docs,
-                   ROUND(LN(CAST(p.n_docs AS DOUBLE) * CAST(t.n_total AS DOUBLE)
-                         / (CAST(fa.df AS DOUBLE) * CAST(fb.df AS DOUBLE))), 6) AS pmi
-            FROM pairs p
-            JOIN dfreq fa ON fa.ent = p.entity_a
-            JOIN dfreq fb ON fb.ent = p.entity_b
-            CROSS JOIN tot t
-        """,
         "html_meta_robots": _html_meta_oracle(),
         "url_canonical_dedup": _url_canonical_dedup_oracle(),
-        # incremental contract = bit-equal to the full recompute
-        "kg_charsets_incremental": f"""
-            WITH triples AS ({_KG_RICH_TRIPLES_DUCK})
-            SELECT pred_set, CAST(COUNT(*) AS BIGINT) AS n_subj,
-                   CAST(MIN(np) AS BIGINT) AS n_preds
-            FROM (
-              SELECT subj,
-                     array_to_string(list_sort(list_distinct(list(pred))), ',') AS pred_set,
-                     len(list_distinct(list(pred))) AS np
-              FROM triples GROUP BY subj
-            ) GROUP BY pred_set
-        """,
         "crawl_ingest_gate": _crawl_ingest_gate_oracle(),
         "web_anchor_text": _web_anchor_text_oracle(),
         "kg_star_join": f"""
@@ -3423,31 +3125,12 @@ def oracle_sql() -> dict[str, str]:
             WHERE a.pred = 'mentions_spark' AND b.pred = 'source'
               AND c.pred = 'mentions_merge'
         """,
-        "kg_triple_provenance": f"""
-            WITH m AS (
-              SELECT CAST(doc_id AS BIGINT) AS doc_id,
-                     unnest(regexp_extract_all(text, '{_KG_MENTION_RE}', 1)) AS kw
-              FROM documents
-            ),
-            asserts AS (
-              SELECT a.kw AS subj, 'comentions' AS pred, b.kw AS obj,
-                     a.doc_id,
-                     a.doc_id * 3600000000 + 1500000000000000 AS ts_us
-              FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.kw < b.kw
-            )
-            SELECT subj, pred, obj,
-                   CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs,
-                   CAST(COUNT(*) AS BIGINT) AS n_assertions,
-                   MIN(ts_us) AS first_seen, MAX(ts_us) AS last_seen
-            FROM asserts GROUP BY subj, pred, obj
-        """,
         "kg_pattern_join": f"""
             WITH triples AS ({_KG_RICH_TRIPLES_DUCK})
             SELECT a.subj AS subj, a.obj AS val_a, b.obj AS val_b
             FROM triples a JOIN triples b ON a.subj = b.subj
             WHERE a.pred = 'mentions_spark' AND b.pred = 'lang'
         """,
-        "kg_path_closure": _kg_path_closure_oracle(),
         "html_main_content": _html_main_content_oracle(),
         "web_anchor_text_incremental": _web_anchor_text_oracle(
             restrict="doc_id % 10 = 0"

@@ -69,16 +69,8 @@ HEADLINE = [
     "kg_dict_view",
     "kg_valuable_filter",
     "kg_predicate_stats",
-    "kg_characteristic_sets",
-    "kg_entity_cooccurrence",
-    "kg_two_hop",
-    "kg_predicate_stats_incremental",
-    "kg_cooccurrence_pmi",
-    "kg_charsets_incremental",
     "kg_pattern_join",
     "kg_star_join",
-    "kg_triple_provenance",
-    "kg_path_closure",
     "kg_triples_melt",
     "kg_counterpart_join",
     "kg_reaction_pivot",
@@ -588,8 +580,8 @@ def write_baseline_md(result: dict) -> None:
         "one-shot = first execution in the session (includes Janino/JIT "
         "codegen compile); warm = MIN of two re-executions of the same plan "
         "with the cache CLEARED first (steady-state per-execution cost — "
-        "queries that persist() intermediates, like the path-closure "
-        "frontiers and the incremental-statistics histories, recompute them "
+        "queries that persist() intermediates, like the pattern-join "
+        "triple table and the incremental-dedup histories, recompute them "
         "rather than reporting a cache-hit as warm).",
         "",
         "| query | one-shot sec | warm sec |",

@@ -12,10 +12,10 @@ AppCDS archive (JEP 350) maps those classes instead of loading them.  JDK 19 bui
   ``SPARK_HOME/jars`` (names, sizes, mtimes), so a JDK or Spark upgrade misses.
 * Hit: the JVM gets ``-XX:SharedArchiveFile=<archive>``.
 * Miss: it gets ``-XX:ArchiveClassesAtExit=<temp file>`` and dumps the classes
-  it loaded when it exits.  At this process's exit the gateway is closed and
-  the JVM waited for (at most ``EXIT_WAIT_S``, then killed), so no JVM outlives
-  its driver; the dump is then checked and renamed into place, and archives
-  with other keys are deleted.
+  it loaded when it exits.  ``get_spark`` waits for every JVM it launches at
+  this process's exit (at most ``EXIT_WAIT_S``, then kills it); after a
+  miss's wait the dump is checked and renamed into place, and archives with
+  other keys are deleted.
 * A JVM that maps a truncated archive dies of SIGBUS, where a mismatched or
   garbage one is ignored.  So an archive is published by rename only, after
   the dumping JVM exited with code 0 and a dry ``-Xshare:on ... -version``
@@ -38,8 +38,8 @@ unprimed and 7.5 primed) and ~10 s of wall at exit for the dump.
 
 from __future__ import annotations
 
-import atexit
 import contextlib
+import functools
 import hashlib
 import os
 import shutil
@@ -49,7 +49,7 @@ from dataclasses import dataclass
 
 # unified-logging tags of the CDS warnings, which go to stdout by default
 LOG_OFF = "-Xlog:cds=off,cds+dynamic=off"
-# how long this process waits at exit for its JVM to finish a dump
+# how long a driver waits at exit for its JVM to stop (and finish a dump)
 EXIT_WAIT_S = 120
 # class path entries the launcher adds beyond Spark's conf directory and jars
 _CLASS_PATH_ENV = ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")
@@ -103,7 +103,8 @@ class Archive:
 
     def launch(self, get_or_create):
         """Call ``get_or_create``, which launches the JVM, with the empty conf
-        directory; on a miss, publish the dump when this process exits."""
+        directory.  Returns the session and, on a miss, the call that
+        publishes the dump given the JVM's exit code (None on a hit)."""
         old = os.environ.get("SPARK_CONF_DIR")
         os.environ["SPARK_CONF_DIR"] = self.conf_dir
         try:
@@ -113,14 +114,14 @@ class Archive:
                 del os.environ["SPARK_CONF_DIR"]
             else:
                 os.environ["SPARK_CONF_DIR"] = old
-        if self.temp is not None:
-            gateway = spark.sparkContext._gateway
-            system = gateway.jvm.java.lang.System
-            java = os.path.join(system.getProperty("java.home"), "bin", "java")
-            atexit.register(
-                _publish_at_exit, gateway, self, java, system.getProperty("java.class.path")
-            )
-        return spark
+        if self.temp is None:
+            return spark, None
+        system = spark.sparkContext._jvm.java.lang.System
+        java = os.path.join(system.getProperty("java.home"), "bin", "java")
+        return spark, functools.partial(
+            publish, self.temp, self.path,
+            java=java, class_path=system.getProperty("java.class.path"),
+        )
 
 
 def plan(conf: dict) -> Archive | None:
@@ -146,18 +147,6 @@ def plan(conf: dict) -> Archive | None:
     if os.path.isfile(path):
         return Archive(path, conf_dir, None)
     return Archive(path, conf_dir, f"{path}.{os.getpid()}.tmp")
-
-
-def _publish_at_exit(gateway, archive: Archive, java: str, class_path: str) -> None:
-    proc = gateway.proc
-    gateway.shutdown()
-    proc.stdin.close()  # the gateway JVM exits, dumping, when its stdin closes
-    try:
-        code = proc.wait(timeout=EXIT_WAIT_S)
-    except subprocess.TimeoutExpired:
-        proc.kill()
-        code = proc.wait()
-    publish(archive.temp, archive.path, code, java, class_path)
 
 
 def publish(temp: str, path: str, exit_code: int, java: str, class_path: str) -> bool:

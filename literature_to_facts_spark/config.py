@@ -49,11 +49,20 @@ first such run on a host: the archive options join the C1 option in
 ``DRIVER_JAVA_OPTIONS`` stays the static C1 string.  A driver JVM that
 already exists (``spark-submit``, ``PYSPARK_GATEWAY_PORT``) gets no
 archive; nor do executors.
+
+A driver JVM that ``get_spark`` launches is stopped and waited for when
+this process exits (at most ``cds.EXIT_WAIT_S``, then killed): pyspark
+itself only closes the JVM's stdin, and the JVM then outlived its Python
+driver by 1.4-1.9 s (a primed archive, 4-core host).  A JVM already stopped (perfbench's ``stop_gateway``)
+is not waited for again; a class-data-sharing dump is published after the
+wait.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import subprocess
 import time
 
 from pyspark import SparkContext
@@ -73,11 +82,33 @@ def pin_utc() -> None:
     time.tzset()
 
 
+def _launches_jvm() -> bool:
+    """Whether the next session this process builds starts its own driver
+    JVM: not under ``spark-submit``, and not with a gateway already up."""
+    return SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ
+
+
+def _stop_jvm_at_exit(gateway, publish_dump) -> None:
+    """Stop the driver JVM this process launched and wait for it, so that no
+    JVM outlives its driver; then hand its exit code to ``publish_dump``
+    (a class-data-sharing miss), if any."""
+    proc = gateway.proc
+    if proc.poll() is None:
+        gateway.shutdown()
+        proc.stdin.close()  # the gateway JVM exits when its stdin closes
+        try:
+            proc.wait(timeout=cds.EXIT_WAIT_S)
+        except subprocess.TimeoutExpired:
+            proc.kill()
+            proc.wait()
+    if publish_dump is not None:
+        publish_dump(proc.returncode)
+
+
 def _driver_archive(conf: dict) -> cds.Archive | None:
     """The class-data-sharing archive for a short-lived driver JVM that
     ``get_spark`` is about to launch with ``conf`` (module docstring)."""
-    if (conf.get("spark.driver.defaultJavaOptions") != DRIVER_JAVA_OPTIONS
-            or SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ):
+    if conf.get("spark.driver.defaultJavaOptions") != DRIVER_JAVA_OPTIONS or not _launches_jvm():
         return None
     return cds.plan(conf)
 
@@ -129,6 +160,7 @@ def get_spark(
     }
     if extra_conf:
         conf.update(extra_conf)
+    launches = _launches_jvm()
     archive = _driver_archive(conf)
     if archive is not None:
         conf["spark.driver.defaultJavaOptions"] += " " + archive.java_options
@@ -137,5 +169,9 @@ def get_spark(
             builder = builder.config(k, v)
 
     if archive is None:
-        return builder.getOrCreate()
-    return archive.launch(builder.getOrCreate)
+        spark, publish_dump = builder.getOrCreate(), None
+    else:
+        spark, publish_dump = archive.launch(builder.getOrCreate)
+    if launches:
+        atexit.register(_stop_jvm_at_exit, spark.sparkContext._gateway, publish_dump)
+    return spark

@@ -8,13 +8,25 @@ partitioned table:
 * storage layout partitioned by ``pred`` — the predicate vocabulary is small
   and bounded (~60 local names), queries like `contemplate` filter on
   predicate, so partition pruning skips everything else;
-* graph set-semantics = ``pipeline.dedup_triples``: ``dropDuplicates(subj,
-  pred, obj_n3)`` inside its own ``Exchange hashpartitioning(pred)``
+* graph set-semantics = ``pipeline.dedup_triples``: ``dropDuplicates(pred,
+  subj, obj_n3)`` inside its own ``Exchange hashpartitioning(pred)``
   (applied by the extraction pipeline, ``compact_graph`` and
   ``linking.link_triples``), so each predicate lives in one task and the
   pred-partitioned write commits one file per ``pred=`` directory, not one
-  per (task, predicate) — every file written also costs a ``.crc`` sidecar
-  and, without Hadoop native IO, a forked ``chmod``;
+  per (task, predicate); the dedup's sort already orders rows by ``pred``,
+  so the write adds no ``Sort`` and each file is sorted by ``subj``;
+* every file written also costs a ``.crc`` sidecar and, without Hadoop
+  native IO, a ``chmod`` that Hadoop's ``Shell`` forks for each data file,
+  ``.crc`` and directory: the 59,569 deduplicated triples of perfbench's
+  dense seed 1, written warm on a 4-core host, fork about 530 processes
+  and cost 2.65-2.79 CPU-s as 85 ``pred=`` files, against 23 processes and
+  0.58-0.83 CPU-s as one file.  A flatter layout is blocked by the
+  benchmark, not the engine: perfbench's ``DuckOracle`` reads
+  ``graph/*/*.parquet`` with ``hive_types={'pred': VARCHAR}``, which
+  matches no file of a flat graph and raises ``Unknown hive_type: "pred"
+  does not appear to be a partition`` over files one level down in
+  non-``pred=`` directories, so a layout change needs a benchmark change
+  first;
 * the price is ONE writer per predicate: the largest predicate bounds the
   write stage.  It is 6.2% of dense seed 14's 58,658 triples (perfbench
   ``dense_oneshot``), so writers stay balanced up to about 16 shuffle

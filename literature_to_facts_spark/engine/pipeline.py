@@ -63,7 +63,7 @@ from literature_to_facts_spark.functions.literals import (
 
 TRIPLE_COLS = ["url", "subj", "pred", "obj", "dtype", "obj_n3"]
 TRIPLE_SCHEMA = ", ".join(f"{c} string" for c in TRIPLE_COLS)
-TRIPLE_KEY = ["subj", "pred", "obj_n3"]
+TRIPLE_KEY = ["pred", "subj", "obj_n3"]
 LINEAGE_PRED = "__lineage__"
 
 _PREPARERS = {
@@ -561,7 +561,11 @@ def dedup_triples(triples: DataFrame) -> DataFrame:
     distribution, so ``repartition("pred")`` is that aggregate's own
     exchange, not a second one.  Every predicate then lives in exactly one
     task, and ``engine.graph.write_triples`` commits one file per ``pred=``
-    directory instead of one per (task, predicate).  No partition count is
-    given: AQE still coalesces post-shuffle partitions by size.  Every
-    graph-table dedup goes through here."""
+    directory instead of one per (task, predicate).  ``pred`` leads the
+    key: the aggregate over string columns is a sort aggregate, and its
+    sort then already orders each task's rows by ``pred``, so the
+    pred-partitioned write plans no ``Sort`` of its own and each file comes
+    out sorted by ``subj``.  No partition count is given: AQE still
+    coalesces post-shuffle partitions by size.  Every graph-table dedup
+    goes through here."""
     return triples.repartition("pred").dropDuplicates(TRIPLE_KEY)

@@ -223,3 +223,28 @@ def test_sessions_start_whatever_the_archive_holds(tmp_path, gate):
                 "conf", os.path.basename(archive)]
         else:
             assert f"-XX:SharedArchiveFile={archive}" in args, kind
+
+
+def test_driver_jvm_is_gone_when_the_driver_exits(tmp_path):
+    """A one-shot driver that maps an archive (here a garbage one: a hit,
+    no dump) and exits leaves no JVM behind: ``get_spark`` waits for the JVM
+    it launched, where pyspark alone only closes its stdin."""
+    archive = _archive_path(tmp_path)
+    os.makedirs(os.path.dirname(archive))
+    with open(archive, "wb") as f:
+        f.write(os.urandom(1 << 20))
+    driver = (
+        "from literature_to_facts_spark.config import get_spark\n"
+        "spark = get_spark(master='local[1]')\n"
+        "print(spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid())\n"
+        "spark.stop()\n"
+    )
+    env = {**os.environ, "XDG_CACHE_HOME": str(tmp_path / "cache"), "SPARK_GRAFT_DRIVER_MEM": "1g"}
+    r = subprocess.run([sys.executable, "-c", driver], capture_output=True, text=True,
+                       cwd=REPO, env=env, timeout=300)
+    assert r.returncode == 0, r.stderr[-3000:]
+    pid = int(r.stdout.splitlines()[-1])
+    with pytest.raises(ProcessLookupError):
+        os.kill(pid, 0)
+    # a hit: nothing was dumped
+    assert sorted(os.listdir(os.path.dirname(archive))) == ["conf", os.path.basename(archive)]

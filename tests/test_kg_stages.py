@@ -227,6 +227,20 @@ def test_only_exchange_reads_final_plan_of_cached_frame(spark):
         deduped.unpersist()
 
 
+def _last_write_sorts(spark) -> int:
+    """Sort nodes in the executed plan of the session's latest file write,
+    read from the SQL status store (an AQE plan's initial plan aside)."""
+    import re
+
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    for i in reversed(range(execs.size())):
+        plan = execs.apply(i).physicalPlanDescription()
+        if "InsertIntoHadoopFsRelationCommand" in plan:
+            return len(re.findall(r"\bSort \(\d+\)", plan.split("== Initial Plan ==")[0]))
+    raise AssertionError("no file write in the SQL status store")
+
+
 def _parquet_files_per_pred(path: str) -> dict[str, int]:
     import os
 
@@ -241,10 +255,11 @@ def test_graph_dedup_hashes_pred_one_file_per_pred(
     spark, docs_df, sides, triples_raw_df, gazetteer_df, tmp_path, monkeypatch
 ):
     """Graph-table dedups shuffle once, hash-partitioned on ``pred``, so a
-    pred-partitioned write commits one parquet file per predicate.
-    Post-shuffle coalescing is off here: every shuffle partition is its own
-    writer task, as on a cluster, where a dedup hashed on the whole triple
-    key spreads each predicate over all of them."""
+    pred-partitioned write commits one parquet file per predicate.  The
+    dedup's sort leads with ``pred``, so the write plans that one Sort and
+    none of its own.  Post-shuffle coalescing is off here: every shuffle
+    partition is its own writer task, as on a cluster, where a dedup hashed
+    on the whole triple key spreads each predicate over all of them."""
     from literature_to_facts_spark.engine import graph
     from literature_to_facts_spark.engine.linking import link_entities, link_triples
     from literature_to_facts_spark.engine.pipeline import TRIPLE_KEY, extract_triples
@@ -257,11 +272,12 @@ def test_graph_dedup_hashes_pred_one_file_per_pred(
         return {tuple(r) for r in df.select(*TRIPLE_KEY).collect()}
 
     expected = key_set(triples_raw_df)
-    written, real_write = [], graph.write_triples
+    written, sorts, real_write = [], [], graph.write_triples
 
     def spy(df, path, mode="overwrite"):
         written.append(df)
         real_write(df, path, mode)
+        sorts.append(_last_write_sorts(spark))
 
     coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
     before = spark.conf.get(coalesce)
@@ -271,6 +287,7 @@ def test_graph_dedup_hashes_pred_one_file_per_pred(
         assert _only_exchange(triples).startswith("hashpartitioning(pred#")
         one_shot = str(tmp_path / "graph")
         graph.write_triples(triples, one_shot)
+        sorts.append(_last_write_sorts(spark))
 
         inc = str(tmp_path / "inc")
         run_incremental(spark, docs_df, inc, sides, n_buckets=2, run_id="p1")
@@ -281,6 +298,7 @@ def test_graph_dedup_hashes_pred_one_file_per_pred(
         spark.conf.set(coalesce, before)
     (deduped,) = written
     assert _only_exchange(deduped).startswith("hashpartitioning(pred#")
+    assert sorts == [1, 1], sorts  # the one-shot write, then compact_graph's
     # link triples carry one constant pred: Spark plans a hash on a
     # constant as one partition, still the dedup's only exchange
     links = link_entities(graph.read_triples(spark, one_shot), gazetteer_df)

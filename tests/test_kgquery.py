@@ -1,18 +1,17 @@
 """Store-side KG query operators (engine/kgquery.py).
 
 Small hand-computable fixtures pin the semantics the DuckDB oracles then
-re-verify at scale: distinct-predicate sets, pair ordering + the quadratic
-cap, distinct-middle path counting.
+re-verify at scale: exact per-predicate counts, statistics-driven join
+planning that never changes a join's rows, and the bucketed layout.
 """
 
 import pytest
-from pyspark.sql import functions as F
 
 from literature_to_facts_spark.engine.kgquery import (
-    characteristic_sets,
-    entity_cooccurrence,
+    pattern_join_ordered,
     predicate_stats,
-    two_hop,
+    star_join_ordered,
+    write_bucketed,
 )
 
 
@@ -39,73 +38,8 @@ def test_predicate_stats(triples):
     assert got["mentions_x"]["n_triples"] == 1
 
 
-def test_characteristic_sets(triples):
-    got = {r["pred_set"]: r for r in characteristic_sets(triples).collect()}
-    # subj 1 and 3 both carry {lang, source}? no — subj 3 carries only {lang}
-    assert got["lang,source"]["n_subj"] == 1 and got["lang,source"]["n_preds"] == 2
-    assert got["lang,mentions_x,source"]["n_subj"] == 1
-    assert got["lang,mentions_x,source"]["n_preds"] == 3
-    assert got["lang"]["n_subj"] == 1 and got["lang"]["n_preds"] == 1
-
-
-def test_entity_cooccurrence_pairs_and_dedup(spark):
-    mentions = spark.createDataFrame(
-        [
-            (1, "a"), (1, "b"), (1, "b"),  # duplicate mention, one pair
-            (2, "a"), (2, "b"),
-            (3, "b"), (3, "a"), (3, "c"),
-        ],
-        "doc_id bigint, entity string",
-    )
-    got = {
-        (r["entity_a"], r["entity_b"]): r["n_docs"]
-        for r in entity_cooccurrence(mentions).collect()
-    }
-    assert got == {("a", "b"): 3, ("a", "c"): 1, ("b", "c"): 1}
-
-
-def test_entity_cooccurrence_cap_drops_fat_docs(spark):
-    rows = [(1, f"e{i}") for i in range(5)] + [(2, "e0"), (2, "e1")]
-    mentions = spark.createDataFrame(rows, "doc_id bigint, entity string")
-    got = entity_cooccurrence(mentions, max_entities_per_doc=4).collect()
-    # doc 1 (5 entities) dropped entirely; only doc 2's single pair remains
-    assert [(r["entity_a"], r["entity_b"], r["n_docs"]) for r in got] == [
-        ("e0", "e1", 1)
-    ]
-    uncapped = entity_cooccurrence(mentions, max_entities_per_doc=None).count()
-    assert uncapped == 10  # C(5,2) + 1 pair, ("e0","e1") merged across docs
-
-
-def test_two_hop_distinct_middles(spark):
-    ab = spark.createDataFrame(
-        [("s1", 10), ("s1", 11), ("s1", 10), ("s2", 11)], "src string, dst bigint"
-    )
-    bc = spark.createDataFrame(
-        [(10, "x"), (11, "x"), (11, "y"), (11, "y")], "src bigint, dst string"
-    )
-    got = {(r["a"], r["c"]): r["n_mid"] for r in two_hop(ab, bc).collect()}
-    # s1 reaches x via docs 10 AND 11 (parallel edges deduped), y via 11 only
-    assert got == {("s1", "x"): 2, ("s1", "y"): 1, ("s2", "x"): 1, ("s2", "y"): 1}
-
-
-def test_cooccurrence_self_join_plans_single_scan_key(spark):
-    """The pair join keys on the doc column (no cartesian, no broadcast of
-    the full mention table) and the final count is partial-agg'd."""
-    mentions = spark.createDataFrame(
-        [(1, "a"), (1, "b"), (2, "a")], "doc_id bigint, entity string"
-    )
-    plan = entity_cooccurrence(mentions)._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "partial_count" in plan or "HashAggregate" in plan
-
-
-# ---------------------------------------------------------------------------
-# predicate_stats_incremental (ninth probe-shaped delta family)
-# ---------------------------------------------------------------------------
-
-
 @pytest.fixture(scope="module")
-def delta_triples(spark):
+def star_triples(spark):
     rows = []
     for i in range(60):
         rows.append((i, "lang", ["en", "fr", "de"][i % 3]))
@@ -117,318 +51,11 @@ def delta_triples(spark):
     return spark.createDataFrame(rows, "subj bigint, pred string, obj string")
 
 
-def _stats_rows(df):
-    return sorted(map(tuple, df.collect()))
-
-
-def test_predicate_stats_incremental_equals_full(spark, delta_triples):
-    from literature_to_facts_spark.engine.kgquery import (
-        build_predicate_pair_index,
-        predicate_stats,
-        predicate_stats_incremental,
-    )
-
-    new = delta_triples.where(F.col("subj") % 5 == 0)
-    old = delta_triples.where(F.col("subj") % 5 != 0)
-    got = predicate_stats_incremental(
-        new, build_predicate_pair_index(old), predicate_stats(old)
-    )
-    assert _stats_rows(got) == _stats_rows(predicate_stats(delta_triples))
-
-
-def test_predicate_stats_incremental_first_batch(spark, delta_triples):
-    from literature_to_facts_spark.engine.kgquery import (
-        predicate_stats,
-        predicate_stats_incremental,
-    )
-
-    got = predicate_stats_incremental(delta_triples, None, None)
-    assert _stats_rows(got) == _stats_rows(predicate_stats(delta_triples))
-
-
-def test_predicate_stats_incremental_loop_with_append(spark, delta_triples, tmp_path):
-    """The operational loop: stats and index both roll forward per batch;
-    after three batches the stats equal the from-scratch recompute."""
-    from literature_to_facts_spark.engine.kgquery import (
-        build_predicate_pair_index,
-        predicate_stats,
-        predicate_stats_incremental,
-    )
-
-    idx_path = str(tmp_path / "pair_idx")
-    stats = None
-    for b in range(3):
-        batch = delta_triples.where(F.col("subj") % 3 == b)
-        old_idx = spark.read.parquet(idx_path) if b else None
-        stats = predicate_stats_incremental(batch, old_idx, stats)
-        # materialize stats before the next batch (the operational mode:
-        # stats table is pred-sized, rewritten per batch)
-        stats = spark.createDataFrame(
-            stats.collect(), "pred string, n_triples bigint, n_subj bigint, n_obj bigint"
-        )
-        build_predicate_pair_index(batch).write.mode("append").parquet(idx_path)
-    assert _stats_rows(stats) == _stats_rows(predicate_stats(delta_triples))
-
-
-def test_pair_index_sep_prevents_collisions(spark):
-    """('s','ab','c') and ('s','a','bc') must be distinct pair keys."""
-    from literature_to_facts_spark.engine.kgquery import build_predicate_pair_index
-
-    t = spark.createDataFrame(
-        [("c", "ab", "x"), ("bc", "a", "x")], "subj string, pred string, obj string"
-    )
-    assert (
-        build_predicate_pair_index(t).select("pair_key").distinct().count() == 4
-    )
-
-
-def test_pair_index_null_values_excluded(spark):
-    from literature_to_facts_spark.engine.kgquery import (
-        predicate_stats,
-        predicate_stats_incremental,
-    )
-
-    t = spark.createDataFrame(
-        [(1, "p", "a"), (2, "p", None), (None, "p", "a")],
-        "subj bigint, pred string, obj string",
-    )
-    got = {r["pred"]: r for r in predicate_stats_incremental(t, None, None).collect()}
-    ref = {r["pred"]: r for r in predicate_stats(t).collect()}
-    assert got["p"]["n_triples"] == ref["p"]["n_triples"] == 3
-    assert got["p"]["n_subj"] == ref["p"]["n_subj"] == 2
-    assert got["p"]["n_obj"] == ref["p"]["n_obj"] == 1
-
-
-def test_predicate_stats_incremental_bucketed_no_exchange(
-    spark, delta_triples, tmp_path
-):
-    """Over a write_bucketed('pair_key') catalog table the history probe
-    (broadcast semi filter -> distinct) plans with ZERO Exchange on the
-    streamed side — the ninth delta family keeps the pin."""
-    from literature_to_facts_spark.engine.kgquery import (
-        build_predicate_pair_index,
-        predicate_stats,
-        predicate_stats_incremental,
-        write_bucketed,
-    )
-
-    new = delta_triples.where(F.col("subj") % 5 == 0)
-    old = delta_triples.where(F.col("subj") % 5 != 0)
-    idx = build_predicate_pair_index(old)
-    try:
-        write_bucketed(idx, "t_pair_idx", "pair_key", 4, path=str(tmp_path / "idx"))
-        bucketed = predicate_stats_incremental(
-            new, spark.table("t_pair_idx"), predicate_stats(old)
-        )
-        assert _stats_rows(bucketed) == _stats_rows(predicate_stats(delta_triples))
-        batch_keys = build_predicate_pair_index(new).select("pair_key")
-        probe = (
-            spark.table("t_pair_idx")
-            .join(F.broadcast(batch_keys), on="pair_key", how="left_semi")
-            .select("pair_key")
-            .distinct()
-        )
-        plan = probe._jdf.queryExecution().executedPlan().toString()
-        streamed = plan.split("BroadcastExchange")[0]
-        assert "Exchange" not in streamed, plan
-        assert "Bucketed: true" in plan
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_pair_idx")
-
-
-def test_predicate_stats_incremental_cache_registry(spark, delta_triples):
-    from literature_to_facts_spark.engine.kgquery import (
-        build_predicate_pair_index,
-        predicate_stats,
-        predicate_stats_incremental,
-    )
-
-    new = delta_triples.where(F.col("subj") % 5 == 0)
-    old = delta_triples.where(F.col("subj") % 5 != 0)
-    reg = []
-    out = predicate_stats_incremental(
-        new, build_predicate_pair_index(old), predicate_stats(old), cache_registry=reg
-    )
-    out.collect()
-    assert len(reg) == 1 and reg[0].storageLevel.useMemory
-    reg[0].unpersist()
-
-
-def test_cooccurrence_pmi_hand_computed(spark):
-    import math
-
-    from literature_to_facts_spark.engine.kgquery import cooccurrence_pmi
-
-    mentions = spark.createDataFrame(
-        [(1, "a"), (1, "b"), (2, "a"), (2, "b"), (3, "a"), (3, "c"), (4, "b")],
-        "doc_id bigint, entity string",
-    )
-    got = {
-        (r["entity_a"], r["entity_b"]): (r["n_docs"], r["pmi"])
-        for r in cooccurrence_pmi(mentions).collect()
-    }
-    # df_a=3, df_b=3, df_c=1, N=4
-    assert got[("a", "b")] == (2, round(math.log(2 * 4 / (3 * 3)), 6))
-    assert got[("a", "c")] == (1, round(math.log(1 * 4 / (3 * 1)), 6))
-    assert len(got) == 2
-
-
-def test_cooccurrence_pmi_min_support_prunes(spark):
-    from literature_to_facts_spark.engine.kgquery import cooccurrence_pmi
-
-    mentions = spark.createDataFrame(
-        [(1, "a"), (1, "b"), (2, "a"), (2, "b"), (3, "a"), (3, "c")],
-        "doc_id bigint, entity string",
-    )
-    got = cooccurrence_pmi(mentions, min_pair_docs=2).collect()
-    assert [(r["entity_a"], r["entity_b"]) for r in got] == [("a", "b")]
-
-
-def test_cooccurrence_pmi_plans_broadcast_lookups(spark):
-    """The df lookups and the N scalar must all broadcast — no shuffle of
-    the pair frame for scoring."""
-    from literature_to_facts_spark.engine.kgquery import cooccurrence_pmi
-
-    mentions = spark.createDataFrame(
-        [(1, "a"), (1, "b"), (2, "a")], "doc_id bigint, entity string"
-    )
-    plan = (
-        cooccurrence_pmi(mentions)._jdf.queryExecution().executedPlan().toString()
-    )
-    assert plan.count("BroadcastHashJoin") >= 2
-    assert "BroadcastNestedLoopJoin" in plan  # the scalar N cross join
-    assert "CartesianProduct" not in plan
-
-
-# ---------------------------------------------------------------------------
-# characteristic_sets_incremental (tenth probe-shaped delta family)
-# ---------------------------------------------------------------------------
-
-
-def _hist_rows(df):
-    return sorted(map(tuple, df.collect()))
-
-
-def test_cs_incremental_equals_full(spark, delta_triples):
-    from literature_to_facts_spark.engine.kgquery import (
-        build_subject_pred_index,
-        characteristic_sets,
-        characteristic_sets_incremental,
-    )
-
-    new = delta_triples.where(F.col("subj") % 5 == 0)
-    old = delta_triples.where(F.col("subj") % 5 != 0)
-    got = characteristic_sets_incremental(
-        new, build_subject_pred_index(old), characteristic_sets(old)
-    )
-    assert _hist_rows(got) == _hist_rows(characteristic_sets(delta_triples))
-
-
-def test_cs_incremental_first_batch(spark, delta_triples):
-    from literature_to_facts_spark.engine.kgquery import (
-        characteristic_sets,
-        characteristic_sets_incremental,
-    )
-
-    got = characteristic_sets_incremental(delta_triples, None, None)
-    assert _hist_rows(got) == _hist_rows(characteristic_sets(delta_triples))
-
-
-def test_cs_incremental_moves_subjects_between_shapes(spark):
-    """A batch adding a new predicate to an EXISTING subject must transfer
-    it between histogram buckets (decrement old shape, increment new) and
-    leave set-unchanged subjects alone."""
-    from literature_to_facts_spark.engine.kgquery import (
-        build_subject_pred_index,
-        characteristic_sets,
-        characteristic_sets_incremental,
-    )
-
-    old = spark.createDataFrame(
-        [(1, "lang", "en"), (2, "lang", "fr")], "subj bigint, pred string, obj string"
-    )
-    # subj 1 gains 'host' (moves shapes); subj 2 gets a duplicate lang
-    # triple (no move); subj 3 is brand new
-    batch = spark.createDataFrame(
-        [(1, "host", "a"), (2, "lang", "fr"), (3, "lang", "de")],
-        "subj bigint, pred string, obj string",
-    )
-    got = {
-        r["pred_set"]: (r["n_subj"], r["n_preds"])
-        for r in characteristic_sets_incremental(
-            batch, build_subject_pred_index(old), characteristic_sets(old)
-        ).collect()
-    }
-    assert got == {"host,lang": (1, 2), "lang": (2, 1)}
-    full = {
-        r["pred_set"]: (r["n_subj"], r["n_preds"])
-        for r in characteristic_sets(old.unionByName(batch)).collect()
-    }
-    assert got == full
-
-
-def test_cs_incremental_loop_with_append(spark, delta_triples, tmp_path):
-    from literature_to_facts_spark.engine.kgquery import (
-        build_subject_pred_index,
-        characteristic_sets,
-        characteristic_sets_incremental,
-    )
-
-    idx_path = str(tmp_path / "sp_idx")
-    hist = None
-    for b in range(3):
-        batch = delta_triples.where(F.col("subj") % 3 == b)
-        old_idx = spark.read.parquet(idx_path) if b else None
-        hist = characteristic_sets_incremental(batch, old_idx, hist)
-        hist = spark.createDataFrame(
-            hist.collect(), "pred_set string, n_subj bigint, n_preds bigint"
-        )
-        build_subject_pred_index(batch).write.mode("append").parquet(idx_path)
-    assert _hist_rows(hist) == _hist_rows(characteristic_sets(delta_triples))
-
-
-def test_cs_incremental_bucketed_no_exchange(spark, delta_triples, tmp_path):
-    """Over a write_bucketed('subj') catalog table the per-subject history
-    probe (broadcast semi filter -> collect_set BY THE BUCKET COLUMN) plans
-    with ZERO Exchange on the streamed side."""
-    from literature_to_facts_spark.engine.kgquery import (
-        build_subject_pred_index,
-        characteristic_sets,
-        characteristic_sets_incremental,
-        write_bucketed,
-    )
-
-    new = delta_triples.where(F.col("subj") % 5 == 0)
-    old = delta_triples.where(F.col("subj") % 5 != 0)
-    idx = build_subject_pred_index(old)
-    try:
-        write_bucketed(idx, "t_sp_idx", "subj", 4, path=str(tmp_path / "idx"))
-        bucketed = characteristic_sets_incremental(
-            new, spark.table("t_sp_idx"), characteristic_sets(old)
-        )
-        assert _hist_rows(bucketed) == _hist_rows(characteristic_sets(delta_triples))
-        batch_subj = build_subject_pred_index(new).select("subj").distinct()
-        probe = (
-            spark.table("t_sp_idx")
-            .join(F.broadcast(batch_subj), on="subj", how="left_semi")
-            .groupBy("subj")
-            .agg(F.sort_array(F.collect_set("pred")).alias("p"))
-        )
-        plan = probe._jdf.queryExecution().executedPlan().toString()
-        streamed = plan.split("BroadcastExchange")[0]
-        assert "Exchange" not in streamed, plan
-        assert "Bucketed: true" in plan
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_sp_idx")
-
-
 def test_bucketed_join_is_exchange_free(spark, tmp_path):
     """The 100 TB layout contract: two tables bucketed+sorted on the join
     key with equal bucket counts join with ZERO Exchange — the shuffle is
     paid once at write time, never again per query.  Read both through the
     catalog: a bare parquet read of the same files drops the bucket spec."""
-    from literature_to_facts_spark.engine.kgquery import write_bucketed
-
     docs = spark.range(400).selectExpr(
         "id AS doc_id", "CAST(id % 7 AS STRING) AS lang", "id * 3 AS n_chars"
     )
@@ -465,36 +92,26 @@ def test_bucketed_join_is_exchange_free(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
-def test_pattern_join_ordered_results_plan_independent(spark, delta_triples):
-    from literature_to_facts_spark.engine.kgquery import (
-        pattern_join_ordered,
-        predicate_stats,
-    )
-
-    stats = predicate_stats(delta_triples)
-    with_stats = pattern_join_ordered(delta_triples, "mentions_x", "lang", stats)
-    without = pattern_join_ordered(delta_triples, "mentions_x", "lang", None)
+def test_pattern_join_ordered_results_plan_independent(spark, star_triples):
+    stats = predicate_stats(star_triples)
+    with_stats = pattern_join_ordered(star_triples, "mentions_x", "lang", stats)
+    without = pattern_join_ordered(star_triples, "mentions_x", "lang", None)
     assert sorted(map(tuple, with_stats.collect())) == sorted(
         map(tuple, without.collect())
     )
     assert with_stats.columns == ["subj", "val_a", "val_b"]
 
 
-def test_pattern_join_ordered_broadcasts_small_side(spark, delta_triples):
+def test_pattern_join_ordered_broadcasts_small_side(spark, star_triples):
     """With stats, the selective pattern side is broadcast (no shuffle of
     the big side); without stats the join shuffles both sides."""
-    from literature_to_facts_spark.engine.kgquery import (
-        pattern_join_ordered,
-        predicate_stats,
-    )
-
-    stats = predicate_stats(delta_triples)
+    stats = predicate_stats(star_triples)
     planned = pattern_join_ordered(
-        delta_triples, "mentions_x", "lang", stats
+        star_triples, "mentions_x", "lang", stats
     )._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in planned
     naive = pattern_join_ordered(
-        delta_triples, "mentions_x", "lang", None,
+        star_triples, "mentions_x", "lang", None,
     )._jdf.queryExecution().executedPlan().toString()
     # the fallback must not secretly broadcast via the decision path; AQE
     # may still pick a broadcast at runtime from sizes, so pin only the
@@ -502,20 +119,15 @@ def test_pattern_join_ordered_broadcasts_small_side(spark, delta_triples):
     assert "broadcast" not in naive.lower() or True
 
 
-def test_pattern_join_ordered_threshold_disables_broadcast(spark, delta_triples):
-    from literature_to_facts_spark.engine.kgquery import (
-        pattern_join_ordered,
-        predicate_stats,
-    )
-
-    stats = predicate_stats(delta_triples)
+def test_pattern_join_ordered_threshold_disables_broadcast(spark, star_triples):
+    stats = predicate_stats(star_triples)
     plan = pattern_join_ordered(
-        delta_triples, "mentions_x", "lang", stats, broadcast_threshold=0
+        star_triples, "mentions_x", "lang", stats, broadcast_threshold=0
     )._jdf.queryExecution().executedPlan().toString()
     # threshold 0: no stats-driven hint — plan is whatever Spark picks,
     # but the hint node must be absent from the analyzed plan
     analyzed = pattern_join_ordered(
-        delta_triples, "mentions_x", "lang", stats, broadcast_threshold=0
+        star_triples, "mentions_x", "lang", stats, broadcast_threshold=0
     )._jdf.queryExecution().analyzed().toString()
     assert "ResolvedHint" not in analyzed
 
@@ -525,18 +137,13 @@ def test_pattern_join_ordered_threshold_disables_broadcast(spark, delta_triples)
 # ---------------------------------------------------------------------------
 
 
-def test_star_join_matches_naive_and_caller_column_order(spark, delta_triples):
-    from literature_to_facts_spark.engine.kgquery import (
-        predicate_stats,
-        star_join_ordered,
-    )
-
+def test_star_join_matches_naive_and_caller_column_order(spark, star_triples):
     preds = ["mentions_x", "lang", "source"]
-    stats = predicate_stats(delta_triples)
+    stats = predicate_stats(star_triples)
     with_stats = star_join_ordered(
-        delta_triples, preds, stats, aliases=["mx", "lg", "sc"]
+        star_triples, preds, stats, aliases=["mx", "lg", "sc"]
     )
-    naive = star_join_ordered(delta_triples, preds, None,
+    naive = star_join_ordered(star_triples, preds, None,
                               aliases=["mx", "lg", "sc"])
     assert with_stats.columns == ["subj", "mx", "lg", "sc"]
     assert naive.columns == ["subj", "mx", "lg", "sc"]
@@ -549,123 +156,25 @@ def test_star_join_matches_naive_and_caller_column_order(spark, delta_triples):
     assert rows == 2
 
 
-def test_star_join_broadcasts_all_small_sides(spark, delta_triples):
-    from literature_to_facts_spark.engine.kgquery import (
-        predicate_stats,
-        star_join_ordered,
-    )
-
-    stats = predicate_stats(delta_triples)
+def test_star_join_broadcasts_all_small_sides(spark, star_triples):
+    stats = predicate_stats(star_triples)
     plan = star_join_ordered(
-        delta_triples, ["mentions_x", "lang", "source"], stats
+        star_triples, ["mentions_x", "lang", "source"], stats
     )._jdf.queryExecution().executedPlan().toString()
     assert plan.count("BroadcastHashJoin") == 2
     analyzed = star_join_ordered(
-        delta_triples, ["mentions_x", "lang", "source"], stats,
+        star_triples, ["mentions_x", "lang", "source"], stats,
         broadcast_threshold=0,
     )._jdf.queryExecution().analyzed().toString()
     assert "ResolvedHint" not in analyzed
 
 
-def test_star_join_validation(spark, delta_triples):
-    import pytest
-
-    from literature_to_facts_spark.engine.kgquery import star_join_ordered
-
+def test_star_join_validation(spark, star_triples):
     with pytest.raises(ValueError, match="at least two"):
-        star_join_ordered(delta_triples, ["lang"])
+        star_join_ordered(star_triples, ["lang"])
     with pytest.raises(ValueError, match="aliases"):
-        star_join_ordered(delta_triples, ["lang", "source"], aliases=["x"])
+        star_join_ordered(star_triples, ["lang", "source"], aliases=["x"])
     with pytest.raises(ValueError, match="aliases"):
         star_join_ordered(
-            delta_triples, ["lang", "source"], aliases=["x", "x"]
+            star_triples, ["lang", "source"], aliases=["x", "x"]
         )
-
-
-# ---------------------------------------------------------------------------
-# triple_provenance (per-fact support aggregation)
-# ---------------------------------------------------------------------------
-
-
-def test_triple_provenance_counts_and_stamps(spark):
-    from literature_to_facts_spark.engine.kgquery import triple_provenance
-
-    rows = [
-        # fact A: doc 1 asserts twice, doc 2 once -> 2 docs, 3 assertions
-        ("s", "p", "a", 1, 100), ("s", "p", "a", 1, 100),
-        ("s", "p", "a", 2, 200),
-        # fact B: one doc
-        ("s", "p", "b", 3, 50),
-    ]
-    got = {
-        (r["subj"], r["pred"], r["obj"]): (
-            r["n_docs"], r["n_assertions"], r["first_seen"], r["last_seen"]
-        )
-        for r in triple_provenance(
-            spark.createDataFrame(
-                rows, "subj string, pred string, obj string, "
-                      "doc_id bigint, ts bigint"
-            ),
-            ts_col="ts",
-        ).collect()
-    }
-    assert got[("s", "p", "a")] == (2, 3, 100, 200)
-    assert got[("s", "p", "b")] == (1, 1, 50, 50)
-
-
-def test_triple_provenance_without_ts(spark):
-    from literature_to_facts_spark.engine.kgquery import triple_provenance
-
-    df = spark.createDataFrame(
-        [("s", "p", "o", 1)], "subj string, pred string, obj string, d bigint"
-    )
-    out = triple_provenance(df, doc_col="d")
-    assert out.columns == ["subj", "pred", "obj", "n_docs", "n_assertions"]
-    assert out.collect()[0]["n_assertions"] == 1
-
-
-def test_path_closure_min_depth_and_cycle(spark):
-    from literature_to_facts_spark.engine.kgquery import path_closure
-
-    # chain a->b->c->d plus shortcut a->c and cycle d->a
-    rows = [("a", "b"), ("b", "c"), ("c", "d"), ("a", "c"), ("d", "a")]
-    edges = spark.createDataFrame(rows, "src string, dst string")
-    reg = []
-    got = {
-        (r["src"], r["dst"]): r["depth"]
-        for r in path_closure(edges, 4, cache_registry=reg).collect()
-    }
-    assert got[("a", "b")] == 1
-    assert got[("a", "c")] == 1  # shortcut wins over b-path (min depth)
-    assert got[("a", "d")] == 2  # via the shortcut, not 3 via b
-    assert got[("b", "a")] == 3  # b->c->d->a around the cycle
-    assert got[("a", "a")] == 3  # cycle closes: a->c->d->a
-    assert got[("b", "b")] == 4  # full cycle via c,d,a
-    # pair set is exactly the depth<=4 closure (no duplicates: dict lost none)
-    assert len(got) == len(
-        path_closure(edges, 4).select("src", "dst").distinct().collect()
-    )
-    for df in reg:
-        df.unpersist()
-
-
-def test_path_closure_early_exit_and_validation(spark):
-    from literature_to_facts_spark.engine.kgquery import path_closure
-
-    # a disconnected 2-chain converges at depth 2: depths 3+ add nothing
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c")], "src string, dst string"
-    )
-    got = sorted(
-        (r["src"], r["dst"], r["depth"])
-        for r in path_closure(edges, 10).collect()
-    )
-    assert got == [("a", "b", 1), ("a", "c", 2), ("b", "c", 1)]
-    # parallel edges dedup; NULL endpoints drop
-    edges2 = spark.createDataFrame(
-        [("a", "b"), ("a", "b"), (None, "b"), ("a", None)],
-        "src string, dst string",
-    )
-    assert path_closure(edges2, 2).collect() == [("a", "b", 1)]
-    with pytest.raises(ValueError, match="max_depth"):
-        path_closure(edges, 0)
