@@ -662,65 +662,6 @@ def q_text_line_dedup_incremental(spark, sf_dir):
     return out
 
 
-_SPAN_DEDUP_WINDOW = 8
-_SPAN_DEDUP_MIN_DF = 2
-
-
-def q_text_span_dedup_incremental(spark, sf_dir):
-    """Delta span dedup (datapipe/textclean.span_dedup_incremental — the
-    seventh probe-shaped incremental family): the new batch (doc_id % 5 ==
-    0) checked against COMBINED old+new window-occurrence counts using only
-    the persisted (win_key, cnt) index — history text never re-windowed.
-    Oracle = the full-corpus span dedup restricted to the new batch's
-    ids."""
-    from literature_to_facts_spark.datapipe.textclean import (
-        build_window_frequency_index,
-        span_dedup_incremental,
-    )
-
-    docs = _spread(_t(spark, sf_dir, "documents")).select("doc_id", "text")
-    new = docs.where(F.col("doc_id") % 5 == 0)
-    old = docs.where(F.col("doc_id") % 5 != 0)
-    idx = build_window_frequency_index(old, window=_SPAN_DEDUP_WINDOW)
-    reg = []
-    out = span_dedup_incremental(
-        new, idx, window=_SPAN_DEDUP_WINDOW, min_df=_SPAN_DEDUP_MIN_DF,
-        cache_registry=reg,
-    ).select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        "n_tokens",
-        "n_windows",
-        "n_dup_windows",
-        "dup_tokens",
-        "dup_frac",
-    )
-    out._l2f_cache_registry = reg
-    return out
-
-
-def q_text_span_dedup(spark, sf_dir):
-    """Duplicated-substring detection (datapipe/textclean.span_dedup —
-    ExactSubstr dedup, Lee et al. 2021): every 8-token window occurring
-    >= 2 times across the corpus is flagged; per-document output is the
-    interval-union token coverage of the duplicated windows plus window
-    counts.  Window keys use the portable md5 52-bit family, so the DuckDB
-    oracle recomputes frequency AND coverage end-to-end bit-exactly."""
-    from literature_to_facts_spark.datapipe.textclean import span_dedup
-
-    docs = _spread(_t(spark, sf_dir, "documents")).select("doc_id", "text")
-    out = span_dedup(
-        docs, window=_SPAN_DEDUP_WINDOW, min_df=_SPAN_DEDUP_MIN_DF
-    )
-    return out.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        "n_tokens",
-        "n_windows",
-        "n_dup_windows",
-        "dup_tokens",
-        "dup_frac",
-    )
-
-
 # ---------------------------------------------------------------------------
 # URL canonicalization lane (datapipe/urls.py) — the crawl-pipeline stage
 # that precedes every text-level operator.  The fixture synthesizes URLs
@@ -813,110 +754,6 @@ def q_url_dedup(spark, sf_dir):
     )
 
 
-def q_text_span_dedup_clean(spark, sf_dir):
-    """ExactSubstr removal (datapipe/textclean.span_dedup_clean — the
-    cut-the-duplicates-out half of Lee et al. 2021): tokens covered by a
-    duplicated window are removed, survivors re-joined; untouched documents
-    pass through verbatim.  One id-keyed join over span_dedup's coverage
-    stats; full SQL oracle recomputes the rewrite end-to-end."""
-    from literature_to_facts_spark.datapipe.textclean import span_dedup_clean
-
-    docs = _spread(_t(spark, sf_dir, "documents")).select("doc_id", "text")
-    out = span_dedup_clean(
-        docs, window=_SPAN_DEDUP_WINDOW, min_df=_SPAN_DEDUP_MIN_DF
-    )
-    return out.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        # 'span_clean_text' (not clean_text): the gate sorts row tuples by
-        # alphabetical column order and a NULL (NULL-text doc) must not
-        # lead the tuple
-        F.col("clean_text").alias("span_clean_text"),
-    )
-
-
-_PAGERANK_PARAMS = dict(iters=3, damping_micro=850_000)
-_PAGERANK_MOD = 97  # fixture graph: nodes are doc_id mod 97
-
-
-def q_graph_pagerank(spark, sf_dir):
-    """Link-graph centrality (datapipe/graphs.pagerank — the Common-Crawl
-    host-ranking signal): 3 exact fixed-point power iterations over a
-    deterministic synthetic hyperlink graph (src = doc_id mod 97, dst =
-    (31*doc_id + 7) mod 97, deduplicated) — integer micro-unit ranks, so
-    the DuckDB oracle recomputes every iteration bit-exactly."""
-    from literature_to_facts_spark.datapipe.graphs import pagerank
-
-    m = _PAGERANK_MOD
-    edges = (
-        _t(spark, sf_dir, "documents")
-        .selectExpr(
-            f"cast(doc_id % {m} as bigint) AS src",
-            f"cast((31 * doc_id + 7) % {m} as bigint) AS dst",
-        )
-        .distinct()
-    )
-    reg = []
-    out = pagerank(edges, cache_registry=reg, **_PAGERANK_PARAMS)
-    out = out.select(
-        F.col("node").cast("bigint").alias("node"),
-        "rank_micro",
-        F.col("rank").cast("double").alias("rank"),
-    )
-    out._l2f_cache_registry = reg
-    return out
-
-
-def _duck_pagerank_ctes(iters: int, damping_micro: int) -> tuple[str, str]:
-    """(ctes, final_relation): the fixed-point PageRank unrolled as chained
-    CTEs over an ALREADY-DEFINED relation ``e(src, dst)`` (aggregates over
-    a recursive reference are not allowed in recursive CTEs, and with fixed
-    iters the unroll IS the contract).  Shared by the pagerank and composed
-    web-link-rank oracles."""
-    d = int(damping_micro)
-    base = 1_000_000 - d
-    ctes = [
-        """nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-        deg AS (SELECT src, count(*) AS dg FROM e GROUP BY src),
-        w AS (SELECT e.src, e.dst, d.dg FROM e JOIN deg d ON e.src = d.src),
-        pr0 AS (SELECT node, CAST(1000000 AS BIGINT) AS r FROM nodes)"""
-    ]
-    for k in range(1, int(iters) + 1):
-        ctes.append(
-            f"""c{k} AS (
-          SELECT w.dst AS node, SUM(p.r // w.dg) AS s
-          FROM w JOIN pr{k - 1} p ON w.src = p.node
-          GROUP BY w.dst
-        ),
-        pr{k} AS (
-          SELECT n.node,
-                 CAST({base} + ({d} * coalesce(c.s, 0)) // 1000000 AS BIGINT)
-                   AS r
-          FROM nodes n LEFT JOIN c{k} c ON n.node = c.node
-        )"""
-        )
-    return ", ".join(ctes), f"pr{int(iters)}"
-
-
-def _pagerank_oracle() -> str:
-    """DuckDB recomputation of the fixed-point PageRank: the same fixture
-    edges, out-degrees joined once, each power iteration an unrolled CTE."""
-    m = _PAGERANK_MOD
-    ctes, final = _duck_pagerank_ctes(
-        _PAGERANK_PARAMS["iters"], _PAGERANK_PARAMS["damping_micro"]
-    )
-    return f"""
-        WITH e AS (
-          SELECT DISTINCT CAST(doc_id % {m} AS BIGINT) AS src,
-                 CAST((31 * doc_id + 7) % {m} AS BIGINT) AS dst
-          FROM documents
-        ),
-        {ctes}
-        SELECT node, r AS rank_micro,
-               ROUND(r / 1000000.0, 6) AS rank
-        FROM {final}
-    """
-
-
 # the html fixture wraps each document's text in a page skeleton exercising
 # every strip stage: script + style blocks, a comment, tags, the six
 # entities, and messy whitespace — ONE template both engines evaluate
@@ -994,10 +831,10 @@ _LINKS_HTML_DUCK = _LINKS_HTML_TMPL.format(
 
 def q_html_extract_links(spark, sf_dir):
     """Anchor extraction + URL resolution (datapipe/html.
-    html_extract_links — the crawl-table -> link-graph edge-list stage
-    feeding graphs.pagerank): three-quote-style href battery, fragment
-    strip, scheme filter, protocol/root/dir-relative resolution against
-    the page URL — all scan-fused per-row expressions, zero shuffle."""
+    html_extract_links — the crawl-table -> link-graph edge-list stage):
+    three-quote-style href battery, fragment strip, scheme filter,
+    protocol/root/dir-relative resolution against the page URL — all
+    scan-fused per-row expressions, zero shuffle."""
     from literature_to_facts_spark.datapipe.html import html_extract_links
 
     docs = _t(spark, sf_dir, "documents").selectExpr(
@@ -1016,7 +853,7 @@ def q_html_extract_links(spark, sf_dir):
 def _duck_links_ctes(html_expr: str | None = None, pairs: bool = False) -> str:
     """The html_extract_links replay as a CTE chain ending at
     ``links(doc_id, src_host, link_url, link_host)`` — shared by the
-    html_extract_links, web_link_rank and web_anchor_text oracles.  Href patterns, scheme
+    html_extract_links and web_anchor_text oracles.  Href patterns, scheme
     regexes and the URL group regex interpolate from datapipe.html /
     datapipe.urls (operator edits propagate); concat uses ||
     (NULL-propagating) per the DuckDB-concat-skips-NULLs invariant.
@@ -1124,60 +961,6 @@ def _html_links_oracle() -> str:
         WITH {_duck_links_ctes()}
         SELECT doc_id, link_url, link_host FROM links
     """
-
-
-def _web_link_rank_oracle() -> str:
-    """Composed chain: the shared links CTE -> distinct host-level edges
-    -> the shared unrolled fixed-point PageRank CTEs."""
-    ctes, final = _duck_pagerank_ctes(
-        _PAGERANK_PARAMS["iters"], _PAGERANK_PARAMS["damping_micro"]
-    )
-    return f"""
-        WITH {_duck_links_ctes()},
-        e AS (
-          SELECT DISTINCT src_host AS src, link_host AS dst
-          FROM links
-          WHERE src_host IS NOT NULL AND src_host <> ''
-        ),
-        {ctes}
-        SELECT node, r AS rank_micro,
-               ROUND(r / 1000000.0, 6) AS rank
-        FROM {final}
-    """
-
-
-def q_web_link_rank(spark, sf_dir):
-    """The composed crawl -> graph chain (the Common-Crawl host-ranking
-    recipe end-to-end): raw page html -> html_extract_links (scan-fused)
-    -> distinct host-level edges -> graphs.pagerank (fixed-point, 3
-    iterations).  One operator's output is the next one's input with no
-    materialization between them; the whole chain is oracled bit-exactly
-    through both the link-resolution and the unrolled power iterations."""
-    from literature_to_facts_spark.datapipe.graphs import pagerank
-    from literature_to_facts_spark.datapipe.html import html_extract_links
-    from literature_to_facts_spark.datapipe.urls import URL_PATTERN
-
-    docs = _t(spark, sf_dir, "documents").selectExpr(
-        "doc_id",
-        f"{_URL_FIXTURE_SPARK} AS url",
-        f"{_LINKS_HTML_SPARK} AS html",
-    )
-    links = html_extract_links(docs)
-    src = F.lower(F.regexp_extract(F.col("url"), URL_PATTERN, 2))
-    edges = (
-        links.select(src.alias("src"), F.col("link_host").alias("dst"))
-        .where(F.col("src").isNotNull() & (F.col("src") != ""))
-        .distinct()
-    )
-    reg = []
-    out = pagerank(edges, cache_registry=reg, **_PAGERANK_PARAMS)
-    out = out.select(
-        "node",
-        "rank_micro",
-        F.col("rank").cast("double").alias("rank"),
-    )
-    out._l2f_cache_registry = reg
-    return out
 
 
 def _duck_url_group(i: int, src: str = "url") -> str:
@@ -2116,310 +1899,13 @@ def _html_main_content_oracle() -> str:
     """
 
 
-def q_web_frontier_rank(spark, sf_dir):
-    """Crawl-frontier prioritization (the loop a production crawler closes):
-    extracted links -> candidates not yet crawled (anti-join against the
-    corpus' own urls) -> scored by host authority over crawl depth —
-    score = host pagerank (integer micro-units) div (1 + path depth), the
-    classic frontier heuristic (authoritative hosts first, shallow pages
-    before deep archives).  Composes html_extract_links + graphs.pagerank
-    + the URL part regex with no materialization; all-integer scoring so
-    the oracle is bit-exact through the whole chain."""
-    from literature_to_facts_spark.datapipe.graphs import pagerank
-    from literature_to_facts_spark.datapipe.html import html_extract_links
-    from literature_to_facts_spark.datapipe.urls import URL_PATTERN
-
-    docs = _t(spark, sf_dir, "documents").selectExpr(
-        "doc_id",
-        f"{_URL_FIXTURE_SPARK} AS url",
-        f"{_LINKS_HTML_SPARK} AS html",
-    )
-    reg = []
-    # links feeds BOTH the pagerank edge list and the frontier candidates;
-    # without the persist the scan-fused link-extraction battery executes
-    # once per consumer (exchange reuse does not cross the pagerank cache
-    # materialization) — persist is results-neutral
-    links = html_extract_links(docs).persist()
-    reg.append(links)
-    src = F.lower(F.regexp_extract(F.col("url"), URL_PATTERN, 2))
-    edges = (
-        links.select(src.alias("src"), F.col("link_host").alias("dst"))
-        .where(F.col("src").isNotNull() & (F.col("src") != ""))
-        .distinct()
-    )
-    ranks = pagerank(edges, cache_registry=reg, **_PAGERANK_PARAMS).select(
-        F.col("node"), F.col("rank_micro")
-    )
-    seen = docs.select(F.col("url")).distinct()
-    cand = (
-        links.select("link_url", "link_host").distinct()
-        .join(seen, F.col("link_url") == F.col("url"), "left_anti")
-        .withColumns(
-            {
-                "depth": F.size(
-                    F.filter(
-                        F.split(
-                            F.regexp_extract(F.col("link_url"), URL_PATTERN, 4),
-                            "/",
-                        ),
-                        lambda s: s != F.lit(""),
-                    )
-                ).cast("int")
-            }
-        )
-    )
-    out = (
-        cand.join(ranks, cand["link_host"] == ranks["node"], "left")
-        .select(
-            "link_url",
-            F.col("link_host").alias("host"),
-            "depth",
-            F.coalesce("rank_micro", F.lit(0).cast("bigint")).alias(
-                "rank_micro"
-            ),
-            F.expr("coalesce(rank_micro, 0L) div (1 + depth)")
-            .cast("bigint")
-            .alias("score_micro"),
-        )
-    )
-    out._l2f_cache_registry = reg
-    return out
-
-
-def _web_frontier_rank_oracle() -> str:
-    ctes, final = _duck_pagerank_ctes(
-        _PAGERANK_PARAMS["iters"], _PAGERANK_PARAMS["damping_micro"]
-    )
-    g = _duck_url_group
-    return f"""
-        WITH {_duck_links_ctes()},
-        e AS (
-          SELECT DISTINCT src_host AS src, link_host AS dst
-          FROM links
-          WHERE src_host IS NOT NULL AND src_host <> ''
-        ),
-        {ctes},
-        seen AS (
-          SELECT DISTINCT {_URL_FIXTURE_DUCK} AS url FROM documents
-          WHERE {_URL_FIXTURE_DUCK} IS NOT NULL  -- NOT IN over a NULL set
-        ),                                       -- filters EVERY row
-        cand AS (
-          SELECT DISTINCT link_url, link_host,
-                 CAST(len(list_filter(string_split({g(4, "link_url")}, '/'),
-                      x -> x <> '')) AS INTEGER) AS depth
-          FROM links
-          WHERE link_url NOT IN (SELECT url FROM seen)
-        )
-        SELECT cand.link_url, cand.link_host AS host, cand.depth,
-               coalesce(r.r, CAST(0 AS BIGINT)) AS rank_micro,
-               CAST(coalesce(r.r, 0) // (1 + cand.depth) AS BIGINT)
-                 AS score_micro
-        FROM cand LEFT JOIN {final} r ON cand.link_host = r.node
-    """
-
-
-# WARC fixture: per doc a 3-record payload — request (full headers),
-# response (LOWERCASE field names, no Content-Length), header-only
-# metadata trailer without the inter-record terminator.  Raw \r\n bytes
-# embedded in the SQL literals; ONE template, both engines.
-_WARC_TMPL = (
-    "concat("
-    "'WARC/1.0\r\nWARC-Type: request\r\nWARC-Target-URI: http://h', {m5},"
-    " '.example.com/p', {id},"
-    " '\r\nWARC-Date: 2024-02-0', {m3p1},"
-    " 'T08:00:00Z\r\nContent-Length: 12\r\n\r\nGET /p', {id}, '\r\n\r\n',"
-    "'WARC/1.0\r\nwarc-type: response\r\nwarc-target-uri: http://h', {m5},"
-    " '.example.com/p', {id},"
-    " '\r\nwarc-date: 2024-02-0', {m3p1},"
-    " 'T08:00:05Z\r\n\r\n<html>body ', {id}, '</html>\r\n\r\n',"
-    "'WARC/1.0\r\nWARC-Type: metadata\r\n\r\n'"
-    ")"
-)
-
-
-def q_web_warc_parse(spark, sf_dir):
-    """WARC container parsing (datapipe/warc.parse_warc): the Common-Crawl
-    entry format — records split on the version line, case-insensitive
-    header fields, epoch-microsecond fetch stamps (try_cast, ANSI-safe),
-    bodies delimited by the header blank line with the record terminator
-    trimmed.  Per-row split + regex battery, zero shuffle.  NULL-absent
-    fields coalesced at the contract boundary only (checker row-sort
-    parity)."""
-    from literature_to_facts_spark.datapipe.warc import parse_warc
-
-    docs = _spread(_t(spark, sf_dir, "documents")).selectExpr(
-        "doc_id",
-        _WARC_TMPL.format(
-            id="cast(doc_id as string)",
-            m5="cast(doc_id % 5 as string)",
-            m3p1="cast(doc_id % 3 + 1 as string)",
-        )
-        + " AS warc",
-    )
-    out = parse_warc(docs, carry_cols=("doc_id",))
-    z = F.lit("")
-    return out.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.coalesce("warc_type", z).alias("warc_type"),
-        F.coalesce("target_uri", z).alias("target_uri"),
-        F.coalesce("warc_date", z).alias("warc_date"),
-        F.coalesce("warc_ts_us", F.lit(-1)).cast("bigint").alias("warc_ts_us"),
-        F.coalesce("content_length", F.lit(-1))
-        .cast("bigint")
-        .alias("content_length"),
-        "body",
-    )
-
-
-def _duck_warc_ctes(warc_expr: str) -> str:
-    """The parse_warc replay as a CTE chain ending at ``wrec(doc_id,
-    warc_type, target_uri, warc_date, warc_ts_us, content_length, body)``
-    with the operator's NULL semantics — the web_warc_parse oracle's
-    base.  Header patterns interpolate from datapipe.warc (operator edits
-    propagate)."""
-    from literature_to_facts_spark.datapipe.warc import WARC_HEADER_PATTERNS
-
-    crlf2 = "chr(13) || chr(10) || chr(13) || chr(10)"
-    pt = WARC_HEADER_PATTERNS
-    return f"""
-        w AS (SELECT doc_id, {warc_expr} AS warc FROM documents),
-        recs AS (
-          SELECT doc_id,
-                 unnest(list_slice(string_split(warc,
-                        'WARC/1.0' || chr(13) || chr(10)), 2, 2147483647))
-                   AS rec
-          FROM w
-        ),
-        p AS (
-          SELECT doc_id, rec, instr(rec, {crlf2}) AS he FROM recs
-        ),
-        f AS (
-          SELECT doc_id,
-                 substring(rec, 1, he - 1) AS hdr,
-                 regexp_replace(substring(rec, he + 4),
-                                '\\r\\n\\r\\n$', '') AS body
-          FROM p WHERE he > 0
-        ),
-        wrec AS (
-          SELECT doc_id,
-                 nullif(trim(regexp_extract(hdr, '{pt["warc_type"]}', 1)), '')
-                   AS warc_type,
-                 nullif(trim(regexp_extract(hdr, '{pt["target_uri"]}', 1)), '')
-                   AS target_uri,
-                 nullif(trim(regexp_extract(hdr, '{pt["warc_date"]}', 1)), '')
-                   AS warc_date,
-                 CAST(epoch_us(try_cast(
-                      nullif(trim(regexp_extract(hdr, '{pt["warc_date"]}', 1)), '')
-                      AS TIMESTAMP)) AS BIGINT) AS warc_ts_us,
-                 try_cast(regexp_extract(hdr, '{pt["content_length"]}', 1)
-                      AS BIGINT) AS content_length,
-                 body
-          FROM f
-        )"""
-
-
-def _web_warc_parse_oracle() -> str:
-    xml = _WARC_TMPL.format(
-        id="cast(doc_id as varchar)",
-        m5="cast(doc_id % 5 as varchar)",
-        m3p1="cast(doc_id % 3 + 1 as varchar)",
-    )
-    return f"""
-        WITH {_duck_warc_ctes(xml)}
-        SELECT CAST(doc_id AS BIGINT) AS doc_id,
-               coalesce(warc_type, '') AS warc_type,
-               coalesce(target_uri, '') AS target_uri,
-               coalesce(warc_date, '') AS warc_date,
-               CAST(coalesce(warc_ts_us, -1) AS BIGINT) AS warc_ts_us,
-               CAST(coalesce(content_length, -1) AS BIGINT)
-                 AS content_length,
-               body
-        FROM wrec
-    """
-
-
-# deterministic 37-node host graph with cycles and branching (two functional
-# edge maps per doc) — the triangle-count fixture; identical in both engines
-_HOST_EDGES_EXPRS = [
-    ("concat('h', cast(doc_id % 37 as string))",
-     "concat('h', cast((doc_id * 7 + 3) % 37 as string))"),
-    ("concat('h', cast(doc_id % 37 as string))",
-     "concat('h', cast((doc_id * 5 + 11) % 37 as string))"),
-]
-_TRIANGLE_MAX_DEGREE = 10_000
-
-
-def q_web_triangle_count(spark, sf_dir):
-    """Per-host triangle counts over the cyclic host graph (datapipe/graphs.
-    triangle_count): the link-farm density signal — canonical undirected
-    edges, ordered-wedge enumeration (each triangle once), degree cap for
-    super-hubs.  Oracle is the same two-join enumeration in DuckDB,
-    bit-exact including degrees and the cap flag."""
-    from literature_to_facts_spark.datapipe.graphs import triangle_count
-
-    docs = _t(spark, sf_dir, "documents")
-    parts = [
-        docs.selectExpr(f"{s} AS src", f"{d} AS dst")
-        for s, d in _HOST_EDGES_EXPRS
-    ]
-    return triangle_count(
-        parts[0].unionByName(parts[1]), max_degree=_TRIANGLE_MAX_DEGREE
-    )
-
-
-def _web_triangle_count_oracle() -> str:
-    dup = " UNION ALL ".join(
-        f"SELECT {s.replace('as string', 'as varchar')} AS src, "
-        f"{d.replace('as string', 'as varchar')} AS dst FROM documents"
-        for s, d in _HOST_EDGES_EXPRS
-    )
-    cap = _TRIANGLE_MAX_DEGREE
-    return f"""
-        WITH raw AS ({dup}),
-        e AS (
-          SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-          FROM raw WHERE src IS NOT NULL AND dst IS NOT NULL AND src <> dst
-        ),
-        deg AS (
-          SELECT node, CAST(COUNT(*) AS BIGINT) AS degree
-          FROM (SELECT a AS node FROM e UNION ALL SELECT b AS node FROM e)
-          GROUP BY node
-        ),
-        hubs AS (SELECT node FROM deg WHERE degree > {cap}),
-        ee AS (
-          SELECT * FROM e
-          WHERE a NOT IN (SELECT node FROM hubs)
-            AND b NOT IN (SELECT node FROM hubs)
-        ),
-        tri AS (
-          SELECT e1.a AS x, e1.b AS y, e2.b AS z
-          FROM ee e1 JOIN ee e2 ON e1.b = e2.a
-                     JOIN ee e3 ON e3.a = e1.a AND e3.b = e2.b
-        ),
-        pn AS (
-          SELECT node, CAST(COUNT(*) AS BIGINT) AS n_triangles
-          FROM (SELECT x AS node FROM tri UNION ALL
-                SELECT y AS node FROM tri UNION ALL
-                SELECT z AS node FROM tri)
-          GROUP BY node
-        )
-        SELECT deg.node, deg.degree,
-               coalesce(pn.n_triangles, CAST(0 AS BIGINT)) AS n_triangles,
-               deg.degree > {cap} AS capped
-        FROM deg LEFT JOIN pn USING (node)
-    """
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # Registry order is the driver correctness gate's sampling order (it
-    # checks the first 50 entries, which are now all 50): newest lanes
+    # checks the first 50 entries, which is all 42 of them): newest lanes
     # first (the round-6 web/kg-query/url waves lead), the long-green
     # original kg/dedup/text queries follow.  Oracles and the bench address
     # queries by NAME — the registry order carries no semantics.
     return {
-        "web_warc_parse": q_web_warc_parse,
-        "web_frontier_rank": q_web_frontier_rank,
-        "web_triangle_count": q_web_triangle_count,
         "text_line_dedup_grouped": q_text_line_dedup_grouped,
         "web_anchor_text_incremental": q_web_anchor_text_incremental,
         "html_main_content": q_html_main_content,
@@ -2436,13 +1922,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "url_normalize": q_url_normalize,
         "url_parts": q_url_parts,
         "text_pii_redact": q_text_pii_redact,
-        "web_link_rank": q_web_link_rank,
         "html_extract_links": q_html_extract_links,
         "html_extract_text": q_html_extract_text,
-        "graph_pagerank": q_graph_pagerank,
-        "text_span_dedup_clean": q_text_span_dedup_clean,
-        "text_span_dedup_incremental": q_text_span_dedup_incremental,
-        "text_span_dedup": q_text_span_dedup,
         "text_line_dedup_incremental": q_text_line_dedup_incremental,
         "text_line_dedup": q_text_line_dedup,
         "kg_triples_melt": q_kg_triples_melt,
@@ -2765,89 +2246,6 @@ def _line_dedup_oracle(restrict: str | None = None) -> str:
     """
 
 
-def _span_dedup_oracle(
-    window: int = _SPAN_DEDUP_WINDOW,
-    min_df: int = _SPAN_DEDUP_MIN_DF,
-    restrict: str | None = None,
-    emit: str = "stats",
-) -> str:
-    """DuckDB recomputation of span_dedup end-to-end: the same split-on-space
-    tokens, md5-52-bit window keys, global occurrence counts and
-    interval-union coverage (sorted duplicated positions, each contributing
-    min(gap, window), the last a full window).  ``restrict`` filters the
-    OUTPUT rows only (frequencies always come from the whole corpus) — the
-    incremental query's contract."""
-    where = f"WHERE {restrict}" if restrict else ""
-    w = int(window)
-    key = _H1.format(x=f"array_to_string(toks[i:i+{w - 1}], ' ')")
-    if emit == "stats":
-        tail = f"""        SELECT CAST(b.doc_id AS BIGINT) AS doc_id,
-               CAST(b.ntok AS BIGINT) AS n_tokens,
-               CAST(coalesce(c.n_windows, 0) AS BIGINT) AS n_windows,
-               CAST(coalesce(c.n_dup_windows, 0) AS BIGINT) AS n_dup_windows,
-               CAST(coalesce(c.dup_tokens, 0) AS BIGINT) AS dup_tokens,
-               round(CAST(coalesce(c.dup_tokens, 0) AS DOUBLE)
-                     / greatest(b.ntok, 1), 6) AS dup_frac
-        FROM b LEFT JOIN cov c ON b.doc_id = c.doc_id"""
-    else:
-        tail = f"""        SELECT CAST(d.doc_id AS BIGINT) AS doc_id,
-               CASE WHEN a.ps IS NULL OR len(a.ps) = 0 THEN d.text
-                    -- coalesce: DuckDB array_to_string([]) is NULL, Spark
-                    -- array_join([]) is '' (a fully-duplicated doc)
-                    ELSE coalesce(array_to_string(list_filter(
-                      list_transform(range(1, len(t.toks) + 1),
-                        i -> CASE WHEN len(list_filter(a.ps,
-                               p -> p <= i AND i < p + {w})) > 0 THEN NULL
-                             ELSE t.toks[i] END),
-                      x -> x IS NOT NULL), ' '), '')
-               END AS span_clean_text
-        FROM documents d
-        LEFT JOIN t ON d.doc_id = t.doc_id
-        LEFT JOIN agg a ON d.doc_id = a.doc_id"""
-    return f"""
-        WITH t AS (
-          SELECT doc_id,
-                 list_filter(string_split(text, ' '), x -> x != '') AS toks
-          FROM documents WHERE text IS NOT NULL
-        ),
-        b AS (SELECT doc_id, len(toks) AS ntok FROM t),
-        wins AS (
-          SELECT doc_id, u.pos AS pos, u.wkey AS wkey
-          FROM (SELECT doc_id,
-                       CASE WHEN len(toks) >= {w} THEN
-                         list_transform(range(1, len(toks) - {w} + 2),
-                           i -> {{'pos': i, 'wkey': {key}}})
-                       ELSE [] END AS ws
-                FROM t),
-               UNNEST(ws) AS s(u)
-        ),
-        freq AS (
-          SELECT wkey FROM wins GROUP BY 1 HAVING count(*) >= {int(min_df)}
-        ),
-        agg AS (
-          SELECT w.doc_id,
-                 count(*) AS n_windows,
-                 count(f.wkey) AS n_dup_windows,
-                 list_sort(list(w.pos) FILTER (WHERE f.wkey IS NOT NULL))
-                   AS ps
-          FROM wins w LEFT JOIN freq f ON w.wkey = f.wkey
-          GROUP BY w.doc_id
-        ),
-        cov AS (
-          SELECT doc_id, n_windows, n_dup_windows,
-                 CASE WHEN ps IS NULL OR len(ps) = 0 THEN 0
-                      WHEN len(ps) = 1 THEN {w}
-                      ELSE CAST(list_sum(list_transform(range(1, len(ps)),
-                             i -> least(ps[i + 1] - ps[i], {w}))) AS BIGINT)
-                           + {w}
-                 END AS dup_tokens
-          FROM agg
-        )
-        {tail}
-        {where}
-    """
-
-
 def _pii_oracle() -> str:
     """DuckDB recomputation of pii_redact over the synthesized corpus: the
     regexes come straight from textclean.PII_PATTERNS (RE2-compatible by
@@ -3090,15 +2488,8 @@ def oracle_sql() -> dict[str, str]:
         """,
         "text_line_dedup": _line_dedup_oracle(),
         "text_line_dedup_incremental": _line_dedup_oracle(restrict="k.doc_id % 5 = 0"),
-        "text_span_dedup": _span_dedup_oracle(),
-        "text_span_dedup_clean": _span_dedup_oracle(emit="clean"),
-        "graph_pagerank": _pagerank_oracle(),
         "html_extract_text": _html_extract_oracle(),
         "html_extract_links": _html_links_oracle(),
-        "web_link_rank": _web_link_rank_oracle(),
-        "text_span_dedup_incremental": _span_dedup_oracle(
-            restrict="b.doc_id % 5 = 0"
-        ),
         "text_pii_redact": _pii_oracle(),
         "url_parts": _url_parts_oracle(),
         "url_normalize": _url_normalize_oracle(),
@@ -3135,9 +2526,6 @@ def oracle_sql() -> dict[str, str]:
         "web_anchor_text_incremental": _web_anchor_text_oracle(
             restrict="doc_id % 10 = 0"
         ),
-        "web_triangle_count": _web_triangle_count_oracle(),
-        "web_frontier_rank": _web_frontier_rank_oracle(),
-        "web_warc_parse": _web_warc_parse_oracle(),
         "text_line_dedup_grouped": f"""
         WITH m AS (
           SELECT doc_id, 'h' || CAST(doc_id % 4 AS VARCHAR) AS host,

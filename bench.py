@@ -78,7 +78,7 @@ HEADLINE = [
 ]
 
 # Driver queries over the datapipe/ modules still to be deleted (ROADMAP
-# item 4).  They are timed like HEADLINE and reported in the full result
+# item 6).  They are timed like HEADLINE and reported in the full result
 # line and BENCH/BASELINE.md, so a slowdown in that code still shows, but
 # they stay out of the compact line and the headline total.  Each entry
 # is deleted with its module.
@@ -90,16 +90,11 @@ DATAPIPE_TIMED = [
     "dedup_simhash_incremental",
     "text_line_dedup",
     "text_pii_redact",
-    "text_span_dedup",
-    "text_span_dedup_incremental",
     "url_normalize",
     "url_dedup",
-    "text_span_dedup_clean",
-    "graph_pagerank",
     "html_extract_text",
     "html_extract_links",
     "url_latest_snapshot",
-    "web_link_rank",
     "url_blocklist",
     "html_meta_robots",
     "url_canonical_dedup",
@@ -108,9 +103,6 @@ DATAPIPE_TIMED = [
     "html_main_content",
     "web_anchor_text_incremental",
     "text_line_dedup_grouped",
-    "web_triangle_count",
-    "web_frontier_rank",
-    "web_warc_parse",
 ]
 
 

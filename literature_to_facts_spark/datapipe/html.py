@@ -190,9 +190,8 @@ def html_extract_links(
     dedup: bool = False,
 ) -> DataFrame:
     """Extract anchor hrefs from raw HTML and resolve them against the
-    page URL — the stage that turns a crawl table into the ``(src, dst)``
-    edge list :func:`~literature_to_facts_spark.datapipe.graphs.pagerank`
-    ranks.  One output row per extracted link: all input columns EXCEPT
+    page URL — the stage that turns a crawl table into a ``(src, dst)``
+    link edge list.  One output row per extracted link: all input columns EXCEPT
     ``html_col`` (dropped so the explode never copies the raw page per
     link) plus ``link_col`` (the resolved absolute URL, fragment stripped)
     and ``host_col`` (its lowercased host).

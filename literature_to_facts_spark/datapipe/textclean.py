@@ -375,300 +375,6 @@ def line_dedup_incremental(
     return _reassemble(flagged, id_col, carry_cols)
 
 
-# names span_dedup emits (or uses internally) — same loud-rejection contract
-# as _RESERVED_LINE_COLS.
-_RESERVED_SPAN_COLS = frozenset(
-    {
-        "_id",
-        "_ntok",
-        "_toks",
-        "_wins",
-        "_w",
-        "_pos",
-        "_wkey",
-        "_fkey",
-        "n_tokens",
-        "n_windows",
-        "n_dup_windows",
-        "dup_tokens",
-        "dup_frac",
-        "dup_positions",
-    }
-)
-
-
-def span_dedup(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    window: int = 8,
-    min_df: int = 2,
-    broadcast_frequent: bool = False,
-    carry_cols: tuple = (),
-    emit_positions: bool = False,
-) -> DataFrame:
-    """Duplicated-substring detection (ExactSubstr dedup, Lee et al. 2021,
-    "Deduplicating Training Data Makes Language Models Better"): flag every
-    ``window``-token span whose text occurs >= ``min_df`` times ACROSS THE
-    CORPUS (occurrence count, not distinct documents — a span repeated
-    twice inside one document is a duplicate, matching the paper's
-    suffix-array semantics), and report per-document duplicated-token
-    coverage.
-
-    Returns one row per non-NULL-text input document:
-    ``(id_col, n_tokens, n_windows, n_dup_windows, dup_tokens, dup_frac)``
-    where ``dup_tokens`` is the size of the UNION of all duplicated windows'
-    token intervals ``[pos, pos+window-1]`` (overlapping spans counted
-    once) and ``dup_frac = round(dup_tokens / n_tokens, 6)``.  Documents
-    shorter than ``window`` tokens have zero windows and zero coverage.
-    Callers curate on the coverage signal (e.g. drop ``dup_frac > 0.5``).
-
-    Tokenization is split-on-single-space with empty tokens dropped (the
-    repo-wide shingle convention, minus lowercasing — span identity is
-    case-sensitive like the paper's byte-level match); window keys use the
-    portable md5 52-bit family so the DuckDB oracle recomputes them
-    bit-exactly.
-
-    Scale shape (100 TB): the token array and the window structs are each
-    projected ONCE (HOF lambdas re-evaluate inlined expressions per
-    element); per-doc work is O(n_tokens * window).  Three Exchanges —
-    the window-key frequency count (map-side partial agg absorbs hot
-    boilerplate keys), the key join back, and the per-document aggregate;
-    ``broadcast_frequent=True`` removes the corpus-side key-join shuffle
-    when ``min_df`` is high enough that the frequent set is small
-    (boilerplate mode — the same trade as :func:`line_dedup`; at
-    ``min_df=2`` the set scales with the corpus and MUST shuffle).
-    Interval-union coverage is a pure array expression over the collected
-    positions (no explode-the-coverage shuffle).  Same two-consumer trade
-    as :func:`line_dedup`: the exploded window frame feeds the frequency
-    count and the join's left side off a narrow scan + split, which beats
-    materializing an exploded corpus copy.
-    """
-    if min_df < 2:
-        raise ValueError(f"min_df must be >= 2, got {min_df}")
-    if window < 2:
-        raise ValueError(f"window must be >= 2, got {window}")
-    clash = sorted(_RESERVED_SPAN_COLS & set(carry_cols))
-    if clash:
-        raise ValueError(
-            f"carry_cols {clash} collide with span_dedup's output/internal "
-            "columns; rename them first"
-        )
-    w = int(window)
-    inst = _span_instances(docs, id_col, text_col, w, carry_cols)
-    freq = (
-        inst.where(F.col("_wkey").isNotNull())
-        .groupBy("_wkey")
-        .agg(F.count(F.lit(1)).alias("_cnt"))
-        .where(F.col("_cnt") >= F.lit(int(min_df)))
-        .select(F.col("_wkey").alias("_fkey"))
-    )
-    if broadcast_frequent:
-        freq = F.broadcast(freq)
-    flagged = inst.join(freq, inst["_wkey"] == freq["_fkey"], "left")
-    return _span_aggregate(flagged, id_col, w, carry_cols, emit_positions)
-
-
-def _span_instances(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    w: int,
-    carry_cols: tuple = (),
-) -> DataFrame:
-    """(_id, _ntok, _pos, _wkey[, carry...]) exploded window instances —
-    one row per ``w``-token sliding window; sub-window documents keep one
-    NULL-position row (``explode_outer``) so they survive to the output."""
-    base = docs.where(F.col(text_col).isNotNull()).select(
-        F.col(id_col).alias("_id"),
-        F.expr(f"filter(split({text_col}, ' '), t -> t != '')").alias("_toks"),
-        *[F.col(c) for c in carry_cols],
-    )
-    # window structs projected in their own step: slice/concat_ws inside the
-    # lambda is O(window) per element (linear total), but the _toks input
-    # must already be a plain column reference or it re-evaluates per element
-    win_text = f"concat_ws(' ', slice(_toks, i, {w}))"
-    wins = base.select(
-        "_id",
-        F.expr("size(_toks)").alias("_ntok"),
-        F.expr(
-            f"CASE WHEN size(_toks) >= {w} THEN "
-            f"transform(sequence(1, size(_toks) - {w} + 1), "
-            f"i -> named_struct('_pos', i, '_wkey', {_h52(win_text)})) "
-            f"ELSE array() END"
-        ).alias("_wins"),
-        *[F.col(c) for c in carry_cols],
-    )
-    return wins.select(
-        "_id",
-        "_ntok",
-        F.explode_outer("_wins").alias("_w"),
-        *[F.col(c) for c in carry_cols],
-    ).select(
-        "_id",
-        "_ntok",
-        F.col("_w._pos").alias("_pos"),
-        F.col("_w._wkey").alias("_wkey"),
-        *[F.col(c) for c in carry_cols],
-    )
-
-
-def _span_aggregate(
-    flagged: DataFrame, id_col: str, w: int, carry_cols: tuple = (),
-    emit_positions: bool = False,
-) -> DataFrame:
-    """Per-document tail shared by the full and incremental span dedup:
-    window counts plus interval-union coverage of the duplicated windows —
-    sort the duplicated positions, each contributes min(gap-to-next,
-    window) tokens, the last a full window.  A pure array expression over
-    the collected positions (no coverage-explode shuffle); collect_list
-    skips NULLs (non-dup rows).  The size>=2 guard keeps sequence()
-    ascending and element_at in bounds (ANSI mode: out-of-bounds element_at
-    is an error, and sequence(1, 0) would be the DESCENDING [1, 0])."""
-    cov = (
-        f"CASE WHEN size(_ps) = 0 THEN CAST(0 AS BIGINT) "
-        f"WHEN size(_ps) = 1 THEN CAST({w} AS BIGINT) ELSE "
-        f"aggregate(transform(sequence(1, size(_ps) - 1), "
-        f"i -> least(element_at(_ps, i + 1) - element_at(_ps, i), {w})), "
-        f"CAST({w} AS BIGINT), (a, x) -> a + x) END"
-    )
-    return (
-        flagged.groupBy(F.col("_id").alias(id_col))
-        .agg(
-            F.first("_ntok").cast("bigint").alias("n_tokens"),
-            F.count("_pos").cast("bigint").alias("n_windows"),
-            F.count("_fkey").cast("bigint").alias("n_dup_windows"),
-            F.array_sort(
-                F.collect_list(F.when(F.col("_fkey").isNotNull(), F.col("_pos")))
-            ).alias("_ps"),
-            *[F.first(F.col(c)).alias(c) for c in carry_cols],
-        )
-        .withColumn("dup_tokens", F.expr(cov))
-        .withColumn(
-            "dup_frac",
-            F.round(F.col("dup_tokens") / F.greatest(F.col("n_tokens"), F.lit(1)), 6),
-        )
-        .withColumnRenamed("_ps", "dup_positions")
-    ).drop(*([] if emit_positions else ["dup_positions"]))
-
-
-def build_window_frequency_index(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    window: int = 8,
-) -> DataFrame:
-    """(win_key, cnt): one batch's window-OCCURRENCE counts — the PERSISTED
-    STATE of incremental span dedup (seventh delta family).
-
-    APPEND-ONLY: each batch appends its own counts; probes SUM the touched
-    rows.  Unlike the line index (distinct-document counts, which need the
-    disjoint-batch contract to sum correctly), occurrence counts sum
-    exactly by construction.  Write with ``engine.kgquery.write_bucketed(
-    ..., bucket_col="win_key")`` for the zero-Exchange probe plan.  The
-    ``window`` build parameter is STAMPED into the field metadata (same
-    verify-at-call-time contract as :func:`build_line_frequency_index`)."""
-    w = int(window)
-    if w < 2:
-        raise ValueError(f"window must be >= 2, got {w}")
-    key = F.col("_wkey").alias("win_key", metadata={"l2f_span_window": w})
-    return (
-        _span_instances(docs, id_col, text_col, w)
-        .where(F.col("_wkey").isNotNull())
-        .groupBy(key)
-        .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-    )
-
-
-def span_dedup_incremental(
-    new_docs: DataFrame,
-    old_index: DataFrame | None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    window: int = 8,
-    min_df: int = 2,
-    cache_registry: list | None = None,
-    carry_cols: tuple = (),
-) -> DataFrame:
-    """Delta span dedup: ``span_dedup(old ∪ new)`` RESTRICTED to the NEW
-    batch's documents — history text is never re-windowed; only the
-    persisted :func:`build_window_frequency_index` rows are touched.
-
-    A window duplicated across the old/new boundary (one historical + one
-    batch occurrence) reaches ``min_df=2`` and is flagged in the new
-    document; already-shipped history is immutable (run the full
-    :func:`span_dedup` for a from-scratch rebuild).  ``old_index=None``
-    degenerates to full mode over the batch.
-
-    PROBE-shaped like every delta family here: the batch's window keys are
-    BROADCAST and semi-join-filter the history index at its scan (zero
-    Exchange over a ``write_bucketed("win_key")`` catalog table), matched
-    keys stream the old counts past a broadcast of the batch aggregate,
-    and batch-only keys come from a broadcast anti join (a broadcast side
-    can never be outer-preserved).  ``new_freq`` and ``matched`` are
-    persisted (batch-sized, two consumers) and appended to
-    ``cache_registry`` for per-batch unpersist in long-lived sessions."""
-    if min_df < 2:
-        raise ValueError(f"min_df must be >= 2, got {min_df}")
-    w = int(window)
-    if w < 2:
-        raise ValueError(f"window must be >= 2, got {w}")
-    clash = sorted(_RESERVED_SPAN_COLS & set(carry_cols))
-    if clash:
-        raise ValueError(
-            f"carry_cols {clash} collide with span_dedup's output/internal "
-            "columns; rename them first"
-        )
-    if old_index is None:
-        old_index = new_docs.sparkSession.createDataFrame(
-            [], "win_key bigint, cnt bigint"
-        )
-    elif "win_key" in old_index.columns:
-        built = old_index.schema["win_key"].metadata.get("l2f_span_window")
-        if built is not None and int(built) != w:
-            raise ValueError(
-                f"old_index was built with window={built} but the probe "
-                f"passed window={w}; combined frequencies would mix two "
-                "different window populations"
-            )
-    # NOTE (round 7): persisting the exploded instance frame (it feeds both
-    # the frequency count and the final flag join) was tried and REVERTED —
-    # AQE overlaps the two consumers' subtrees, so the persist's
-    # materialization barrier cost more than the saved re-windowing at both
-    # 1x and 10x bench scale (one-shot +0.3-0.4 s); the recompute trade
-    # stands, same as the full-mode operator.
-    inst = _span_instances(new_docs, id_col, text_col, w, carry_cols)
-    new_freq = (
-        inst.where(F.col("_wkey").isNotNull())
-        .groupBy(F.col("_wkey").alias("win_key"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("_new_cnt"))
-        .persist()
-    )
-    touched_old = old_index.join(
-        F.broadcast(new_freq.select("win_key")), on="win_key", how="left_semi"
-    )
-    old_agg = touched_old.groupBy("win_key").agg(F.sum("cnt").alias("_old_cnt"))
-    matched = (
-        old_agg.join(F.broadcast(new_freq), on="win_key", how="inner").persist()
-    )
-    miss = new_freq.join(
-        F.broadcast(matched.select("win_key")), on="win_key", how="left_anti"
-    ).withColumn("_old_cnt", F.lit(0).cast("bigint"))
-    if cache_registry is not None:
-        cache_registry.extend([new_freq, matched])
-    cols = ["win_key", "_old_cnt", "_new_cnt"]
-    frequent = (
-        matched.select(*cols)
-        .unionByName(miss.select(*cols))
-        .where(F.col("_old_cnt") + F.col("_new_cnt") >= F.lit(int(min_df)))
-        .select(F.col("win_key").alias("_fkey"))
-    )
-    flagged = inst.join(
-        F.broadcast(frequent), inst["_wkey"] == F.col("_fkey"), "left"
-    )
-    return _span_aggregate(flagged, id_col, w, carry_cols)
-
-
 def pii_redact(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -705,68 +411,4 @@ def pii_redact(
         docs.withColumns(counts)
         .withColumn(output_col, clean)
         .withColumn("has_pii", flag)
-    )
-
-
-def span_dedup_clean(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    window: int = 8,
-    min_df: int = 2,
-    broadcast_frequent: bool = False,
-) -> DataFrame:
-    """ExactSubstr REMOVAL (the second half of Lee et al. 2021: the paper
-    cuts the duplicated spans out, :func:`span_dedup` only scores them):
-    every token covered by a duplicated ``window``-token span is removed
-    and the survivors re-joined with single spaces into ``clean_text``.
-
-    Documents with NO duplicated window pass through with their text
-    VERBATIM (including original whitespace); rewritten documents are
-    single-space token joins — tokenization is whitespace-lossy by
-    construction, same as :func:`line_dedup`'s newline reassembly.  NULL
-    text passes through NULL.  A fully-duplicated document yields ``''``
-    (curate on it like an empty doc).
-
-    Scale shape: the coverage stats ride :func:`span_dedup` unchanged; the
-    rewrite adds ONE id-keyed join of the (id, dup_positions) rows — only
-    documents that actually have duplicated spans carry a positions array
-    through the shuffle — and a per-row array rewrite (``exists`` over the
-    doc's duplicated positions per token, O(n_tokens x n_dup_spans) worst
-    case, boilerplate-bounded in practice).  Output: all input columns +
-    ``clean_text``."""
-    w = int(window)
-    clash = sorted({"clean_text", "_sdc_id", "_sdc_ps", "_toks"} & set(docs.columns))
-    if clash:
-        raise ValueError(
-            f"input columns {clash} collide with span_dedup_clean's "
-            "output/internal columns; rename them first"
-        )
-    flagged = (
-        span_dedup(
-            docs, id_col, text_col, w, min_df,
-            broadcast_frequent=broadcast_frequent, emit_positions=True,
-        )
-        .where(F.col("n_dup_windows") > 0)
-        .select(
-            F.col(id_col).alias("_sdc_id"),
-            F.col("dup_positions").alias("_sdc_ps"),
-        )
-    )
-    joined = docs.join(
-        flagged, docs[id_col] == F.col("_sdc_id"), "left"
-    ).withColumn("_toks", F.expr(f"filter(split({text_col}, ' '), t -> t != '')"))
-    # rewritten only when a positions array arrived: those docs have
-    # n_tokens >= window >= 2, so sequence(1, size) is ascending (ANSI-safe)
-    rewrite = F.expr(
-        f"array_join(filter(transform(sequence(1, size(_toks)), i -> "
-        f"CASE WHEN exists(_sdc_ps, p -> p <= i AND i < p + {w}) THEN NULL "
-        f"ELSE element_at(_toks, i) END), t -> t IS NOT NULL), ' ')"
-    )
-    return (
-        joined.withColumn(
-            "clean_text",
-            F.when(F.col("_sdc_id").isNull(), F.col(text_col)).otherwise(rewrite),
-        )
-        .drop("_sdc_id", "_sdc_ps", "_toks")
     )

@@ -9,10 +9,9 @@ become DataFrame plans:
 * :func:`predicate_stats` — per-predicate cardinalities (triples, distinct
   subjects, distinct objects), the statistics an RDF store keeps for join
   ordering.
-* :func:`pattern_join_ordered` — same-subject two-pattern join whose
-  broadcast side the statistics pick.
-* :func:`star_join_ordered` — its N-pattern generalization with
+* :func:`star_join_ordered` — same-subject N-pattern join with
   statistics-driven join ordering and per-side broadcast decisions.
+* :func:`pattern_join_ordered` — its two-pattern case.
 * :func:`write_bucketed` — the catalog-table layout the probe-shaped
   incrementals read: a history index bucketed on its probe key plans the
   probe with zero Exchange.
@@ -102,42 +101,21 @@ def pattern_join_ordered(
     stats: DataFrame | None = None,
     broadcast_threshold: int = 1_000_000,
 ) -> DataFrame:
-    """Same-subject two-pattern join (SPARQL ``?s pa ?va . ?s pb ?vb``)
-    with STATISTICS-DRIVEN physical planning — the reason an RDF store
-    keeps :func:`predicate_stats` at all: ``(subj, val_a, val_b)`` for
-    every subject carrying both predicates, with the smaller pattern side
-    BROADCAST when the stats say it fits.
+    """Same-subject two-pattern join (SPARQL ``?s pa ?va . ?s pb ?vb``):
+    ``(subj, val_a, val_b)`` for every subject carrying both predicates.
 
-    ``stats`` is a :func:`predicate_stats` table; the driver-side decision
-    reads just the two predicates' ``n_triples`` from it (a pred-sized
-    lookup — two rows, not a corpus scan).  When the smaller side is under
-    ``broadcast_threshold`` triples it is broadcast — the selective
-    pattern (``mentions_GRB220101A``, 10^3 rows) streams the huge one
-    (``lang``, 10^12 rows) map-side with ZERO shuffle of the big side,
-    exactly Spark's star-schema strategy but decided from KG statistics
-    Spark cannot know (both inputs are filters over ONE triple table, so
-    its own size estimates see the whole table on both sides).  Without
-    stats (or with both sides large) the join falls back to the normal
-    shuffled equi-join on ``subj``.
-
-    Scale shape: two scan-fused filters of the triple store (a
-    pred-partitioned layout prunes both to their partitions), one join
-    whose strategy the caller's statistics pick.  Output is
-    plan-independent — the oracle asserts bit-equality with the naive
-    join either way.
+    The two-pattern case of :func:`star_join_ordered`, so ``stats`` picks
+    the plan the same way: the smaller side is broadcast when it is under
+    ``broadcast_threshold`` triples (the selective ``mentions_GRB220101A``
+    pattern streams the huge ``lang`` one map-side with zero shuffle of
+    the big side), and a predicate missing from ``stats`` counts as
+    unknown, so it is never broadcast.  Without stats the join is the
+    normal shuffled equi-join on ``subj``.
     """
-    a = _pattern(triples, pred_a, "val_a")
-    b = _pattern(triples, pred_b, "val_b")
-    if stats is not None:
-        counts = _triple_counts(stats, [pred_a, pred_b])
-        na = counts.get(pred_a, 0)
-        nb = counts.get(pred_b, 0)
-        if min(na, nb) <= int(broadcast_threshold):
-            if na <= nb:
-                a = F.broadcast(a)
-            else:
-                b = F.broadcast(b)
-    return a.join(b, on="subj")
+    return star_join_ordered(
+        triples, [pred_a, pred_b], stats, broadcast_threshold,
+        aliases=["val_a", "val_b"],
+    )
 
 
 def star_join_ordered(
@@ -148,8 +126,7 @@ def star_join_ordered(
     aliases: list[str] | None = None,
 ) -> DataFrame:
     """N-pattern same-subject star join (SPARQL ``?s p1 ?v1 . ... ?s pN
-    ?vN``) with STATISTICS-DRIVEN join ordering — the N-way
-    generalization of :func:`pattern_join_ordered` and the query shape the
+    ?vN``) with STATISTICS-DRIVEN join ordering — the query shape the
     reference's contemplate joins chain by hand two patterns at a time
     (``/root/reference/facts/learn.py:105-156``): one output row per
     subject carrying ALL the predicates, one value column per pattern in

@@ -750,68 +750,3 @@ def test_deduplicate_corpus_keep_best(spark):
         ).collect()
     }
     assert kept == {11, 14, 15}
-
-
-def test_pagerank_fixed_point_semantics(spark):
-    """Fixed-point PageRank equals an independent integer-arithmetic
-    reference on a graph with a cycle, a dangling node and a hub; guards
-    fire loudly."""
-    import pytest as _pt
-
-    from literature_to_facts_spark.datapipe.graphs import pagerank
-
-    # 1 -> 2, 2 -> 1 (cycle); 1 -> 3 (3 dangles); 4 -> 1, 4 -> 2
-    edges = [(1, 2), (2, 1), (1, 3), (4, 1), (4, 2)]
-    df = spark.createDataFrame(edges, ["src", "dst"])
-    reg = []
-    got = {
-        r.node: (r.rank_micro, r.rank)
-        for r in pagerank(df, iters=3, cache_registry=reg).collect()
-    }
-    for d in reg:
-        d.unpersist()
-
-    # independent reference with the exact integer ops
-    nodes = {1, 2, 3, 4}
-    deg = {1: 2, 2: 1, 4: 2}
-    r = {n: 1_000_000 for n in nodes}
-    for _ in range(3):
-        s = {n: 0 for n in nodes}
-        for a, b in edges:
-            s[b] += r[a] // deg[a]
-        r = {n: 150_000 + (850_000 * s[n]) // 1_000_000 for n in nodes}
-    for n in nodes:
-        assert got[n][0] == r[n], (n, got[n][0], r[n])
-        assert got[n][1] == round(r[n] / 1e6, 6)
-    # hub 4 receives nothing; dangling 3 receives but never forwards
-    assert got[4][0] == 150_000
-    assert got[3][0] > 150_000
-
-    with _pt.raises(ValueError, match="iters"):
-        pagerank(df, iters=0)
-    with _pt.raises(ValueError, match="damping"):
-        pagerank(df, damping_micro=1_000_000)
-
-
-def test_triangle_count_semantics_and_cap(spark):
-    from literature_to_facts_spark.datapipe.graphs import triangle_count
-
-    # K4 (4 triangles, 3 per member) + pendant e + reciprocal duplicate
-    edges = spark.createDataFrame(
-        [("a", "b"), ("a", "c"), ("a", "d"), ("b", "c"), ("b", "d"),
-         ("c", "d"), ("d", "e"), ("b", "a"), ("c", "c")],
-        "src string, dst string",
-    )
-    got = {r["node"]: r for r in triangle_count(edges).collect()}
-    assert {n: r["n_triangles"] for n, r in got.items()} == {
-        "a": 3, "b": 3, "c": 3, "d": 3, "e": 0
-    }
-    assert got["d"]["degree"] == 4 and got["e"]["degree"] == 1
-    assert not any(r["capped"] for r in got.values())
-    # cap excludes hubs from enumeration but keeps their degree row
-    capped = {r["node"]: r for r in triangle_count(edges, max_degree=2).collect()}
-    assert capped["a"]["capped"] and capped["a"]["n_triangles"] == 0
-    assert not capped["e"]["capped"]
-    # cap disabled
-    off = {r["node"]: r for r in triangle_count(edges, max_degree=None).collect()}
-    assert off["a"]["n_triangles"] == 3 and not off["a"]["capped"]

@@ -112,24 +112,51 @@ def test_pattern_join_ordered_broadcasts_small_side(spark, star_triples):
     assert "BroadcastHashJoin" in planned
     naive = pattern_join_ordered(
         star_triples, "mentions_x", "lang", None,
-    )._jdf.queryExecution().executedPlan().toString()
+    )._jdf.queryExecution().analyzed().toString()
     # the fallback must not secretly broadcast via the decision path; AQE
-    # may still pick a broadcast at runtime from sizes, so pin only the
-    # POSITIVE case (statistics forced the hint into the initial plan)
-    assert "broadcast" not in naive.lower() or True
+    # may still pick a broadcast at runtime from sizes, so the executed
+    # plan cannot be pinned — the analyzed plan must carry no hint
+    assert "ResolvedHint" not in naive, naive
 
 
 def test_pattern_join_ordered_threshold_disables_broadcast(spark, star_triples):
     stats = predicate_stats(star_triples)
-    plan = pattern_join_ordered(
-        star_triples, "mentions_x", "lang", stats, broadcast_threshold=0
-    )._jdf.queryExecution().executedPlan().toString()
     # threshold 0: no stats-driven hint — plan is whatever Spark picks,
     # but the hint node must be absent from the analyzed plan
     analyzed = pattern_join_ordered(
         star_triples, "mentions_x", "lang", stats, broadcast_threshold=0
     )._jdf.queryExecution().analyzed().toString()
     assert "ResolvedHint" not in analyzed
+
+
+def _hinted_sides(df):
+    """The subtree under every ``ResolvedHint`` of ``df``'s analyzed plan,
+    as strings — the join sides the statistics marked for broadcast."""
+    out, todo = [], [df._jdf.queryExecution().analyzed()]
+    while todo:
+        node = todo.pop()
+        if node.nodeName() == "ResolvedHint":
+            out.append(node.child().toString())
+        children = node.children()
+        todo += [children.apply(i) for i in range(children.size())]
+    return out
+
+
+def test_stale_stats_never_broadcast_the_unknown_side(spark, star_triples):
+    """A predicate missing from a stale stats table is unknown, not empty:
+    neither join may hint its (possibly huge) side for broadcast, while a
+    known small side still is."""
+    stale = predicate_stats(star_triples.where("pred != 'mentions_x'"))
+    pattern = _hinted_sides(
+        pattern_join_ordered(star_triples, "mentions_x", "lang", stale)
+    )
+    star = _hinted_sides(
+        star_join_ordered(star_triples, ["mentions_x", "lang", "source"], stale)
+    )
+    assert pattern and star
+    for hinted in (pattern, star):
+        assert not any("mentions_x" in h for h in hinted), hinted
+    assert any("lang" in h for h in pattern), pattern
 
 
 # ---------------------------------------------------------------------------

@@ -413,234 +413,6 @@ def test_line_dedup_incremental_index_param_stamp(spark, tmp_path):
     assert line_dedup_incremental(batch, bare, min_line_chars=20).count() == 1
 
 
-# ---------------------------------------------------------------------------
-# span_dedup (ExactSubstr-style duplicated-substring detection)
-# ---------------------------------------------------------------------------
-
-
-@pytest.fixture(scope="module")
-def span_docs(spark):
-    rows = [
-        (1, "a b c d e f"),
-        (2, "x a b c d y"),
-        # every 3-window occurs twice WITHIN the doc -> all dup by
-        # occurrence count (Lee et al. semantics, not distinct-doc)
-        (3, "p q r p q r p q"),
-        (4, "short one"),          # < window tokens: zero windows
-        (5, None),                 # excluded
-        (6, ""),                   # zero tokens
-        (7, "A b c d e f"),        # case-sensitive: 'A b c' != 'a b c'
-    ]
-    return spark.createDataFrame(rows, ["doc_id", "text"])
-
-
-def test_span_dedup_semantics(spark, span_docs):
-    """Window=3, min_df=2 over the handcrafted corpus: duplicated windows
-    are 'a b c' (docs 1,2), 'b c d' (1,2,7), 'c d e' (1,7), 'd e f' (1,7)
-    and all six windows of doc 3 (each text twice in-doc); coverage is the
-    interval UNION (overlaps counted once)."""
-    from literature_to_facts_spark.datapipe.textclean import span_dedup
-
-    out = span_dedup(span_docs, window=3, min_df=2)
-    got = {
-        r["doc_id"]: (
-            r["n_tokens"], r["n_windows"], r["n_dup_windows"],
-            r["dup_tokens"], r["dup_frac"],
-        )
-        for r in out.collect()
-    }
-    assert got == {
-        1: (6, 4, 4, 6, 1.0),
-        2: (6, 4, 2, 4, round(4 / 6, 6)),
-        3: (8, 6, 6, 8, 1.0),
-        4: (2, 0, 0, 0, 0.0),
-        6: (0, 0, 0, 0, 0.0),
-        7: (6, 4, 3, 5, round(5 / 6, 6)),
-    }
-
-
-def test_span_dedup_min_df_occurrence_counting(spark, span_docs):
-    """min_df=3: only 'b c d' reaches three occurrences (docs 1, 2, 7);
-    doc 3's in-doc repeats stop at two occurrences each."""
-    from literature_to_facts_spark.datapipe.textclean import span_dedup
-
-    out = span_dedup(span_docs, window=3, min_df=3)
-    got = {r["doc_id"]: (r["n_dup_windows"], r["dup_tokens"]) for r in out.collect()}
-    assert got[1] == (1, 3)
-    assert got[2] == (1, 3)
-    assert got[7] == (1, 3)
-    assert got[3] == (0, 0)
-
-
-def test_span_dedup_disjoint_spans_and_token_collapse(spark):
-    """Two duplicated windows far apart contribute window tokens each (no
-    interval merge), and runs of spaces collapse (empty tokens dropped)."""
-    from literature_to_facts_spark.datapipe.textclean import span_dedup
-
-    docs = spark.createDataFrame(
-        [
-            (1, "s1 s2 s3 m1 m2 m3 m4  s1 s2 s3"),  # double space collapses
-            (2, "s1 s2 s3 z1 z2 z3"),
-        ],
-        ["doc_id", "text"],
-    )
-    out = span_dedup(docs, window=3, min_df=2)
-    got = {
-        r["doc_id"]: (r["n_tokens"], r["n_dup_windows"], r["dup_tokens"])
-        for r in out.collect()
-    }
-    # doc 1: 10 tokens; 's1 s2 s3' at pos 1 and 8 (3 occurrences total with
-    # doc 2's) -> coverage = two disjoint 3-token spans = 6
-    assert got[1] == (10, 2, 6)
-    assert got[2] == (6, 1, 3)
-
-
-def test_span_dedup_carry_and_validation(spark, span_docs):
-    from literature_to_facts_spark.datapipe.textclean import span_dedup
-
-    docs = span_docs.withColumn("lang", F.lit("en"))
-    out = span_dedup(docs, window=3, min_df=2, carry_cols=("lang",))
-    assert out.where(F.col("lang") == "en").count() == 6
-    with pytest.raises(ValueError, match="min_df"):
-        span_dedup(span_docs, min_df=1)
-    with pytest.raises(ValueError, match="window"):
-        span_dedup(span_docs, window=1)
-    with pytest.raises(ValueError, match="collide"):
-        span_dedup(
-            span_docs.withColumn("dup_frac", F.lit(1)),
-            carry_cols=("dup_frac",),
-        )
-
-
-def test_span_dedup_incremental_equals_full_restricted(spark, span_docs):
-    """The delta contract: incremental over (batch, history index) equals
-    the full span_dedup over old ∪ new restricted to batch ids — including
-    a window duplicated only ACROSS the boundary."""
-    from literature_to_facts_spark.datapipe.textclean import (
-        build_window_frequency_index,
-        span_dedup,
-        span_dedup_incremental,
-    )
-
-    new = span_docs.where(F.col("doc_id") % 2 == 1)
-    old = span_docs.where(F.col("doc_id") % 2 == 0)
-    idx = build_window_frequency_index(old, window=3)
-    inc = span_dedup_incremental(new, idx, window=3, min_df=2)
-    full = span_dedup(span_docs, window=3, min_df=2).where(F.col("doc_id") % 2 == 1)
-    assert sorted(map(tuple, inc.collect())) == sorted(map(tuple, full.collect()))
-    # first batch (no history) degenerates to full mode over the batch
-    first = span_dedup_incremental(new, None, window=3, min_df=2)
-    batch_full = span_dedup(new, window=3, min_df=2)
-    assert sorted(map(tuple, first.collect())) == sorted(
-        map(tuple, batch_full.collect())
-    )
-
-
-def test_span_dedup_incremental_index_stamp_and_plan(spark, span_docs, tmp_path):
-    """The window build parameter is stamped into win_key metadata and a
-    mismatched probe fails loudly; over a write_bucketed("win_key") catalog
-    table the history side plans with ZERO Exchange (seventh delta family,
-    same pin as the other six)."""
-    from literature_to_facts_spark.engine.kgquery import write_bucketed
-    from literature_to_facts_spark.datapipe.textclean import (
-        build_window_frequency_index,
-        span_dedup_incremental,
-    )
-
-    new = span_docs.where(F.col("doc_id") % 2 == 1)
-    old = span_docs.where(F.col("doc_id") % 2 == 0)
-    idx = build_window_frequency_index(old, window=3)
-    path = str(tmp_path / "win_idx")
-    idx.write.parquet(path)
-    disk = spark.read.parquet(path)
-    with pytest.raises(ValueError, match="window=3"):
-        span_dedup_incremental(new, disk, window=4)
-    try:
-        write_bucketed(idx, "t_win_idx", "win_key", 4, path=str(tmp_path / "bidx"))
-        bucketed = span_dedup_incremental(new, spark.table("t_win_idx"), window=3)
-        raw = span_dedup_incremental(new, disk, window=3)
-        assert sorted(map(tuple, bucketed.collect())) == sorted(
-            map(tuple, raw.collect())
-        )
-        batch_keys = build_window_frequency_index(new, window=3).select("win_key")
-        hist_agg = (
-            spark.table("t_win_idx")
-            .join(F.broadcast(batch_keys), on="win_key", how="left_semi")
-            .groupBy("win_key")
-            .agg(F.sum("cnt").alias("_old_cnt"))
-        )
-        hist_plan = hist_agg._jdf.queryExecution().executedPlan().toString()
-        streamed_side = hist_plan.split("BroadcastExchange")[0]
-        assert "Exchange" not in streamed_side, hist_plan
-        assert "Bucketed: true" in hist_plan
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_win_idx")
-
-
-def test_span_dedup_broadcast_frequent_matches(spark, span_docs):
-    """boilerplate mode (high min_df, small frequent set): broadcast join
-    path returns identical results and drops the corpus-side key-join
-    shuffle."""
-    from literature_to_facts_spark.datapipe.textclean import span_dedup
-
-    a = span_dedup(span_docs, window=3, min_df=2)
-    b = span_dedup(span_docs, window=3, min_df=2, broadcast_frequent=True)
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-    plan = b._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-
-
-def test_span_dedup_reserved_internal_explode_alias(spark, span_docs):
-    """the '_w' explode alias is part of the loud-rejection contract (a
-    carried '_w' would otherwise surface as an ambiguous-column error)."""
-    from literature_to_facts_spark.datapipe.textclean import span_dedup
-
-    with pytest.raises(ValueError, match="collide"):
-        span_dedup(
-            span_docs.withColumn("_w", F.lit(1)), window=3, carry_cols=("_w",)
-        )
-
-
-def test_span_dedup_clean_semantics(spark):
-    """ExactSubstr removal: covered tokens cut, survivors single-space
-    joined, untouched docs verbatim (whitespace preserved), NULL text
-    passes through, fully-duplicated doc yields ''."""
-    from literature_to_facts_spark.datapipe.textclean import span_dedup_clean
-
-    rows = [
-        (1, "a b c d e"),          # window 'a b c' occurs in 1, 2, 4
-        (2, "x a b c d"),
-        (3, "p  q   r"),           # untouched: runs of spaces preserved
-        (4, "a b c"),              # fully covered -> ''
-        (5, None),
-    ]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = {
-        r.doc_id: r.clean_text
-        for r in span_dedup_clean(docs, window=3, min_df=2).collect()
-    }
-    # doc 1 windows: 'a b c'(1) 'b c d'(2) 'c d e'(3); 'a b c' AND 'b c d'
-    # recur across docs 1/2 -> positions [1,2] cover tokens 1..4, keep 'e'
-    assert out[1] == "e"
-    # doc 2 positions [2,3] cover tokens 2..5, keep 'x'
-    assert out[2] == "x"
-    assert out[3] == "p  q   r"
-    assert out[4] == ""
-    assert out[5] is None
-
-
-def test_span_dedup_clean_collision_guard(spark):
-    import pytest as _pt
-
-    from literature_to_facts_spark.datapipe.textclean import span_dedup_clean
-
-    docs = spark.createDataFrame(
-        [(1, "a b c", "x")], ["doc_id", "text", "clean_text"]
-    )
-    with _pt.raises(ValueError, match="clean_text"):
-        span_dedup_clean(docs)
-
-
 # ----------------------------------------------- group-scoped (per-host) mode
 
 _SITE_NAV = "Subscribe to our newsletter for updates"
